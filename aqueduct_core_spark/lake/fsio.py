@@ -15,6 +15,8 @@ Per-method object-store mapping (what the swap implementation does):
   walk_files        -> FileSystem.listFiles(recursive=True)
   remove/rmtree     -> FileSystem.delete(path, recursive)
   read_text         -> FSDataInputStream read
+  parquet_footer    -> one ranged read of the file tail (plus one of a single
+      column chunk when the distinct values of a column are asked for)
   publish_if_absent -> THE commit primitive. Local: hard-link of a fsynced
       temp file (atomic create-if-absent, POSIX). HDFS: create(path,
       overwrite=false). S3: conditional PUT (If-None-Match: *) or a DynamoDB
@@ -60,6 +62,22 @@ def _footer_stats(md) -> dict:
     return {"rows": md.num_rows, "columns": cols}
 
 
+def _parquet_summary(pf, values_of: str | None) -> dict:
+    """_footer_stats of an open pyarrow ParquetFile, plus, when `values_of`
+    names a column, {value: row count} of its non-null values under "values",
+    in value order. Only that one column chunk per row group is read — no
+    other data pages."""
+    out = _footer_stats(pf.metadata)
+    if values_of is not None:
+        import pyarrow.compute as pc
+
+        counts = pc.value_counts(pf.read(columns=[values_of]).column(0)).to_pylist()
+        out["values"] = dict(
+            sorted((c["values"], c["counts"]) for c in counts if c["values"] is not None)
+        )
+    return out
+
+
 class LocalFS:
     """POSIX implementation (the only storage present in this environment)."""
 
@@ -90,15 +108,20 @@ class LocalFS:
         with open(path) as f:
             return f.read()
 
-    def parquet_footer(self, path: str) -> dict:
+    def parquet_footer(self, path: str, values_of: str | None = None) -> dict:
         """Read a parquet file's FOOTER only (no data pages): row count plus
         per-column (min, max) where the writer recorded statistics. Local:
         pyarrow on the path. Object store: pyarrow.fs / one ranged GET of the
         footer — the same O(1)-per-file cost Iceberg pays to build manifests.
-        Columns without usable stats map to None."""
+        Columns without usable stats map to None.
+
+        `values_of` additionally reads that ONE column's chunks and returns
+        the row count of each of its distinct values under "values" — how the
+        lake learns which buckets a multi-bucket delta file holds, and how
+        many rows each (min/max would only bound them)."""
         import pyarrow.parquet as pq
 
-        return _footer_stats(pq.ParquetFile(path).metadata)
+        return _parquet_summary(pq.ParquetFile(path), values_of)
 
     def publish_if_absent(self, text: str, final_path: str) -> None:
         """Atomically create final_path with `text` iff it does not exist;
@@ -126,18 +149,19 @@ class LocalFS:
         os.replace(tmp, path)  # atomic overwrite
 
 
-class _TailSlice(io.RawIOBase):
-    """File-like view that serves only the final `len(tail)` bytes of a
-    `full_size`-byte file. pyarrow's footer parse (seek to size-8, read the
-    footer length, seek back, read the footer) never leaves that window, so
-    parquet metadata decodes from a single ranged GET with no data-page I/O.
-    Any read outside the fetched range raises — a correctness guard, not a
-    fallback path."""
+class _RangedFile(io.RawIOBase):
+    """Seekable file-like view of a `size`-byte remote file that holds the
+    prefetched tail and fetches any other range on demand with one ranged
+    read per `read` call. pyarrow's footer parse (seek to size-8, read the
+    footer length, seek back, read the footer) stays inside the tail, so the
+    footer alone costs the one prefetch; a column read then costs one ranged
+    read per column chunk, because pyarrow reads each chunk in one call."""
 
-    def __init__(self, tail: bytes, full_size: int):
+    def __init__(self, tail: bytes, size: int, fetch):
         self._tail = tail
-        self._size = full_size
-        self._off = full_size - len(tail)
+        self._size = size
+        self._off = size - len(tail)
+        self._fetch = fetch  # (pos, n) -> bytes
         self._pos = 0
 
     def seekable(self) -> bool:
@@ -161,13 +185,12 @@ class _TailSlice(io.RawIOBase):
     def read(self, n: int = -1) -> bytes:
         if n is None or n < 0:
             n = self._size - self._pos
-        start = self._pos - self._off
-        if start < 0:
-            raise OSError(
-                f"read at {self._pos} is outside the fetched tail range "
-                f"[{self._off}, {self._size})"
-            )
-        data = self._tail[start : start + n]
+        n = max(0, min(n, self._size - self._pos))
+        if self._pos >= self._off:
+            start = self._pos - self._off
+            data = self._tail[start : start + n]
+        else:
+            data = self._fetch(self._pos, n)
         self._pos += len(data)
         return data
 
@@ -191,7 +214,9 @@ class HadoopFS:
         tests as the cluster-parity path.
       - parquet_footer -> ONE ranged read of the file tail (S3A random-mode
         semantics): open, seek(size - tail), read to EOF, decode the footer
-        from the slice. No data pages are transferred.
+        from the slice. No data pages are transferred unless the distinct
+        values of a column are asked for; then each of that column's chunks
+        costs one more ranged read.
       - The local scheme is unwrapped to the raw (checksum-free) filesystem:
         object-store connectors write no `.crc` side files, and neither should
         this leg, or data-file listings would see phantom entries.
@@ -243,13 +268,16 @@ class HadoopFS:
             return uri.getPath()
         return jpath.toString()
 
-    def _read_from(self, fs, p, pos: int) -> bytes:
-        """seek(pos) + read-to-EOF — py4j returns the Java byte[] as bytes."""
+    def _read_from(self, fs, p, pos: int, n: int | None = None) -> bytes:
+        """seek(pos) + read `n` bytes (to EOF when None) — py4j returns the
+        Java byte[] as bytes."""
         stream = fs.open(p)
         try:
             if pos:
                 stream.seek(pos)
-            return bytes(self._jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
+            io_utils = self._jvm.org.apache.commons.io.IOUtils
+            data = io_utils.toByteArray(stream) if n is None else io_utils.toByteArray(stream, n)
+            return bytes(data)
         finally:
             stream.close()
 
@@ -301,7 +329,7 @@ class HadoopFS:
                 raise
             raise self._translate(e) from None
 
-    def parquet_footer(self, path: str) -> dict:
+    def parquet_footer(self, path: str, values_of: str | None = None) -> dict:
         import pyarrow.parquet as pq
 
         p = self._p(path)
@@ -313,8 +341,8 @@ class HadoopFS:
         footer_len = struct.unpack("<I", tail[-8:-4])[0]
         if footer_len + 8 > tail_len:
             tail = self._read_from(fs, p, size - (footer_len + 8))
-        md = pq.read_metadata(_TailSlice(tail, size))
-        return _footer_stats(md)
+        src = _RangedFile(tail, size, lambda pos, n: self._read_from(fs, p, pos, n))
+        return _parquet_summary(pq.ParquetFile(src), values_of)
 
     #: schemes whose create() uploads the WHOLE object atomically at close()
     #: (a reader can never observe a partial body, and with conditional create
@@ -483,8 +511,8 @@ class RetryingFS:
     def read_text(self, path):
         return self._call("read_text", path)
 
-    def parquet_footer(self, path):
-        return self._call("parquet_footer", path)
+    def parquet_footer(self, path, values_of=None):
+        return self._call("parquet_footer", path, values_of)
 
     def publish_if_absent(self, text, final_path):
         return self._call("publish_if_absent", text, final_path)

@@ -43,6 +43,7 @@ from aqueduct_core_spark.lake.table import (
     _file_may_match,
     bucket_expr,
     cluster_opts,
+    file_buckets,
     is_mixed_spec,
 )
 from aqueduct_core_spark.schema import (
@@ -246,7 +247,7 @@ def merge_change_batch(
                     resolved_batch, snap, kind="delta", already_bucketed=True
                 )
                 keep = list(snap.files)
-                affected = sorted({f["bucket"] for f in new_files})
+                affected = sorted({b for f in new_files for b in file_buckets(f)})
             else:
                 if is_mixed_spec(snap):
                     # unreachable through the public API (evolve_bucketing is
@@ -276,7 +277,7 @@ def merge_change_batch(
                     guarded, snap, already_bucketed=True,
                     cluster_col=cc, max_records_per_file=tfr,
                 )
-                keep = [f for f in snap.files if f["bucket"] not in set(affected)]
+                keep = [f for f in snap.files if set(affected).isdisjoint(file_buckets(f))]
         finally:
             if mode != "mor":
                 src.unpersist()
@@ -460,12 +461,15 @@ def read_resolved(
     # the manifest reads and mix two versions' file sets.
     ver = snap.version
     delta_buckets = {
-        f["bucket"] for f in snap.files if f.get("kind", "base") == "delta"
+        b
+        for f in snap.files
+        if f.get("kind", "base") == "delta"
+        for b in file_buckets(f)
     }
     scope = (
         sorted(set(buckets))
         if buckets is not None
-        else sorted({f["bucket"] for f in snap.files})
+        else sorted({b for f in snap.files for b in file_buckets(f)})
     )
     mixed = is_mixed_spec(snap)
     if mixed:
@@ -529,7 +533,8 @@ def read_resolved(
         # entirely: an empty subtree still costs a scheduled stage.
         clean_set = set(clean)
         clean_matches = any(
-            f["bucket"] in clean_set and (not ranges or _file_may_match(f, ranges))
+            not clean_set.isdisjoint(file_buckets(f))
+            and (not ranges or _file_may_match(f, ranges))
             for f in snap.files
         )
         if clean and clean_matches:
@@ -603,7 +608,8 @@ def changed_entries(
     for v in range(since_version + 1, until_version + 1):
         snap = table.snapshot_at(v)
         for f in snap.files:
-            # "migrated" entries are bucket-spec-migration rewrites of rows a
+            # "migrated" entries are rewrites (bucket-spec migration, or the
+            # rows a fold carries over from a shared delta file) of rows a
             # consumer already received under their ORIGINAL delta paths (the
             # historical manifests referencing those paths are untouched) —
             # re-emitting them would double-deliver the changelog

@@ -15,7 +15,22 @@ Physical layout::
     root/
       _manifests/v0000000001.json     # one immutable JSON per snapshot
       _manifests/seg-<ms>-<id>.json   # immutable file-entry segments (shared)
-      data/<commit-uuid>/_bucket=<b>/part-*.parquet
+      data/<commit-uuid>/_bucket=<b>/part-*.parquet   # base: one bucket a file
+      data/<commit-uuid>/part-*.parquet               # delta: one file a write task
+
+Base files (copy-on-write rewrites, compaction folds) hold one bucket each and
+their entry records it as "bucket". A merge-on-read delta file holds every
+bucket its write task received from the bucket exchange, with the bucket id
+stored as a column; its entry records the exact set as "buckets" and each
+bucket's row count as "bucket_rows", read from the file in the same pass that
+harvests its footer. `file_buckets` is the one accessor for either form. A
+batch thus writes write_parallelism files, not one per touched bucket:
+per-file costs (output commit, footer read, and the parquet source's file
+listing, which turns into a Spark job past 32 paths) follow the task count
+instead of the bucket count. The price is that delta files tie buckets
+together: a fold of some of a file's buckets carries the rows of the others
+over into new delta files (maintenance.compact_bucket_range), and concurrent
+folds get bucket sets that share no file (maintenance.fold_closures).
 
 Manifests are TWO-LEVEL (Iceberg's manifest-list / manifest-file split): the
 snapshot JSON holds schemas/txn/properties plus REFERENCES to immutable segment
@@ -76,6 +91,7 @@ VERSION_HINT = "version-hint.text"
 # lake scale the analog is skipping whole files by footer stats — Iceberg's
 # lower_bounds/upper_bounds.
 DEFAULT_STATS_COLS = ["_lsn", "ts"]
+_TS_CONF = "spark.sql.parquet.outputTimestampType"
 
 
 def cluster_opts(snap: "Snapshot") -> tuple[str | None, int | None]:
@@ -124,6 +140,14 @@ def _file_may_match(entry: dict, prune_ranges: dict) -> bool:
         if hi_n is not None and f_lo > hi_n:
             return False
     return True
+
+
+def file_buckets(entry: dict) -> list[int]:
+    """The buckets whose rows an entry's file holds: the recorded set of a
+    delta file, else the single bucket of a base file (or of a delta file
+    written before delta files held several buckets)."""
+    bs = entry.get("buckets")
+    return [entry["bucket"]] if bs is None else bs
 
 
 def bucket_expr(col_name: str, n_buckets: int):
@@ -185,7 +209,7 @@ class Snapshot:
     schemas: list[dict]  # [{"schema_id": int, "json": <StructType.json()>}]
     n_buckets: int
     bucket_key: str
-    files: list[dict] = field(default_factory=list)  # {path, bucket, schema_id, rows}
+    files: list[dict] = field(default_factory=list)  # {path, bucket|buckets, schema_id, rows}
     txn: dict = field(default_factory=dict)  # writer_id -> last committed batch_id
     properties: dict = field(default_factory=dict)
     parent: int | None = None
@@ -247,6 +271,13 @@ class LakeTable:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
+        # INT96 (Spark's legacy default) records no parquet min/max stats,
+        # which would blind the manifest's ts pruning; TIMESTAMP_MICROS does.
+        # Set once and never unset: toggling it around each write let one
+        # thread's restore land in the middle of another thread's write
+        # (ingest beside background compaction) and leave stat-less files.
+        if spark.conf.get(_TS_CONF, None) != "TIMESTAMP_MICROS":
+            spark.conf.set(_TS_CONF, "TIMESTAMP_MICROS")
 
     # ---------------------------------------------------------------- create/load
     @classmethod
@@ -319,7 +350,9 @@ class LakeTable:
         prune_exempt_buckets: set[int] | None = None,
     ) -> DataFrame:
         """Snapshot read, optionally pruned to a bucket set (manifest-level pruning:
-        files in other buckets are never listed, opened, or scheduled).
+        files holding none of the buckets are never listed, opened, or
+        scheduled). A delta file holds several buckets; when the set covers
+        only some of a selected file's buckets, a row filter drops the rest.
 
         `prune_ranges` ({col: (lo, hi)}, either bound None for open) additionally
         skips files whose manifest stats prove no row can satisfy lo <= col <= hi.
@@ -338,18 +371,20 @@ class LakeTable:
         files = snap.files
         cur_spec = current_spec_id(snap)
         mixed = is_mixed_spec(snap)
+        row_scope = False
         if buckets is not None:
             bset = set(buckets)
-            if mixed:
-                # Old-spec files are laid out under a DIFFERENT bucket space —
-                # their entry bucket ids say nothing about the requested
-                # (current-spec) scope, so they are all read and scoped at the
-                # ROW level below. Current-spec files prune as usual.
-                files = [
-                    f for f in files if file_spec(f) != cur_spec or f["bucket"] in bset
-                ]
-            else:
-                files = [f for f in files if f["bucket"] in bset]
+            # Old-spec files (mixed state) are laid out under a DIFFERENT
+            # bucket space — their entry bucket ids say nothing about the
+            # requested (current-spec) scope, so they are all read and scoped
+            # at the ROW level below. Current-spec files prune as usual.
+            files = [
+                f
+                for f in files
+                if (mixed and file_spec(f) != cur_spec)
+                or not bset.isdisjoint(file_buckets(f))
+            ]
+            row_scope = mixed or any(not bset.issuperset(file_buckets(f)) for f in files)
         if prune_ranges:
             exempt = prune_exempt_buckets or set()
             # Old-spec files are never stats-skipped: their bucket ids don't
@@ -359,13 +394,13 @@ class LakeTable:
                 f
                 for f in files
                 if (mixed and file_spec(f) != cur_spec)
-                or f["bucket"] in exempt
+                or not exempt.isdisjoint(file_buckets(f))
                 or _file_may_match(f, prune_ranges)
             ]
         df = self.read_entries(files, snap)
-        if mixed and buckets is not None:
-            # Row-level bucket scoping (semantically a no-op for rows from
-            # current-spec files — their layout already satisfies it).
+        if row_scope:
+            # Row-level bucket scoping (a no-op for rows of files the bucket
+            # set fully covers)
             df = df.filter(
                 bucket_expr(snap.bucket_key, snap.n_buckets).isin([int(b) for b in bset])
             )
@@ -418,6 +453,15 @@ class LakeTable:
         """Write df (must carry BUCKET_COL) as one commit's data files; returns file
         entries for the manifest. Distributed write, driver-side enumeration only.
 
+        Rows go through one exchange keyed by bucket, so each bucket's rows
+        are in exactly one write task. `kind="base"` writes one directory per
+        bucket (one file per bucket and task); `kind="delta"` writes ONE file
+        per task holding all of that task's buckets, BUCKET_COL stored as a
+        column, and the entry records the file's exact bucket set and each
+        bucket's row count, read through the FS seam together with the
+        footer (no Spark job). A failed read of them fails the write and
+        removes the commit's files.
+
         `already_bucketed=True` promises df is ALREADY hash-partitioned by
         BUCKET_COL at write_parallelism(snap) (the merge path repartitions
         before LWW resolution so the whole apply runs on one exchange); the
@@ -437,42 +481,41 @@ class LakeTable:
         order — so clustering is a pure stats-tightening transform."""
         commit_id = uuid.uuid4().hex[:12]
         out_dir = os.path.join(self.root, DATA_DIR, commit_id)
-        # one shuffle keyed by bucket so each affected bucket lands in few files
-        n_out = self.write_parallelism(snap)
-        # INT96 (Spark's legacy default) records no parquet min/max stats, which
-        # would blind the manifest's ts pruning; TIMESTAMP_MICROS does.
-        ts_conf = "spark.sql.parquet.outputTimestampType"
-        prev_ts_type = self.spark.conf.get(ts_conf, None)
-        self.spark.conf.set(ts_conf, "TIMESTAMP_MICROS")
-        try:
-            out_df = df if already_bucketed else df.repartition(n_out, F.col(BUCKET_COL))
-            if cluster_col and cluster_col in out_df.columns:
-                # hash(bucket) keying puts ALL of a bucket's rows in one task,
-                # so a task-local sort yields globally contiguous per-bucket
-                # runs; maxRecordsPerFile then splits a run into sequential —
-                # hence range-disjoint — files.
-                out_df = out_df.sortWithinPartitions(BUCKET_COL, cluster_col)
-            writer = out_df.write.partitionBy(BUCKET_COL).mode("append")
-            if max_records_per_file:
-                writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
-            writer.parquet(out_dir)
-        finally:
-            if prev_ts_type is None:
-                self.spark.conf.unset(ts_conf)
-            else:
-                self.spark.conf.set(ts_conf, prev_ts_type)
+        delta = kind == "delta"
+        out_df = (
+            df
+            if already_bucketed
+            else df.repartition(self.write_parallelism(snap), F.col(BUCKET_COL))
+        )
+        if cluster_col and cluster_col in out_df.columns:
+            # hash(bucket) keying puts ALL of a bucket's rows in one task,
+            # so a task-local sort yields globally contiguous per-bucket
+            # runs; maxRecordsPerFile then splits a run into sequential —
+            # hence range-disjoint — files.
+            out_df = out_df.sortWithinPartitions(BUCKET_COL, cluster_col)
+        writer = out_df.write.mode("append")
+        if not delta:
+            writer = writer.partitionBy(BUCKET_COL)
+        if max_records_per_file:
+            writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
+        writer.parquet(out_dir)
         stats_cols = snap.properties.get("stats_cols", DEFAULT_STATS_COLS)
         field_names = {f.name for f in snap.schema().fields}
         stats_cols = [c for c in stats_cols if c in field_names]
 
         def harvest(path: str) -> tuple:
             # Footer-only read (O(1) per file — one ranged GET on an object
-            # store): row count + min/max for the stats columns. Best-effort:
-            # a stat-less footer degrades to rows/stats = None.
+            # store): row count + min/max for the stats columns, plus a delta
+            # file's per-bucket row counts (one small column chunk). Stats are
+            # best-effort — a stat-less footer degrades to rows/stats = None —
+            # but a delta file's bucket set is not: without it no read could
+            # select the file, so its failure fails the write.
             try:
-                footer = get_fs().parquet_footer(path)
+                footer = get_fs().parquet_footer(path, BUCKET_COL if delta else None)
             except Exception:
-                return None, None
+                if delta:
+                    raise
+                return None, None, None
             stats = {}
             for c in stats_cols:
                 mm = footer["columns"].get(c)
@@ -481,29 +524,48 @@ class LakeTable:
                 lo, hi = _stat_scalar(mm[0]), _stat_scalar(mm[1])
                 if lo is not None and hi is not None:
                     stats[c] = [lo, hi]
-            return footer["rows"], stats or None
+            return footer["rows"], stats or None, footer.get("values")
 
         paths = [
             p
             for p in get_fs().walk_files(out_dir)
-            if os.path.basename(os.path.dirname(p)).startswith(f"{BUCKET_COL}=")
-            and p.endswith(".parquet")
+            if p.endswith(".parquet")
+            and (delta or os.path.basename(os.path.dirname(p)).startswith(f"{BUCKET_COL}="))
         ]
         # IO-bound and per-file independent: harvest concurrently so a
         # thousand-file commit costs one footer round-trip, not a thousand.
         from concurrent.futures import ThreadPoolExecutor
 
-        if len(paths) > 1:
-            with ThreadPoolExecutor(max_workers=min(16, len(paths))) as ex:
-                harvested = list(ex.map(harvest, paths))
-        else:
-            harvested = [harvest(p) for p in paths]
+        try:
+            if len(paths) > 1:
+                with ThreadPoolExecutor(max_workers=min(16, len(paths))) as ex:
+                    harvested = list(ex.map(harvest, paths))
+            else:
+                harvested = [harvest(p) for p in paths]
+        except Exception:
+            # no manifest will ever reference this commit's files, so
+            # expire_snapshots could never reclaim them: remove them here
+            get_fs().rmtree(out_dir)
+            raise
         entries: list[dict] = []
-        for path, (rows, stats) in zip(paths, harvested):
+        for path, (rows, stats, counts) in zip(paths, harvested):
+            if delta:
+                if not counts:
+                    # the row-less file Spark writes when its first task
+                    # receives no rows: nothing to reference, so reclaim it
+                    get_fs().remove(path)
+                    continue
+                placement = {
+                    "buckets": [int(b) for b in counts],
+                    "bucket_rows": list(counts.values()),
+                }
+            else:
+                part_dir = os.path.basename(os.path.dirname(path))
+                placement = {"bucket": int(part_dir.split("=", 1)[1])}
             entries.append(
                 {
                     "path": path,
-                    "bucket": int(os.path.basename(os.path.dirname(path)).split("=", 1)[1]),
+                    **placement,
                     "schema_id": snap.current_schema_id,
                     "rows": rows,
                     "stats": stats,
@@ -523,8 +585,18 @@ class LakeTable:
         The losing side of an optimistic-commit race has already written its
         parquet under data/<commit-uuid>/ but no manifest will ever reference
         it, so expire_snapshots can never reclaim it — without this, writer
-        contention leaks orphan files without bound."""
-        dirs = {os.path.dirname(os.path.dirname(e["path"])) for e in entries}
+        contention leaks orphan files without bound. The commit directory is
+        the first component of each path below the data root, whatever the
+        depth of the file under it (base files sit one level deeper than
+        delta files); a path outside the data root is refused."""
+        data_root = os.path.join(self.root, DATA_DIR)
+        dirs = set()
+        for e in entries:
+            rel = os.path.relpath(e["path"], data_root)
+            commit, sep, _ = rel.partition(os.sep)
+            if not sep or commit in (os.curdir, os.pardir):
+                raise ValueError(f"{e['path']} is not a data file of {self.root}")
+            dirs.add(os.path.join(data_root, commit))
         fs = get_fs()
         for d in dirs:
             fs.rmtree(d)

@@ -28,6 +28,7 @@ from aqueduct_core_spark.lake.table import (
     bucket_expr,
     cluster_opts,
     current_spec_id,
+    file_buckets,
     file_spec,
     is_mixed_spec,
 )
@@ -101,6 +102,35 @@ def compact_table(
     return CompactionStats(version=nxt.version, removed_snapshots=removed)
 
 
+def fold_closures(snap: Snapshot, buckets) -> list[list[int]]:
+    """Group `buckets` so that no current-spec file holds buckets of two
+    groups: connected components of "shares a file" (union-find over the
+    files' bucket sets), each cut down to the requested buckets. A delta
+    file holds every bucket its write task received, so folds of buckets in
+    one group remove the same files; folds of different groups touch
+    disjoint files and can run concurrently without either starting over."""
+    parent: dict[int, int] = {}
+
+    def find(b: int) -> int:
+        parent.setdefault(b, b)
+        while parent[b] != b:
+            parent[b] = parent[parent[b]]
+            b = parent[b]
+        return b
+
+    cur_spec = current_spec_id(snap)
+    for f in snap.files:
+        bs = file_buckets(f)
+        if file_spec(f) == cur_spec and len(bs) > 1:
+            root = find(bs[0])
+            for b in bs[1:]:
+                parent[find(b)] = root
+    groups: dict[int, list[int]] = {}
+    for b in sorted(set(buckets)):
+        groups.setdefault(find(b), []).append(b)
+    return sorted(groups.values())
+
+
 def compact_bucket_range(
     table: LakeTable,
     tombstone_retention_ts,
@@ -113,6 +143,14 @@ def compact_bucket_range(
     rewrite (CompactionTask.java:40-47 runs the whole table because Postgres
     is one node; a 64-bucket lake table wants 64-way maintenance parallelism).
 
+    A delta file holds several buckets (one file per write task), so a fold
+    removes delta files that also hold rows of buckets outside the range.
+    Those rows are carried over unchanged into new delta files in the same
+    commit (flagged "migrated": a chained consumer already received them),
+    so the base data rewritten stays that of the range alone, and the carried
+    rows resolve at read exactly as before (LWW orders rows by (ts, _lsn),
+    never by file).
+
     Concurrency contract (matches the reference's single-flight semantics,
     PostgresqlStorageIntegrationSpec.groovy:483-531 — no writer's data is ever
     lost to a concurrent compactor): the folded input is pinned to the
@@ -121,7 +159,18 @@ def compact_bucket_range(
     writer committed since, including new delta files in this same bucket
     range (they simply remain deltas and resolve at read until the next
     compaction pass). A lost CAS race re-rebases and retries without
-    recomputing."""
+    recomputing. If a concurrent fold or rewrite already removed one of the
+    folded files, the two outputs would overlap: the attempt is discarded
+    and the fold starts over from the current snapshot."""
+    while True:
+        out = _fold_once(table, tombstone_retention_ts, buckets)
+        if out is not None:
+            return out
+
+
+def _fold_once(table: LakeTable, tombstone_retention_ts, buckets) -> CompactionStats | None:
+    """One compact_bucket_range attempt; None when a concurrent fold took
+    part of its input first."""
     from aqueduct_core_spark.lake.merge import read_resolved
 
     target = set(buckets)
@@ -132,11 +181,12 @@ def compact_bucket_range(
     # different layout space, and they hold rows of buckets OUTSIDE the target
     # range — removing one here would lose those rows. They are retired by
     # migrate_spec_files / compact_table instead.
-    folded = {
-        f["path"]
+    entries = [
+        f
         for f in snap0.files
-        if f["bucket"] in target and file_spec(f) == cur_spec
-    }
+        if file_spec(f) == cur_spec and not target.isdisjoint(file_buckets(f))
+    ]
+    folded = {f["path"] for f in entries}
     if not folded:
         return CompactionStats(version=snap0.version, removed_snapshots=0, skipped=True)
     if mixed:
@@ -145,10 +195,8 @@ def compact_bucket_range(
         # source files). LWW-superseded drops among these rows stay safe: the
         # superseding winner is in the fold, and conversation tombstones are
         # sentinel-key rows that survive resolution.
-        entries = [f for f in snap0.files if f["path"] in folded]
-        df = table.read_entries(entries, snap0).withColumn(
-            BUCKET_COL, bucket_expr(snap0.bucket_key, snap0.n_buckets)
-        )
+        df = _with_bucket(table.read_entries(entries, snap0), snap0)
+        df = df.filter(F.col(BUCKET_COL).isin(sorted(target)))
         df = df.repartition(table.write_parallelism(snap0), F.col(BUCKET_COL))
         from aqueduct_core_spark.lake.merge import resolve_lww
 
@@ -173,13 +221,25 @@ def compact_bucket_range(
         kept, snap0, kind="base", already_bucketed=True,
         cluster_col=cc, max_records_per_file=tfr,
     )
+    shared = [f for f in entries if not target.issuperset(file_buckets(f))]
+    if shared:
+        carried = _with_bucket(table.read_entries(shared, snap0), snap0)
+        for e in table.write_files(
+            carried.filter(~F.col(BUCKET_COL).isin(sorted(target))), snap0, kind="delta"
+        ):
+            e["migrated"] = True
+            new_files.append(e)
     ours = {f["path"] for f in new_files}
     while True:
         cur = table.current()
-        if any(f["path"] in ours for f in cur.files):
+        live = {f["path"] for f in cur.files}
+        if not live.isdisjoint(ours):
             # ambiguous success: our rebase commit landed but the storage
             # response was lost — rebasing again would double-list the files
             return CompactionStats(version=cur.version, removed_snapshots=0)
+        if not folded <= live:
+            table.discard_files(new_files)
+            return None
         files = [f for f in cur.files if f["path"] not in folded] + new_files
         nxt = Snapshot(
             version=cur.version + 1,
@@ -203,28 +263,52 @@ def compact_bucket_range(
             continue  # rebase onto the new current snapshot; folded work is kept
 
 
+def _with_bucket(df, snap: Snapshot):
+    """df with BUCKET_COL computed under snap's current bucket spec."""
+    return df.withColumn(BUCKET_COL, bucket_expr(snap.bucket_key, snap.n_buckets))
+
+
 def balance_bucket_ranges(
     rows_by_bucket: dict[int, int],
-    n_buckets: int,
+    units: list[list[int]],
     n_jobs: int,
-    buckets: list[int] | None = None,
 ) -> list[list[int]]:
-    """Split buckets into n_jobs disjoint sets with near-equal row volume:
-    greedy LPT (heaviest bucket to the currently-lightest job). Deterministic;
-    buckets with unknown volume weigh 0 and spread round-robin by the
-    tiebreak. At cluster scale this keeps one hot bucket from serializing a
-    whole maintenance wave behind it. `buckets` restricts the split to a
-    subset (the policy-triggered path compacts only over-threshold buckets)."""
-    universe = sorted(set(buckets)) if buckets is not None else list(range(n_buckets))
-    n_jobs = max(1, min(n_jobs, len(universe) or 1))
+    """Split units (disjoint bucket groups, kept whole — fold_closures gives
+    groups whose folds share no file) into n_jobs sets with near-equal row
+    volume: greedy LPT (heaviest unit to the currently-lightest job).
+    Deterministic; buckets with unknown volume weigh 0 and spread round-robin
+    by the tiebreak over the jobs of the weighed ones (a job of weightless
+    buckets alone would fold nothing). At cluster scale this keeps one hot
+    bucket from serializing a whole maintenance wave behind it."""
+
+    def weight(u):
+        return sum(rows_by_bucket.get(b, 0) for b in u)
+
+    n_weighed = sum(1 for u in units if weight(u) > 0)
+    n_jobs = max(1, min(n_jobs, n_weighed or len(units)))
     loads = [0] * n_jobs
     jobs: list[list[int]] = [[] for _ in range(n_jobs)]
-    order = sorted(universe, key=lambda b: (-rows_by_bucket.get(b, 0), b))
-    for b in order:
+
+    for u in sorted(units, key=lambda u: (-weight(u), u)):
         j = min(range(n_jobs), key=lambda i: (loads[i], len(jobs[i]), i))
-        jobs[j].append(b)
-        loads[j] += rows_by_bucket.get(b, 0)
+        jobs[j].extend(u)
+        loads[j] += weight(u)
     return [sorted(j) for j in jobs if j]
+
+
+def _bucket_rows(entry: dict) -> list[tuple[int, int]]:
+    """(bucket, rows) for each bucket an entry's file holds, from manifest
+    stats alone: a delta file's exact per-bucket counts, else the file's row
+    count (1 for a stat-less file)."""
+    return list(zip(file_buckets(entry), entry.get("bucket_rows") or [entry.get("rows") or 1]))
+
+
+def _rows_by_bucket(snap: Snapshot) -> dict[int, int]:
+    out: dict[int, int] = {}
+    for f in snap.files:
+        for b, rows in _bucket_rows(f):
+            out[b] = out.get(b, 0) + rows
+    return out
 
 
 @dataclass(frozen=True)
@@ -243,7 +327,9 @@ class CompactionPolicy:
 
 def delta_pressure(snap: Snapshot) -> dict[int, tuple[int, int]]:
     """Per-bucket MOR debt from manifest stats alone (no data scan):
-    bucket -> (delta_file_count, delta_rows). Stat-less files count 1 row.
+    bucket -> (delta_file_count, delta_rows). A delta file counts once in
+    each bucket it holds (each of those buckets' reads must open it), with
+    that bucket's exact share of its rows.
     Current-spec files only: old-spec entries' bucket ids address a different
     layout, and compact_bucket_range cannot retire them anyway (their debt is
     paid by migrate_spec_files)."""
@@ -252,8 +338,9 @@ def delta_pressure(snap: Snapshot) -> dict[int, tuple[int, int]]:
     for f in snap.files:
         if f.get("kind") != "delta" or file_spec(f) != cur_spec:
             continue
-        n, r = out.get(f["bucket"], (0, 0))
-        out[f["bucket"]] = (n + 1, r + (f.get("rows") or 1))
+        for b, rows in _bucket_rows(f):
+            n, r = out.get(b, (0, 0))
+            out[b] = (n + 1, r + rows)
     return out
 
 
@@ -275,8 +362,9 @@ def maybe_compact(
 ) -> list[CompactionStats]:
     """Self-tuning compaction: fold deltas in exactly the buckets whose
     manifest-recorded delta debt exceeds the policy, as load-balanced
-    independent range jobs. No-op (and no Spark job) when every bucket is
-    under threshold — cheap enough to call after every ingest commit.
+    independent range jobs whose bucket sets share no file (fold_closures).
+    No-op (and no Spark job) when every bucket is under threshold — cheap
+    enough to call after every ingest commit.
 
     With tombstone_retention_ts=None no tombstone is dropped: the auto path
     only folds deltas to cap MOR read cost; tombstone GC stays an explicit
@@ -287,14 +375,8 @@ def maybe_compact(
         return []
     if tombstone_retention_ts is None:
         tombstone_retention_ts = "1970-01-01 00:00:00"  # keeps every tombstone
-    rows_by_bucket: dict[int, int] = {}
-    for f in snap.files:
-        if f["bucket"] in set(hot):
-            rows_by_bucket[f["bucket"]] = rows_by_bucket.get(f["bucket"], 0) + (
-                f.get("rows") or 1
-            )
     ranges = balance_bucket_ranges(
-        rows_by_bucket, snap.n_buckets, policy.n_jobs, buckets=hot
+        _rows_by_bucket(snap), fold_closures(snap, hot), policy.n_jobs
     )
     if len(ranges) == 1:
         return [compact_bucket_range(table, tombstone_retention_ts, ranges[0])]
@@ -354,9 +436,7 @@ def migrate_spec_files(
         grp = [f for f in sel if f.get("kind", "base") == kind]
         if not grp:
             continue
-        df = table.read_entries(grp, snap0).withColumn(
-            BUCKET_COL, bucket_expr(snap0.bucket_key, snap0.n_buckets)
-        )
+        df = _with_bucket(table.read_entries(grp, snap0), snap0)
         ents = table.write_files(
             df,
             snap0,
@@ -403,23 +483,19 @@ def compact_table_parallel(
     n_jobs: int = 4,
     keep_snapshots: int | None = None,
 ) -> list[CompactionStats]:
-    """Whole-table compaction as n_jobs disjoint bucket-range jobs submitted
+    """Whole-table compaction as up to n_jobs bucket-range jobs submitted
     concurrently (Spark schedules jobs from multiple threads; on a cluster
-    each range is an independent spark-submit). Ranges are balanced by the
-    manifest's per-file row counts, not bucket count. Snapshot expiry, if
+    each range is an independent spark-submit). Ranges are unions of whole
+    fold_closures groups, so no two jobs fold the same delta file, and are
+    balanced by the manifest's per-bucket row counts, not bucket count. Snapshot expiry, if
     requested, runs once at the end — it is a driver-side metadata sweep."""
     from concurrent.futures import ThreadPoolExecutor
 
     snap = table.current()
-    n_buckets = snap.n_buckets
-    n_jobs = max(1, min(n_jobs, n_buckets))
-    rows_by_bucket: dict[int, int] = {}
-    for f in snap.files:
-        rows_by_bucket[f["bucket"]] = rows_by_bucket.get(f["bucket"], 0) + (
-            f.get("rows") or 1  # stat-less file: weigh by file count
-        )
-    ranges = balance_bucket_ranges(rows_by_bucket, n_buckets, n_jobs)
-    with ThreadPoolExecutor(max_workers=n_jobs) as ex:
+    ranges = balance_bucket_ranges(
+        _rows_by_bucket(snap), fold_closures(snap, range(snap.n_buckets)), n_jobs
+    )
+    with ThreadPoolExecutor(max_workers=len(ranges)) as ex:
         stats = list(
             ex.map(
                 lambda r: compact_bucket_range(table, tombstone_retention_ts, r),
@@ -439,7 +515,8 @@ def rewrite_small_files(table: LakeTable, target_files_per_bucket: int = 1) -> i
         snap = table.current()
         by_bucket: dict[int, int] = {}
         for f in snap.files:
-            by_bucket[f["bucket"]] = by_bucket.get(f["bucket"], 0) + 1
+            for b in file_buckets(f):
+                by_bucket[b] = by_bucket.get(b, 0) + 1
         if all(n <= target_files_per_bucket for n in by_bucket.values()):
             return snap.version
         from aqueduct_core_spark.lake.merge import read_resolved

@@ -24,11 +24,10 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def main():
-    import bench
+    import __spark_entry__ as entry
 
     sf_dir = os.environ.get("AQ_EXTRA_SF_DIR", "/root/testdata/sf1.0")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    repeats = int(os.environ.get("AQ_EXTRA_REPEATS", "2"))
     plans_dir = os.environ.get("AQ_EXTRA_PLANS_DIR")
     plan_suffix = os.environ.get("AQ_EXTRA_PLAN_SUFFIX", "")
 
@@ -36,13 +35,25 @@ def main():
     plans_only = "--plans-only" in sys.argv
     names = args or ["dedup_simhash_pairs", "dedup_minhash_lsh", "ann_neardup_lsh"]
 
+    # validate everything before paying for a Spark session
+    qs = entry.queries()
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        sys.exit(_usage_error(f"unknown query name(s): {', '.join(unknown)}"))
+    raw_repeats = os.environ.get("AQ_EXTRA_REPEATS", "2")
+    try:
+        repeats = int(raw_repeats)
+    except ValueError:
+        repeats = 0
+    if repeats < 1 and not plans_only:
+        sys.exit(_usage_error(f"AQ_EXTRA_REPEATS must be a positive integer, got {raw_repeats!r}"))
+
+    import bench
+
     spark = bench.build_spark(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1_000_000).selectExpr("sum(xxhash64(id) % 100000)").collect()
 
-    import __spark_entry__ as entry
-
-    qs = entry.queries()
     out = {"sf_dir": sf_dir, "cpus": cpus, "queries": {}}
     for name in names:
         fn = qs[name]
@@ -74,6 +85,11 @@ def main():
         print(json.dumps({name: out["queries"][name]}), flush=True)
     if not plans_only:
         print(json.dumps(out))
+
+
+def _usage_error(msg: str) -> int:
+    print(f"bench_extra.py: {msg}", file=sys.stderr)
+    return 2
 
 
 if __name__ == "__main__":

@@ -187,3 +187,32 @@ def test_triggered_fold_does_not_stall_ingest_cadence(spark, tmp_path, monkeypat
         for r in read_transcripts(table).orderBy("conv_id", "turn_idx").collect()
     ]
     assert got == expect
+
+
+def test_concurrent_ingest_and_auto_compaction_keep_ts_stats(spark, tmp_path):
+    """Ingest commits while the background worker folds: every file any
+    manifest ever referenced carries ts stats (INT96 timestamps would carry
+    none), and the session's parquet timestamp type is left set."""
+    from aqueduct_core_spark.feedgen import generate_change_feed, write_segments
+    from aqueduct_core_spark.lake.table import _TS_CONF
+
+    spark.conf.unset(_TS_CONF)  # a session no table has been opened in yet
+    feed_dir = str(tmp_path / "feed")
+    feed = generate_change_feed(spark, 3000, 40, 8, seed=13, ts_jitter_s=15)
+    write_segments(feed, feed_dir, n_segments=10)
+    eng = IngestEngine(
+        spark, str(tmp_path / "tbl"), str(tmp_path / "ckpt"),
+        n_buckets=4, merge_mode="mor",
+        compaction_policy=CompactionPolicy(max_delta_files_per_bucket=1, n_jobs=2),
+    )
+    eng.run(feed_dir, max_files_per_trigger=1)
+    eng.drain_compaction()
+    eng.close()
+    assert eng.compactions_triggered > 0
+
+    table = LakeTable(spark, eng.table_root)
+    entries = {f["path"]: f for v in table.versions() for f in table.snapshot_at(v).files}
+    assert {f.get("kind") for f in entries.values()} == {"base", "delta"}
+    missing = [p for p, f in entries.items() if "ts" not in (f.get("stats") or {})]
+    assert not missing, missing
+    assert spark.conf.get(_TS_CONF) == "TIMESTAMP_MICROS"

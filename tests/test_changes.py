@@ -71,10 +71,12 @@ def test_changelog_retention_and_cow_guards(spark, tmp_path):
 
 
 def test_balance_bucket_ranges_hot_bucket():
-    jobs = balance_bucket_ranges({0: 100, 1: 1, 2: 1, 3: 1}, n_buckets=4, n_jobs=2)
+    jobs = balance_bucket_ranges(
+        {0: 100, 1: 1, 2: 1, 3: 1}, [[b] for b in range(4)], n_jobs=2
+    )
     assert jobs == [[0], [1, 2, 3]]
     # disjoint cover, including buckets with no files at all
-    jobs = balance_bucket_ranges({5: 10}, n_buckets=8, n_jobs=3)
+    jobs = balance_bucket_ranges({5: 10}, [[b] for b in range(8)], n_jobs=3)
     flat = sorted(b for j in jobs for b in j)
     assert flat == list(range(8))
     assert sum(1 for j in jobs if 5 in j) == 1

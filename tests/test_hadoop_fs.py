@@ -90,24 +90,35 @@ def test_listing_and_removal(hfs, tmp_path):
     hfs.rmtree(root)  # absent -> no-op, like LocalFS
 
 
-def test_parquet_footer_matches_local_fs(hfs, tmp_path):
+def test_parquet_footer_matches_local_fs(spark, hfs, tmp_path):
     """The ranged-tail footer read must decode the identical stats LocalFS
     gets from a full-file open."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     path = str(tmp_path / "part.parquet")
+    b = [(i * 7) % 13 for i in range(1000) if i % 250 != 3]
     pq.write_table(
         pa.table(
             {
                 "k": list(range(1000)),
                 "s": [f"row-{i:04d}" for i in range(1000)],
+                "b": b + [None] * 4,
             }
         ),
         path,
         row_group_size=256,  # several row groups -> exercises stat folding
     )
     assert hfs.parquet_footer(path) == LocalFS().parquet_footer(path)
+    # a column's exact per-value row counts (a delta file's buckets and their
+    # rows), read over every row group's chunk by ranged reads past the tail
+    local = LocalFS().parquet_footer(path, "b")
+    assert local["values"] == {v: b.count(v) for v in sorted(set(b))}
+    assert hfs.parquet_footer(path, "b") == local
+    small = HadoopFS(spark)
+    small._TAIL_BYTES = 64  # footer-only tail: the column chunks are fetched
+    assert small.parquet_footer(path, "b") == local
+    assert RetryingFS(hfs).parquet_footer(path, "b") == local
 
 
 # ---------------------------------------------------------------- end-to-end

@@ -12,7 +12,7 @@ suppresses a newer losing row and resurrect it.
 from __future__ import annotations
 
 from aqueduct_core_spark.lake.merge import merge_change_batch, read_resolved
-from aqueduct_core_spark.lake.table import LakeTable, bucket_expr
+from aqueduct_core_spark.lake.table import LakeTable, bucket_expr, file_buckets
 from aqueduct_core_spark.maintenance import compact_bucket_range, compact_table
 from aqueduct_core_spark.schema import TRANSCRIPT_PHYSICAL_SCHEMA
 
@@ -135,9 +135,10 @@ def _live_mor_with_clean_buckets(spark, tmp_path):
         buckets=[_bucket_of(spark, conv_b), _bucket_of(spark, conv_c)],
     )
     snap = t.current()
-    kinds = {f["bucket"]: set() for f in snap.files}
+    kinds = {b: set() for f in snap.files for b in file_buckets(f)}
     for f in snap.files:
-        kinds[f["bucket"]].add(f.get("kind", "base"))
+        for b in file_buckets(f):
+            kinds[b].add(f.get("kind", "base"))
     assert kinds[_bucket_of(spark, conv_a)] == {"delta"}
     assert kinds[_bucket_of(spark, conv_b)] == {"base"}
     assert kinds[_bucket_of(spark, conv_c)] == {"base"}
@@ -152,7 +153,7 @@ def test_per_bucket_skip_on_live_mor(spark, tmp_path):
     snap = t.current()
     paths_by_conv = {
         conv: {
-            f["path"] for f in snap.files if f["bucket"] == _bucket_of(spark, conv)
+            f["path"] for f in snap.files if _bucket_of(spark, conv) in file_buckets(f)
         }
         for conv in (conv_a, conv_b, conv_c)
     }
@@ -187,7 +188,7 @@ def test_per_bucket_skip_no_resurrection_at_boundary(spark, tmp_path):
     # ONLY bucket A's (exempt) delta files
     snap = t.current()
     a_paths = {
-        f["path"] for f in snap.files if f["bucket"] == _bucket_of(spark, conv_a)
+        f["path"] for f in snap.files if _bucket_of(spark, conv_a) in file_buckets(f)
     }
     none_clean = read_resolved(t, ranges={"_lsn": (10**9, None)})
     assert none_clean.count() == 0

@@ -20,6 +20,7 @@ from aqueduct_core_spark.lake.table import (
     LakeTable,
     bucket_expr,
     current_spec_id,
+    file_buckets,
     file_spec,
     is_mixed_spec,
 )
@@ -32,7 +33,7 @@ from aqueduct_core_spark.oracle import replay
 from aqueduct_core_spark.schema import TRANSCRIPT_PHYSICAL_SCHEMA
 from aqueduct_core_spark.transcripts import read_transcripts
 
-from tests.util import ev, events_df
+from tests.util import assert_delta_bucket_sets, ev, events_df
 
 import pytest
 
@@ -161,7 +162,8 @@ def test_incremental_migration_preserves_state(spark, tmp_path):
     assert not is_mixed_spec(snap)
     assert all(file_spec(f) == 2 for f in snap.files)
     # migrated entries landed in the CURRENT layout's bucket space
-    assert all(0 <= f["bucket"] < snap.n_buckets for f in snap.files)
+    assert all(0 <= b < snap.n_buckets for f in snap.files for b in file_buckets(f))
+    assert_delta_bucket_sets(t)
     assert steps > 1  # max_files actually bounded each commit
 
 
@@ -224,8 +226,9 @@ def test_new_writes_use_new_layout(spark, tmp_path):
     assert new_spec_files
     # files written post-evolution span the WIDER bucket space (2 buckets
     # could never address ids >= 2)
-    assert any(f["bucket"] >= 2 for f in new_spec_files)
-    # and each row physically lives in the bucket the new spec assigns it
+    assert any(b >= 2 for f in new_spec_files for b in file_buckets(f))
+    # and each row physically lives in a bucket its entry records, under the
+    # bucket the new spec assigns it
     snap = t.current()
     one = [f for f in new_spec_files if (f.get("rows") or 0) > 0][0]
     got = (
@@ -234,7 +237,8 @@ def test_new_writes_use_new_layout(spark, tmp_path):
         .distinct()
         .collect()
     )
-    assert {r["b"] for r in got} == {one["bucket"]}
+    assert {r["b"] for r in got} == set(file_buckets(one))
+    assert_delta_bucket_sets(t)
 
 
 def test_engine_background_migration_drains_mixed_state(spark, tmp_path):

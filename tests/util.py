@@ -44,3 +44,31 @@ def events_df(spark: SparkSession, events: list[dict]):
         [tuple(e[f.name] for f in CHANGE_EVENT_SCHEMA.fields) for e in events],
         CHANGE_EVENT_SCHEMA,
     )
+
+
+def assert_delta_bucket_sets(table) -> None:
+    """Every current-spec delta entry records exactly the buckets its file's
+    rows hash to under the current spec — no more, no fewer — and each
+    bucket's row count."""
+    from aqueduct_core_spark.lake.table import (
+        bucket_expr,
+        current_spec_id,
+        file_buckets,
+        file_spec,
+    )
+
+    snap = table.current()
+    for f in snap.files:
+        if f.get("kind") != "delta" or file_spec(f) != current_spec_id(snap):
+            continue
+        got = {
+            r["b"]: r["count"]
+            for r in table.spark.read.schema(snap.schema_by_id(f["schema_id"]))
+            .parquet(f["path"])
+            .groupBy(bucket_expr(snap.bucket_key, snap.n_buckets).alias("b"))
+            .count()
+            .collect()
+        }
+        recorded = dict(zip(file_buckets(f), f["bucket_rows"]))
+        assert file_buckets(f) == sorted(got), (f["path"], got, file_buckets(f))
+        assert recorded == got, (f["path"], got, recorded)
