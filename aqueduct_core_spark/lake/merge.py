@@ -39,7 +39,6 @@ from aqueduct_core_spark.lake.table import (
     BUCKET_COL,
     CommitConflict,
     LakeTable,
-    Snapshot,
     _file_may_match,
     bucket_expr,
     cluster_opts,
@@ -307,20 +306,8 @@ def merge_change_batch(
             props["lineage"] = lineage
         if pipe_state is not None:
             props["pipe_state"] = pipe_state  # UP_TO_DATE | OUT_OF_DATE | UNKNOWN
-        nxt = Snapshot(
-            version=snap.version + 1,
-            current_schema_id=snap.current_schema_id,
-            schemas=snap.schemas,
-            n_buckets=snap.n_buckets,
-            bucket_key=snap.bucket_key,
-            files=keep + new_files,
-            txn=txn,
-            properties=props,
-            parent=snap.version,
-            committed_at=time.time(),
-        )
         try:
-            table.try_commit(nxt)
+            nxt = table.publish_next(snap, files=keep + new_files, txn=txn, properties=props)
             return MergeResult(batch_id, False, nxt.version, list(affected))
         except CommitConflict:
             # Three cases behind one exception (the object-store reality):

@@ -42,7 +42,10 @@ cost is O(files changed), not O(files in table). A metadata-only commit
 Commits are atomic via ``os.link`` (create-if-absent) of the next version
 file — a concurrent winner makes the loser retry, which is exactly Iceberg's
 optimistic-commit model. Segments orphaned by losing CAS attempts are
-reclaimed by expire_snapshots after a grace window.
+reclaimed by expire_snapshots after a grace window. Every commit goes through
+LakeTable.commit (metadata changes recomputed on the head), swap_files (the
+rebase of a rewrite) or publish_next (one attempt, the caller handles the
+conflict); they alone build a successor snapshot.
 
 Scale notes (100 TB): all data stays in executors — the driver only touches
 manifests. At ~1M live files a single-level manifest is a ~10^2 MB JSON
@@ -60,8 +63,8 @@ import json
 import os
 import time
 import uuid
-from dataclasses import dataclass, field
-from typing import Sequence
+from dataclasses import dataclass, field, replace
+from typing import Callable, Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -579,6 +582,61 @@ class LakeTable:
         """Atomically publish `snap` as the next version (CAS on the version file)."""
         self._write_manifest(snap)
 
+    def publish_next(self, base: Snapshot, **changes) -> Snapshot:
+        """Publish `base` with `changes` (Snapshot fields) as the next version
+        and return it. Version, parent and commit time are set here alone.
+        Raises CommitConflict when another writer published that version."""
+        nxt = replace(
+            base, **changes, version=base.version + 1, parent=base.version,
+            committed_at=time.time(), segments=None,
+        )
+        self.try_commit(nxt)
+        return nxt
+
+    def commit(self, update: Callable[[Snapshot], dict | None]) -> Snapshot:
+        """Commit `update(head)` (the fields to change, or None when the head
+        needs no commit) and return the new head. A lost race re-runs
+        `update` on the winner's snapshot, so the change applies exactly once
+        on top of whatever landed first."""
+        while True:
+            head = self.current()
+            changes = update(head)
+            if changes is None:
+                return head
+            try:
+                return self.publish_next(head, **changes)
+            except CommitConflict:
+                continue
+
+    def swap_files(
+        self, removed: Iterable[str], added: list[dict], properties: dict | None = None
+    ) -> Snapshot | None:
+        """Rebase commit of a rewrite: replace exactly the `removed` paths of
+        the head with the `added` entries (merging `properties` in), keeping
+        every file other writers committed since the rewrite read its input.
+        Returns the new head; the head itself when `added` is already live
+        (our commit landed but its response was lost). When part of the input
+        is already gone (another rewrite took it), both outputs would hold
+        the same rows: the added files are deleted and None is returned, and
+        the caller starts over from the head."""
+        removed = set(removed)
+        ours = {f["path"] for f in added}
+        while True:
+            head = self.current()
+            live = {f["path"] for f in head.files}
+            if not live.isdisjoint(ours):
+                return head
+            if not removed <= live:
+                self.discard_files(added)
+                return None
+            files = [f for f in head.files if f["path"] not in removed] + added
+            try:
+                return self.publish_next(
+                    head, files=files, properties={**head.properties, **(properties or {})}
+                )
+            except CommitConflict:
+                continue
+
     def discard_files(self, entries: list[dict]) -> None:
         """Delete a failed commit attempt's data files.
 
@@ -608,34 +666,23 @@ class LakeTable:
         Mirrors Iceberg `ALTER TABLE ... ADD COLUMN` semantics: existing files are
         NOT rewritten; readers align old files to the new schema.
         """
-        while True:
-            snap = self.current()
+
+        def update(snap: Snapshot) -> dict | None:
             old = snap.schema()
             if [(f.name, f.dataType, f.nullable) for f in old.fields] == [
                 (f.name, f.dataType, f.nullable) for f in new_schema.fields
             ]:
                 # idempotent no-op (covers the ambiguous-success retry: our
                 # evolution already landed but the storage response was lost)
-                return snap
+                return None
             _check_compatible_evolution(old, new_schema)
             new_id = max(s["schema_id"] for s in snap.schemas) + 1
-            nxt = Snapshot(
-                version=snap.version + 1,
-                current_schema_id=new_id,
-                schemas=snap.schemas + [{"schema_id": new_id, "json": new_schema.json()}],
-                n_buckets=snap.n_buckets,
-                bucket_key=snap.bucket_key,
-                files=snap.files,
-                txn=snap.txn,
-                properties=snap.properties,
-                parent=snap.version,
-                committed_at=time.time(),
-            )
-            try:
-                self.try_commit(nxt)
-                return nxt
-            except CommitConflict:
-                continue
+            return {
+                "current_schema_id": new_id,
+                "schemas": snap.schemas + [{"schema_id": new_id, "json": new_schema.json()}],
+            }
+
+        return self.commit(update)
 
     def evolve_bucketing(self, new_n_buckets: int) -> Snapshot:
         """Evolve the bucket spec (Iceberg partition-spec evolution): a
@@ -652,8 +699,8 @@ class LakeTable:
         layout, which is ill-defined while two layouts coexist; COW tables
         should rebucket via one compact_table under the new spec instead
         (they rewrite everything per touched bucket anyway)."""
-        while True:
-            snap = self.current()
+
+        def update(snap: Snapshot) -> dict | None:
             if snap.properties.get("merge_mode", "cow") != "mor":
                 raise ValueError(
                     "evolve_bucketing requires merge_mode=mor; for a COW table "
@@ -663,101 +710,59 @@ class LakeTable:
                 raise ValueError(f"n_buckets must be >= 1, got {new_n_buckets}")
             if snap.n_buckets == int(new_n_buckets):
                 # idempotent no-op (covers the ambiguous-success retry)
-                return snap
+                return None
             old_id = current_spec_id(snap)
             specs = json.loads(snap.properties.get("bucket_specs", "[]")) or [
                 {"spec": old_id, "n_buckets": snap.n_buckets}
             ]
             new_id = max(s["spec"] for s in specs) + 1
-            nxt = Snapshot(
-                version=snap.version + 1,
-                current_schema_id=snap.current_schema_id,
-                schemas=snap.schemas,
-                n_buckets=int(new_n_buckets),
-                bucket_key=snap.bucket_key,
+            return {
+                "n_buckets": int(new_n_buckets),
                 # stamp every live entry with the spec it was written under —
                 # pre-evolution entries carry no "spec" key (implicit 1)
-                files=[{**f, "spec": file_spec(f)} for f in snap.files],
-                txn=snap.txn,
-                properties={
+                "files": [{**f, "spec": file_spec(f)} for f in snap.files],
+                "properties": {
                     **snap.properties,
                     "bucket_spec_id": str(new_id),
                     "bucket_specs": json.dumps(
                         specs + [{"spec": new_id, "n_buckets": int(new_n_buckets)}]
                     ),
                 },
-                parent=snap.version,
-                committed_at=time.time(),
-            )
-            try:
-                self.try_commit(nxt)
-                return nxt
-            except CommitConflict:
-                continue
+            }
+
+        return self.commit(update)
 
     # ---------------------------------------------------------------- maintenance
     def register_consumer(self, consumer_id: str, version: int) -> None:
         """Record a downstream consumer's applied snapshot version in the
-        table properties (CAS loop) — the reference's node offset
-        re-registration (nodes continually report their pipe offset to the
-        registry; retention/compaction then respects the slowest reader).
+        table properties — the reference's node offset re-registration
+        (nodes continually report their pipe offset to the registry;
+        retention/compaction then respects the slowest reader).
         Chained children call this after each sync so
         expire_snapshots(respect_consumers=True) never breaks their resume
         interval."""
-        import time as _t
 
-        while True:
-            snap = self.current()
+        def update(snap: Snapshot) -> dict | None:
             consumers = dict(snap.properties.get("consumers", {}))
             if consumers.get(consumer_id) == version:
-                return
+                return None
             consumers[consumer_id] = int(version)
-            nxt = Snapshot(
-                version=snap.version + 1,
-                current_schema_id=snap.current_schema_id,
-                schemas=snap.schemas,
-                n_buckets=snap.n_buckets,
-                bucket_key=snap.bucket_key,
-                files=snap.files,
-                txn=snap.txn,
-                properties={**snap.properties, "consumers": consumers},
-                parent=snap.version,
-                committed_at=_t.time(),
-            )
-            try:
-                self.try_commit(nxt)
-                return
-            except CommitConflict:
-                continue  # idempotent re-apply onto the new current
+            return {"properties": {**snap.properties, "consumers": consumers}}
+
+        self.commit(update)
 
     def unregister_consumer(self, consumer_id: str) -> None:
         """Remove a consumer's registration (the stale-node eviction path —
         SubNodeGroup removes nodes unseen past the threshold)."""
-        import time as _t
 
-        while True:
-            snap = self.current()
+        def update(snap: Snapshot) -> dict | None:
             consumers = dict(snap.properties.get("consumers", {}))
             if consumer_id not in consumers:
-                return
+                return None
             consumers.pop(consumer_id)
-            nxt = Snapshot(
-                version=snap.version + 1,
-                current_schema_id=snap.current_schema_id,
-                schemas=snap.schemas,
-                n_buckets=snap.n_buckets,
-                bucket_key=snap.bucket_key,
-                files=snap.files,
-                txn=snap.txn,
-                properties={**snap.properties, "consumers": consumers},
-                parent=snap.version,
-                committed_at=_t.time(),
-            )
-            try:
-                self.try_commit(nxt)
-                return
-            except CommitConflict:
-                continue
+            return {"properties": {**snap.properties, "consumers": consumers}}
+
+        self.commit(update)
 
     def expire_snapshots(
         self,
@@ -818,20 +823,8 @@ class LakeTable:
                     if cid not in evicted
                 }
             props["retention_floor"] = min(keep)
-            nxt = Snapshot(
-                version=cur.version + 1,
-                current_schema_id=cur.current_schema_id,
-                schemas=cur.schemas,
-                n_buckets=cur.n_buckets,
-                bucket_key=cur.bucket_key,
-                files=cur.files,
-                txn=cur.txn,
-                properties=props,
-                parent=cur.version,
-                committed_at=time.time(),
-            )
             try:
-                self.try_commit(nxt)
+                nxt = self.publish_next(cur, properties=props)
                 keep.add(nxt.version)  # the floor commit itself is the head
                 break
             except CommitConflict:

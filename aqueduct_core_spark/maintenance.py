@@ -8,21 +8,22 @@ mark TTL for superseded deletes -> delete expired -> VACUUM ANALYSE
 
 Here: a maintenance job that rewrites the transcript table dropping tombstone
 rows older than the retention threshold (they have done their late-data duty),
-then expires old snapshots. Single-flight is guaranteed by the manifest's
-optimistic CAS commit (a concurrent compactor loses the race and retries or
-aborts) — replacing the reference's `SELECT ... FOR UPDATE NOWAIT` advisory lock.
+then expires old snapshots. Every rewrite here commits through
+LakeTable.swap_files instead of the reference's `SELECT ... FOR UPDATE NOWAIT`
+advisory lock: it reads its input pinned to one snapshot, and its commit
+rebases onto the head, dropping exactly the files it rewrote and keeping what
+other writers committed meanwhile. A rewrite whose input a concurrent rewrite
+already removed starts over from the head.
 """
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass
 
 from pyspark.sql import functions as F
 
 from aqueduct_core_spark.lake.table import (
     BUCKET_COL,
-    CommitConflict,
     LakeTable,
     Snapshot,
     bucket_expr,
@@ -45,7 +46,6 @@ def compact_table(
     table: LakeTable,
     tombstone_retention_ts,
     keep_snapshots: int = 2,
-    writer_id: str = "maintenance",
 ) -> CompactionStats:
     """Drop tombstone rows (turn, conversation and cascade sentinels) whose
     event time is at or below the retention threshold, rewrite all buckets,
@@ -57,7 +57,12 @@ def compact_table(
 
     On a merge-on-read table this is ALSO the delta-fold: resolution runs once
     and the result is written back as base files, so reads go resolution-free
-    again (the reference's compactUpTo over its append-only edge store)."""
+    again (the reference's compactUpTo over its append-only edge store).
+
+    Concurrency follows compact_bucket_range: the rewrite reads one pinned
+    snapshot and its commit swaps exactly those files, so files committed
+    meanwhile stay live (as deltas until the next pass); if another rewrite
+    removed part of the input first, the compaction starts over."""
     from aqueduct_core_spark.lake.merge import read_resolved
 
     while True:
@@ -65,7 +70,9 @@ def compact_table(
         # bucketed_output folds resolution + the write's bucket partitioning
         # into one exchange (resolve grouped by (bucket, key) on the already
         # bucket-partitioned scan) — the rewrite costs a single shuffle.
-        df = read_resolved(table, with_bucket_col=True, bucketed_output=True)
+        df = read_resolved(
+            table, version=snap.version, with_bucket_col=True, bucketed_output=True
+        )
         kept = df.filter(
             ~(F.col("_deleted") & (F.col("ts") <= F.lit(tombstone_retention_ts)))
         )
@@ -74,32 +81,15 @@ def compact_table(
             kept, snap, kind="base", already_bucketed=True,
             cluster_col=cc, max_records_per_file=tfr,
         )
-        nxt = Snapshot(
-            version=snap.version + 1,
-            current_schema_id=snap.current_schema_id,
-            schemas=snap.schemas,
-            n_buckets=snap.n_buckets,
-            bucket_key=snap.bucket_key,
-            files=new_files,
-            txn=snap.txn,
-            properties={**snap.properties, "last_compaction": str(tombstone_retention_ts)},
-            parent=snap.version,
-            committed_at=time.time(),
+        head = table.swap_files(
+            (f["path"] for f in snap.files),
+            new_files,
+            {"last_compaction": str(tombstone_retention_ts)},
         )
-        try:
-            table.try_commit(nxt)
+        if head is not None:
             break
-        except CommitConflict:
-            cur = table.current()
-            if any(f["path"] in {e["path"] for e in new_files} for f in cur.files):
-                # ambiguous success (lost storage response): our rewrite IS
-                # the current snapshot — its files are live, don't discard
-                nxt = cur
-                break
-            table.discard_files(new_files)  # reclaim the losing attempt's files
-            continue
     removed = table.expire_snapshots(keep_last=keep_snapshots)
-    return CompactionStats(version=nxt.version, removed_snapshots=removed)
+    return CompactionStats(version=head.version, removed_snapshots=removed)
 
 
 def fold_closures(snap: Snapshot, buckets) -> list[list[int]]:
@@ -135,7 +125,6 @@ def compact_bucket_range(
     table: LakeTable,
     tombstone_retention_ts,
     buckets: list[int],
-    writer_id: str = "maintenance",
 ) -> CompactionStats:
     """Compact ONLY the given bucket range as an independent job — the
     cluster-scale form of the reference's hourly CompactionTask: N disjoint
@@ -158,10 +147,10 @@ def compact_bucket_range(
     it drops exactly the files it folded and keeps every file any concurrent
     writer committed since, including new delta files in this same bucket
     range (they simply remain deltas and resolve at read until the next
-    compaction pass). A lost CAS race re-rebases and retries without
-    recomputing. If a concurrent fold or rewrite already removed one of the
-    folded files, the two outputs would overlap: the attempt is discarded
-    and the fold starts over from the current snapshot."""
+    compaction pass). A lost CAS race rebases again without recomputing
+    (LakeTable.swap_files). If a concurrent fold or rewrite already removed
+    one of the folded files, the two outputs would overlap: the attempt is
+    discarded and the fold starts over from the current snapshot."""
     while True:
         out = _fold_once(table, tombstone_retention_ts, buckets)
         if out is not None:
@@ -229,38 +218,12 @@ def _fold_once(table: LakeTable, tombstone_retention_ts, buckets) -> CompactionS
         ):
             e["migrated"] = True
             new_files.append(e)
-    ours = {f["path"] for f in new_files}
-    while True:
-        cur = table.current()
-        live = {f["path"] for f in cur.files}
-        if not live.isdisjoint(ours):
-            # ambiguous success: our rebase commit landed but the storage
-            # response was lost — rebasing again would double-list the files
-            return CompactionStats(version=cur.version, removed_snapshots=0)
-        if not folded <= live:
-            table.discard_files(new_files)
-            return None
-        files = [f for f in cur.files if f["path"] not in folded] + new_files
-        nxt = Snapshot(
-            version=cur.version + 1,
-            current_schema_id=cur.current_schema_id,
-            schemas=cur.schemas,
-            n_buckets=cur.n_buckets,
-            bucket_key=cur.bucket_key,
-            files=files,
-            txn=cur.txn,
-            properties={
-                **cur.properties,
-                f"last_compaction_b{min(target)}_{max(target)}": str(tombstone_retention_ts),
-            },
-            parent=cur.version,
-            committed_at=time.time(),
-        )
-        try:
-            table.try_commit(nxt)
-            return CompactionStats(version=nxt.version, removed_snapshots=0)
-        except CommitConflict:
-            continue  # rebase onto the new current snapshot; folded work is kept
+    head = table.swap_files(
+        folded,
+        new_files,
+        {f"last_compaction_b{min(target)}_{max(target)}": str(tombstone_retention_ts)},
+    )
+    return None if head is None else CompactionStats(version=head.version, removed_snapshots=0)
 
 
 def _with_bucket(df, snap: Snapshot):
@@ -402,7 +365,6 @@ class MigrationStats:
 def migrate_spec_files(
     table: LakeTable,
     max_files: int | None = None,
-    writer_id: str = "maintenance",
 ) -> MigrationStats:
     """Incrementally rewrite files from retired bucket specs into the current
     layout — the data-moving half of evolve_bucketing, sized by `max_files`
@@ -417,64 +379,44 @@ def migrate_spec_files(
     historical manifests until snapshot expiry, same as compaction folds).
 
     Safe against concurrent writers exactly like compact_bucket_range: input
-    pinned to the entry snapshot, commit rebases, ambiguous success detected
-    by our paths being live. When no old-spec files remain the table leaves
-    the mixed state and full per-bucket pruning/skipping resumes."""
-    snap0 = table.current()
-    cur_spec = current_spec_id(snap0)
-    old = [f for f in snap0.files if file_spec(f) != cur_spec]
-    if not old:
-        return MigrationStats(0, 0, snap0.version, done=True)
-    # smallest-first: drains the long tail of tiny files quickly and keeps
-    # each bounded job's input size predictable
-    old.sort(key=lambda f: (f.get("rows") or 1, f["path"]))
-    sel = old if max_files is None else old[: max(1, int(max_files))]
-    folded = {f["path"] for f in sel}
-    cc, tfr = cluster_opts(snap0)
-    new_files: list[dict] = []
-    for kind in ("base", "delta"):
-        grp = [f for f in sel if f.get("kind", "base") == kind]
-        if not grp:
-            continue
-        df = _with_bucket(table.read_entries(grp, snap0), snap0)
-        ents = table.write_files(
-            df,
-            snap0,
-            kind=kind,
-            # base rewrites keep the table's clustering contract; delta rows
-            # stay unsorted like the ingest path that wrote them
-            cluster_col=cc if kind == "base" else None,
-            max_records_per_file=tfr if kind == "base" else None,
-        )
-        for e in ents:
-            e["migrated"] = True
-        new_files.extend(ents)
-    ours = {f["path"] for f in new_files}
+    pinned to the entry snapshot, commit through LakeTable.swap_files, and a
+    fresh start from the head when a concurrent rewrite (a compaction, say)
+    already removed part of the input. When no old-spec files remain the
+    table leaves the mixed state and full per-bucket pruning/skipping
+    resumes."""
     while True:
-        cur = table.current()
-        if any(f["path"] in ours for f in cur.files):
-            # ambiguous success: our rebase landed, response lost
-            remaining = sum(1 for f in cur.files if file_spec(f) != current_spec_id(cur))
-            return MigrationStats(len(sel), remaining, cur.version, remaining == 0)
-        files = [f for f in cur.files if f["path"] not in folded] + new_files
-        nxt = Snapshot(
-            version=cur.version + 1,
-            current_schema_id=cur.current_schema_id,
-            schemas=cur.schemas,
-            n_buckets=cur.n_buckets,
-            bucket_key=cur.bucket_key,
-            files=files,
-            txn=cur.txn,
-            properties=cur.properties,
-            parent=cur.version,
-            committed_at=time.time(),
-        )
-        try:
-            table.try_commit(nxt)
-            remaining = sum(1 for f in files if file_spec(f) != current_spec_id(nxt))
-            return MigrationStats(len(sel), remaining, nxt.version, remaining == 0)
-        except CommitConflict:
-            continue  # rebase onto the new current; rewritten files are kept
+        snap0 = table.current()
+        cur_spec = current_spec_id(snap0)
+        old = [f for f in snap0.files if file_spec(f) != cur_spec]
+        if not old:
+            return MigrationStats(0, 0, snap0.version, done=True)
+        # smallest-first: drains the long tail of tiny files quickly and keeps
+        # each bounded job's input size predictable
+        old.sort(key=lambda f: (f.get("rows") or 1, f["path"]))
+        sel = old if max_files is None else old[: max(1, int(max_files))]
+        cc, tfr = cluster_opts(snap0)
+        new_files: list[dict] = []
+        for kind in ("base", "delta"):
+            grp = [f for f in sel if f.get("kind", "base") == kind]
+            if not grp:
+                continue
+            df = _with_bucket(table.read_entries(grp, snap0), snap0)
+            ents = table.write_files(
+                df,
+                snap0,
+                kind=kind,
+                # base rewrites keep the table's clustering contract; delta rows
+                # stay unsorted like the ingest path that wrote them
+                cluster_col=cc if kind == "base" else None,
+                max_records_per_file=tfr if kind == "base" else None,
+            )
+            for e in ents:
+                e["migrated"] = True
+            new_files.extend(ents)
+        head = table.swap_files((f["path"] for f in sel), new_files)
+        if head is not None:
+            remaining = sum(1 for f in head.files if file_spec(f) != current_spec_id(head))
+            return MigrationStats(len(sel), remaining, head.version, remaining == 0)
 
 
 def compact_table_parallel(
@@ -510,7 +452,13 @@ def compact_table_parallel(
 def rewrite_small_files(table: LakeTable, target_files_per_bucket: int = 1) -> int:
     """Bin-pack small files per bucket (Iceberg rewrite_data_files analog;
     reference analog: SQLite VACUUM + WAL checkpoint, SQLiteStorage.java:266-273).
-    Returns the new snapshot version."""
+    Returns the new snapshot version.
+
+    Concurrency follows compact_bucket_range: the rewrite reads one pinned
+    snapshot and its commit swaps exactly those files, so files committed
+    meanwhile stay live (and may leave a bucket over the target until the
+    next call); if another rewrite removed part of the input first, the
+    rewrite starts over."""
     while True:
         snap = table.current()
         by_bucket: dict[int, int] = {}
@@ -523,7 +471,9 @@ def rewrite_small_files(table: LakeTable, target_files_per_bucket: int = 1) -> i
 
         # resolve while rewriting (a MOR table's delta files fold into base
         # here) — bucketed_output keeps the whole rewrite on one exchange
-        df = read_resolved(table, with_bucket_col=True, bucketed_output=True)
+        df = read_resolved(
+            table, version=snap.version, with_bucket_col=True, bucketed_output=True
+        )
         # cluster for stats-tightness, but NEVER split: this op's contract is
         # the bin-pack target (target_file_rows would fight the <= check and
         # re-trigger the loop forever)
@@ -531,24 +481,6 @@ def rewrite_small_files(table: LakeTable, target_files_per_bucket: int = 1) -> i
             df, snap, kind="base", already_bucketed=True,
             cluster_col=cluster_opts(snap)[0],
         )
-        nxt = Snapshot(
-            version=snap.version + 1,
-            current_schema_id=snap.current_schema_id,
-            schemas=snap.schemas,
-            n_buckets=snap.n_buckets,
-            bucket_key=snap.bucket_key,
-            files=new_files,
-            txn=snap.txn,
-            properties=snap.properties,
-            parent=snap.version,
-            committed_at=time.time(),
-        )
-        try:
-            table.try_commit(nxt)
-            return nxt.version
-        except CommitConflict:
-            cur = table.current()
-            if any(f["path"] in {e["path"] for e in new_files} for f in cur.files):
-                return cur.version  # ambiguous success: files are live
-            table.discard_files(new_files)  # reclaim the losing attempt's files
-            continue
+        head = table.swap_files((f["path"] for f in snap.files), new_files)
+        if head is not None:
+            return head.version

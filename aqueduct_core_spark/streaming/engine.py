@@ -259,32 +259,12 @@ class IngestEngine:
     def _clear_txn_watermark(self) -> None:
         """Remove this writer's batch-id watermark (and mark the pipe
         OUT_OF_DATE) in one atomic manifest commit."""
-        from aqueduct_core_spark.lake.table import CommitConflict, Snapshot
-        import time as _t
-
-        table = LakeTable(self.spark, self.table_root)
-        while True:
-            snap = table.current()
-            txn = {k: v for k, v in snap.txn.items() if k != self.writer_id}
-            props = dict(snap.properties)
-            props["pipe_state"] = "OUT_OF_DATE"
-            nxt = Snapshot(
-                version=snap.version + 1,
-                current_schema_id=snap.current_schema_id,
-                schemas=snap.schemas,
-                n_buckets=snap.n_buckets,
-                bucket_key=snap.bucket_key,
-                files=snap.files,
-                txn=txn,
-                properties=props,
-                parent=snap.version,
-                committed_at=_t.time(),
-            )
-            try:
-                table.try_commit(nxt)
-                return
-            except CommitConflict:
-                continue
+        LakeTable(self.spark, self.table_root).commit(
+            lambda snap: {
+                "txn": {k: v for k, v in snap.txn.items() if k != self.writer_id},
+                "properties": {**snap.properties, "pipe_state": "OUT_OF_DATE"},
+            }
+        )
 
     def validate_table(self) -> bool:
         """Manifest integrity check: the current manifest parses, its schema
@@ -771,34 +751,11 @@ class IngestEngine:
         return rounds
 
     def _mark_up_to_date(self) -> None:
-        table = LakeTable(self.spark, self.table_root)
-        snap = table.current()
-        if snap.properties.get("pipe_state") == "UP_TO_DATE":
-            return
-        from aqueduct_core_spark.lake.table import CommitConflict, Snapshot
-        import time as _t
-
-        while True:
-            snap = table.current()
-            props = dict(snap.properties)
-            props["pipe_state"] = "UP_TO_DATE"
-            nxt = Snapshot(
-                version=snap.version + 1,
-                current_schema_id=snap.current_schema_id,
-                schemas=snap.schemas,
-                n_buckets=snap.n_buckets,
-                bucket_key=snap.bucket_key,
-                files=snap.files,
-                txn=snap.txn,
-                properties=props,
-                parent=snap.version,
-                committed_at=_t.time(),
-            )
-            try:
-                table.try_commit(nxt)
-                return
-            except CommitConflict:
-                continue
+        LakeTable(self.spark, self.table_root).commit(
+            lambda snap: None
+            if snap.properties.get("pipe_state") == "UP_TO_DATE"
+            else {"properties": {**snap.properties, "pipe_state": "UP_TO_DATE"}}
+        )
 
     # ------------------------------------------------------------------ state
     def lineage(self) -> DataFrame:

@@ -5,7 +5,10 @@ PostgresqlStorage.java:503-505, PostgresNodeGroup.java:33-41)."""
 
 from __future__ import annotations
 
+import json
 import threading
+
+import pytest
 
 from aqueduct_core_spark.lake.merge import merge_change_batch
 from aqueduct_core_spark.lake.table import CommitConflict, LakeTable, Snapshot
@@ -107,15 +110,16 @@ def test_losing_commit_attempt_leaves_no_orphan_files(spark, tmp_table_dir):
     assert on_disk == live
 
 
-def test_compaction_races_ingest_writer_no_lost_data(spark, tmp_table_dir):
-    """Per-bucket-range compaction commits WHILE an ingest writer commits:
-    the compactor rebases onto the writer's snapshot (or vice versa) and no
-    row from either side is lost (the reference's single-flight semantics,
-    PostgresqlStorageIntegrationSpec.groovy:483-531 — here: optimistic rebase
-    instead of an advisory lock)."""
+@pytest.mark.parametrize("compactor", ["compact_bucket_range", "compact_table"])
+def test_compaction_races_ingest_writer_no_lost_data(spark, tmp_table_dir, compactor):
+    """Compaction (per bucket range, or the whole table) commits WHILE an
+    ingest writer commits: the compactor rebases onto the writer's snapshot
+    (or vice versa) and no row from either side is lost (the reference's
+    single-flight semantics, PostgresqlStorageIntegrationSpec.groovy:483-531
+    — here: optimistic rebase instead of an advisory lock)."""
     from datetime import datetime
 
-    from aqueduct_core_spark.maintenance import compact_bucket_range
+    from aqueduct_core_spark.maintenance import compact_bucket_range, compact_table
     from aqueduct_core_spark.oracle import replay
 
     table = LakeTable.create(
@@ -140,8 +144,11 @@ def test_compaction_races_ingest_writer_no_lost_data(spark, tmp_table_dir):
     def compact():
         try:
             # retention far in the future: every tombstone at/below it folds away
-            compact_bucket_range(table, datetime(2030, 1, 1), buckets=[0, 1])
-            compact_bucket_range(table, datetime(2030, 1, 1), buckets=[2, 3])
+            if compactor == "compact_table":
+                compact_table(table, datetime(2030, 1, 1))
+            else:
+                compact_bucket_range(table, datetime(2030, 1, 1), buckets=[0, 1])
+                compact_bucket_range(table, datetime(2030, 1, 1), buckets=[2, 3])
         except Exception as e:  # noqa: BLE001
             errs.append(e)
 
@@ -154,6 +161,72 @@ def test_compaction_races_ingest_writer_no_lost_data(spark, tmp_table_dir):
         (r["conv_id"], r["turn_idx"], r["text"])
         for r in replay(first + second)
     ]
+    got = [
+        (r["conv_id"], r["turn_idx"], r["text"])
+        for r in read_transcripts(table).orderBy("conv_id", "turn_idx").collect()
+    ]
+    assert got == expect
+
+
+@pytest.mark.parametrize(
+    "change", ["evolve_schema", "evolve_bucketing", "register_consumer"]
+)
+def test_metadata_commit_reapplies_after_losing_race(
+    spark, tmp_table_dir, monkeypatch, change
+):
+    """A metadata commit whose CAS loses to an ingest commit re-applies its
+    change on the winner's snapshot: the head keeps the ingest's files and
+    txn, and the change lands exactly once."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from aqueduct_core_spark.oracle import replay
+
+    table = LakeTable.create(
+        spark, tmp_table_dir, TRANSCRIPT_PHYSICAL_SCHEMA, bucket_key="conv_id",
+        n_buckets=4, properties={"merge_mode": "mor"},
+    )
+    first = [ev(i, conv=f"a{i % 5}", turn=i % 3) for i in range(1, 21)]
+    second = [ev(100 + i, conv=f"b{i % 4}", turn=i % 2) for i in range(1, 13)]
+    merge_change_batch(table, events_df(spark, first), batch_id=0, writer_id="w1")
+    v0 = table.current().version
+
+    real_commit = LakeTable.try_commit
+    fired, merged = [], set()
+
+    def racing_commit(self, snap):
+        if not fired:
+            fired.append(True)
+            merge_change_batch(table, events_df(spark, second), batch_id=0, writer_id="w2")
+            merged.update(f["path"] for f in table.current().files)
+        return real_commit(self, snap)
+
+    wider = StructType(
+        TRANSCRIPT_PHYSICAL_SCHEMA.fields + [StructField("model", StringType(), True)]
+    )
+    monkeypatch.setattr(LakeTable, "try_commit", racing_commit)
+    if change == "evolve_schema":
+        table.evolve_schema(wider)
+    elif change == "evolve_bucketing":
+        table.evolve_bucketing(8)
+    else:
+        table.register_consumer("child", v0)
+    monkeypatch.undo()
+
+    head = table.current()
+    assert merged
+    assert head.version == v0 + 2  # the ingest commit, then ours once
+    assert head.txn == {"w1": 0, "w2": 0}
+    assert merged <= {f["path"] for f in head.files}
+    if change == "evolve_schema":
+        assert [s["schema_id"] for s in head.schemas] == [1, 2]
+        assert head.schema() == wider
+    elif change == "evolve_bucketing":
+        assert head.n_buckets == 8
+        assert [s["n_buckets"] for s in json.loads(head.properties["bucket_specs"])] == [4, 8]
+        assert {f.get("spec") for f in head.files} == {1}
+    else:
+        assert head.properties["consumers"] == {"child": v0}
+    expect = [(r["conv_id"], r["turn_idx"], r["text"]) for r in replay(first + second)]
     got = [
         (r["conv_id"], r["turn_idx"], r["text"])
         for r in read_transcripts(table).orderBy("conv_id", "turn_idx").collect()

@@ -167,6 +167,30 @@ def test_incremental_migration_preserves_state(spark, tmp_path):
     assert steps > 1  # max_files actually bounded each commit
 
 
+def test_migration_racing_full_compaction_keeps_state(spark, tmp_path, monkeypatch):
+    """A compaction that commits between the migration's write and its
+    commit has already rewritten the migration's input: the migration must
+    not put its copy of those rows back beside the compacted files (that
+    resurrected deleted rows), but start over from the new head."""
+    t, events = _evolved_table(spark, tmp_path)
+    real_commit = LakeTable.try_commit
+    fired = []
+
+    def racing_commit(self, snap):
+        if not fired:
+            fired.append(True)
+            compact_table(t, "2030-01-01 00:00:00")
+        return real_commit(self, snap)
+
+    monkeypatch.setattr(LakeTable, "try_commit", racing_commit)
+    st = migrate_spec_files(t)
+    monkeypatch.undo()
+    assert fired
+    assert rows(t) == expected(events)
+    assert st.done
+    assert not is_mixed_spec(t.current())
+
+
 def test_changelog_never_reemits_migrated_rows(spark, tmp_path):
     t, events = _evolved_table(spark, tmp_path)
     v_before = t.current().version
