@@ -6,7 +6,7 @@ spark-submit):
     spark-submit --py-files aqueduct_core_spark.zip \\
         -m aqueduct_core_spark ingest \\
         --log /data/change_log --table /lake/transcripts \\
-        --checkpoint /ckpt/transcripts --mode mor --buckets 256 \\
+        --checkpoint /ckpt/transcripts --buckets 256 \\
         --max-files-per-trigger 64 [--continuous 30s] [--normalize]
 
     python -m aqueduct_core_spark compact --table /lake/transcripts \\
@@ -61,7 +61,6 @@ def cmd_ingest(args) -> int:
         table_root=args.table,
         checkpoint_dir=args.checkpoint,
         n_buckets=args.buckets,
-        merge_mode=args.mode,
         routing_filter=[int(x) for x in args.routing.split(",")] if args.routing else None,
         entity_filter=args.entities.split(",") if args.entities else None,
         transform=transform,
@@ -143,7 +142,6 @@ def cmd_status(args) -> int:
                 # physical rows from manifest stats (pre-LWW-resolution; exact
                 # when every file carries footer stats)
                 "rows_physical": sum(rows_known) if rows_known else None,
-                "mode": snap.properties.get("merge_mode", "cow"),
                 "pipe_state": snap.properties.get("pipe_state", "UNKNOWN"),
                 "txn": snap.txn,
                 "lineage": snap.properties.get("lineage", {}),
@@ -185,7 +183,6 @@ def cmd_chain(args) -> int:
         parent_root=args.parent,
         table_root=args.table,
         n_buckets=args.buckets,
-        merge_mode=args.mode,
         writer_id=args.writer_id,
         register_offset=args.register_offset,
     )
@@ -215,7 +212,6 @@ def main(argv=None) -> int:
     pi.add_argument("--log", default=None, help="feed directory (or use --follow)")
     pi.add_argument("--table", required=True)
     pi.add_argument("--checkpoint", required=True)
-    pi.add_argument("--mode", choices=["cow", "mor"], default="mor")
     pi.add_argument("--buckets", type=int, default=64)
     pi.add_argument("--max-files-per-trigger", type=int, default=64)
     pi.add_argument("--continuous", default=None, help="processing-time trigger, e.g. 30s")
@@ -284,7 +280,6 @@ def main(argv=None) -> int:
     ph = sub.add_parser("chain", help="tail a parent table into a child table")
     ph.add_argument("--parent", required=True)
     ph.add_argument("--table", required=True)
-    ph.add_argument("--mode", choices=["cow", "mor"], default="mor")
     ph.add_argument("--buckets", type=int, default=64)
     ph.add_argument("--writer-id", default="chain")
     ph.add_argument("--max-syncs", type=int, default=1000)

@@ -1,4 +1,4 @@
-"""Copy-on-write CDC MERGE of a change-event micro-batch into the transcript table.
+"""Merge-on-read CDC MERGE of a change-event micro-batch into the transcript table.
 
 This is the engine's core apply operator. It reproduces, Spark-first, the reference's
 single-transaction apply + LWW compaction + tombstone semantics:
@@ -17,13 +17,11 @@ single-transaction apply + LWW compaction + tombstone semantics:
 
 Plan shape (all distributed; driver only plans + commits the manifest):
 
-  batch ──normalize──▶ salted 2-phase LWW dedup ──▶ winners (unique per key)
-                                        │
-  target buckets (manifest-pruned) ─────┴─▶ groupBy(key).max_by((ts,_lsn))
-                                        │
-                 conversation-tombstone cascade (wave-2 guard, broadcast-joined)
-                                        │
-                 per-bucket rewrite ──▶ atomic manifest commit (txn: batch_id)
+  write  batch ──normalize──▶ repartition(bucket) ──▶ resolve_lww ──▶ delta files
+           (one per write task) ──▶ atomic manifest commit (txn: batch_id)
+  read   base ∪ delta (manifest-pruned) ──▶ resolve_lww: groupBy(key).max_by((ts,_lsn))
+           ──▶ conversation-tombstone cascade (wave-2 guard, a window per conv)
+  fold   compaction (maintenance.py) resolves a bucket the same way into base files
 """
 
 from __future__ import annotations
@@ -41,7 +39,6 @@ from aqueduct_core_spark.lake.table import (
     LakeTable,
     _file_may_match,
     bucket_expr,
-    cluster_opts,
     file_buckets,
     is_mixed_spec,
 )
@@ -181,20 +178,20 @@ def merge_change_batch(
 ) -> MergeResult:
     """Apply one micro-batch of change events. Idempotent by (writer_id, batch_id).
 
-    LWW dedup is FOLDED INTO the merge aggregation: one groupBy(key).max_by over
-    stored ∪ incoming resolves intra-batch duplicates and cross-batch precedence
-    in a single shuffle. Hash aggregation's map-side partial combine already
-    collapses hot keys per task (each reduce key receives at most one candidate
-    row per upstream task), which is the built-in form of salted pre-aggregation;
-    pass salt > 1 to add an explicit salted pre-collapse of the batch side for
-    pathological single-key duplicate storms (millions of versions of ONE
-    (conv_id, turn_idx) inside one batch)."""
+    The batch is appended as delta files: one groupBy(bucket, key).max_by
+    resolves intra-batch duplicates in a single shuffle; cross-batch
+    precedence is resolved at read time (read_resolved) and by compaction.
+    Hash aggregation's map-side partial combine already collapses hot keys
+    per task (each reduce key receives at most one candidate row per upstream
+    task), which is the built-in form of salted pre-aggregation; pass salt > 1
+    to add an explicit salted pre-collapse of the batch side for pathological
+    single-key duplicate storms (millions of versions of ONE (conv_id,
+    turn_idx) inside one batch)."""
     while True:
         snap = table.current()
         if snap.txn.get(writer_id, -1) >= batch_id:
             return MergeResult(batch_id, True, None, [])
 
-        mode = snap.properties.get("merge_mode", "cow")
         phys_schema = snap.schema()
         if physical:
             bcols = set(batch_df.columns)
@@ -211,75 +208,28 @@ def merge_change_batch(
         if salt and salt > 1:
             src = lww_dedup(src, salt=salt)
         src = src.withColumn(BUCKET_COL, bucket_expr(snap.bucket_key, snap.n_buckets))
-        # COW: src feeds the bucket-probe collect AND both resolve_lww
-        # consumers — persist so the normalize/dedup DAG runs once instead of
-        # three times. MOR deliberately does NOT persist: its two consumers
-        # are one cheap column-pruned scan each, and materializing a
-        # multi-million-row batch into the block store costs more than the
-        # recompute (measured at 8M events / 2 batches on local[32]:
-        # MOR 345k ev/s unpersisted vs 115k persisted; COW 260k persisted vs
-        # 86k unpersisted — each mode 3x better on its own side).
-        if mode != "mor":
-            src = src.persist()
-        try:
-            n_out = table.write_parallelism(snap)
-            if mode == "mor":
-                # Merge-on-read (the reference's own shape: the edge store APPENDS
-                # every message and compacts separately, SQLiteStorage.java:134-171
-                # + compactUpTo). The batch is deduped within itself and appended as
-                # DELTA files — no target scan, no rewrite; LWW resolution happens
-                # at read time (resolve_lww) and compaction folds deltas into base.
-                # Write amplification per batch: exactly the batch, nothing else.
-                #
-                # ONE exchange for the whole apply: repartition by bucket FIRST,
-                # then group by (bucket, key) — bucket is a function of conv_id,
-                # so HashPartitioning(bucket) already satisfies the aggregation's
-                # ClusteredDistribution and the bucketed write needs no second
-                # shuffle. (The old shape shuffled twice: groupBy(key), then
-                # repartition(bucket) inside write_files — 2x the batch over the
-                # wire for a dedup that barely shrinks a ~unique-key feed.)
-                resolved_batch = resolve_lww(
-                    src.repartition(n_out, F.col(BUCKET_COL)),
-                    group_prefix=(BUCKET_COL,),
-                )
-                new_files = table.write_files(
-                    resolved_batch, snap, kind="delta", already_bucketed=True
-                )
-                keep = list(snap.files)
-                affected = sorted({b for f in new_files for b in file_buckets(f)})
-            else:
-                if is_mixed_spec(snap):
-                    # unreachable through the public API (evolve_bucketing is
-                    # MOR-only) — refuse rather than mis-prune two layouts
-                    raise RuntimeError(
-                        "copy-on-write merge on a mixed-bucket-spec table; "
-                        "finish spec migration first"
-                    )
-                # Copy-on-write: only buckets the batch touches are read (manifest
-                # pruning; the bucket set is a cheap int-distinct over the batch)
-                # and rewritten fully — reads stay resolution-free. Same
-                # single-exchange shape as MOR: bucket-partition the base ∪ batch
-                # union once, resolve in place, write in place.
-                affected = sorted(
-                    r[0] for r in src.select(BUCKET_COL).distinct().collect()
-                )
-                target = table.read(buckets=affected, with_bucket_col=True)
-                guarded = resolve_lww(
-                    target.unionByName(src).repartition(n_out, F.col(BUCKET_COL)),
-                    group_prefix=(BUCKET_COL,),
-                )
-                # COW rewrites whole buckets, so it clusters like compaction:
-                # the rewritten base files carry tight, disjoint ts ranges
-                # and windowed reads keep pruning between compactions too.
-                cc, tfr = cluster_opts(snap)
-                new_files = table.write_files(
-                    guarded, snap, already_bucketed=True,
-                    cluster_col=cc, max_records_per_file=tfr,
-                )
-                keep = [f for f in snap.files if set(affected).isdisjoint(file_buckets(f))]
-        finally:
-            if mode != "mor":
-                src.unpersist()
+        # Merge-on-read (the reference's own shape: the edge store APPENDS
+        # every message and compacts separately, SQLiteStorage.java:134-171
+        # + compactUpTo). The batch is deduped within itself and appended as
+        # DELTA files — no target scan, no rewrite; LWW resolution happens
+        # at read time (resolve_lww) and compaction folds deltas into base.
+        # Write amplification per batch: exactly the batch, nothing else.
+        #
+        # ONE exchange for the whole apply: repartition by bucket FIRST,
+        # then group by (bucket, key) — bucket is a function of conv_id,
+        # so HashPartitioning(bucket) already satisfies the aggregation's
+        # ClusteredDistribution and the bucketed write needs no second
+        # shuffle. (The old shape shuffled twice: groupBy(key), then
+        # repartition(bucket) inside write_files — 2x the batch over the
+        # wire for a dedup that barely shrinks a ~unique-key feed.)
+        resolved_batch = resolve_lww(
+            src.repartition(table.write_parallelism(snap), F.col(BUCKET_COL)),
+            group_prefix=(BUCKET_COL,),
+        )
+        new_files = table.write_files(
+            resolved_batch, snap, kind="delta", already_bucketed=True
+        )
+        affected = sorted({b for f in new_files for b in file_buckets(f)})
 
         txn = dict(snap.txn)
         txn[writer_id] = batch_id
@@ -307,7 +257,7 @@ def merge_change_batch(
         if pipe_state is not None:
             props["pipe_state"] = pipe_state  # UP_TO_DATE | OUT_OF_DATE | UNKNOWN
         try:
-            nxt = table.publish_next(snap, files=keep + new_files, txn=txn, properties=props)
+            nxt = table.publish_next(snap, files=snap.files + new_files, txn=txn, properties=props)
             return MergeResult(batch_id, False, nxt.version, list(affected))
         except CommitConflict:
             # Three cases behind one exception (the object-store reality):
@@ -347,8 +297,8 @@ def resolve_lww(df: DataFrame, group_prefix: Sequence[str] = ()) -> DataFrame:
     conversation-tombstone cascade (wave-2 guard). Tombstone/sentinel rows
     survive resolution — the read view filters them; compaction purges them.
 
-    Shared by the COW merge (applied at write), the MOR read path (applied at
-    read over base ∪ delta files), and compaction (folds deltas into base).
+    Shared by the merge (applied within the batch at write), the read path
+    (applied over base ∪ delta files), and compaction (folds deltas into base).
 
     `group_prefix` prepends columns that are FUNCTIONS OF the key (e.g. the
     bucket column, a hash of conv_id) to the grouping — semantically free,
@@ -411,19 +361,19 @@ def read_resolved(
     bucketed_output: bool = False,
 ) -> DataFrame:
     """Snapshot read with MOR resolution: raw rows if the snapshot holds only
-    base files (COW — already resolved at write), else resolve_lww over
+    base files (compaction resolved them at fold time), else resolve_lww over
     base ∪ delta.
 
     `ranges` ({col: (lo, hi)}, either bound None) filters the RESOLVED view —
     the row filter is always applied AFTER LWW resolution, so semantics are
-    identical across modes. The same ranges additionally drive manifest-stats
+    identical with or without deltas. The same ranges additionally drive manifest-stats
     FILE SKIPPING, applied PER BUCKET: LWW resolution is per-key and a key
     lives in exactly one bucket, so only buckets holding live delta files
     must keep every file open (dropping an old file there could discard the
     (ts,_lsn) winner that suppresses a newer losing row and resurrect it —
     tests/test_lake_stats.py pins this at the bucket boundary). Buckets whose
-    files are all base are fully resolved (COW rewrites and compaction folds
-    replace a bucket's whole file set in one commit), so a time/offset-
+    files are all base are fully resolved (a compaction fold replaces a
+    bucket's whole file set in one commit), so a time/offset-
     windowed read there opens only the files that can contain matches. On a
     continuously-ingesting MOR table some bucket always has a delta; the
     per-bucket scope is what keeps windowed reads O(matching files) instead
@@ -438,7 +388,7 @@ def read_resolved(
     `bucketed_output=True` (requires with_bucket_col) returns the view
     hash-partitioned by BUCKET_COL at the table's write parallelism, with any
     needed LWW resolution grouped by (bucket, key) so the whole read-resolve
-    costs ONE exchange — for writers (compaction, COW rewrites) that will
+    costs ONE exchange — for writers (compaction) that will
     land the result via write_files(already_bucketed=True)."""
     if bucketed_output:
         with_bucket_col = True  # the bucketed contract includes the column
@@ -552,15 +502,16 @@ def read_changes(
     pages): a downstream consumer remembers the snapshot version it has
     processed and tails the table without ever rescanning it.
 
-    Exact on merge-on-read tables because every merge commit appends its
+    Exact because every merge commit appends its
     (intra-batch LWW-resolved) rows as immutable delta files: the changelog is
     the union of delta files first referenced by each version in the interval
     — walked version-by-version so deltas that a LATER compaction already
     folded into base files are still captured. Delete events appear as
     `_deleted` tombstone rows, exactly like the pipe's `data IS NULL` messages.
 
-    COW tables rewrite whole buckets per commit (no per-commit row identity),
-    so the changelog is undefined there — raises ValueError. Also raises when
+    Raises ValueError on a table whose `merge_mode` property is not "mor":
+    a legacy copy-on-write table (written by older builds) keeps its history
+    in rewritten base files, so its changelog is undefined. Also raises when
     a manifest inside the interval was expired (`expire_snapshots`): retention
     bounds how far back a consumer may resume, same as the reference's
     compacted-away offsets."""
@@ -576,10 +527,10 @@ def changed_entries(
     interval's end snapshot. Pure metadata (an O(commits) manifest walk) —
     also the basis of consumer lag gauges (rows-behind from the entries'
     footer row counts, no data scan). Raises ValueError exactly like
-    read_changes (COW table / empty interval / expired manifests)."""
+    read_changes (legacy table / empty interval / expired manifests)."""
     cur = table.current()
     until_version = cur.version if until_version is None else until_version
-    if cur.properties.get("merge_mode", "cow") != "mor":
+    if cur.properties.get("merge_mode") != "mor":
         raise ValueError("read_changes requires a merge-on-read table (merge_mode=mor)")
     if not since_version <= until_version:
         raise ValueError(f"empty interval ({since_version}, {until_version}]")

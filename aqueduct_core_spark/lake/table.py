@@ -18,19 +18,19 @@ Physical layout::
       data/<commit-uuid>/_bucket=<b>/part-*.parquet   # base: one bucket a file
       data/<commit-uuid>/part-*.parquet               # delta: one file a write task
 
-Base files (copy-on-write rewrites, compaction folds) hold one bucket each and
-their entry records it as "bucket". A merge-on-read delta file holds every
-bucket its write task received from the bucket exchange, with the bucket id
-stored as a column; its entry records the exact set as "buckets" and each
-bucket's row count as "bucket_rows", read from the file in the same pass that
-harvests its footer. `file_buckets` is the one accessor for either form. A
-batch thus writes write_parallelism files, not one per touched bucket:
-per-file costs (output commit, footer read, and the parquet source's file
-listing, which turns into a Spark job past 32 paths) follow the task count
-instead of the bucket count. The price is that delta files tie buckets
-together: a fold of some of a file's buckets carries the rows of the others
-over into new delta files (maintenance.compact_bucket_range), and concurrent
-folds get bucket sets that share no file (maintenance.fold_closures).
+Base files (compaction folds) hold one bucket each and their entry records it
+as "bucket". A merge-on-read delta file holds every bucket its write task
+received from the bucket exchange, with the bucket id stored as a column; its
+entry records the exact set as "buckets" and each bucket's row count as
+"bucket_rows", read from the file in the same pass that harvests its footer.
+`file_buckets` is the one accessor for either form. A batch thus writes
+write_parallelism files, not one per touched bucket: per-file costs (output
+commit, footer read, and the parquet source's file listing, which turns into a
+Spark job past 32 paths) follow the task count instead of the bucket count. The
+price is that delta files tie buckets together: a fold of some of a file's
+buckets carries the rows of the others over into new delta files
+(maintenance.compact_bucket_range), and concurrent folds get bucket sets that
+share no file (maintenance.fold_closures).
 
 Manifests are TWO-LEVEL (Iceberg's manifest-list / manifest-file split): the
 snapshot JSON holds schemas/txn/properties plus REFERENCES to immutable segment
@@ -103,8 +103,8 @@ def cluster_opts(snap: "Snapshot") -> tuple[str | None, int | None]:
     orders each bucket's rewrite output, `compaction.target_file_rows`
     (default unset = one file per bucket) bounds file size so the sorted run
     splits into range-disjoint files the manifest stats can prune. Applied by
-    compaction and COW rewrites; delta appends stay unsorted (an ingest batch
-    is already a narrow time slice — sorting the hot path buys nothing)."""
+    compaction; delta appends stay unsorted (an ingest batch is already a
+    narrow time slice — sorting the hot path buys nothing)."""
     cc = snap.properties.get("compaction.cluster_col", "ts") or None
     tfr = snap.properties.get("compaction.target_file_rows")
     return cc, (int(tfr) if tfr else None)
@@ -293,6 +293,11 @@ class LakeTable:
         n_buckets: int = 16,
         properties: dict | None = None,
     ) -> "LakeTable":
+        """Create an empty table. Every table is merge-on-read: `merge_mode`
+        (the format marker read_changes checks) is "mor", nothing else."""
+        properties = {"merge_mode": "mor", **(properties or {})}
+        if properties["merge_mode"] != "mor":
+            raise ValueError(f"merge_mode must be 'mor', got {properties['merge_mode']!r}")
         fs = get_fs()
         fs.makedirs(os.path.join(root, MANIFEST_DIR))
         fs.makedirs(os.path.join(root, DATA_DIR))
@@ -303,7 +308,7 @@ class LakeTable:
             schemas=[{"schema_id": 1, "json": schema.json()}],
             n_buckets=n_buckets,
             bucket_key=bucket_key,
-            properties=properties or {},
+            properties=properties,
             committed_at=time.time(),
         )
         t._write_manifest(snap)
@@ -693,19 +698,10 @@ class LakeTable:
         maintenance.migrate_spec_files / compact_table retire the old files
         incrementally. O(1) driver-side regardless of table size: the answer
         to "n_buckets chosen at CREATE is wrong at 100x" that doesn't cost a
-        100 TB rewrite.
-
-        MOR-only: a copy-on-write merge prunes-and-rewrites whole buckets by
-        layout, which is ill-defined while two layouts coexist; COW tables
-        should rebucket via one compact_table under the new spec instead
-        (they rewrite everything per touched bucket anyway)."""
+        100 TB rewrite. Merges keep appending delta files throughout; reads
+        resolve across both layouts until the migration finishes."""
 
         def update(snap: Snapshot) -> dict | None:
-            if snap.properties.get("merge_mode", "cow") != "mor":
-                raise ValueError(
-                    "evolve_bucketing requires merge_mode=mor; for a COW table "
-                    "run compact_table after recreating with the new bucket count"
-                )
             if int(new_n_buckets) < 1:
                 raise ValueError(f"n_buckets must be >= 1, got {new_n_buckets}")
             if snap.n_buckets == int(new_n_buckets):

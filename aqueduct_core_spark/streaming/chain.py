@@ -82,7 +82,6 @@ class ChainedConsumer:
         parent_root: str,
         table_root: str,
         n_buckets: int = 16,
-        merge_mode: str = "mor",  # mor keeps the child tailable by grandchildren
         writer_id: str = "chain",
         register_offset: bool = False,  # report the applied version into the
         # parent's `consumers` property after each data sync (the reference's
@@ -95,7 +94,6 @@ class ChainedConsumer:
         self.parent_root = parent_root
         self.table_root = table_root
         self.n_buckets = n_buckets
-        self.merge_mode = merge_mode
         self.writer_id = writer_id
         self.register_offset = register_offset
 
@@ -108,7 +106,6 @@ class ChainedConsumer:
             TRANSCRIPT_PHYSICAL_SCHEMA,
             bucket_key="conv_id",
             n_buckets=self.n_buckets,
-            properties={"merge_mode": self.merge_mode},
         )
 
     def applied_version(self) -> int:

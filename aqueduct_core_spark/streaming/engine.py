@@ -56,8 +56,8 @@ class IngestEngine:
         table_root: str,
         checkpoint_dir: str,
         n_buckets: int = 16,
-        merge_mode: str = "cow",  # cow = rewrite touched buckets per batch;
-        # mor = blind-append delta files, resolve at read, fold at compaction
+        merge_mode: str = "mor",  # only "mor" (append deltas, resolve at
+        # read, fold at compaction); kept for callers that still pass it
         salt: int = 0,  # >1 = explicit salted pre-collapse for duplicate storms
         writer_id: str | None = None,  # default: scoped to the checkpoint dir —
         # a NEW streaming query restarts batch ids at 0, so the idempotence
@@ -70,7 +70,6 @@ class IngestEngine:
         # offset" — used when adopting a new mirror after failover)
         fail_after_batches: int | None = None,  # test hook: crash injection
         fail_point: str = "before_commit",  # 'before_commit' | 'after_commit'
-        collect_metrics: bool = True,
         transform=None,  # (DataFrame -> DataFrame) payload transform, e.g.
         # functions.transforms.normalize_payload — Arrow-vectorized, applied
         # before dedup/merge (the engine's pandas-UDF extension point)
@@ -93,8 +92,9 @@ class IngestEngine:
         self.spark = spark
         self.table_root = table_root
         self.checkpoint_dir = checkpoint_dir
+        if merge_mode != "mor":
+            raise ValueError(f"merge_mode must be 'mor', got {merge_mode!r}")
         self.n_buckets = n_buckets
-        self.merge_mode = merge_mode
         self.table_properties = dict(table_properties or {})
         self.salt = salt
         if writer_id is None:
@@ -108,12 +108,13 @@ class IngestEngine:
         self.min_lsn = min_lsn
         self.fail_after_batches = fail_after_batches
         self.fail_point = fail_point
-        self.collect_metrics = collect_metrics
         self.transform = transform
         self.compaction_policy = compaction_policy
         self.compactions_triggered = 0
         self.quarantine_dir = quarantine_dir
         self.metrics = IngestMetrics()
+        #: per-mirror sub-engines of run_with_failover, by feed URL
+        self._mirror_engines: dict[str, IngestEngine] = {}
         # one worker: foreachBatch is sequential, the pool exists only so the
         # lineage aggregate runs as a concurrent Spark job beside the merge
         from concurrent.futures import ThreadPoolExecutor
@@ -153,6 +154,9 @@ class IngestEngine:
         """Release the worker threads, letting an in-flight compaction land
         (its commit is atomic and rebase-on-conflict-safe either way, but
         waiting keeps compactions_triggered accurate). Idempotent."""
+        for sub in self._mirror_engines.values():
+            sub.close()
+            self._absorb(sub)
         self._lineage_pool.shutdown(wait=False, cancel_futures=True)
         if self._compaction_pool is not None:
             try:
@@ -179,7 +183,7 @@ class IngestEngine:
             TRANSCRIPT_PHYSICAL_SCHEMA,
             bucket_key="conv_id",
             n_buckets=self.n_buckets,
-            properties={"merge_mode": self.merge_mode, **self.table_properties},
+            properties=self.table_properties,
         )
 
     # ------------------------------------------------------------ bootstrap
@@ -623,8 +627,6 @@ class IngestEngine:
         import hashlib
         import os
 
-        if not hasattr(self, "_mirror_engines"):
-            self._mirror_engines: dict[str, IngestEngine] = {}
         if url in self._mirror_engines:
             # Revisited mirror (e.g. a revived primary): lift its replay floor
             # to the CURRENT applied watermark — the floor cached at first
@@ -636,22 +638,30 @@ class IngestEngine:
                 hw = self.high_watermark()
                 eng.min_lsn = hw if eng.min_lsn is None else max(eng.min_lsn, hw)
             return eng
-        if url not in self._mirror_engines:
-            tag = hashlib.md5(url.encode()).hexdigest()[:10]
-            self._mirror_engines[url] = IngestEngine(
-                self.spark,
-                table_root=self.table_root,
-                checkpoint_dir=os.path.join(self.checkpoint_dir, f"mirror-{tag}"),
-                n_buckets=self.n_buckets,
-                merge_mode=self.merge_mode,
-                salt=self.salt,
-                routing_filter=self.routing_filter,
-                entity_filter=self.entity_filter,
-                min_lsn=self.high_watermark() if LakeTable.exists(self.table_root) else None,
-                transform=self.transform,
-                table_properties=self.table_properties,
-            )
-        return self._mirror_engines[url]
+        tag = hashlib.md5(url.encode()).hexdigest()[:10]
+        eng = self._mirror_engines[url] = IngestEngine(
+            self.spark,
+            table_root=self.table_root,
+            checkpoint_dir=os.path.join(self.checkpoint_dir, f"mirror-{tag}"),
+            n_buckets=self.n_buckets,
+            salt=self.salt,
+            routing_filter=self.routing_filter,
+            entity_filter=self.entity_filter,
+            min_lsn=self.high_watermark() if LakeTable.exists(self.table_root) else None,
+            transform=self.transform,
+            compaction_policy=self.compaction_policy,
+            quarantine_dir=self.quarantine_dir,
+            table_properties=self.table_properties,
+        )
+        return eng
+
+    def _absorb(self, sub: "IngestEngine") -> None:
+        """Move a mirror sub-engine's counters into this engine's."""
+        self.metrics.batches_applied += sub.metrics.batches_applied
+        self.metrics.events_quarantined += sub.metrics.events_quarantined
+        self.compactions_triggered += sub.compactions_triggered
+        sub.metrics.batches_applied = sub.metrics.events_quarantined = 0
+        sub.compactions_triggered = 0
 
     def run_with_failover(
         self,
@@ -716,8 +726,7 @@ class IngestEngine:
                 rounds.append({"url": url, "rows": 0, "event": "error->down"})
                 continue
             self.metrics.events_seen += rows
-            self.metrics.batches_applied += sub.metrics.batches_applied
-            sub.metrics.batches_applied = 0
+            self._absorb(sub)
             rounds.append({"url": url, "rows": rows, "event": "drained"})
             # Pace only PRODUCTIVE rounds: an empty round here is a failover
             # decision point (stall check below; the loop RETURNS when caught

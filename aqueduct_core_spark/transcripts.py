@@ -1,8 +1,8 @@
 """User-facing views and invariants over the transcript lake table.
 
-All views go through read_resolved: a copy-on-write table is already resolved
-at write time (no extra cost); a merge-on-read table gets its LWW resolution +
-cascade applied here over base ∪ delta files.
+All views go through read_resolved: buckets that compaction folded are
+already resolved (no extra cost); buckets holding delta files get their LWW
+resolution + cascade applied here over base ∪ delta files.
 """
 
 from __future__ import annotations

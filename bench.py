@@ -182,7 +182,6 @@ def run_replay(spark, n_events: int, work_dir: str, cpus: int) -> dict:
         )
         write_segments(feed, log_dir, n_segments=n_segments)
 
-    mode = os.environ.get("AQ_BENCH_MODE", "mor")
     salt = int(os.environ.get("AQ_BENCH_SALT", "0"))
     # Best-of-N (default 2): this box's co-tenant throttle oscillates on a
     # seconds scale (BENCH.md), so a single pass can under-report the code by
@@ -195,7 +194,7 @@ def run_replay(spark, n_events: int, work_dir: str, cpus: int) -> dict:
     # the same effect by paying a full-size first attempt; on a shared host
     # whose healthy phases are shorter than two 64M legs, warmup+1 timed
     # attempt halves the leg while keeping the measurement warm — the shape
-    # (buckets, segments/ mfpt ratio, mode) is identical to the timed run.
+    # (buckets, segments/ mfpt ratio) is identical to the timed run.
     warmup_dir = os.environ.get("AQ_BENCH_WARMUP_DIR")
     if warmup_dir and os.path.isdir(warmup_dir):
         wdir = os.path.join(work_dir, "warmup")
@@ -204,7 +203,6 @@ def run_replay(spark, n_events: int, work_dir: str, cpus: int) -> dict:
             table_root=os.path.join(wdir, "tbl"),
             checkpoint_dir=os.path.join(wdir, "ckpt"),
             n_buckets=n_buckets,
-            merge_mode=mode,
             salt=salt,
         )
         weng.run(warmup_dir, max_files_per_trigger=mfpt)
@@ -218,7 +216,6 @@ def run_replay(spark, n_events: int, work_dir: str, cpus: int) -> dict:
             table_root=os.path.join(run_dir, "tbl"),
             checkpoint_dir=os.path.join(run_dir, "ckpt"),
             n_buckets=n_buckets,
-            merge_mode=mode,
             salt=salt,
         )
         t0 = time.perf_counter()
@@ -241,7 +238,7 @@ def run_replay(spark, n_events: int, work_dir: str, cpus: int) -> dict:
         "batches": batches,
         "segments": n_segments,
         "buckets": n_buckets,
-        "mode": mode,
+        "mode": "mor",
         "salt": salt,
     }
 

@@ -10,15 +10,16 @@ import pytest
 from aqueduct_core_spark.lake.merge import merge_change_batch, read_changes
 from aqueduct_core_spark.lake.table import LakeTable
 from aqueduct_core_spark.maintenance import balance_bucket_ranges, compact_table
+from aqueduct_core_spark.oracle import replay
 from aqueduct_core_spark.schema import TRANSCRIPT_PHYSICAL_SCHEMA
+from aqueduct_core_spark.transcripts import read_transcripts
 
 from tests.util import ev, events_df, ts
 
 
-def make_table(spark, path, mode="mor"):
+def make_table(spark, path):
     return LakeTable.create(
-        spark, path, TRANSCRIPT_PHYSICAL_SCHEMA, bucket_key="conv_id",
-        n_buckets=4, properties={"merge_mode": mode},
+        spark, path, TRANSCRIPT_PHYSICAL_SCHEMA, bucket_key="conv_id", n_buckets=4
     )
 
 
@@ -33,6 +34,17 @@ def lsns(df):
 
 def expected_lsns(events):
     return sorted(e["change_lsn"] for e in events)
+
+
+def live_rows(table):
+    return [
+        (r["conv_id"], r["turn_idx"], r["text"], r["ts"])
+        for r in read_transcripts(table).orderBy("conv_id", "turn_idx").collect()
+    ]
+
+
+def oracle_rows(events):
+    return [(r["conv_id"], r["turn_idx"], r["text"], r["ts"]) for r in replay(events)]
 
 
 def test_changelog_tail_and_interval(spark, tmp_path):
@@ -64,8 +76,18 @@ def test_changelog_retention_and_cow_guards(spark, tmp_path):
     with pytest.raises(ValueError, match="expired"):
         read_changes(t, since_version=2)
 
-    c = make_table(spark, str(tmp_path / "c"), mode="cow")
+    # A legacy copy-on-write table (merge_mode="cow", written by older
+    # builds) holds its history in rewritten base files. It keeps merging and
+    # reading, but its changelog is refused rather than silently empty.
+    c = make_table(spark, str(tmp_path / "c"))
     merge_change_batch(c, events_df(spark, batch(0)), batch_id=0)
+    compact_table(c, tombstone_retention_ts=ts(0))
+    c.commit(lambda snap: {"properties": {**snap.properties, "merge_mode": "cow"}})
+    events = batch(0) + batch(1) + batch(2) + [ev(999, "D", conv="c1", turn=2, t=999)]
+    for i, b in enumerate([batch(1), batch(2), events[-1:]], start=1):
+        merge_change_batch(c, events_df(spark, b), batch_id=i)
+    assert c.current().properties["merge_mode"] == "cow"
+    assert live_rows(c) == oracle_rows(events)
     with pytest.raises(ValueError, match="merge-on-read"):
         read_changes(c, since_version=1)
 
@@ -90,7 +112,7 @@ def test_export_changefeed_round_trips_into_fresh_engine(spark, tmp_path):
     deletes whose cascade sentinel must be re-derived on re-ingest."""
     import random
 
-    from aqueduct_core_spark.transcripts import export_changefeed, read_transcripts
+    from aqueduct_core_spark.transcripts import export_changefeed
 
     rng = random.Random(77)
     events, lsn = [], 0

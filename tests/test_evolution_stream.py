@@ -59,7 +59,7 @@ def test_evolution_batch_without_new_column_still_applies(spark, tmp_path):
     table = LakeTable.create(
         spark, str(tmp_path / "t"),
         __import__("aqueduct_core_spark.schema", fromlist=["x"]).TRANSCRIPT_PHYSICAL_SCHEMA,
-        bucket_key="conv_id", n_buckets=4, properties={"merge_mode": "cow"},
+        bucket_key="conv_id", n_buckets=4,
     )
     merge_change_batch(table, events_df(spark, [ev(1, conv="A", turn=0)]), batch_id=0)
     table.evolve_schema(evolved_schema(table.current().schema()))

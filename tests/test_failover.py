@@ -13,10 +13,13 @@ import pytest
 
 from aqueduct_core_spark.feedgen import generate_change_feed, write_segments
 from aqueduct_core_spark.lake.table import LakeTable
+from aqueduct_core_spark.maintenance import CompactionPolicy
 from aqueduct_core_spark.oracle import replay
 from aqueduct_core_spark.registry import NoAccessibleService, ServiceList
 from aqueduct_core_spark.streaming.engine import IngestEngine
 from aqueduct_core_spark.transcripts import read_transcripts
+
+from tests.util import ev, events_df
 
 
 def build_mirrors(spark, tmp_path, n_events=2400):
@@ -164,3 +167,30 @@ def test_recovered_primary_is_revived_and_reselected(spark, tmp_path):
     # replay floor; the revisit must lift it to the applied watermark
     assert eng._mirror_engines[full].min_lsn >= hw_after_partial
     assert view(spark, eng.table_root) == oracle_view(spark, feed)
+
+
+def test_mirror_sub_engines_keep_dead_letter_sink_and_compaction(spark, tmp_path):
+    """The per-mirror sub-engines inherit the parent's dead-letter sink and
+    compaction policy: a malformed event on the followed mirror lands in the
+    quarantine instead of the merge, over-threshold buckets get folded, and
+    both counters roll up into the parent engine."""
+    clean = [ev(i, conv=f"c{i % 4}", turn=i % 3, t=i) for i in range(1, 41)]
+    mirror = str(tmp_path / "mirror")
+    events_df(spark, clean).repartition(3).write.parquet(mirror)
+    events_df(spark, [ev(41, op="X", conv="cX", t=41)]).write.mode("append").parquet(mirror)
+
+    dlq = str(tmp_path / "dlq")
+    eng = IngestEngine(
+        spark, str(tmp_path / "tbl"), str(tmp_path / "ckpt"), n_buckets=4,
+        quarantine_dir=dlq,
+        compaction_policy=CompactionPolicy(max_delta_files_per_bucket=1, n_jobs=1),
+    )
+    eng.run_with_failover(ServiceList([mirror]), max_rounds=4, max_files_per_trigger=1)
+    eng.close()
+
+    assert os.path.isdir(dlq)
+    q = spark.read.parquet(dlq)
+    assert [(r["change_lsn"], r["_reason"]) for r in q.collect()] == [(41, "bad_op")]
+    assert eng.metrics.events_quarantined == 1
+    assert eng.compactions_triggered > 0
+    assert view(spark, eng.table_root) == [tuple(r.values()) for r in replay(clean)]

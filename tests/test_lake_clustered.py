@@ -24,10 +24,10 @@ from tests.util import ev, events_df, ts
 N_BUCKETS = 4
 
 
-def make_table(spark, path, mode="mor", **props):
+def make_table(spark, path, **props):
     return LakeTable.create(
         spark, path, TRANSCRIPT_PHYSICAL_SCHEMA, bucket_key="conv_id",
-        n_buckets=N_BUCKETS, properties={"merge_mode": mode, **props},
+        n_buckets=N_BUCKETS, properties=props,
     )
 
 
@@ -121,20 +121,6 @@ def test_clustering_is_semantically_inert(spark, tmp_path):
     assert sorted_rows(read_resolved(t_clus)) == sorted_rows(read_resolved(t_plain))
     # the clustered table really did split; the disabled one really did not
     assert len(t_clus.current().files) > len(t_plain.current().files)
-
-
-def test_cow_rewrite_clusters_too(spark, tmp_path):
-    """COW applies rewrite whole buckets, so they cluster exactly like
-    compaction — windowed reads prune between maintenance passes as well."""
-    t = make_table(
-        spark, str(tmp_path / "t"), mode="cow", **{"compaction.target_file_rows": "20"}
-    )
-    ingest(t, spark, wide_history())
-    files = t.current().files
-    assert all(f["rows"] <= 20 for f in files)
-    total = len(files)
-    win = read_resolved(t, ranges={"ts": (ts(100), ts(150))})
-    assert 0 < len(set(win.inputFiles())) <= total / 2
 
 
 def test_rewrite_small_files_never_splits(spark, tmp_path):

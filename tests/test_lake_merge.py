@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from aqueduct_core_spark.lake.merge import merge_change_batch
-from aqueduct_core_spark.lake.table import LakeTable
+from aqueduct_core_spark.lake.table import LakeTable, bucket_expr, file_buckets
 from aqueduct_core_spark.oracle import replay
 from aqueduct_core_spark.schema import TRANSCRIPT_PHYSICAL_SCHEMA
 from aqueduct_core_spark.transcripts import read_transcripts, table_consistency_sum
@@ -198,18 +198,25 @@ def test_multi_batch_equals_single_batch(spark, tmp_table_dir):
 
 
 def test_bucket_pruning_rewrites_only_affected_buckets(spark, tmp_table_dir):
+    # merge-on-read rewrites nothing: a batch keeps every committed file entry
+    # as it is and adds delta files holding only the buckets it touched
     t = make_table(spark, tmp_table_dir, n_buckets=8)
     b1 = [ev(i, conv=f"c{i}", turn=0) for i in range(1, 33)]
     merge_change_batch(t, events_df(spark, b1), batch_id=0)
-    files_before = {f["path"]: f["bucket"] for f in t.current().files}
+    files_before = t.current().files
     # touch one conversation only
     merge_change_batch(t, events_df(spark, [ev(100, "U", conv="c1", turn=0)]), batch_id=1)
     snap = t.current()
-    untouched = [f for f in snap.files if f["path"] in files_before]
-    # at most one bucket's files were rewritten
-    rewritten_buckets = {f["bucket"] for f in snap.files if f["path"] not in files_before}
-    assert len(rewritten_buckets) == 1
-    assert untouched  # other buckets' files survived as-is
+    paths_before = {f["path"] for f in files_before}
+    assert [f for f in snap.files if f["path"] in paths_before] == files_before
+    added = [f for f in snap.files if f["path"] not in paths_before]
+    assert added and all(f.get("kind") == "delta" for f in added)
+    c1_bucket = (
+        spark.createDataFrame([("c1",)], "conv_id string")
+        .select(bucket_expr("conv_id", 8))
+        .first()[0]
+    )
+    assert {b for f in added for b in file_buckets(f)} == {c1_bucket}
 
 
 def test_schema_evolution_add_column_and_widen(spark, tmp_table_dir):

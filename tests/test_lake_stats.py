@@ -21,10 +21,10 @@ from tests.util import ev, events_df, ts
 N_BUCKETS = 8
 
 
-def make_table(spark, path, mode):
+def make_table(spark, path):
     return LakeTable.create(
         spark, path, TRANSCRIPT_PHYSICAL_SCHEMA, bucket_key="conv_id",
-        n_buckets=N_BUCKETS, properties={"merge_mode": mode},
+        n_buckets=N_BUCKETS,
     )
 
 
@@ -48,7 +48,7 @@ def distinct_bucket_convs(spark, n=3):
 
 
 def test_manifest_stats_harvested(spark, tmp_path):
-    t = make_table(spark, str(tmp_path / "t"), "cow")
+    t = make_table(spark, str(tmp_path / "t"))
     events = [ev(i, conv=f"c{i % 5}", turn=i % 3, t=i) for i in range(1, 41)]
     merge_change_batch(t, events_df(spark, events), batch_id=0)
     files = t.current().files
@@ -66,12 +66,16 @@ def test_manifest_stats_harvested(spark, tmp_path):
 
 
 def test_cow_range_read_prunes_files(spark, tmp_path):
+    """A fully compacted table skips files by range stats, for int and
+    datetime bounds."""
     convs = distinct_bucket_convs(spark, 3)
-    t = make_table(spark, str(tmp_path / "t"), "cow")
+    t = make_table(spark, str(tmp_path / "t"))
     for i, conv in enumerate(convs):
         lo = i * 100
         batch = [ev(lo + j, conv=conv, turn=j, t=lo + j) for j in range(1, 21)]
         merge_change_batch(t, events_df(spark, batch), batch_id=i)
+    # fold the deltas: each bucket becomes one base file with its own range
+    compact_table(t, tombstone_retention_ts=ts(0))
 
     ranges = {"_lsn": (201, 220)}
     full = read_resolved(t)
@@ -90,7 +94,7 @@ def test_cow_range_read_prunes_files(spark, tmp_path):
 
 
 def test_mor_delta_skip_disabled_prevents_resurrection(spark, tmp_path):
-    t = make_table(spark, str(tmp_path / "t"), "mor")
+    t = make_table(spark, str(tmp_path / "t"))
     # winner by (ts,_lsn): lsn=5 ts=100 BEATS lsn=10 ts=50
     merge_change_batch(t, events_df(spark, [ev(5, conv="c", turn=0, t=100)]), batch_id=0)
     merge_change_batch(
@@ -120,7 +124,7 @@ def _live_mor_with_clean_buckets(spark, tmp_path):
     while buckets B and C are fully compacted base files with disjoint
     _lsn ranges (B: 100-119, C: 200-219)."""
     conv_a, conv_b, conv_c = distinct_bucket_convs(spark, 3)
-    t = make_table(spark, str(tmp_path / "t"), "mor")
+    t = make_table(spark, str(tmp_path / "t"))
     b0 = [ev(5, conv=conv_a, turn=0, t=100)] + [
         ev(100 + j, conv=conv_b, turn=j, t=100 + j) for j in range(20)
     ]
@@ -198,7 +202,7 @@ def test_per_bucket_skip_no_resurrection_at_boundary(spark, tmp_path):
 
 
 def test_compacted_mor_prunes_again(spark, tmp_path):
-    t = make_table(spark, str(tmp_path / "t"), "mor")
+    t = make_table(spark, str(tmp_path / "t"))
     for i in range(3):
         batch = [ev(i * 50 + j, conv=f"c{j % 4}", turn=j, t=i * 50 + j) for j in range(1, 11)]
         merge_change_batch(t, events_df(spark, batch), batch_id=i)

@@ -8,7 +8,7 @@ from datetime import datetime
 from pyspark.sql import functions as F
 
 from aqueduct_core_spark.lake.merge import merge_change_batch
-from aqueduct_core_spark.lake.table import LakeTable
+from aqueduct_core_spark.lake.table import LakeTable, file_buckets
 from aqueduct_core_spark.maintenance import compact_table, rewrite_small_files
 from aqueduct_core_spark.plans import count_exchanges, has_broadcast_join, pushed_filters
 from aqueduct_core_spark.schema import TRANSCRIPT_PHYSICAL_SCHEMA
@@ -58,16 +58,18 @@ def test_late_update_after_purge_reappears_documented_semantics(spark, tmp_table
 
 
 def test_rewrite_small_files_noop_on_compact_table(spark, tmp_table_dir):
-    # copy-on-write per bucket means every commit leaves exactly one file per
-    # touched bucket — so a compact table makes rewrite a metadata-only no-op
+    # compaction leaves exactly one file per bucket — so a compact table
+    # makes rewrite a metadata-only no-op
     t = make_table(spark, tmp_table_dir, n_buckets=2)
     for b in range(4):
         merge_change_batch(
             t, events_df(spark, [ev(10 + b, conv=f"c{b}", turn=0)]), batch_id=b
         )
+    compact_table(t, tombstone_retention_ts=ts(0))
     per_bucket: dict[int, int] = {}
     for f in t.current().files:
-        per_bucket[f["bucket"]] = per_bucket.get(f["bucket"], 0) + 1
+        for b in file_buckets(f):
+            per_bucket[b] = per_bucket.get(b, 0) + 1
     assert all(n == 1 for n in per_bucket.values())
     v_before = t.current().version
     assert rewrite_small_files(t, target_files_per_bucket=1) == v_before  # no-op

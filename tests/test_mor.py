@@ -1,5 +1,5 @@
-"""Merge-on-read mode: append-only deltas + read-time resolution + compaction
-fold. Must be observationally identical to copy-on-write and the oracle."""
+"""Merge-on-read: append-only deltas + read-time resolution + compaction
+fold. Must be observationally identical to the oracle."""
 
 from __future__ import annotations
 
@@ -13,15 +13,15 @@ from aqueduct_core_spark.maintenance import compact_table
 from aqueduct_core_spark.oracle import replay
 from aqueduct_core_spark.schema import TRANSCRIPT_PHYSICAL_SCHEMA
 from aqueduct_core_spark.streaming.engine import IngestEngine
-from aqueduct_core_spark.transcripts import read_transcripts, table_consistency_sum
+from aqueduct_core_spark.transcripts import read_transcripts
 
 from tests.util import ev, events_df, ts
 
 
-def make_table(spark, path, mode, n_buckets=4):
+def make_table(spark, path, n_buckets=4):
     return LakeTable.create(
         spark, path, TRANSCRIPT_PHYSICAL_SCHEMA, bucket_key="conv_id",
-        n_buckets=n_buckets, properties={"merge_mode": mode},
+        n_buckets=n_buckets,
     )
 
 
@@ -47,26 +47,22 @@ def rows(table):
 def test_mor_equals_cow_equals_oracle(spark, tmp_path):
     events = random_events()
     batches = [events[i : i + 80] for i in range(0, len(events), 80)]
-    t_cow = make_table(spark, str(tmp_path / "cow"), "cow")
-    t_mor = make_table(spark, str(tmp_path / "mor"), "mor")
+    t = make_table(spark, str(tmp_path / "mor"))
     for i, b in enumerate(batches):
-        merge_change_batch(t_cow, events_df(spark, b), batch_id=i)
-        merge_change_batch(t_mor, events_df(spark, b), batch_id=i)
+        merge_change_batch(t, events_df(spark, b), batch_id=i)
     expected = [
         (r["conv_id"], r["turn_idx"], r["role"], r["text"], r["tool"], r["ts"])
         for r in replay(events)
     ]
-    assert rows(t_cow) == expected
-    assert rows(t_mor) == expected
-    assert table_consistency_sum(t_mor) == table_consistency_sum(t_cow)
+    assert rows(t) == expected
     # MOR really appended (no base rewrites): one delta file set per batch
-    kinds = {f.get("kind", "base") for f in t_mor.current().files}
+    kinds = {f.get("kind", "base") for f in t.current().files}
     assert kinds == {"delta"}
 
 
 def test_mor_compaction_folds_deltas_to_base(spark, tmp_path):
     events = random_events(300, seed=5)
-    t = make_table(spark, str(tmp_path / "m"), "mor")
+    t = make_table(spark, str(tmp_path / "m"))
     for i in range(0, 300, 100):
         merge_change_batch(t, events_df(spark, events[i : i + 100]), batch_id=i)
     before = rows(t)
@@ -99,7 +95,7 @@ def test_mor_streaming_engine_end_to_end(spark, tmp_path):
 
 
 def test_mor_idempotent_replay(spark, tmp_path):
-    t = make_table(spark, str(tmp_path / "m"), "mor")
+    t = make_table(spark, str(tmp_path / "m"))
     b = events_df(spark, [ev(1, conv="A", turn=0)])
     merge_change_batch(t, b, batch_id=0)
     r = merge_change_batch(t, b, batch_id=0)
@@ -114,7 +110,7 @@ def test_mor_read_path_single_exchange_with_conv_parallelism(spark, tmp_path):
     task (the write path alone partitions by bucket to match file layout)."""
     from aqueduct_core_spark.plans.inspect import count_exchanges, explain_str
 
-    t = make_table(spark, str(tmp_path / "m"), "mor")
+    t = make_table(spark, str(tmp_path / "m"))
     events = random_events(200, seed=8)
     for i in range(0, 200, 100):
         merge_change_batch(t, events_df(spark, events[i : i + 100]), batch_id=i)

@@ -40,13 +40,12 @@ def event_logs(draw):
 
 
 @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
-@given(event_logs(), st.sampled_from(["cow", "mor"]))
-def test_any_log_any_batching_equals_oracle(spark, tmp_path_factory, case, mode):
+@given(event_logs())
+def test_any_log_any_batching_equals_oracle(spark, tmp_path_factory, case):
     events, cuts = case
     d = str(tmp_path_factory.mktemp("prop"))
     table = LakeTable.create(
-        spark, d, TRANSCRIPT_PHYSICAL_SCHEMA, bucket_key="conv_id",
-        n_buckets=4, properties={"merge_mode": mode},
+        spark, d, TRANSCRIPT_PHYSICAL_SCHEMA, bucket_key="conv_id", n_buckets=4
     )
     bounds = [0] + [c for c in cuts if c < len(events)] + [len(events)]
     for i in range(len(bounds) - 1):

@@ -101,12 +101,16 @@ def test_evolve_is_metadata_only_and_mor_only(spark, tmp_path):
     # idempotent no-op (ambiguous-success retry)
     assert t.evolve_bucketing(8).version == snap.version
 
-    cow = LakeTable.create(
-        spark, str(tmp_path / "cow"), TRANSCRIPT_PHYSICAL_SCHEMA,
-        bucket_key="conv_id", n_buckets=4,
-    )
-    with pytest.raises(ValueError, match="merge_mode=mor"):
-        cow.evolve_bucketing(8)
+    # every table is merge-on-read: copy-on-write cannot be created
+    with pytest.raises(ValueError, match="merge_mode"):
+        LakeTable.create(
+            spark, str(tmp_path / "cow"), TRANSCRIPT_PHYSICAL_SCHEMA,
+            bucket_key="conv_id", n_buckets=4, properties={"merge_mode": "cow"},
+        )
+    from aqueduct_core_spark.streaming.engine import IngestEngine
+
+    with pytest.raises(ValueError, match="merge_mode"):
+        IngestEngine(spark, str(tmp_path / "e"), str(tmp_path / "ckpt"), merge_mode="cow")
 
 
 def test_lww_resolves_across_specs(spark, tmp_path):

@@ -446,12 +446,8 @@ def main():
     }
     print(json.dumps(result))
 
-    mode = r_hi.get("mode", "?")
     salt = r_hi.get("salt", 0)
-    merge_desc = {
-        "cow": "bucket-pruned copy-on-write MERGE",
-        "mor": "merge-on-read delta append (LWW resolved at read/compaction)",
-    }.get(mode, mode)
+    merge_desc = "merge-on-read delta append (LWW resolved at read/compaction)"
     dedup_desc = (
         f"salted (x{salt}) LWW dedup" if salt and salt > 1 else "map-side-combine LWW dedup"
     )

@@ -10,7 +10,7 @@ What it does:
      replicating mid-log — the injected failure);
   3. runs the REAL CLI as a subprocess:
        python -m aqueduct_core_spark ingest --follow <primary>,<cloud>
-              --adaptive --mode mor --buckets 64 ...
+              --adaptive --buckets 64 ...
      (the same invocation documented in README; on a cluster swap `python -m`
      for `spark-submit --py-files aqueduct_core_spark.zip -m`);
   4. checks the run failed over (stalled->failover event present), then
@@ -94,7 +94,6 @@ def main() -> int:
             "--adaptive",
             "--table", table,
             "--checkpoint", ckpt,
-            "--mode", "mor",
             "--buckets", "64",
             "--max-files-per-trigger", "64",
             "--max-rounds", "12",
