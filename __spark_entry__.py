@@ -796,283 +796,44 @@ def q_multimodal_features(spark, sf_dir):
     return feats.select("media_id", "kind", "n_bytes", F.size("features").alias("dim"))
 
 
-def q_multimodal_decode_real(spark, sf_dir):
-    """REAL lib-free multimodal decode: documents -> spec-valid WAV/PPM
-    containers (samples/pixels = the UTF-8 text bytes, built distributed in
-    mapInPandas) -> pure-numpy RIFF-chunk-walk / P6 parsers -> per-file
-    summary whose content_md5 is the md5 of the DECODED samples. The oracle
-    recomputes every column from the source table, so header parsing and
-    sample extraction are hash-gated bit-for-bit."""
-    _conf(spark)
-    from aqueduct_core_spark.functions.multimodal import (
-        decode_real_summary,
-        real_media_from_documents,
-    )
-
-    docs = _t("documents")(spark, sf_dir)
-    media = real_media_from_documents(docs, limit=MEDIA_LIMIT)
-    return decode_real_summary(media)
-
-
-def q_multimodal_decode_jpeg(spark, sf_dir):
-    """REAL baseline-JPEG decode, zero external libs: documents -> genuine
-    SOF0 JPEG streams (standard Annex-K Huffman tables, real entropy-coded
-    scan; each text byte is one constant 8x8 block, unit quantizers — the
-    layout that makes baseline DCT exactly invertible) -> the pure-numpy
-    marker/Huffman/zigzag/dequantize/IDCT decoder -> per-file summary whose
-    content_md5 is the md5 of the block bytes RECOVERED from the decoded
-    pixels. The oracle recomputes every column from the source table, so the
-    whole codec round-trip is hash-gated bit-for-bit."""
-    _conf(spark)
-    from aqueduct_core_spark.functions.multimodal import (
-        decode_real_summary,
-        jpeg_media_from_documents,
-    )
-
-    docs = _t("documents")(spark, sf_dir)
-    media = jpeg_media_from_documents(docs, limit=MEDIA_LIMIT)
-    return decode_real_summary(media)
+# The fixture-media contract queries: documents -> one media fixture
+# (functions.multimodal.MEDIA_FIXTURES, where each container is described)
+# -> decode_real_summary, or a frame sampler whose every 2nd frame is md5'd.
+# Each oracle twin recomputes every column from the source table; the
+# frame-sample twins regenerate the (doc x frame_idx) lattice with a lateral
+# unnest. Reference analog: binary payloads flow opaque (PipeCodec, msg_data).
+MULTIMODAL_FIXTURES = {
+    "multimodal_decode_real": ("wav_ppm", None),
+    "multimodal_decode_jpeg": ("jpeg", None),
+    "multimodal_decode_jpeg_color": ("jpeg_color", None),
+    "multimodal_decode_jpeg420": ("jpeg420", None),
+    "multimodal_decode_jpeg_progressive": ("jpeg_progressive", None),
+    "multimodal_decode_png": ("png", None),
+    "multimodal_decode_png_adam7": ("png_adam7", None),
+    "multimodal_decode_gif": ("gif", None),
+    "multimodal_gif_frame_sample": ("gif", "gif_frame_sample"),
+    "multimodal_decode_g711": ("g711", None),
+    "multimodal_decode_mp4": ("mp4", None),
+    "multimodal_mp4_frame_sample": ("mp4", "mp4_frame_sample"),
+    "multimodal_decode_mp3": ("mp3", None),
+}
 
 
-def q_multimodal_decode_jpeg_color(spark, sf_dir):
-    """REAL 3-component baseline-JPEG decode with restart intervals:
-    documents -> genuine interleaved YCbCr 4:4:4 SOF0 streams carrying a DRI
-    segment and RSTn markers every 4 MCUs (each text byte is one MCU; Cb/Cr
-    are fixed derivations of Y, so three DC predictor chains diverge through
-    one entropy-coded scan) -> the pure-numpy decoder (marker walk,
-    interleaved Huffman scan, restart sequence check + per-component
-    predictor reset, dequantize, IDCT) -> per-file summary whose content_md5
-    is the md5 of the Y-plane block bytes RECOVERED from the decoded pixels.
-    Oracle recomputes every column from the source table — the color +
-    restart round-trip is hash-gated bit-for-bit."""
-    _conf(spark)
-    from aqueduct_core_spark.functions.multimodal import (
-        decode_real_summary,
-        jpeg_color_media_from_documents,
-    )
+def _fixture_query(fixture: str, sampler: str | None):
+    def q(spark, sf_dir):
+        _conf(spark)
+        # imported lazily: the headline suite never loads the codecs
+        from aqueduct_core_spark.functions import multimodal
 
-    docs = _t("documents")(spark, sf_dir)
-    media = jpeg_color_media_from_documents(docs, limit=MEDIA_LIMIT, restart_interval=4)
-    return decode_real_summary(media)
+        docs = _t("documents")(spark, sf_dir)
+        media = multimodal.docs_to_media(docs, fixture, limit=MEDIA_LIMIT)
+        if sampler is None:
+            return multimodal.decode_real_summary(media)
+        return getattr(multimodal, sampler)(media, every_n=2).select(
+            "media_id", "frame_idx", F.md5(F.col("frame_bytes")).alias("frame_md5")
+        )
 
-
-def q_multimodal_decode_jpeg420(spark, sf_dir):
-    """REAL chroma-subsampled (YCbCr 4:2:0) baseline-JPEG decode with restart
-    intervals — the sampling layout real camera/web encoders emit: documents
-    -> genuine SOF0 streams where each text byte is one 16x16 MCU of six
-    blocks (four DISTINCT constant luma blocks in spec raster order +
-    quarter-resolution Cb/Cr), RSTn every 4 MCUs -> the pure-numpy decoder
-    (general per-component MCU geometry, Y00 Y01 Y10 Y11 Cb Cr data-unit
-    walk, MCU-counted restart sequence check + predictor reset, box chroma
-    upsample) -> per-file summary whose content_md5 is the md5 of the bytes
-    RECOVERED from the decoded Y plane at MCU stride. Oracle recomputes
-    every column from the source table — the subsampled round-trip is
-    hash-gated bit-for-bit."""
-    _conf(spark)
-    from aqueduct_core_spark.functions.multimodal import (
-        decode_real_summary,
-        jpeg420_media_from_documents,
-    )
-
-    docs = _t("documents")(spark, sf_dir)
-    media = jpeg420_media_from_documents(docs, limit=MEDIA_LIMIT, restart_interval=4)
-    return decode_real_summary(media)
-
-
-def q_multimodal_decode_jpeg_progressive(spark, sf_dir):
-    """REAL progressive (SOF2) JPEG decode: documents -> genuine multi-scan
-    streams (DC at Al=1 + DC refinement bit plane + AC first/refinement
-    scans with shared EOBRUN coding, restart markers every 3 units in every
-    scan) -> the pure-numpy progressive decoder (per-scan spectral band +
-    successive-approximation state, EOB-run accounting, correction-bit
-    walk, coefficients accumulated across scans then dequantized + IDCT'd
-    once) -> per-file summary whose content_md5 is the md5 of the bytes
-    RECOVERED from the decoded pixels. Oracle recomputes every column from
-    the source table — the multi-scan round-trip is hash-gated
-    bit-for-bit."""
-    _conf(spark)
-    from aqueduct_core_spark.functions.multimodal import (
-        decode_real_summary,
-        jpeg_progressive_media_from_documents,
-    )
-
-    docs = _t("documents")(spark, sf_dir)
-    media = jpeg_progressive_media_from_documents(docs, limit=MEDIA_LIMIT, restart_interval=3)
-    return decode_real_summary(media)
-
-
-def q_multimodal_decode_png(spark, sf_dir):
-    """REAL PNG decode, zero external libs (zlib is stdlib): documents ->
-    spec-valid PNG streams where the text bytes are five identical scanlines
-    written through CYCLING filters (None/Sub/Up/Average/Paeth — every
-    predictor appears in every payload) with the color type rotating by
-    doc_id across grayscale / truecolor / indexed+PLTE -> the pure-numpy
-    decoder (chunk walk + CRC32 verify, zlib inflate, all five unfilters,
-    palette application) -> per-file summary whose content_md5 covers ALL
-    recovered rows. Oracle recomputes every column from the source table
-    (md5(repeat(text, 5))) — the whole filter family round-trips hash-exact."""
-    _conf(spark)
-    from aqueduct_core_spark.functions.multimodal import (
-        decode_real_summary,
-        png_media_from_documents,
-    )
-
-    docs = _t("documents")(spark, sf_dir)
-    media = png_media_from_documents(docs, limit=MEDIA_LIMIT, interlace=0)
-    return decode_real_summary(media)
-
-
-def q_multimodal_decode_png_adam7(spark, sf_dir):
-    """REAL interlaced (Adam7) PNG decode: same five-row layout and rotating
-    color types as multimodal_decode_png, but each stream is split into the
-    seven Adam7 passes — every pass filtered independently with its own
-    predictor cycle — so decoding exercises pass-geometry extraction,
-    per-pass unfiltering and de-interlacing reassembly. The oracle is the
-    same md5(repeat(text, 5)) twin: interlacing must be a pure re-ordering
-    or the hash breaks."""
-    _conf(spark)
-    from aqueduct_core_spark.functions.multimodal import (
-        decode_real_summary,
-        png_media_from_documents,
-    )
-
-    docs = _t("documents")(spark, sf_dir)
-    media = png_media_from_documents(docs, limit=MEDIA_LIMIT, interlace=1)
-    return decode_real_summary(media)
-
-
-def q_multimodal_decode_gif(spark, sf_dir):
-    """REAL animated-GIF decode, zero external libs (the entropy coder is
-    hand-rolled variable-width LZW, like JPEG's Huffman): documents -> GIF89a
-    streams of 3 full-canvas frames (4 identical rows of the text bytes each,
-    identity grayscale palette; odd frames row-interlaced, so both row orders
-    ride one payload; long docs push LZW through 9->12-bit width growth and
-    the 4096-entry reset) -> the pure-python decoder (header/LSD/color-table
-    parse, sub-block walk, GCE handling, LZW decode, 4-pass de-interlace,
-    canvas compositing) -> per-file summary whose content_md5 covers EVERY
-    frame's composited canvas. Oracle recomputes from the source table
-    (md5(repeat(text, 12))) — the full animation round-trips hash-exact.
-    Reference analog: binary payloads flow opaque (PipeCodec, msg_data)."""
-    _conf(spark)
-    from aqueduct_core_spark.functions.multimodal import (
-        decode_real_summary,
-        gif_media_from_documents,
-    )
-
-    docs = _t("documents")(spark, sf_dir)
-    media = gif_media_from_documents(docs, limit=MEDIA_LIMIT, height=4, n_frames=3)
-    return decode_real_summary(media)
-
-
-def q_multimodal_gif_frame_sample(spark, sf_dir):
-    """REAL video frame sampling: the animated-GIF media table fans out to
-    every 2nd DECODED frame (LZW + de-interlace + compositing, not a byte
-    slice) — 1 media row -> k frame rows, the training-pipeline shape for
-    keyframe extraction. Each sampled frame's full-canvas bytes are md5'd;
-    the oracle regenerates the (doc x frame_idx) lattice with a lateral
-    unnest and recomputes the digest from the source text, so the sampled
-    frames are hash-gated bit-for-bit."""
-    _conf(spark)
-    from aqueduct_core_spark.functions.multimodal import (
-        gif_frame_sample,
-        gif_media_from_documents,
-    )
-
-    docs = _t("documents")(spark, sf_dir)
-    media = gif_media_from_documents(docs, limit=MEDIA_LIMIT, height=4, n_frames=3)
-    return gif_frame_sample(media, every_n=2).select(
-        "media_id",
-        "frame_idx",
-        F.md5(F.col("frame_bytes")).alias("frame_md5"),
-    )
-
-
-def q_multimodal_decode_g711(spark, sf_dir):
-    """REAL G.711 telephony-audio decode (ITU G.711 A-law; mu-law also
-    implemented): documents -> format-tag-6 RIFF/WAVE streams whose code
-    bytes ARE the text -> the table-driven expander (segment layout computed
-    from the spec, pinned against CCITT reference points in pytest) ->
-    linear int16 samples -> the compressor must find its way back to the
-    exact source codes. A-law is injective over all 256 codes, so
-    content_md5 == md5(text) gates BOTH companding directions bit-for-bit.
-    Oracle recomputes every column from the source table."""
-    _conf(spark)
-    from aqueduct_core_spark.functions.multimodal import (
-        decode_real_summary,
-        g711_media_from_documents,
-    )
-
-    docs = _t("documents")(spark, sf_dir)
-    media = g711_media_from_documents(docs, limit=MEDIA_LIMIT)
-    return decode_real_summary(media)
-
-
-# =============================================================================
-def q_multimodal_decode_mp4(spark, sf_dir):
-    """REAL MP4/ISO-BMFF container decode, zero external libs: documents ->
-    valid MP4 files (ftyp + mdat + full moov sample tables) whose 3 frame
-    payloads each ARE the text bytes, chunked 2 samples per chunk -> the
-    pure-stdlib box walker (32/64-bit box sizes, v0/v1 headers,
-    stts/stsc/stsz/stco sample mapping per ISO 14496-12 §8.7.4) -> per-file
-    summary whose content_md5 covers EVERY sample's bytes sliced from its
-    absolute file offset. The video CODEC stays at the register_decoder seam;
-    the container index — the part a pipeline owns — round-trips hash-exact.
-    Oracle recomputes md5(repeat(text, 3)) from the source table. Reference
-    analog: binary payloads flow opaque (PipeCodec, msg_data)."""
-    _conf(spark)
-    from aqueduct_core_spark.functions.multimodal import (
-        decode_real_summary,
-        mp4_media_from_documents,
-    )
-
-    docs = _t("documents")(spark, sf_dir)
-    media = mp4_media_from_documents(docs, limit=MEDIA_LIMIT, n_frames=3)
-    return decode_real_summary(media)
-
-
-def q_multimodal_mp4_frame_sample(spark, sf_dir):
-    """REAL keyframe selection from the MP4 sample index: every 2nd sample's
-    exact bytes are sliced via the stsc/stco chunk walk (no codec needed to
-    SELECT frames — the container's own index drives the fan-out, 1 media
-    row -> k frame rows). The oracle regenerates the (doc x frame_idx)
-    lattice with a lateral unnest; each sampled frame is hash-gated
-    bit-for-bit against the source text."""
-    _conf(spark)
-    from aqueduct_core_spark.functions.multimodal import (
-        mp4_frame_sample,
-        mp4_media_from_documents,
-    )
-
-    docs = _t("documents")(spark, sf_dir)
-    media = mp4_media_from_documents(docs, limit=MEDIA_LIMIT, n_frames=3)
-    return mp4_frame_sample(media, every_n=2).select(
-        "media_id",
-        "frame_idx",
-        F.md5(F.col("frame_bytes")).alias("frame_md5"),
-    )
-
-
-# =============================================================================
-def q_multimodal_decode_mp3(spark, sf_dir):
-    """REAL MPEG-audio (MP3) frame walk, zero external libs: documents ->
-    ID3v2.3 tag + 3 free-format MPEG-1 Layer III frames (each frame's data
-    bytes ARE the text) + ID3v1 trailer -> the pure-stdlib parser (syncsafe
-    tag skip, header field split per ISO 11172-3, free-format frame sizing
-    by same-header sync scan, duration from the 1152-samples/frame law) ->
-    per-file summary whose content_md5 covers EVERY frame's exact bytes. The
-    Huffman audio codec stays at the register_decoder seam; the frame index —
-    the part a pipeline owns — round-trips hash-exact. Oracle recomputes
-    md5(repeat(text, 3)); duration = 3*1152/32000 s = 108 ms. Reference
-    analog: binary payloads flow opaque (PipeCodec, msg_data)."""
-    _conf(spark)
-    from aqueduct_core_spark.functions.multimodal import (
-        decode_real_summary,
-        mp3_media_from_documents,
-    )
-
-    docs = _t("documents")(spark, sf_dir)
-    media = mp3_media_from_documents(docs, limit=MEDIA_LIMIT, n_frames=3)
-    return decode_real_summary(media)
+    return q
 
 
 # =============================================================================
@@ -1124,19 +885,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_ivf_topk": q_ann_ivf_topk,
         "ann_ivf_batch_topk": q_ann_ivf_batch_topk,
         "multimodal_features": q_multimodal_features,
-        "multimodal_decode_real": q_multimodal_decode_real,
-        "multimodal_decode_jpeg": q_multimodal_decode_jpeg,
-        "multimodal_decode_jpeg_color": q_multimodal_decode_jpeg_color,
-        "multimodal_decode_jpeg420": q_multimodal_decode_jpeg420,
-        "multimodal_decode_jpeg_progressive": q_multimodal_decode_jpeg_progressive,
-        "multimodal_decode_png": q_multimodal_decode_png,
-        "multimodal_decode_png_adam7": q_multimodal_decode_png_adam7,
-        "multimodal_decode_gif": q_multimodal_decode_gif,
-        "multimodal_gif_frame_sample": q_multimodal_gif_frame_sample,
-        "multimodal_decode_g711": q_multimodal_decode_g711,
-        "multimodal_decode_mp4": q_multimodal_decode_mp4,
-        "multimodal_mp4_frame_sample": q_multimodal_mp4_frame_sample,
-        "multimodal_decode_mp3": q_multimodal_decode_mp3,
+        **{
+            name: _fixture_query(fixture, sampler)
+            for name, (fixture, sampler) in MULTIMODAL_FIXTURES.items()
+        },
     }
 
 

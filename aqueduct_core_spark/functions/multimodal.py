@@ -390,18 +390,6 @@ def png_encode(
     return out + _png_chunk(b"IEND", b"")
 
 
-def png_bytes(gray: bytes, height: int = 5, color_type: int = 0, interlace: int = 0) -> bytes:
-    """PNG builder for the contract queries: `height` identical rows of the
-    source bytes (width = byte count). With the encoder's cycling row
-    filters, decoding exercises every predictor; the recovered pixel bytes
-    are exactly `height` copies of `gray` (SQL oracle: md5(repeat(text, h)))."""
-    row = np.frombuffer(bytes(gray), dtype=np.uint8)
-    img = np.tile(row, (height, 1))
-    if color_type == 2:
-        img = np.repeat(img[:, :, None], 3, axis=2)
-    return png_encode(img, color_type=color_type, interlace=interlace)
-
-
 def decode_png(payload: bytes) -> dict:
     """PNG parser: signature, chunk walk with CRC32 verification, IHDR
     validation, zlib inflate, per-pass unfiltering (all five predictors),
@@ -494,39 +482,43 @@ def _gif_lzw_encode(indices: bytes, min_code_size: int) -> bytes:
     out = bytearray()
     acc = n_bits = 0
 
-    def put(code: int, width: int) -> None:
-        nonlocal acc, n_bits
+    def put(code: int) -> None:
+        nonlocal acc, n_bits, width
         acc |= code << n_bits
         n_bits += width
         while n_bits >= 8:
             out.append(acc & 0xFF)
             acc >>= 8
             n_bits -= 8
+        # GIF89a Appendix F (giflib EGifCompressOutput): the width grows once
+        # code 2**width - 1 is assigned, checked after each code is written
+        # and before this step's table add — so the decoder, one add behind,
+        # widens at the same code boundary, also for the code before END
+        if nxt == 1 << width and width < 12:
+            width += 1
 
     table: dict[bytes, int] = {bytes([i]): i for i in range(clear)}
     nxt, width = end + 1, min_code_size + 1
-    put(clear, width)
+    put(clear)
     cur = b""
     for byte in indices:
         cand = cur + bytes([byte])
         if cand in table:
             cur = cand
             continue
-        put(table[cur], width)
+        put(table[cur])
         if nxt < 4096:
             table[cand] = nxt
             nxt += 1
-            if nxt == (1 << width) and width < 12:
-                width += 1
         else:
             # table full: reset (exercises the decoder's mid-stream CLEAR)
-            put(clear, width)
+            put(clear)
             table = {bytes([i]): i for i in range(clear)}
             nxt, width = end + 1, min_code_size + 1
         cur = bytes([byte])
     if cur:
-        put(table[cur], width)
-    put(end, width)
+        put(table[cur])
+    put(end)
     if n_bits:
         out.append(acc & 0xFF)
     return bytes(out)
@@ -534,9 +526,9 @@ def _gif_lzw_encode(indices: bytes, min_code_size: int) -> bytes:
 
 def _gif_lzw_decode(data: bytes, min_code_size: int) -> bytes:
     """Inverse of _gif_lzw_encode, including the KwKwK case (code == next
-    unassigned entry) and mid-stream CLEAR resets. The decoder's width bump
-    fires one entry earlier than the encoder's ((1<<w)-1 vs 1<<w) because it
-    lags the encoder by exactly one table add."""
+    unassigned entry) and mid-stream CLEAR resets. The width grows once the
+    table holds 1<<w entries (giflib DGifDecompressInput): the decoder lags
+    the encoder by one table add, and the encoder checks before its add."""
     clear, end = 1 << min_code_size, (1 << min_code_size) + 1
     pos = acc = n_bits = 0
 
@@ -579,7 +571,7 @@ def _gif_lzw_decode(data: bytes, min_code_size: int) -> bytes:
         out += entry
         if prev is not None and len(table) < 4096:
             table.append(prev + entry[:1])
-            if len(table) == (1 << width) - 1 and width < 12:
+            if len(table) == 1 << width and width < 12:
                 width += 1
         prev = entry
 
@@ -615,11 +607,11 @@ def gif_bytes(
     for i in range(256):
         out += bytes((i, i, i))
     if n_frames > 1:
-        out += b"\x21\xff\x0bNETSCAPE2.0" + _gif_subblocks_app(b"\x01\x00\x00")
+        out += b"\x21\xff\x0bNETSCAPE2.0" + _gif_subblocks(b"\x01\x00\x00")
     rows = bytes(gray) * h
     for k in range(n_frames):
         lace = interlace_alt and (k % 2 == 1)
-        out += b"\x21\xf9" + _gif_subblocks_app(
+        out += b"\x21\xf9" + _gif_subblocks(
             struct.pack("<BHB", 0x04, delay_cs, 0)  # disposal 1, no transparency
         )
         out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0x40 if lace else 0)
@@ -631,11 +623,6 @@ def gif_bytes(
         out += _gif_subblocks(_gif_lzw_encode(px, 8))
     out.append(0x3B)  # trailer
     return bytes(out)
-
-
-def _gif_subblocks_app(data: bytes) -> bytes:
-    """Sub-block framing for extension bodies (identical wire format)."""
-    return _gif_subblocks(data)
 
 
 def decode_gif(payload: bytes) -> dict:
@@ -729,11 +716,12 @@ def decode_gif(payload: bytes) -> dict:
     }
 
 
-# --------------------------------------------------------- baseline JPEG
-# Pure-numpy baseline-DCT JPEG (ITU T.81): a real encoder and a real decoder
-# — markers, standard Annex K Huffman tables, zigzag, quantization, 8x8
-# DCT/IDCT, byte stuffing. Grayscale (one component), sequential baseline
-# only (SOF0); progressive/arithmetic/multi-component raise. All constants
+# ------------------------------------------------------------------ JPEG
+# Pure-numpy DCT JPEG (ITU T.81): a real encoder and a real decoder —
+# markers, standard Annex K Huffman tables, zigzag, quantization, 8x8
+# DCT/IDCT, byte stuffing, restart intervals. Baseline (SOF0) and
+# progressive (SOF2), grayscale or 3-component YCbCr at any integer-ratio
+# sampling; arithmetic coding and the other SOF types raise. All constants
 # below are from the public JPEG specification.
 
 _ZIGZAG = np.array([
@@ -1409,7 +1397,8 @@ def decode_jpeg(payload: bytes) -> dict:
     (grayscale) or three (YCbCr) components at any integer-ratio sampling —
     4:4:4, 4:2:2, 4:2:0 (general per-component h x v MCU geometry, data
     units in spec raster order, subsampled planes box-upsampled to frame
-    resolution); raises on progressive (SOF2) and arithmetic coding.
+    resolution); progressive (SOF2) streams go to _decode_progressive,
+    arithmetic coding and the other SOF types raise.
     Grayscale returns pixels (h, w); color returns pixels (h, w, 3) in frame
     component order with ncomp=3, plus the parsed sampling factors and the
     MCU pixel width."""
@@ -2516,21 +2505,16 @@ def extract_features(
     return df.mapInPandas(run, FEATURE_SCHEMA)
 
 
-def frame_sample(df: DataFrame, frame_size: int = 1024, every_n: int = 2) -> DataFrame:
-    """Video frame sampling (stub): treat the payload as fixed-size frames and
-    keep every n-th — the real implementation swaps the chunker for an ffmpeg
-    keyframe iterator; the fan-out shape (1 row -> k rows) is what matters."""
+def _fan_out(df: DataFrame, frames_of, every_n: int) -> DataFrame:
+    """The frame-sampling shape: 1 media row -> k frame rows, keeping every
+    n-th frame of the sequence `frames_of(kind, payload)` returns (empty for
+    payloads that are not its container)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out_id, out_idx, out_bytes = [], [], []
             for mid, kind, payload in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
-                if kind != "video" or payload is None:
-                    continue
-                frames = [
-                    payload[i : i + frame_size]
-                    for i in range(0, len(payload), frame_size)
-                ]
+                frames = frames_of(kind, payload)
                 for idx in range(0, len(frames), every_n):
                     out_id.append(mid)
                     out_idx.append(idx)
@@ -2542,56 +2526,47 @@ def frame_sample(df: DataFrame, frame_size: int = 1024, every_n: int = 2) -> Dat
     return df.mapInPandas(run, FRAME_SCHEMA)
 
 
+def frame_sample(df: DataFrame, frame_size: int = 1024, every_n: int = 2) -> DataFrame:
+    """Video frame sampling (stub): treat the payload as fixed-size frames and
+    keep every n-th — the real implementation swaps the chunker for an ffmpeg
+    keyframe iterator; the fan-out shape (1 row -> k rows) is what matters."""
+
+    def chunks(kind, payload):
+        if kind != "video" or payload is None:
+            return []
+        return [payload[i : i + frame_size] for i in range(0, len(payload), frame_size)]
+
+    return _fan_out(df, chunks, every_n)
+
+
 def gif_frame_sample(df: DataFrame, every_n: int = 2) -> DataFrame:
     """REAL video frame sampling: decode each animated-GIF payload's actual
     frame sequence (LZW + compositing, decode_gif) and keep every n-th
-    frame's full-canvas gray plane. Same 1 row -> k rows fan-out as the
-    frame_sample stub, but the frames come from a genuine container decode —
-    an ffmpeg keyframe iterator drops in by replacing one function."""
+    frame's full-canvas gray plane — an ffmpeg keyframe iterator drops in by
+    replacing one function."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_id, out_idx, out_bytes = [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                payload = bytes(payload or b"")
-                if payload[:6] not in (b"GIF87a", b"GIF89a"):
-                    continue
-                gif = decode_gif(payload)
-                for idx in range(0, gif["n_frames"], every_n):
-                    out_id.append(mid)
-                    out_idx.append(idx)
-                    out_bytes.append(gif["frames"][idx].tobytes())
-            yield pd.DataFrame(
-                {"media_id": out_id, "frame_idx": out_idx, "frame_bytes": out_bytes}
-            )
+    def frames(kind, payload):
+        payload = bytes(payload or b"")
+        if payload[:6] not in (b"GIF87a", b"GIF89a"):
+            return []
+        return [f.tobytes() for f in decode_gif(payload)["frames"]]
 
-    return df.mapInPandas(run, FRAME_SCHEMA)
+    return _fan_out(df, frames, every_n)
 
 
 def mp4_frame_sample(df: DataFrame, every_n: int = 2) -> DataFrame:
     """REAL video frame sampling from MP4 containers: walk each payload's
     sample tables (stts/stsc/stsz/stco) and keep every n-th sample's exact
-    bytes — the keyframe-extraction shape (1 media row -> k frame rows)
-    driven by the container's own index, no codec needed to SELECT frames.
+    bytes — the container's own index drives the selection, no codec needed.
     Decoding the kept bytes is the registered codec's job."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_id, out_idx, out_bytes = [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                payload = bytes(payload or b"")
-                if len(payload) < 8 or payload[4:8] != b"ftyp":
-                    continue
-                mp4 = decode_mp4(payload)
-                for idx in range(0, mp4["n_samples"], every_n):
-                    out_id.append(mid)
-                    out_idx.append(idx)
-                    out_bytes.append(mp4["samples"][idx])
-            yield pd.DataFrame(
-                {"media_id": out_id, "frame_idx": out_idx, "frame_bytes": out_bytes}
-            )
+    def samples(kind, payload):
+        payload = bytes(payload or b"")
+        if len(payload) < 8 or payload[4:8] != b"ftyp":
+            return []
+        return decode_mp4(payload)["samples"]
 
-    return df.mapInPandas(run, FRAME_SCHEMA)
+    return _fan_out(df, samples, every_n)
 
 
 def media_from_documents(docs: DataFrame, limit: int | None = None) -> DataFrame:
@@ -2627,390 +2602,136 @@ REAL_SUMMARY_SCHEMA = StructType(
     ]
 )
 
-_REAL_WAV_RATE = 16000
+def _png_fixture(interlace: int):
+    def row(did: int, b: bytes):
+        img = np.tile(np.frombuffer(b, np.uint8), (5, 1))
+        ctype = (0, 2, 3)[did % 3]
+        if ctype == 2:
+            img = np.repeat(img[:, :, None], 3, axis=2)
+        codec = "adam7" if interlace else "sequential"
+        payload = png_encode(img, color_type=ctype, interlace=interlace)
+        return "image", payload, {"container": "png", "codec": codec}
+
+    return row
 
 
-def real_media_from_documents(docs: DataFrame, limit: int | None = None) -> DataFrame:
-    """Media table with REAL containers built from the documents table: even
-    doc_ids become spec-valid 8-bit PCM WAV files whose samples ARE the UTF-8
-    text bytes; odd doc_ids become P6 PPM images whose R=G=B pixel bytes are
-    the text bytes. Any standard reader decodes these payloads; deriving them
-    from `documents` is what makes an exact ANSI-SQL oracle possible
-    (n_samples/n_pixels = octet_length(text), md5 of decoded content =
-    md5(text)). Fully distributed — the encoders run inside mapInPandas."""
+#: fixture -> (doc_id, UTF-8 text bytes) -> (kind, payload, meta). Every
+#: payload is a spec-valid container that any standard reader decodes, laid
+#: out so decoding is EXACTLY invertible: decode_real_summary's content_md5
+#: and geometry are recomputable from `documents` alone, which is what gives
+#: each multimodal_* contract query its ANSI-SQL oracle twin.
+MEDIA_FIXTURES = {
+    # even docs: 8-bit PCM WAV at 16 kHz whose samples ARE the text bytes
+    # (RIFF chunk walk); odd docs: P6 PPM whose R=G=B pixels are the bytes
+    "wav_ppm": lambda did, b: (
+        ("audio", wav_bytes(b, sample_rate=16000), {"container": "wav", "codec": "pcm_u8"})
+        if did % 2 == 0
+        else ("image", ppm_bytes(b), {"container": "ppm", "codec": "raw"})
+    ),
+    # baseline SOF0 grayscale, each byte one constant 8x8 block under unit
+    # quantizers: Annex-K Huffman, zigzag, dequantize and IDCT all round-trip
+    "jpeg": lambda did, b: (
+        "image", jpeg_bytes(b), {"container": "jpeg", "codec": "baseline"}
+    ),
+    # interleaved YCbCr 4:4:4, each byte one MCU (Cb/Cr fixed derivations of
+    # Y, so three DC predictor chains diverge), RSTn every 4 MCUs: restart
+    # sequence check + per-component predictor reset
+    "jpeg_color": lambda did, b: (
+        "image",
+        jpeg_color_bytes(b, restart_interval=4),
+        {"container": "jpeg", "codec": "baseline-ycbcr444-dri"},
+    ),
+    # YCbCr 4:2:0, each byte one 16x16 MCU (four distinct luma blocks +
+    # quarter-res Cb/Cr), RSTn every 4 MCUs: per-component MCU geometry,
+    # Y00 Y01 Y10 Y11 Cb Cr data-unit order, chroma upsampling
+    "jpeg420": lambda did, b: (
+        "image",
+        jpeg420_bytes(b, restart_interval=4),
+        {"container": "jpeg", "codec": "baseline-ycbcr420-dri"},
+    ),
+    # progressive SOF2 over six scans (DC at Al=1, a DC refinement plane, AC
+    # first + refinement with shared EOBRUN), RSTn every 3 units per scan:
+    # coefficients accumulate across scans, then dequantize + IDCT once
+    "jpeg_progressive": lambda did, b: (
+        "image",
+        jpeg_progressive_bytes(b, restart_interval=3),
+        {"container": "jpeg", "codec": "progressive-sa-dri"},
+    ),
+    # five identical scanlines of the bytes through cycling filters (every
+    # predictor in every payload), color type rotating by doc_id over
+    # grayscale / truecolor (R=G=B) / indexed+PLTE; CRC-checked chunk walk
+    "png": _png_fixture(0),
+    # the same five rows split into the seven Adam7 passes, each filtered
+    # on its own: interlacing must be a pure pixel re-ordering
+    "png_adam7": _png_fixture(1),
+    # animated GIF89a: 3 full-canvas frames of 4 identical rows (identity
+    # gray palette, odd frames row-interlaced); long docs push LZW through
+    # 9->12-bit growth and the 4096-entry reset. The repo's real VIDEO kind
+    "gif": lambda did, b: (
+        "video",
+        gif_bytes(b, height=4, n_frames=3, interlace_alt=True),
+        {"container": "gif", "codec": "lzw", "frames": "3"},
+    ),
+    # MP4/ISO-BMFF with 3 samples that each ARE the bytes, 2 per chunk (the
+    # short trailing chunk forces a second stsc run), 40 ms each at 1 kHz:
+    # only the stsc/stco walk from absolute offsets recovers every sample
+    "mp4": lambda did, b: (
+        "video",
+        mp4_bytes([b] * 3),
+        {"container": "mp4", "codec": "gry8", "frames": "3"},
+    ),
+    # ID3v2.3 tag + 3 free-format MPEG-1 Layer III frames whose data bytes
+    # ARE the text + ID3v1 trailer, 32 kHz (3 x 1152 samples = 108 ms): tag
+    # skip, header split and sync-scan frame sizing must all be exact
+    "mp3": lambda did, b: (
+        "audio",
+        id3v2_bytes({"TIT2": f"doc {did}"}) + mp3_free_bytes([b] * 3) + _ID3V1_STUB,
+        {"container": "mp3", "codec": "mp3-free", "frames": "3"},
+    ),
+    # G.711 A-law WAV (format tag 6, 8 kHz mono) whose codes ARE the bytes.
+    # A-law is injective over all 256 codes, so expanding to int16 and
+    # re-compressing gates both directions (mu-law's +0/-0 pair collapses)
+    "g711": lambda did, b: (
+        "audio", wav_g711_bytes(b, law="alaw"), {"container": "wav", "codec": "alaw"}
+    ),
+}
+
+
+def docs_to_media(docs: DataFrame, fixture: str, limit: int | None = None) -> DataFrame:
+    """Media table of REAL containers built from the documents table: each
+    doc's UTF-8 text bytes become one MEDIA_FIXTURES[fixture] payload.
+    Fully distributed — the encoders run inside mapInPandas, one Arrow batch
+    in and one out."""
+    make = MEDIA_FIXTURES[fixture]
     src = docs.select("doc_id", "text")
     if limit is not None:
         src = src.filter(F.col("doc_id") < limit)
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids, kinds, payloads, metas = [], [], [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                data = (text or "").encode("utf-8")
-                if did % 2 == 0:
-                    kinds.append("audio")
-                    payloads.append(wav_bytes(data, sample_rate=_REAL_WAV_RATE))
-                    metas.append({"container": "wav", "codec": "pcm_u8"})
-                else:
-                    kinds.append("image")
-                    payloads.append(ppm_bytes(data))
-                    metas.append({"container": "ppm", "codec": "raw"})
-                ids.append(did)
-            yield pd.DataFrame(
-                {"media_id": ids, "kind": kinds, "payload": payloads, "meta": metas}
+            out = pd.DataFrame(
+                [
+                    make(int(did), (t or "").encode("utf-8"))
+                    for did, t in zip(pdf["doc_id"], pdf["text"])
+                ],
+                columns=["kind", "payload", "meta"],
             )
-
-    return src.mapInPandas(build, MEDIA_SCHEMA)
-
-
-def jpeg_media_from_documents(docs: DataFrame, limit: int | None = None) -> DataFrame:
-    """Media table of REAL baseline JPEGs built from the documents table: each
-    doc's UTF-8 text bytes become the per-block values of a one-block-row
-    grayscale JPEG (jpeg_bytes). The payloads are genuine SOF0 JPEG streams —
-    standard Huffman tables, real entropy-coded scan — any baseline decoder
-    reads them; the constant-block + unit-quantizer layout is what makes the
-    decode EXACTLY invertible, so md5 of the recovered block bytes must equal
-    md5(text) (SQL-expressible oracle, like the WAV/PPM builders)."""
-    src = docs.select("doc_id", "text")
-    if limit is not None:
-        src = src.filter(F.col("doc_id") < limit)
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "kind": ["image"] * len(pdf),
-                    "payload": [
-                        jpeg_bytes((t or "").encode("utf-8")) for t in pdf["text"]
-                    ],
-                    "meta": [{"container": "jpeg", "codec": "baseline"}] * len(pdf),
-                }
-            )
-
-    return src.mapInPandas(build, MEDIA_SCHEMA)
-
-
-def jpeg_color_media_from_documents(
-    docs: DataFrame, limit: int | None = None, restart_interval: int = 4
-) -> DataFrame:
-    """Media table of 3-component (YCbCr 4:4:4) baseline JPEGs WITH restart
-    intervals, built from the documents table: each doc's UTF-8 text bytes
-    become the Y plane of an interleaved one-MCU-row stream (Cb/Cr are fixed
-    derivations of Y — see jpeg_color_bytes), with an RSTn marker every
-    `restart_interval` MCUs. Decoding these exercises interleaved MCU order,
-    three diverging DC predictor chains, restart sequence checking and
-    predictor reset — and still md5-round-trips the source text exactly."""
-    src = docs.select("doc_id", "text")
-    if limit is not None:
-        src = src.filter(F.col("doc_id") < limit)
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "kind": ["image"] * len(pdf),
-                    "payload": [
-                        jpeg_color_bytes(
-                            (t or "").encode("utf-8"),
-                            restart_interval=restart_interval,
-                        )
-                        for t in pdf["text"]
-                    ],
-                    "meta": [
-                        {"container": "jpeg", "codec": "baseline-ycbcr444-dri"}
-                    ]
-                    * len(pdf),
-                }
-            )
-
-    return src.mapInPandas(build, MEDIA_SCHEMA)
-
-
-def jpeg420_media_from_documents(
-    docs: DataFrame, limit: int | None = None, restart_interval: int = 4
-) -> DataFrame:
-    """Media table of chroma-subsampled (YCbCr 4:2:0) baseline JPEGs with
-    restart intervals — the sampling layout real camera/web encoders emit:
-    each doc's UTF-8 text bytes become one 16x16 MCU each (four distinct
-    constant luma blocks + quarter-res Cb/Cr — see jpeg420_bytes), with an
-    RSTn marker every `restart_interval` MCUs. Decoding these exercises the
-    general per-component MCU geometry (Y00 Y01 Y10 Y11 Cb Cr data-unit
-    order), chroma upsampling, and MCU-counted restarts — and still
-    md5-round-trips the source text exactly off the decoded Y plane."""
-    src = docs.select("doc_id", "text")
-    if limit is not None:
-        src = src.filter(F.col("doc_id") < limit)
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "kind": ["image"] * len(pdf),
-                    "payload": [
-                        jpeg420_bytes(
-                            (t or "").encode("utf-8"),
-                            restart_interval=restart_interval,
-                        )
-                        for t in pdf["text"]
-                    ],
-                    "meta": [
-                        {"container": "jpeg", "codec": "baseline-ycbcr420-dri"}
-                    ]
-                    * len(pdf),
-                }
-            )
-
-    return src.mapInPandas(build, MEDIA_SCHEMA)
-
-
-def jpeg_progressive_media_from_documents(
-    docs: DataFrame, limit: int | None = None, restart_interval: int = 3
-) -> DataFrame:
-    """Media table of progressive (SOF2) JPEGs built from the documents
-    table: each doc's UTF-8 text bytes become the constant blocks of a
-    one-block-row grayscale stream rendered across SIX scans — DC at Al=1,
-    a DC refinement bit plane, then AC first + refinement scans (shared
-    EOBRUN streams) — with RSTn markers every `restart_interval` units in
-    every scan. Decoding walks the real multi-scan successive-approximation
-    machinery and still md5-round-trips the source text exactly."""
-    src = docs.select("doc_id", "text")
-    if limit is not None:
-        src = src.filter(F.col("doc_id") < limit)
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "kind": ["image"] * len(pdf),
-                    "payload": [
-                        jpeg_progressive_bytes(
-                            (t or "").encode("utf-8"),
-                            restart_interval=restart_interval,
-                        )
-                        for t in pdf["text"]
-                    ],
-                    "meta": [
-                        {"container": "jpeg", "codec": "progressive-sa-dri"}
-                    ]
-                    * len(pdf),
-                }
-            )
-
-    return src.mapInPandas(build, MEDIA_SCHEMA)
-
-
-def png_media_from_documents(
-    docs: DataFrame, limit: int | None = None, height: int = 5, interlace: int = 0
-) -> DataFrame:
-    """Media table of REAL PNGs built from the documents table: each doc's
-    UTF-8 text bytes become `height` identical scanlines (width = byte
-    count), written through the cycling-filter encoder so every scanline
-    predictor (None/Sub/Up/Average/Paeth) appears in every payload. The
-    color type rotates by doc_id — grayscale (0), truecolor (2, R=G=B),
-    indexed (3, identity palette) — so one oracle entry gates all three
-    pixel layouts; interlace=1 writes Adam7 streams. The recovered plane is
-    exactly `height` copies of the text bytes (oracle: md5(repeat(text, h)))."""
-    src = docs.select("doc_id", "text")
-    if limit is not None:
-        src = src.filter(F.col("doc_id") < limit)
-    ctypes = (0, 2, 3)
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "kind": ["image"] * len(pdf),
-                    "payload": [
-                        png_bytes(
-                            (t or "").encode("utf-8"),
-                            height=height,
-                            color_type=ctypes[int(did) % 3],
-                            interlace=interlace,
-                        )
-                        for did, t in zip(pdf["doc_id"], pdf["text"])
-                    ],
-                    "meta": [
-                        {"container": "png", "codec": "adam7" if interlace else "sequential"}
-                    ]
-                    * len(pdf),
-                }
-            )
-
-    return src.mapInPandas(build, MEDIA_SCHEMA)
-
-
-def gif_media_from_documents(
-    docs: DataFrame,
-    limit: int | None = None,
-    height: int = 4,
-    n_frames: int = 3,
-    interlace_alt: bool = True,
-) -> DataFrame:
-    """Media table of REAL animated GIFs built from the documents table: each
-    doc's UTF-8 text bytes become `height` identical rows repeated across
-    `n_frames` full-canvas frames (width = byte count; identity grayscale
-    palette, so palette index == source byte). With `interlace_alt` odd
-    frames are row-interlaced, so one payload exercises both row orders plus
-    the LZW coder's width growth and (on long docs) its 4096-entry reset.
-    kind is "video" — this is the repo's genuine animation container. The
-    recovered frame stack is exactly height*n_frames copies of the text
-    bytes (oracle: md5(repeat(text, height*n_frames)))."""
-    src = docs.select("doc_id", "text")
-    if limit is not None:
-        src = src.filter(F.col("doc_id") < limit)
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "kind": ["video"] * len(pdf),
-                    "payload": [
-                        gif_bytes(
-                            (t or "").encode("utf-8"),
-                            height=height,
-                            n_frames=n_frames,
-                            interlace_alt=interlace_alt,
-                        )
-                        for t in pdf["text"]
-                    ],
-                    "meta": [
-                        {"container": "gif", "codec": "lzw", "frames": str(n_frames)}
-                    ]
-                    * len(pdf),
-                }
-            )
-
-    return src.mapInPandas(build, MEDIA_SCHEMA)
-
-
-def mp4_media_from_documents(
-    docs: DataFrame,
-    limit: int | None = None,
-    n_frames: int = 3,
-    sample_delta: int = 40,
-    timescale: int = 1000,
-) -> DataFrame:
-    """Media table of REAL MP4 containers built from the documents table:
-    each doc's UTF-8 text bytes become every frame's payload (width = byte
-    count, height 1), chunked 2 samples per chunk so the decode summary's
-    digest can only match if the stsc/stco chunk walk recovers every sample
-    from its absolute file offset (with 3 frames the trailing short chunk
-    also forces a second stsc run). Identical frames take the constant-size
-    stsz shortcut. Oracle: md5(repeat(text, n_frames)); duration =
-    n_frames * sample_delta ms at the default 1 kHz timescale."""
-    src = docs.select("doc_id", "text")
-    if limit is not None:
-        src = src.filter(F.col("doc_id") < limit)
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "kind": ["video"] * len(pdf),
-                    "payload": [
-                        mp4_bytes(
-                            [(t or "").encode("utf-8")] * n_frames,
-                            sample_delta=sample_delta,
-                            timescale=timescale,
-                        )
-                        for t in pdf["text"]
-                    ],
-                    "meta": [
-                        {"container": "mp4", "codec": "gry8", "frames": str(n_frames)}
-                    ]
-                    * len(pdf),
-                }
-            )
-
-    return src.mapInPandas(build, MEDIA_SCHEMA)
-
-
-def mp3_media_from_documents(
-    docs: DataFrame,
-    limit: int | None = None,
-    n_frames: int = 3,
-    sr_idx: int = 2,
-) -> DataFrame:
-    """Media table of REAL MPEG audio streams built from the documents table:
-    an ID3v2.3 tag (title = doc id), then `n_frames` free-format MPEG-1
-    Layer III frames whose data bytes each ARE the text, then an ID3v1
-    trailer — so the decode summary's digest can only match if tag skipping,
-    the header field split, and the free-format sync-scan sizing all recover
-    every frame's exact bytes. Oracle: md5(repeat(text, n_frames)); at the
-    default 32 kHz (sr_idx 2) duration = n_frames * 1152 / 32000 s, exactly
-    108 ms for 3 frames."""
-    src = docs.select("doc_id", "text")
-    if limit is not None:
-        src = src.filter(F.col("doc_id") < limit)
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "kind": ["audio"] * len(pdf),
-                    "payload": [
-                        id3v2_bytes({"TIT2": f"doc {did}"})
-                        + mp3_free_bytes([(t or "").encode("utf-8")] * n_frames, sr_idx=sr_idx)
-                        + _ID3V1_STUB
-                        for did, t in zip(pdf["doc_id"], pdf["text"])
-                    ],
-                    "meta": [
-                        {"container": "mp3", "codec": "mp3-free", "frames": str(n_frames)}
-                    ]
-                    * len(pdf),
-                }
-            )
-
-    return src.mapInPandas(build, MEDIA_SCHEMA)
-
-
-def g711_media_from_documents(
-    docs: DataFrame, limit: int | None = None, law: str = "alaw"
-) -> DataFrame:
-    """Media table of REAL G.711 telephony WAVs built from the documents
-    table: each doc's UTF-8 text bytes ARE the companded code stream (format
-    tag 6, 8 kHz mono — the PSTN container shape). The decode summary
-    expands codes to linear int16 and re-compresses; A-law is injective over
-    all 256 codes, so the digest equals md5(text) only if BOTH G.711
-    directions are exact (mu-law is also implemented but its +0/-0 pair
-    collapses by design, so the oracle rides A-law)."""
-    src = docs.select("doc_id", "text")
-    if limit is not None:
-        src = src.filter(F.col("doc_id") < limit)
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "kind": ["audio"] * len(pdf),
-                    "payload": [
-                        wav_g711_bytes((t or "").encode("utf-8"), law=law)
-                        for t in pdf["text"]
-                    ],
-                    "meta": [{"container": "wav", "codec": law}] * len(pdf),
-                }
-            )
+            out.insert(0, "media_id", pdf["doc_id"])
+            yield out
 
     return src.mapInPandas(build, MEDIA_SCHEMA)
 
 
 def decode_real_summary(media: DataFrame) -> DataFrame:
     """REAL-decode summary — the oracle-gated proof that `use_real` decoding
-    round-trips: each payload is container-sniffed by magic (RIFF -> WAV,
-    P6 -> PPM, FFD8 -> baseline JPEG) and decoded by the pure-numpy parsers,
-    then the DECODED samples/pixels are re-serialized and md5'd. The digest
-    equals md5 of the source text bytes only if chunk walking, header parsing
-    and sample/pixel extraction — for JPEG the whole Huffman/zigzag/
-    dequantize/IDCT pipeline — are all correct."""
+    round-trips: each payload is container-sniffed by magic (RIFF -> WAV incl.
+    G.711, PNG signature -> PNG, ftyp -> MP4, GIF87a/89a -> GIF, ID3 or an
+    MPEG sync word -> MP3, FFD8 -> JPEG, anything else -> P6 PPM) and decoded
+    by the pure-numpy/stdlib parsers, then the DECODED samples/pixels/frames
+    are re-serialized and md5'd. The digest equals md5 of the source text
+    bytes only if chunk walking, header parsing and sample/pixel extraction —
+    for JPEG the whole Huffman/zigzag/dequantize/IDCT pipeline — are all
+    correct."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

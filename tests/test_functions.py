@@ -444,13 +444,13 @@ def test_decode_real_summary_matches_source(spark):
 
     from aqueduct_core_spark.functions.multimodal import (
         decode_real_summary,
-        real_media_from_documents,
+        docs_to_media,
     )
 
     docs = spark.createDataFrame(
         [(0, "hello world"), (1, "caffé"), (2, ""), (3, "x")], "doc_id long, text string"
     )
-    out = {r["media_id"]: r for r in decode_real_summary(real_media_from_documents(docs)).collect()}
+    out = {r["media_id"]: r for r in decode_real_summary(docs_to_media(docs, "wav_ppm")).collect()}
     for did, text in [(0, "hello world"), (1, "caffé"), (2, ""), (3, "x")]:
         b = text.encode("utf-8")
         r = out[did]
@@ -633,13 +633,13 @@ def test_jpeg_decode_summary_matches_source(spark):
 
     from aqueduct_core_spark.functions.multimodal import (
         decode_real_summary,
+        docs_to_media,
         extract_features,
-        jpeg_media_from_documents,
     )
 
     rows = [(0, "hello world"), (1, "caffé"), (2, "x" * 300)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    media = jpeg_media_from_documents(docs)
+    media = docs_to_media(docs, "jpeg")
     out = {r["media_id"]: r for r in decode_real_summary(media).collect()}
     for did, text in rows:
         b = text.encode("utf-8")
@@ -714,13 +714,13 @@ def test_jpeg_color_decode_summary_matches_source(spark):
 
     from aqueduct_core_spark.functions.multimodal import (
         decode_real_summary,
+        docs_to_media,
         extract_features,
-        jpeg_color_media_from_documents,
     )
 
     rows = [(0, "hello world"), (1, "caffé"), (2, "x" * 300)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    media = jpeg_color_media_from_documents(docs, restart_interval=4)
+    media = docs_to_media(docs, "jpeg_color")
     out = {r["media_id"]: r for r in decode_real_summary(media).collect()}
     for did, text in rows:
         b = text.encode("utf-8")
@@ -836,13 +836,13 @@ def test_jpeg420_decode_summary_matches_source(spark):
 
     from aqueduct_core_spark.functions.multimodal import (
         decode_real_summary,
+        docs_to_media,
         extract_features,
-        jpeg420_media_from_documents,
     )
 
     rows = [(0, "hello world"), (1, "caffé"), (2, "x" * 300)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    media = jpeg420_media_from_documents(docs, restart_interval=4)
+    media = docs_to_media(docs, "jpeg420")
     out = {r["media_id"]: r for r in decode_real_summary(media).collect()}
     for did, text in rows:
         b = text.encode("utf-8")
@@ -1000,12 +1000,12 @@ def test_jpeg_progressive_decode_summary_matches_source(spark):
 
     from aqueduct_core_spark.functions.multimodal import (
         decode_real_summary,
-        jpeg_progressive_media_from_documents,
+        docs_to_media,
     )
 
     rows = [(0, "hello world"), (1, "caffé"), (2, "x" * 300)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    media = jpeg_progressive_media_from_documents(docs, restart_interval=3)
+    media = docs_to_media(docs, "jpeg_progressive")
     out = {r["media_id"]: r for r in decode_real_summary(media).collect()}
     for did, text in rows:
         b = text.encode("utf-8")
@@ -1120,14 +1120,14 @@ def test_png_decode_summary_matches_source(spark):
 
     from aqueduct_core_spark.functions.multimodal import (
         decode_real_summary,
+        docs_to_media,
         extract_features,
-        png_media_from_documents,
     )
 
     rows = [(0, "hello png"), (1, "caffé"), (2, "x" * 300)]  # gray, rgb, palette
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    for interlace in (0, 1):
-        media = png_media_from_documents(docs, interlace=interlace)
+    for fixture in ("png", "png_adam7"):
+        media = docs_to_media(docs, fixture)
         out = {r["media_id"]: r for r in decode_real_summary(media).collect()}
         for did, text in rows:
             b = text.encode("utf-8")
@@ -1144,10 +1144,16 @@ def test_png_decode_summary_matches_source(spark):
 def test_gif_codec_roundtrip_exact():
     """Pure-stdlib GIF: sequential and interlaced frames, LZW width growth
     (long high-entropy input pushes 9->12 bits) and the 4096-entry table
-    reset all round-trip bit-exactly through encode -> decode."""
+    reset all round-trip bit-exactly through encode -> decode. The width
+    grows once code 2**w - 1 is assigned (GIF89a Appendix F), END included."""
     import numpy as np
 
-    from aqueduct_core_spark.functions.multimodal import decode_gif, gif_bytes
+    from aqueduct_core_spark.functions.multimodal import _gif_lzw_encode, decode_gif, gif_bytes
+
+    # 256 literals: CLEAR + 255 codes at 9 bits; the 255th assigns code 511,
+    # so the last literal and END are 10 bits wide and END starts at bit 2314
+    stream = int.from_bytes(_gif_lzw_encode(bytes(range(256)), 8), "little")
+    assert (stream >> 2314) & 0x3FF == 257
 
     rng = np.random.default_rng(17)
     cases = [
@@ -1156,6 +1162,10 @@ def test_gif_codec_roundtrip_exact():
         rng.integers(0, 256, 5000, dtype=np.uint8).tobytes(),  # forces 12-bit + reset
         b"a",  # single pixel per row
         b"ab" * 600,  # long repetitive run (deep LZW chains)
+        # documents doc 116 at sf0.001: a data code lands exactly on the
+        # width boundary just before END
+        b"key a table query a window filter batch filter filter part spark agg batch"
+        b" a sort small column scan value batch hash row hash batch line query sort",
     ]
     for gray in cases:
         for interlace_alt, n_frames in [(False, 1), (True, 2), (True, 3)]:
@@ -1247,14 +1257,14 @@ def test_gif_decode_summary_and_frame_sample(spark):
 
     from aqueduct_core_spark.functions.multimodal import (
         decode_real_summary,
+        docs_to_media,
         extract_features,
         gif_frame_sample,
-        gif_media_from_documents,
     )
 
     rows = [(0, "hello gif"), (1, "caffé"), (2, "y" * 300)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    media = gif_media_from_documents(docs, height=4, n_frames=3)
+    media = docs_to_media(docs, "gif")
     out = {r["media_id"]: r for r in decode_real_summary(media).collect()}
     for did, text in rows:
         b = text.encode("utf-8")
@@ -1340,14 +1350,14 @@ def test_g711_wav_decode_summary_matches_source(spark):
     from aqueduct_core_spark.functions.multimodal import (
         decode_real_summary,
         decode_wav,
+        docs_to_media,
         extract_features,
-        g711_media_from_documents,
         wav_g711_bytes,
     )
 
     rows = [(0, "hello g711"), (1, "caffé"), (2, "z" * 300)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    media = g711_media_from_documents(docs)
+    media = docs_to_media(docs, "g711")
     out = {r["media_id"]: r for r in decode_real_summary(media).collect()}
     for did, text in rows:
         b = text.encode("utf-8")

@@ -137,12 +137,12 @@ def test_mp3_decode_summary_oracle_contract(spark):
     frame walk; n_units/rate/duration match the SQL twin's constants."""
     from aqueduct_core_spark.functions.multimodal import (
         decode_real_summary,
-        mp3_media_from_documents,
+        docs_to_media,
     )
 
     rows = [(0, "hello mp3"), (1, "caffé"), (2, "z" * 500)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    media = mp3_media_from_documents(docs, n_frames=3)
+    media = docs_to_media(docs, "mp3")
     out = {r["media_id"]: r for r in decode_real_summary(media).collect()}
     for did, text in rows:
         b = text.encode("utf-8")

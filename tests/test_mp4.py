@@ -101,14 +101,14 @@ def test_mp4_decode_summary_and_frame_sample(spark):
 
     from aqueduct_core_spark.functions.multimodal import (
         decode_real_summary,
+        docs_to_media,
         extract_features,
         mp4_frame_sample,
-        mp4_media_from_documents,
     )
 
     rows = [(0, "hello mp4"), (1, "caffé"), (2, "y" * 300)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    media = mp4_media_from_documents(docs, n_frames=3)
+    media = docs_to_media(docs, "mp4")
     out = {r["media_id"]: r for r in decode_real_summary(media).collect()}
     for did, text in rows:
         b = text.encode("utf-8")
