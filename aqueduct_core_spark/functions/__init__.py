@@ -20,7 +20,6 @@ from aqueduct_core_spark.functions.dedup import (  # noqa: F401
     exact_duplicate_groups,
     minhash_signatures,
     lsh_candidate_pairs,
-    simhash64,
     token_jaccard_pairs,
 )
 from aqueduct_core_spark.functions.similarity import (  # noqa: F401

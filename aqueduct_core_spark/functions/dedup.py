@@ -8,13 +8,20 @@ Scale design (100 TB):
   * MinHash+LSH:   signatures via per-seed min over exploded shingles (pure
                    JVM aggregates, no UDF), banded into buckets; candidate pairs
                    only within a bucket -> near-linear.
-  * SimHash:       64 bit-sums over exploded token hashes (JVM bit_get), then
-                   bit reassembly; hamming-near pairs via band join.
+  * SimHash:       64 ±1 sums over exploded md5 token hashes, reassembled into
+                   two 32-bit words (exact DuckDB twin); hamming-near pairs
+                   via a pigeonhole-lossless band join.
+
+Every banded candidate search (MinHash, SimHash, similarity's hyperplane
+LSH) goes through one self-join, _band_pairs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import operator
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from aqueduct_core_spark.functions.text import tokens
@@ -103,7 +110,56 @@ def token_jaccard_pairs(
     )
 
 
+# ------------------------------------------------------------------ banding
+def _band_pairs(
+    table: DataFrame,
+    keys: list[str],
+    max_bucket_size: int | None = None,
+    where: Column | None = None,
+    *cols: Column,
+) -> DataFrame:
+    """The band self-join every LSH path shares: pairs of rows of `table`
+    (one row per id and band) equal on every `keys` column, with a.id < b.id
+    and the optional `where` over the a./b. aliases. Output (id_a, id_b,
+    *cols); callers dedup pairs that share several bands.
+
+    max_bucket_size drops over-common buckets (a key value shared by more
+    than N rows): such buckets are low-signal (stopword-like shingles) and
+    quadratic to expand — the standard production guard that keeps LSH
+    near-linear under adversarial corpora. None keeps every bucket.
+
+    Both join sides are the whole banded table, so the join is forced to
+    shuffled-hash: broadcast-building one full side measured 6.3s vs 1.6s on
+    the SimHash join at sf1 (guide §3.1), and at scale a side could never
+    broadcast. The bucket-count semi-join is left to the planner (AQE
+    broadcasts it when small; at 100 TB the count side can be huge)."""
+    if max_bucket_size is not None:
+        ok = (
+            table.groupBy(*keys)
+            .agg(F.count(F.lit(1)).alias("_n"))
+            .filter(F.col("_n") <= max_bucket_size)
+            .select(*keys)
+        )
+        table = table.join(ok, keys, "left_semi")
+    table = table.hint("shuffle_hash")
+    a, b = table.alias("a"), table.alias("b")
+    cond = reduce(operator.and_, [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys])
+    cond = cond & (F.col("a.id") < F.col("b.id"))
+    if where is not None:
+        cond = cond & where
+    return a.join(b, cond).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), *cols)
+
+
 # ------------------------------------------------------------------ minhash
+def _minhash(shingles: DataFrame, num_hashes: int) -> DataFrame:
+    """(id, sh) rows -> (id, sig array<long>): for seed s, the min over the
+    document's shingles of xxhash64(sh, s). Pure JVM aggregates, no UDF."""
+    mins = [F.min(F.xxhash64(F.col("sh"), F.lit(s))).alias(f"h{s}") for s in range(num_hashes)]
+    return shingles.groupBy("id").agg(*mins).select(
+        "id", F.array(*[F.col(f"h{s}") for s in range(num_hashes)]).alias("sig")
+    )
+
+
 def minhash_signatures(
     df: DataFrame,
     num_hashes: int = 32,
@@ -111,9 +167,7 @@ def minhash_signatures(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """MinHash signature per document: for seed s, min over shingles of
-    xxhash64(shingle, s). Pure JVM aggregates over one explode — no UDF.
-    Output: (id, sig array<long>).
+    """MinHash signature per document (see _minhash). Output: (id, sig).
 
     Tokens are materialized as a column before shingling (see
     text.shingle_array for why), and the input is repartitioned first:
@@ -127,42 +181,40 @@ def minhash_signatures(
         .select(F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("_toks"))
         .select("id", F.explode(shingle_array(F.col("_toks"), shingle_n)).alias("sh"))
     )
-    mins = [F.min(F.xxhash64(F.col("sh"), F.lit(s))).alias(f"h{s}") for s in range(num_hashes)]
-    agg = ex.groupBy("id").agg(*mins)
-    return agg.select("id", F.array(*[F.col(f"h{s}") for s in range(num_hashes)]).alias("sig"))
+    return _minhash(ex, num_hashes)
 
 
 def lsh_candidate_pairs(
     sig_df: DataFrame,
     bands: int = 8,
-    verify_threshold: float | None = 0.7,
     max_bucket_size: int | None = 256,
-    n_hashes: int | None = None,
-    include_estimate: bool = True,
+    *,
+    n_hashes: int,
 ) -> DataFrame:
-    """Band the signatures into buckets; pairs sharing any band-bucket are
-    candidates. Estimated Jaccard = fraction of matching signature positions.
-    Near-linear: the only shuffles are the band-bucket groupBy and the pair
-    dedup — no all-pairs comparison ever materializes.
+    """Band the (id, sig) signatures into buckets; pairs (id_a, id_b) sharing
+    any band-bucket are candidates, to be verified by the caller.
+    Near-linear: the only shuffles are the band-bucket join and the pair
+    dedup — no all-pairs comparison ever materializes. max_bucket_size is
+    the over-common-bucket guard of _band_pairs.
 
-    max_bucket_size drops over-common buckets (a band value shared by more
-    than N docs): such buckets are low-signal (stopword-like shingles) and
-    quadratic to expand — the standard production guard that keeps LSH
-    near-linear under adversarial corpora. Pass None to disable.
+    n_hashes is the signature length, split into `bands` bands of
+    n_hashes // bands positions. A signature of any other length fails the
+    query instead of being banded wrong.
 
-    n_hashes: signature length; pass it when known to skip a driver-side
-    first() that otherwise executes the whole signature pipeline once just to
-    measure the array. include_estimate=False (only valid when
-    verify_threshold is None) skips est_jaccard and drops the sig arrays
-    before the pair-dedup exchange — for callers that re-verify candidates
-    exactly and never read the estimate (guide §2.3: shuffle fewer bytes)."""
-    if not include_estimate and verify_threshold is not None:
-        raise ValueError("include_estimate=False requires verify_threshold=None")
-    n = n_hashes if n_hashes is not None else len(sig_df.select("sig").first()["sig"])
-    rows_per_band = n // bands
-    sig_cols = ["id", "sig"] if include_estimate else ["id"]
-    banded = sig_df.select(
-        *sig_cols,
+    Runs an eager Spark job (the banded table is localCheckpoint-ed) and
+    holds its executor blocks until the result is garbage-collected."""
+    if not 1 <= bands <= n_hashes:
+        raise ValueError(f"need 1 <= bands <= n_hashes; got bands={bands}, n_hashes={n_hashes}")
+    rows_per_band = n_hashes // bands
+    # its own projection, so the length check runs once per row, not per band
+    checked = sig_df.select(
+        "id",
+        F.when(F.size("sig") == n_hashes, F.col("sig"))
+        .otherwise(F.raise_error(F.lit(f"signature length != n_hashes={n_hashes}")))
+        .alias("sig"),
+    )
+    banded = checked.select(
+        "id",
         F.explode(
             F.array(*[
                 F.struct(
@@ -180,68 +232,14 @@ def lsh_candidate_pairs(
                 for b in range(bands)
             ])
         ).alias("bb"),
-    ).select(*sig_cols, "bb.band", "bb.bucket")
+    ).select("id", "bb.band", "bb.bucket")
     # The signature pipeline (explode shingles + N min-aggs) is expensive and
     # feeds the bucket-count side and both self-join sides. Materialize ONCE,
     # eagerly: a lazy persist() lets those branches race cache population
-    # inside one job and recompute the upstream pipeline per branch (same
-    # finding as simhash_near_pairs_words, measured 2x+ at sf1).
+    # inside one job and recompute the upstream pipeline per branch (measured
+    # 2x+ at sf1).
     banded = banded.localCheckpoint(eager=True)
-    if max_bucket_size is not None:
-        w_count = (
-            banded.groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") <= max_bucket_size)
-            .select("band", "bucket")
-        )
-        # plain semi-join (AQE broadcasts when small; at 100 TB the bucket-count
-        # side can be huge, so no forced broadcast)
-        banded = banded.join(w_count, ["band", "bucket"], "left_semi")
-    # self-join of the full banded table on both sides: force shuffled-hash
-    # (broadcast-building one whole side measured slower at sf1 and is
-    # impossible at scale — same rationale as simhash_near_pairs_words)
-    banded = banded.hint("shuffle_hash")
-    a = banded.alias("a")
-    b = banded.alias("b")
-    joined = a.join(
-        b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col("a.id") < F.col("b.id")),
-    )
-    if not include_estimate:
-        return (
-            joined.select(
-                F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
-            )
-            .dropDuplicates(["id_a", "id_b"])
-        )
-    pairs = (
-        joined.select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.sig").alias("sig_a"),
-            F.col("b.sig").alias("sig_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-        .withColumn(
-            "est_jaccard",
-            F.round(
-                F.size(
-                    F.filter(
-                        F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-                        lambda m: m,
-                    )
-                )
-                / F.lit(n),
-                6,
-            ),
-        )
-        .select("id_a", "id_b", "est_jaccard")
-    )
-    if verify_threshold is not None:
-        pairs = pairs.filter(F.col("est_jaccard") >= verify_threshold)
-    return pairs
+    return _band_pairs(banded, ["band", "bucket"], max_bucket_size).dropDuplicates(["id_a", "id_b"])
 
 
 def minhash_lsh_verified_pairs(
@@ -277,12 +275,10 @@ def minhash_lsh_verified_pairs(
         filter/shingle stages read the materialized arrays;
       * shingling itself is cheap (~0.1s at sf1), so the checkpoint replaces
         the shs persist() (branches re-shingle from the checkpoint instead of
-        racing a lazy cache);
-      * n_hashes is passed down so lsh_candidate_pairs skips its driver-side
-        first() (which executed the whole signature pipeline once), and
-        include_estimate=False drops the sig arrays from the pair-dedup
-        exchange — this caller re-verifies with exact Jaccard and never reads
-        the estimate."""
+        racing a lazy cache).
+
+    Runs eager Spark jobs (the tokenize barrier and the banded table) and
+    holds their executor blocks until the result is garbage-collected."""
     from aqueduct_core_spark.functions.text import shingle_array
 
     spread = df.sparkSession.sparkContext.defaultParallelism
@@ -293,21 +289,9 @@ def minhash_lsh_verified_pairs(
         .filter(F.size("_toks") >= shingle_n)
     )
     shs = toked.select("id", shingle_array(F.col("_toks"), shingle_n).alias("shs"))
-    ex = shs.select("id", F.explode("shs").alias("sh"))
-    mins = [
-        F.min(F.xxhash64(F.col("sh"), F.lit(s))).alias(f"h{s}")
-        for s in range(num_hashes)
-    ]
-    sigs = ex.groupBy("id").agg(*mins).select(
-        "id", F.array(*[F.col(f"h{s}") for s in range(num_hashes)]).alias("sig")
-    )
+    sigs = _minhash(shs.select("id", F.explode("shs").alias("sh")), num_hashes)
     cands = lsh_candidate_pairs(
-        sigs,
-        bands=bands,
-        verify_threshold=None,
-        max_bucket_size=max_bucket_size,
-        n_hashes=num_hashes,
-        include_estimate=False,
+        sigs, bands=bands, max_bucket_size=max_bucket_size, n_hashes=num_hashes
     )
     # Verification joins: the shingle-set side is heavy (O(corpus) rows of
     # ~KB arrays) while the candidate-pair side is light, so force a
@@ -334,36 +318,15 @@ def minhash_lsh_verified_pairs(
 
 
 # ------------------------------------------------------------------ simhash
-def simhash64(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """64-bit SimHash per document: per bit j, sum +-1 over token-frequency-
-    weighted token hashes; bit j set iff the sum is positive. All JVM-side
-    (explode + 64 conditional sums + bit reassembly). Output: (id, simhash)."""
-    spread = df.sparkSession.sparkContext.defaultParallelism
-    ex = df.repartition(spread).select(
-        F.col(id_col).alias("id"),
-        F.explode(tokens(F.col(text_col))).alias("tok"),
-    ).select("id", F.xxhash64("tok").alias("h"))
-    bit_sums = [
-        F.sum(F.when(F.bit_get("h", F.lit(j)) == 1, 1).otherwise(-1)).alias(f"b{j}")
-        for j in range(64)
-    ]
-    agg = ex.groupBy("id").agg(*bit_sums)
-    # shiftleft-based bit reassembly (exact on longs)
-    acc = F.lit(0).cast("long")
-    for j in range(64):
-        bit = F.when(F.col(f"b{j}") > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        acc = acc.bitwiseOR(F.shiftleft(bit, j))
-    return agg.select("id", acc.alias("simhash"))
-
-
 def simhash_words(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Engine-portable 64-bit SimHash as two 32-bit words (sim_hi, sim_lo).
 
-    Same shape as simhash64 but the per-token 64-bit hash comes from the first
-    16 hex digits of md5(token) (each digit contributing 4 bits) instead of
-    xxhash64 — md5, position(), >>, & and integer sums are bit-identical
-    between Spark and ANSI SQL engines, so the whole computation has an exact
-    DuckDB twin (__spark_entry__.oracle_sql: dedup_simhash_pairs). Two 32-bit
+    Per bit j, sum ±1 over the document's token occurrences; bit j is set iff
+    the sum is positive. The per-token 64-bit hash is the first 16 hex digits
+    of md5(token), each digit contributing 4 bits — md5, position(), >>, &
+    and integer sums are bit-identical between Spark and ANSI SQL engines, so
+    the whole computation has an exact DuckDB twin
+    (__spark_entry__.oracle_sql: dedup_simhash_pairs). Two 32-bit
     words instead of one 64-bit value keep every intermediate below 2^32 so
     no engine's signed-overflow rules are ever in play.
 
@@ -451,7 +414,15 @@ def simhash_near_pairs_words(
         persist()-ed lazily: the counts/thin/fat branches previously raced
         cache population inside one job and recomputed the upstream simhash
         pipeline per branch (measured: full query 58.5s vs 3.5s signatures +
-        24s pairing when materialized separately)."""
+        24s pairing when materialized separately).
+
+    Runs an eager Spark job (the chunks table) and holds its executor blocks
+    until the result is garbage-collected."""
+    if bands < 1 or 64 % bands:
+        raise ValueError(
+            f"bands={bands} must divide 64: bits outside every band break the "
+            "pigeonhole recall guarantee"
+        )
     if bands <= max_hamming and max_bucket_size is None:
         raise ValueError(
             f"bands={bands} <= max_hamming={max_hamming} loses the pigeonhole "
@@ -463,7 +434,6 @@ def simhash_near_pairs_words(
             f"(two guaranteed matching bands); got bands={bands}, "
             f"max_hamming={max_hamming}"
         )
-    assert 64 % bands == 0
     width = 64 // bands
     mask = (1 << width) - 1
 
@@ -488,14 +458,6 @@ def simhash_near_pairs_words(
     # a lazy persist() lets concurrent branches race the cache and recompute
     # the whole upstream simhash pipeline per branch (measured 2x+ at sf1).
     chunks = chunks.localCheckpoint(eager=True)
-    if max_bucket_size is not None:
-        ok = (
-            chunks.groupBy("band", "chunk")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") <= max_bucket_size)
-            .select("band", "chunk")
-        )
-        chunks = chunks.join(ok, ["band", "chunk"], "left_semi")
 
     # hamming distance as a join-side predicate: evaluated inside the join so
     # non-qualifying candidates never reach the dedup exchange
@@ -503,32 +465,22 @@ def simhash_near_pairs_words(
         F.bit_count(F.col("a.sim_hi").bitwiseXOR(F.col("b.sim_hi")))
         + F.bit_count(F.col("a.sim_lo").bitwiseXOR(F.col("b.sim_lo")))
     ).cast("int")
+    near = hamming_expr <= max_hamming
+    hamming = hamming_expr.alias("hamming")
+    keys = ["band", "chunk"]
 
-    def pair_cols():
-        return [
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            hamming_expr.alias("hamming"),
-        ]
-
-    if fat_bucket_cap is not None:
-        counts = chunks.groupBy("band", "chunk").agg(F.count(F.lit(1)).alias("_n"))
-        fat_keys = counts.filter(F.col("_n") > fat_bucket_cap).select("band", "chunk")
-        thin = chunks.join(fat_keys, ["band", "chunk"], "left_anti")
-        fat = chunks.join(fat_keys, ["band", "chunk"], "left_semi")
-        # Both self-join sides are the full O(bands*n) chunk table, so force a
-        # shuffled-hash join: letting the planner broadcast-build a multi-MB
-        # hash relation of the whole side measured 6.3s vs 1.6s at sf1
-        # (guide §3.1), and at scale the sides could never broadcast.
-        thin = thin.hint("shuffle_hash")
-        a, b = thin.alias("a"), thin.alias("b")
-        thin_pairs = a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.id") < F.col("b.id"))
-            & (hamming_expr <= max_hamming),
-        ).select(*pair_cols())
+    if fat_bucket_cap is None:
+        cand = _band_pairs(chunks, keys, max_bucket_size, near, hamming)
+    else:
+        counts = chunks.groupBy(*keys).agg(F.count(F.lit(1)).alias("_n"))
+        is_fat = F.col("_n") > fat_bucket_cap
+        if max_bucket_size is not None:
+            # over-common buckets stay thin, where the bucket cap drops them
+            is_fat = is_fat & (F.col("_n") <= max_bucket_size)
+        fat_keys = counts.filter(is_fat).select(*keys)
+        thin = chunks.join(fat_keys, keys, "left_anti")
+        fat = chunks.join(fat_keys, keys, "left_semi")
+        thin_pairs = _band_pairs(thin, keys, max_bucket_size, near, hamming)
         # fat path: subdivide by a second band's chunk (recomputed from the
         # words — the bands partition the 64 bits, so "the other bands" ARE
         # the sub-bands of the remaining bits). band2 > band is lossless:
@@ -549,97 +501,10 @@ def simhash_near_pairs_words(
             ).alias("sb"),
         ).filter(F.col("sb.band2") > F.col("band")).select(
             "id", "sim_hi", "sim_lo", "band", "chunk", "sb.band2", "sb.chunk2"
-        ).hint("shuffle_hash")
-        fa, fb = fat2.alias("a"), fat2.alias("b")
-        fat_pairs = fa.join(
-            fb,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.band2") == F.col("b.band2"))
-            & (F.col("a.chunk2") == F.col("b.chunk2"))
-            & (F.col("a.id") < F.col("b.id"))
-            & (hamming_expr <= max_hamming),
-        ).select(*pair_cols())
-        cand = thin_pairs.unionByName(fat_pairs).dropDuplicates(["id_a", "id_b"])
-    else:
-        chunks = chunks.hint("shuffle_hash")  # same rationale as the fat path
-        a, b = chunks.alias("a"), chunks.alias("b")
-        cand = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.chunk") == F.col("b.chunk"))
-                & (F.col("a.id") < F.col("b.id"))
-                & (hamming_expr <= max_hamming),
-            )
-            .select(*pair_cols())
-            .dropDuplicates(["id_a", "id_b"])
         )
-    return cand.select("id_a", "id_b", "hamming")
-
-
-def simhash_near_pairs(
-    sim_df: DataFrame,
-    max_hamming: int = 3,
-    bands: int = 4,
-    max_bucket_size: int | None = 1024,
-) -> DataFrame:
-    """Near-duplicate pairs by SimHash: band the 64 bits into `bands` chunks;
-    any pair within hamming distance < bands must share a chunk (pigeonhole),
-    so candidates come from chunk-equality joins only. Over-common chunks are
-    dropped (same near-linearity guard as MinHash LSH)."""
-    width = 64 // bands
-    chunks = sim_df.select(
-        "id",
-        "simhash",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.shiftrightunsigned("simhash", b * width)
-                    .bitwiseAND(F.lit((1 << width) - 1))
-                    .alias("chunk"),
-                )
-                for b in range(bands)
-            ])
-        ).alias("bc"),
-    ).select("id", "simhash", "bc.band", "bc.chunk")
-    # same reuse + separate-handle pattern as lsh_candidate_pairs
-    cached = chunks.persist()
-    chunks = cached
-    if max_bucket_size is not None:
-        ok = (
-            cached.groupBy("band", "chunk")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") <= max_bucket_size)
-            .select("band", "chunk")
-        )
-        chunks = cached.join(ok, ["band", "chunk"], "left_semi")
-    a, b = chunks.alias("a"), chunks.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.simhash").alias("s_a"),
-            F.col("b.simhash").alias("s_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    out = (
-        cand.withColumn("hamming", F.bit_count(F.col("s_a").bitwiseXOR(F.col("s_b"))))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
-    # same cache-release pattern as lsh_candidate_pairs
-    out = out.localCheckpoint(eager=True)
-    cached.unpersist()
-    return out
+        fat_pairs = _band_pairs(fat2, keys + ["band2", "chunk2"], None, near, hamming)
+        cand = thin_pairs.unionByName(fat_pairs)
+    return cand.dropDuplicates(["id_a", "id_b"]).select("id_a", "id_b", "hamming")
 
 
 # ------------------------------------------------------- connected components

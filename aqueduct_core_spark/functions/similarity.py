@@ -19,6 +19,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from aqueduct_core_spark.functions.dedup import _band_pairs
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -167,20 +169,7 @@ def _candidate_pairs(
     # join sides, and without a barrier each side re-runs the Python bucketer
     # over every vector (guide §4: cross the JVM/Python boundary once)
     buckets = buckets.localCheckpoint(eager=True)
-    # self-join of the whole bucket table: shuffled-hash, not a broadcast
-    # build of one full side (see dedup.lsh_candidate_pairs)
-    buckets = buckets.hint("shuffle_hash")
-    a, b = buckets.alias("a"), buckets.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.tbl") == F.col("b.tbl"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    return _band_pairs(buckets, ["tbl", "bucket"]).dropDuplicates(["id_a", "id_b"])
 
 
 def ann_neardup_pairs(
@@ -204,7 +193,11 @@ def ann_neardup_pairs(
     corpus count via auto_lsh_size — callers no longer need the PLANS.md
     sizing rule to avoid quadratic candidate growth at scale. Pass explicit
     nbits/n_tables to pin the bucketing (the contract query does, so its
-    oracle twin can embed the same constants)."""
+    oracle twin can embed the same constants).
+
+    Runs eager Spark jobs (the corpus count when nbits is None, and the
+    bucket table) and holds the bucket table's executor blocks until the
+    result is garbage-collected."""
     if nbits is None:
         nbits, auto_tables = auto_lsh_size(
             df.select(id_col).count(), threshold=threshold

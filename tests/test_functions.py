@@ -12,8 +12,6 @@ from aqueduct_core_spark.functions.dedup import (
     exact_duplicate_groups,
     lsh_candidate_pairs,
     minhash_signatures,
-    simhash64,
-    simhash_near_pairs,
     token_jaccard_pairs,
 )
 from aqueduct_core_spark.functions.multimodal import (
@@ -80,22 +78,48 @@ def test_token_jaccard_pairs(spark, docs):
 def test_minhash_lsh_finds_near_dups(spark, docs):
     sigs = minhash_signatures(docs.filter("text != ''"), num_hashes=32, shingle_n=3)
     assert sigs.count() == 6
-    pairs = lsh_candidate_pairs(sigs, bands=8, verify_threshold=0.5)
+    pairs = lsh_candidate_pairs(sigs, bands=8, n_hashes=32)
     found = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     assert (1, 2) in found  # exact dup always collides
     assert (1, 3) in found  # near dup should collide in some band
     assert (1, 6) not in found
 
 
-def test_simhash(spark, docs):
-    sim = simhash64(docs.filter("text != ''"))
-    vals = {r["id"]: r["simhash"] for r in sim.collect()}
-    assert vals[1] == vals[2]  # identical text, identical simhash
-    pairs = simhash_near_pairs(sim, max_hamming=8, bands=4)
-    found = {(r["id_a"], r["id_b"]): r["hamming"] for r in pairs.collect()}
-    assert found[(1, 2)] == 0
-    assert (1, 3) in found  # near dup within hamming 8
-    assert (1, 6) not in found
+def test_lsh_candidate_pairs_rejects_bad_geometry(spark, docs):
+    """A signature shorter than n_hashes fails the query instead of being
+    banded wrong; bands outside 1..n_hashes is rejected before any job."""
+    sigs16 = minhash_signatures(docs.filter("text != ''"), num_hashes=16, shingle_n=3)
+    with pytest.raises(Exception, match="n_hashes=32"):
+        lsh_candidate_pairs(sigs16, bands=8, n_hashes=32).collect()
+    for bands in (0, 33):
+        with pytest.raises(ValueError):
+            lsh_candidate_pairs(sigs16, bands=bands, n_hashes=32)
+
+
+def test_pair_plans_run_no_hidden_action(spark, docs, vectors, monkeypatch):
+    """Building a pair plan runs only its declared localCheckpoint barriers:
+    no driver-side first/collect/take/count."""
+    from aqueduct_core_spark.functions.dedup import (
+        minhash_lsh_verified_pairs,
+        simhash_near_pairs_words,
+        simhash_words,
+    )
+
+    live = docs.filter("text != ''")
+    emb, _ = vectors
+
+    def hidden(*args, **kwargs):
+        raise AssertionError("hidden driver action while building a plan")
+
+    with monkeypatch.context() as m:
+        for name in ("first", "collect", "take", "count"):
+            m.setattr(type(live), name, hidden)  # the concrete (classic) class
+        with pytest.raises(AssertionError):
+            live.count()
+        lsh_candidate_pairs(minhash_signatures(live), bands=8, n_hashes=32)
+        minhash_lsh_verified_pairs(docs, bands=16)
+        simhash_near_pairs_words(simhash_words(live), fat_bucket_cap=2)
+        ann_neardup_pairs(emb, dim=16, threshold=0.99, nbits=8, n_tables=2)
 
 
 @pytest.fixture(scope="module")
@@ -323,10 +347,9 @@ def test_real_decoder_dispatch_injection(spark):
 
 
 def test_lsh_and_simhash_release_cached_blocks(spark, docs):
-    """Regression for the guarded-path cache leak: when max_bucket_size is set,
-    the persisted banded/chunk table is semi-joined and the result reassigned —
-    unpersist() must still target the ORIGINAL cached plan, not the join.
-    After each call no new RDD may remain cached in the session."""
+    """Regression for the guarded-path cache leak: with max_bucket_size set
+    (the banded/chunk table is semi-joined), each call may leave only the one
+    cached RDD that backs its result."""
     from aqueduct_core_spark.functions.dedup import (
         simhash_near_pairs_words,
         simhash_words,
@@ -342,19 +365,14 @@ def test_lsh_and_simhash_release_cached_blocks(spark, docs):
     # backing the returned DataFrame (released when the result is GC'd). The
     # leak added a SECOND — the orphaned banded/chunk cache — per call.
     sigs = minhash_signatures(live, num_hashes=32, shingle_n=3)
-    p1 = lsh_candidate_pairs(sigs, bands=8, verify_threshold=0.5, max_bucket_size=256)
+    p1 = lsh_candidate_pairs(sigs, bands=8, max_bucket_size=256, n_hashes=32)
     p1.collect()
     assert n_cached() <= base + 1
 
-    sim = simhash64(live)
-    p2 = simhash_near_pairs(sim, max_hamming=8, bands=4, max_bucket_size=1024)
+    simw = simhash_words(live)
+    p2 = simhash_near_pairs_words(simw, max_hamming=6, bands=8, max_bucket_size=64)
     p2.collect()
     assert n_cached() <= base + 2
-
-    simw = simhash_words(live)
-    p3 = simhash_near_pairs_words(simw, max_hamming=6, bands=8, max_bucket_size=64)
-    p3.collect()
-    assert n_cached() <= base + 3
 
 
 def test_real_codecs_roundtrip(spark):
@@ -523,8 +541,12 @@ def test_simhash_fat_bucket_recursion_exact(spark, docs):
         }
         assert got == expect, f"cap={cap}"
 
-    with pytest.raises(ValueError):
-        simhash_near_pairs_words(sim, max_hamming=7, bands=8, fat_bucket_cap=8)
+    for bad in (
+        dict(max_hamming=7, bands=8, fat_bucket_cap=8),
+        dict(max_hamming=3, bands=5),
+    ):
+        with pytest.raises(ValueError):
+            simhash_near_pairs_words(sim, **bad)
 
 
 def test_jpeg_codec_roundtrip_exact():
