@@ -613,12 +613,11 @@ class LakeTable:
             except CommitConflict:
                 continue
 
-    def swap_files(
-        self, removed: Iterable[str], added: list[dict], properties: dict | None = None
-    ) -> Snapshot | None:
-        """Rebase commit of a rewrite: replace exactly the `removed` paths of
-        the head with the `added` entries (merging `properties` in), keeping
-        every file other writers committed since the rewrite read its input.
+    def swap_files(self, removed: Iterable[str], added: list[dict]) -> Snapshot | None:
+        """Rebase commit of a rewrite (a fold or a spec migration): replace
+        exactly the `removed` paths of the head with the `added` entries,
+        keeping every file and property other writers committed since the
+        rewrite read its input.
         Returns the new head; the head itself when `added` is already live
         (our commit landed but its response was lost). When part of the input
         is already gone (another rewrite took it), both outputs would hold
@@ -636,9 +635,7 @@ class LakeTable:
                 return None
             files = [f for f in head.files if f["path"] not in removed] + added
             try:
-                return self.publish_next(
-                    head, files=files, properties={**head.properties, **(properties or {})}
-                )
+                return self.publish_next(head, files=files)
             except CommitConflict:
                 continue
 

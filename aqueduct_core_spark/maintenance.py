@@ -1,4 +1,5 @@
-"""Table maintenance: tombstone compaction + snapshot expiry + file rewrite.
+"""Table maintenance: the delta/tombstone fold, snapshot expiry, and
+bucket-spec migration.
 
 The Spark restatement of the reference's scheduled compaction path
 (SURVEY.md §3.3): CompactionTask cron -> advisory-locked compactAndMaintain ->
@@ -6,9 +7,11 @@ mark TTL for superseded deletes -> delete expired -> VACUUM ANALYSE
 (pipe-http-server-cloud/.../CompactionTask.java:40-47,
  pipe-storage-postgresql/.../PostgresqlStorage.java:365-497).
 
-Here: a maintenance job that rewrites the transcript table dropping tombstone
-rows older than the retention threshold (they have done their late-data duty),
-then expires old snapshots. Every rewrite here commits through
+Here: one fold (_fold_once) resolves the whole table (compact_table) or a
+bucket range (compact_bucket_range, which maybe_compact runs as parallel range
+jobs) back into base files, dropping tombstone rows older than the retention
+threshold (they have done their late-data duty; None keeps every tombstone),
+and compact_table then expires old snapshots. Every rewrite here commits through
 LakeTable.swap_files instead of the reference's `SELECT ... FOR UPDATE NOWAIT`
 advisory lock: it reads its input pinned to one snapshot, and its commit
 rebases onto the head, dropping exactly the files it rewrote and keeping what
@@ -18,7 +21,7 @@ already removed starts over from the head.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import functions as F
 
@@ -47,49 +50,25 @@ def compact_table(
     tombstone_retention_ts,
     keep_snapshots: int = 2,
 ) -> CompactionStats:
-    """Drop tombstone rows (turn, conversation and cascade sentinels) whose
-    event time is at or below the retention threshold, rewrite all buckets,
-    expire old snapshots.
+    """Fold the whole table: every live file, old-spec ones included, is
+    resolved once and written back as base files (so reads go
+    resolution-free again and a bucket-spec migration completes), dropping
+    tombstone rows (turn, conversation and cascade sentinels) whose event
+    time is at or below the retention threshold; then expire old snapshots.
 
     Mirrors the reference's deletion retention: tombstones younger than the
     threshold stay so that late/straggler readers still observe the delete
-    (PostgresqlStorage.java:394-408; prod threshold 30 d).
+    (PostgresqlStorage.java:394-408; prod threshold 30 d). None keeps every
+    tombstone.
 
-    On a merge-on-read table this is ALSO the delta-fold: resolution runs once
-    and the result is written back as base files, so reads go resolution-free
-    again (the reference's compactUpTo over its append-only edge store).
-
-    Concurrency follows compact_bucket_range: the rewrite reads one pinned
-    snapshot and its commit swaps exactly those files, so files committed
-    meanwhile stay live (as deltas until the next pass); if another rewrite
-    removed part of the input first, the compaction starts over."""
-    from aqueduct_core_spark.lake.merge import read_resolved
-
-    while True:
-        snap = table.current()
-        # bucketed_output folds resolution + the write's bucket partitioning
-        # into one exchange (resolve grouped by (bucket, key) on the already
-        # bucket-partitioned scan) — the rewrite costs a single shuffle.
-        df = read_resolved(
-            table, version=snap.version, with_bucket_col=True, bucketed_output=True
-        )
-        kept = df.filter(
-            ~(F.col("_deleted") & (F.col("ts") <= F.lit(tombstone_retention_ts)))
-        )
-        cc, tfr = cluster_opts(snap)
-        new_files = table.write_files(
-            kept, snap, kind="base", already_bucketed=True,
-            cluster_col=cc, max_records_per_file=tfr,
-        )
-        head = table.swap_files(
-            (f["path"] for f in snap.files),
-            new_files,
-            {"last_compaction": str(tombstone_retention_ts)},
-        )
-        if head is not None:
-            break
+    Concurrency follows compact_bucket_range: files committed meanwhile stay
+    live (as deltas until the next pass); if another rewrite removed part of
+    the input first, the fold starts over."""
+    out = None
+    while out is None:
+        out = _fold_once(table, tombstone_retention_ts)
     removed = table.expire_snapshots(keep_last=keep_snapshots)
-    return CompactionStats(version=head.version, removed_snapshots=removed)
+    return replace(out, removed_snapshots=removed)
 
 
 def fold_closures(snap: Snapshot, buckets) -> list[list[int]]:
@@ -150,35 +129,44 @@ def compact_bucket_range(
     compaction pass). A lost CAS race rebases again without recomputing
     (LakeTable.swap_files). If a concurrent fold or rewrite already removed
     one of the folded files, the two outputs would overlap: the attempt is
-    discarded and the fold starts over from the current snapshot."""
+    discarded and the fold starts over from the current snapshot.
+
+    Tombstones follow compact_table's retention rule (None keeps them all),
+    except while two bucket specs coexist: then none is dropped."""
     while True:
         out = _fold_once(table, tombstone_retention_ts, buckets)
         if out is not None:
             return out
 
 
-def _fold_once(table: LakeTable, tombstone_retention_ts, buckets) -> CompactionStats | None:
-    """One compact_bucket_range attempt; None when a concurrent fold took
-    part of its input first."""
-    from aqueduct_core_spark.lake.merge import read_resolved
+def _fold_once(
+    table: LakeTable, tombstone_retention_ts, buckets=None
+) -> CompactionStats | None:
+    """One fold attempt; None when a concurrent fold took part of its input
+    first. buckets=None folds every live file (compact_table); a bucket list
+    folds the current-spec files holding any of those buckets
+    (compact_bucket_range)."""
+    from aqueduct_core_spark.lake.merge import read_resolved, resolve_lww
 
-    target = set(buckets)
     snap0 = table.current()
-    mixed = is_mixed_spec(snap0)
-    cur_spec = current_spec_id(snap0)
-    # Only CURRENT-spec files fold: old-spec entries' bucket ids live in a
-    # different layout space, and they hold rows of buckets OUTSIDE the target
-    # range — removing one here would lose those rows. They are retired by
-    # migrate_spec_files / compact_table instead.
-    entries = [
-        f
-        for f in snap0.files
-        if file_spec(f) == cur_spec and not target.isdisjoint(file_buckets(f))
-    ]
-    folded = {f["path"] for f in entries}
-    if not folded:
+    if buckets is None:
+        entries, shared = snap0.files, []
+    else:
+        target = set(buckets)
+        cur_spec = current_spec_id(snap0)
+        # Only CURRENT-spec files fold: old-spec entries' bucket ids live in a
+        # different layout space, and they hold rows of buckets OUTSIDE the
+        # target range — removing one here would lose those rows. They are
+        # retired by migrate_spec_files / compact_table instead.
+        entries = [
+            f
+            for f in snap0.files
+            if file_spec(f) == cur_spec and not target.isdisjoint(file_buckets(f))
+        ]
+        shared = [f for f in entries if not target.issuperset(file_buckets(f))]
+    if not entries:
         return CompactionStats(version=snap0.version, removed_snapshots=0, skipped=True)
-    if mixed:
+    if buckets is not None and is_mixed_spec(snap0):
         # Fold exactly the selected files (read_resolved would pull old-spec
         # rows into the rewrite, duplicating them against their still-live
         # source files). LWW-superseded drops among these rows stay safe: the
@@ -187,14 +175,15 @@ def _fold_once(table: LakeTable, tombstone_retention_ts, buckets) -> CompactionS
         df = _with_bucket(table.read_entries(entries, snap0), snap0)
         df = df.filter(F.col(BUCKET_COL).isin(sorted(target)))
         df = df.repartition(table.write_parallelism(snap0), F.col(BUCKET_COL))
-        from aqueduct_core_spark.lake.merge import resolve_lww
-
         df = resolve_lww(df, group_prefix=(BUCKET_COL,))
         # NO tombstone drop while two specs coexist: a retention-expired
         # tombstone here may be the only thing suppressing an older live row
         # in an old-spec file — dropping it would resurrect that row.
-        kept = df
+        tombstone_retention_ts = None
     else:
+        # bucketed_output folds resolution + the write's bucket partitioning
+        # into one exchange (resolve grouped by (bucket, key) on the already
+        # bucket-partitioned scan) — the rewrite costs a single shuffle.
         df = read_resolved(
             table,
             version=snap0.version,
@@ -202,15 +191,13 @@ def _fold_once(table: LakeTable, tombstone_retention_ts, buckets) -> CompactionS
             with_bucket_col=True,
             bucketed_output=True,
         )
-        kept = df.filter(
-            ~(F.col("_deleted") & (F.col("ts") <= F.lit(tombstone_retention_ts)))
-        )
+    if tombstone_retention_ts is not None:  # None keeps every tombstone
+        df = df.filter(~(F.col("_deleted") & (F.col("ts") <= F.lit(tombstone_retention_ts))))
     cc, tfr = cluster_opts(snap0)
     new_files = table.write_files(
-        kept, snap0, kind="base", already_bucketed=True,
+        df, snap0, kind="base", already_bucketed=True,
         cluster_col=cc, max_records_per_file=tfr,
     )
-    shared = [f for f in entries if not target.issuperset(file_buckets(f))]
     if shared:
         carried = _with_bucket(table.read_entries(shared, snap0), snap0)
         for e in table.write_files(
@@ -218,11 +205,7 @@ def _fold_once(table: LakeTable, tombstone_retention_ts, buckets) -> CompactionS
         ):
             e["migrated"] = True
             new_files.append(e)
-    head = table.swap_files(
-        folded,
-        new_files,
-        {f"last_compaction_b{min(target)}_{max(target)}": str(tombstone_retention_ts)},
-    )
+    head = table.swap_files((f["path"] for f in entries), new_files)
     return None if head is None else CompactionStats(version=head.version, removed_snapshots=0)
 
 
@@ -336,8 +319,6 @@ def maybe_compact(
     hot = buckets_over_threshold(snap, policy)
     if not hot:
         return []
-    if tombstone_retention_ts is None:
-        tombstone_retention_ts = "1970-01-01 00:00:00"  # keeps every tombstone
     ranges = balance_bucket_ranges(
         _rows_by_bucket(snap), fold_closures(snap, hot), policy.n_jobs
     )
@@ -417,70 +398,3 @@ def migrate_spec_files(
         if head is not None:
             remaining = sum(1 for f in head.files if file_spec(f) != current_spec_id(head))
             return MigrationStats(len(sel), remaining, head.version, remaining == 0)
-
-
-def compact_table_parallel(
-    table: LakeTable,
-    tombstone_retention_ts,
-    n_jobs: int = 4,
-    keep_snapshots: int | None = None,
-) -> list[CompactionStats]:
-    """Whole-table compaction as up to n_jobs bucket-range jobs submitted
-    concurrently (Spark schedules jobs from multiple threads; on a cluster
-    each range is an independent spark-submit). Ranges are unions of whole
-    fold_closures groups, so no two jobs fold the same delta file, and are
-    balanced by the manifest's per-bucket row counts, not bucket count. Snapshot expiry, if
-    requested, runs once at the end — it is a driver-side metadata sweep."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    snap = table.current()
-    ranges = balance_bucket_ranges(
-        _rows_by_bucket(snap), fold_closures(snap, range(snap.n_buckets)), n_jobs
-    )
-    with ThreadPoolExecutor(max_workers=len(ranges)) as ex:
-        stats = list(
-            ex.map(
-                lambda r: compact_bucket_range(table, tombstone_retention_ts, r),
-                ranges,
-            )
-        )
-    if keep_snapshots is not None:
-        table.expire_snapshots(keep_last=keep_snapshots)
-    return stats
-
-
-def rewrite_small_files(table: LakeTable, target_files_per_bucket: int = 1) -> int:
-    """Bin-pack small files per bucket (Iceberg rewrite_data_files analog;
-    reference analog: SQLite VACUUM + WAL checkpoint, SQLiteStorage.java:266-273).
-    Returns the new snapshot version.
-
-    Concurrency follows compact_bucket_range: the rewrite reads one pinned
-    snapshot and its commit swaps exactly those files, so files committed
-    meanwhile stay live (and may leave a bucket over the target until the
-    next call); if another rewrite removed part of the input first, the
-    rewrite starts over."""
-    while True:
-        snap = table.current()
-        by_bucket: dict[int, int] = {}
-        for f in snap.files:
-            for b in file_buckets(f):
-                by_bucket[b] = by_bucket.get(b, 0) + 1
-        if all(n <= target_files_per_bucket for n in by_bucket.values()):
-            return snap.version
-        from aqueduct_core_spark.lake.merge import read_resolved
-
-        # resolve while rewriting (a MOR table's delta files fold into base
-        # here) — bucketed_output keeps the whole rewrite on one exchange
-        df = read_resolved(
-            table, version=snap.version, with_bucket_col=True, bucketed_output=True
-        )
-        # cluster for stats-tightness, but NEVER split: this op's contract is
-        # the bin-pack target (target_file_rows would fight the <= check and
-        # re-trigger the loop forever)
-        new_files = table.write_files(
-            df, snap, kind="base", already_bucketed=True,
-            cluster_col=cluster_opts(snap)[0],
-        )
-        head = table.swap_files((f["path"] for f in snap.files), new_files)
-        if head is not None:
-            return head.version

@@ -122,17 +122,9 @@ class IngestEngine:
         self._lineage_pool = ThreadPoolExecutor(
             max_workers=1, thread_name_prefix="lineage"
         )
-        # Auto-compaction runs OFF the foreachBatch thread (the reference runs
-        # it on its own scheduler, CompactionTask.java:40-47): a triggered
-        # multi-bucket fold must not stall the ingest trigger cadence. One
-        # worker + at most one outstanding future — a second fold is never
-        # queued behind a running one; the next batch just re-checks debt.
-        self._compaction_pool = (
-            ThreadPoolExecutor(max_workers=1, thread_name_prefix="compaction")
-            if compaction_policy is not None
-            or "spec_migration.files_per_commit" in self.table_properties
-            else None
-        )
+        # background maintenance worker, created on first use
+        # (_schedule_maintenance)
+        self._compaction_pool = None
         self._compaction_future = None
 
     def _harvest_compaction(self, wait: bool = False):
@@ -452,48 +444,52 @@ class IngestEngine:
             self.metrics.batches_applied += 1
         self.metrics.last_batch_id = batch_id
 
-        run_maintenance = self.compaction_policy is not None or (
-            "spec_migration.files_per_commit" in self.table_properties
+        if not result.skipped:
+            self._schedule_maintenance(table)
+
+    def _schedule_maintenance(self, table: LakeTable) -> None:
+        """After a committed batch, hand at most one maintenance job to the
+        background worker, decided by the compaction policy and the head
+        snapshot: a self-tuning delta fold (maybe_compact) when some bucket's
+        manifest-recorded debt is over the policy, else, while the table is
+        mid-spec-migration and its manifest carries the property
+        spec_migration.files_per_commit, one bounded migrate_spec_files step
+        (see LakeTable.evolve_bucketing).
+
+        Maintenance runs OFF the foreachBatch thread (the reference runs it on
+        its own scheduler, CompactionTask.java:40-47) so a triggered
+        multi-bucket fold never stalls the trigger cadence; the check itself
+        is driver-side manifest stats only. One worker, created on first use,
+        and at most one outstanding job: while it runs, batches keep landing
+        and only re-check; the harvest re-raises a failed job on the next
+        batch."""
+        from aqueduct_core_spark.lake.table import is_mixed_spec
+        from aqueduct_core_spark.maintenance import (
+            buckets_over_threshold,
+            maybe_compact,
+            migrate_spec_files,
         )
-        if run_maintenance and not result.skipped:
-            # self-tuning delta-fold: manifest stats decide, per bucket —
-            # the under-threshold path stays a pure driver-side manifest
-            # check on THIS thread; a triggered fold is submitted to the
-            # background worker so it never stalls the trigger cadence.
-            # At most one outstanding: while a fold runs, batches keep
-            # landing and only re-check debt; the harvest below also
-            # re-raises a failed fold loudly on the next batch.
-            from aqueduct_core_spark.maintenance import (
-                buckets_over_threshold,
-                maybe_compact,
+
+        self._harvest_compaction()
+        if self._compaction_future is not None:
+            return
+        cur = table.current()
+        per = cur.properties.get("spec_migration.files_per_commit")
+        policy = self.compaction_policy
+        if policy is not None and buckets_over_threshold(cur, policy):
+            job = lambda: maybe_compact(table, policy)
+        elif per and is_mixed_spec(cur):
+            # list-wrapped: _harvest_compaction counts len(result)
+            job = lambda: [migrate_spec_files(table, int(per))]
+        else:
+            return
+        if self._compaction_pool is None:
+            from concurrent.futures import ThreadPoolExecutor
+
+            self._compaction_pool = ThreadPoolExecutor(
+                max_workers=1, thread_name_prefix="compaction"
             )
-
-            self._harvest_compaction()
-            cur = table.current()
-            if (
-                self._compaction_future is None
-                and self.compaction_policy is not None
-                and buckets_over_threshold(cur, self.compaction_policy)
-            ):
-                self._compaction_future = self._compaction_pool.submit(
-                    maybe_compact, table, self.compaction_policy
-                )
-            elif self._compaction_future is None:
-                # bucket-spec migration rides the same single-outstanding
-                # worker when delta debt is quiet: opt-in via the table
-                # property spec_migration.files_per_commit, a bounded
-                # background rewrite per ingest commit until the table
-                # leaves the mixed-spec state (see table.evolve_bucketing)
-                per = cur.properties.get("spec_migration.files_per_commit")
-                if per:
-                    from aqueduct_core_spark.lake.table import is_mixed_spec
-                    from aqueduct_core_spark.maintenance import migrate_spec_files
-
-                    if is_mixed_spec(cur):
-                        # list-wrapped: _harvest_compaction counts len(result)
-                        self._compaction_future = self._compaction_pool.submit(
-                            lambda t=table, n=int(per): [migrate_spec_files(t, n)]
-                        )
+        self._compaction_future = self._compaction_pool.submit(job)
 
     # ------------------------------------------------------------------ run
     def run(

@@ -235,12 +235,12 @@ def test_metadata_commit_reapplies_after_losing_race(
 
 
 def test_parallel_range_compaction_equals_full(spark, tmp_table_dir):
-    """compact_table_parallel (disjoint ranges, concurrent commits) leaves the
-    same live view as whole-table compact_table, folds MOR deltas into base
-    files, and drops aged tombstones."""
+    """maybe_compact over every delta bucket (disjoint ranges, concurrent
+    commits) leaves the same live view as whole-table compact_table, folds MOR
+    deltas into base files, and drops aged tombstones."""
     from datetime import datetime
 
-    from aqueduct_core_spark.maintenance import compact_table_parallel
+    from aqueduct_core_spark.maintenance import CompactionPolicy, maybe_compact
     from aqueduct_core_spark.oracle import replay
 
     table = LakeTable.create(
@@ -253,7 +253,10 @@ def test_parallel_range_compaction_equals_full(spark, tmp_table_dir):
         merge_change_batch(table, events_df(spark, events[lo : lo + 23]), batch_id=b)
     assert any(f.get("kind") == "delta" for f in table.current().files)
 
-    stats = compact_table_parallel(table, datetime(2030, 1, 1), n_jobs=4, keep_snapshots=1)
+    stats = maybe_compact(
+        table, CompactionPolicy(max_delta_files_per_bucket=0, n_jobs=4), datetime(2030, 1, 1)
+    )
+    assert len(stats) > 1
     assert all(not s.skipped for s in stats)
     snap = table.current()
     assert all(f.get("kind", "base") == "base" for f in snap.files)  # deltas folded

@@ -18,7 +18,6 @@ from aqueduct_core_spark.maintenance import (
     balance_bucket_ranges,
     buckets_over_threshold,
     compact_bucket_range,
-    compact_table_parallel,
     delta_pressure,
     fold_closures,
     maybe_compact,
@@ -144,7 +143,7 @@ def test_concurrent_folds_over_shared_delta_files(spark, tmp_path, how):
     )
     hot = buckets_over_threshold(snap, policy)
     if how == "parallel":
-        stats = compact_table_parallel(table, KEEP_TOMBSTONES, n_jobs=4)
+        stats = maybe_compact(table, CompactionPolicy(max_delta_files_per_bucket=0, n_jobs=4))
     else:
         assert 1 < len(hot) < len(delta_pressure(snap))
         stats = maybe_compact(table, policy)
@@ -157,6 +156,7 @@ def test_concurrent_folds_over_shared_delta_files(spark, tmp_path, how):
         assert not set(hot) & set(delta_pressure(after))
         assert all(b in _base_files_per_bucket(after) for b in hot)
     assert all(n == 1 for n in _base_files_per_bucket(after).values())
+    assert after.properties == snap.properties  # a fold swaps files only
     assert_delta_bucket_sets(table)
     assert _resolved_rows(table) == before  # no row lost or duplicated
     assert _view(table) == _oracle(events)

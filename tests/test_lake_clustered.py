@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from aqueduct_core_spark.lake.merge import merge_change_batch, read_resolved
 from aqueduct_core_spark.lake.table import LakeTable
-from aqueduct_core_spark.maintenance import compact_table, rewrite_small_files
+from aqueduct_core_spark.maintenance import compact_table
 from aqueduct_core_spark.schema import TRANSCRIPT_PHYSICAL_SCHEMA
 
 from tests.util import ev, events_df, ts
@@ -121,16 +121,3 @@ def test_clustering_is_semantically_inert(spark, tmp_path):
     assert sorted_rows(read_resolved(t_clus)) == sorted_rows(read_resolved(t_plain))
     # the clustered table really did split; the disabled one really did not
     assert len(t_clus.current().files) > len(t_plain.current().files)
-
-
-def test_rewrite_small_files_never_splits(spark, tmp_path):
-    """The bin-packer honors its target even when the table's compaction
-    policy asks for bounded files — target_file_rows would fight the packer's
-    convergence check."""
-    t = make_table(spark, str(tmp_path / "t"), **{"compaction.target_file_rows": "40"})
-    ingest(t, spark, wide_history(n=200), batches=4)
-    rewrite_small_files(t, target_files_per_bucket=1)
-    by_bucket: dict[int, int] = {}
-    for f in t.current().files:
-        by_bucket[f["bucket"]] = by_bucket.get(f["bucket"], 0) + 1
-    assert all(n == 1 for n in by_bucket.values()), by_bucket

@@ -1,15 +1,16 @@
-"""Maintenance (tombstone compaction, file rewrite, snapshot expiry), feed
-sources, and physical-plan quality assertions."""
+"""Maintenance (tombstone compaction, snapshot expiry), feed sources, and
+physical-plan quality assertions."""
 
 from __future__ import annotations
 
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
-from aqueduct_core_spark.lake.merge import merge_change_batch
+from aqueduct_core_spark.lake.merge import merge_change_batch, read_resolved
 from aqueduct_core_spark.lake.table import LakeTable, file_buckets
-from aqueduct_core_spark.maintenance import compact_table, rewrite_small_files
+from aqueduct_core_spark.maintenance import compact_bucket_range, compact_table
 from aqueduct_core_spark.plans import count_exchanges, has_broadcast_join, pushed_filters
 from aqueduct_core_spark.schema import TRANSCRIPT_PHYSICAL_SCHEMA
 from aqueduct_core_spark.sources import read_feed, read_feed_stream
@@ -57,9 +58,35 @@ def test_late_update_after_purge_reappears_documented_semantics(spark, tmp_table
     assert read_transcripts(t).count() == 1
 
 
-def test_rewrite_small_files_noop_on_compact_table(spark, tmp_table_dir):
-    # compaction leaves exactly one file per bucket — so a compact table
-    # makes rewrite a metadata-only no-op
+@pytest.mark.parametrize("fold", ["compact_table", "compact_bucket_range"])
+def test_none_retention_keeps_every_tombstone(spark, tmp_table_dir, fold):
+    """tombstone_retention_ts=None keeps every tombstone on both fold paths,
+    so a redelivered insert older than its delete stays deleted."""
+    t = make_table(spark, tmp_table_dir)
+    inserts = [ev(i, conv=f"c{i % 5}", turn=i // 5, t=100 + i) for i in range(1, 26)]
+    deletes = [
+        ev(100, "D", conv="c0", turn=1, t=500),
+        ev(101, "D", conv="c1", turn=2, t=500),
+        ev(102, "D", entity="conversation", conv="c2", t=500),
+    ]
+    merge_change_batch(t, events_df(spark, inserts + deletes), batch_id=0)
+    tombstones = read_resolved(t).filter(F.col("_deleted")).count()
+    assert tombstones >= len(deletes)
+    if fold == "compact_table":
+        compact_table(t, None)
+    else:
+        compact_bucket_range(t, None, list(range(t.current().n_buckets)))
+    assert all(f.get("kind", "base") == "base" for f in t.current().files)
+    assert t.read().filter(F.col("_deleted")).count() == tombstones
+    deleted = {("c0", 1), ("c1", 2)} | {("c2", e["turn_idx"]) for e in inserts if e["conv_id"] == "c2"}
+    redelivered = [e for e in inserts if (e["conv_id"], e["turn_idx"]) in deleted]
+    merge_change_batch(t, events_df(spark, redelivered), batch_id=1)
+    live = {(r["conv_id"], r["turn_idx"]) for r in read_transcripts(t).collect()}
+    assert not live & deleted
+    assert len(live) == len(inserts) - len(deleted)
+
+
+def test_compaction_leaves_one_file_per_bucket(spark, tmp_table_dir):
     t = make_table(spark, tmp_table_dir, n_buckets=2)
     for b in range(4):
         merge_change_batch(
@@ -71,8 +98,6 @@ def test_rewrite_small_files_noop_on_compact_table(spark, tmp_table_dir):
         for b in file_buckets(f):
             per_bucket[b] = per_bucket.get(b, 0) + 1
     assert all(n == 1 for n in per_bucket.values())
-    v_before = t.current().version
-    assert rewrite_small_files(t, target_files_per_bucket=1) == v_before  # no-op
     assert read_transcripts(t).count() == 4
 
 

@@ -326,3 +326,44 @@ def test_engine_background_migration_drains_mixed_state(spark, tmp_path):
         for r in replay([e.asDict() for e in feed.orderBy("change_lsn").collect()])
     ]
     assert rows(table) == expected
+
+
+def test_reopened_engine_migrates_from_manifest_property(spark, tmp_path):
+    """The migration opt-in is read from the manifest: an engine reopened on
+    the table without table_properties (an ingest restart without
+    --table-prop) still runs the background migration."""
+    from aqueduct_core_spark.feedgen import generate_change_feed, write_segments
+    from aqueduct_core_spark.streaming.engine import IngestEngine
+
+    import os
+    import shutil
+
+    feed = generate_change_feed(spark, 1200, 30, 6, seed=37, ts_jitter_s=15)
+    staging, live = str(tmp_path / "staging"), str(tmp_path / "feed")
+    write_segments(feed, staging, n_segments=6)
+    parts = sorted(f for f in os.listdir(staging) if f.endswith(".parquet"))
+    os.makedirs(live)
+
+    def arrive(names):
+        for f in names:
+            shutil.copy(os.path.join(staging, f), os.path.join(live, f))
+
+    def engine(**kw):
+        return IngestEngine(
+            spark, str(tmp_path / "tbl"), str(tmp_path / "ckpt"),
+            n_buckets=4, merge_mode="mor", **kw,
+        )
+
+    arrive(parts[:3])
+    eng = engine(table_properties={"spec_migration.files_per_commit": "2"})
+    eng.run(live, max_files_per_trigger=1)
+    eng.close()
+    table = LakeTable(spark, eng.table_root)
+    table.evolve_bucketing(8)
+    assert is_mixed_spec(table.current())
+
+    arrive(parts[3:])
+    eng = engine()
+    eng.run(live, max_files_per_trigger=1)
+    eng.close()
+    assert eng.compactions_triggered > 0

@@ -123,10 +123,11 @@ def main():
             batch_id += 1
             lsn += batch_events
         piled = delta_files()
-        from aqueduct_core_spark.maintenance import compact_table_parallel
+        from aqueduct_core_spark.maintenance import CompactionPolicy, maybe_compact
 
         t0 = time.perf_counter()
-        compact_table_parallel(table, datetime(1970, 1, 1), n_jobs=4, keep_snapshots=1)
+        maybe_compact(table, CompactionPolicy(max_delta_files_per_bucket=0, n_jobs=4))
+        table.expire_snapshots(keep_last=1)
         parallel_compact_sec = round(time.perf_counter() - t0, 3)
 
         result = {

@@ -35,7 +35,7 @@ def main():
     from aqueduct_core_spark.feedgen import generate_change_feed
     from aqueduct_core_spark.lake.merge import merge_change_batch, read_resolved
     from aqueduct_core_spark.lake.table import LakeTable, is_mixed_spec
-    from aqueduct_core_spark.maintenance import compact_table_parallel, migrate_spec_files
+    from aqueduct_core_spark.maintenance import compact_table, migrate_spec_files
     from aqueduct_core_spark.schema import TRANSCRIPT_PHYSICAL_SCHEMA
 
     spark = (
@@ -72,7 +72,7 @@ def main():
             batch_id=b,
         )
     # fold history so the pre-evolution table is the production steady state
-    compact_table_parallel(t, tombstone_retention_ts="1970-01-01 00:00:00", n_jobs=4)
+    compact_table(t, tombstone_retention_ts=None)
     n_files_before = len(t.current().files)
     total_rows = sum(f.get("rows") or 0 for f in t.current().files)
 
