@@ -6,12 +6,15 @@ feature-extract / resize / frame-sample run as Arrow-batched functions over
 
 Decode comes in three tiers:
   * REAL, lib-free: WAV (RIFF chunk walk + PCM + G.711), PPM (P6), BMP
-    (24-bpp), PNG (zlib + all five predictors + Adam7), the full DCT JPEG
-    family (baseline SOF0 incl. YCbCr subsampling and restart intervals;
-    progressive SOF2), animated GIF (LZW), and the MP4/ISO-BMFF container
-    (box walk + sample tables + per-sample byte extraction — frame
-    SELECTION without a codec) are parsed in pure numpy/stdlib —
-    `use_real=True` is a genuinely exercised path, oracle-gated end to end.
+    (24-bpp), PNG (zlib + all five predictors + Adam7), DCT JPEG (baseline
+    SOF0 incl. YCbCr subsampling and restart intervals, and progressive
+    SOF2 — one stream writer, one decoder: one marker walk, one
+    coefficient store, one IDCT), animated GIF (LZW), the MP4/ISO-BMFF
+    container (box walk + sample tables + per-sample byte extraction —
+    frame SELECTION without a codec) and the MP3 frame walk are parsed in
+    pure numpy/stdlib — `use_real=True` is a genuinely exercised path,
+    oracle-gated end to end. One magic-byte sniff (`_container`) routes
+    every payload to its parser.
   * REAL, pluggable: compressed-video/audio BITSTREAMS inside containers
     (H.26x, AAC, mp3) dispatch through `register_decoder` — Pillow/ffmpeg
     plug in on a cluster; an unregistered kind raises NotImplementedError.
@@ -139,12 +142,12 @@ def g711_compress(pcm: np.ndarray, law: str) -> bytes:
     return order[idx].astype(np.uint8).tobytes()
 
 
-def wav_g711_bytes(codes: bytes, law: str = "ulaw", sample_rate: int = 8000) -> bytes:
+def wav_g711_bytes(codes: bytes, law: str = "ulaw") -> bytes:
     """Spec-valid RIFF/WAVE G.711 writer: format tag 7 (mu-law) or 6 (A-law),
-    one byte per sample — the telephony container shape."""
+    8 kHz mono, one byte per sample — the telephony container shape."""
     fmt_tag = 7 if law == "ulaw" else 6
     data = bytes(codes)
-    fmt = b"fmt " + struct.pack("<IHHIIHH", 16, fmt_tag, 1, sample_rate, sample_rate, 1, 8)
+    fmt = b"fmt " + struct.pack("<IHHIIHH", 16, fmt_tag, 1, 8000, 8000, 1, 8)
     return (
         b"RIFF" + struct.pack("<I", 4 + len(fmt) + 8 + len(data)) + b"WAVE"
         + fmt + b"data" + struct.pack("<I", len(data)) + data
@@ -193,10 +196,10 @@ def decode_wav(payload: bytes) -> dict:
     }
 
 
-def ppm_bytes(gray: bytes, maxval: int = 255) -> bytes:
+def ppm_bytes(gray: bytes) -> bytes:
     """P6 PPM writer: a single row of RGB pixels with R=G=B=gray byte."""
     rgb = np.repeat(np.frombuffer(bytes(gray), dtype=np.uint8), 3).tobytes()
-    return f"P6\n{len(gray)} 1\n{maxval}\n".encode() + rgb
+    return f"P6\n{len(gray)} 1\n255\n".encode() + rgb
 
 
 def decode_ppm(payload: bytes) -> dict:
@@ -347,18 +350,13 @@ def _png_pass_views(w: int, h: int, interlace: int):
             yield x0, y0, dx, dy, pw, ph
 
 
-def png_encode(
-    img: np.ndarray,
-    color_type: int = 0,
-    interlace: int = 0,
-    palette: np.ndarray | None = None,
-) -> bytes:
+def png_encode(img: np.ndarray, color_type: int = 0, interlace: int = 0) -> bytes:
     """Spec-valid PNG writer over a uint8 array: (h, w) for grayscale (0) or
-    indexed (3, with `palette` (n,3) — identity grayscale when omitted),
-    (h, w, 3) for truecolor (2). Scanline filters CYCLE through all five
-    predictors (row index mod 5, per pass), so a correct decoder must
-    implement every filter to round-trip even a constant image; interlace=1
-    writes the seven Adam7 passes, each filtered independently."""
+    indexed (3, over the identity grayscale palette), (h, w, 3) for
+    truecolor (2). Scanline filters CYCLE through all five predictors (row
+    index mod 5, per pass), so a correct decoder must implement every
+    filter to round-trip even a constant image; interlace=1 writes the
+    seven Adam7 passes, each filtered independently."""
     img = np.asarray(img, dtype=np.uint8)
     if color_type == 2:
         if img.ndim != 3 or img.shape[2] != 3:
@@ -383,9 +381,7 @@ def png_encode(
     ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, interlace)
     out = _PNG_SIG + _png_chunk(b"IHDR", ihdr)
     if color_type == 3:
-        if palette is None:
-            palette = np.repeat(np.arange(256, dtype=np.uint8), 3).reshape(256, 3)
-        out += _png_chunk(b"PLTE", np.asarray(palette, np.uint8).tobytes())
+        out += _png_chunk(b"PLTE", np.repeat(np.arange(256, dtype=np.uint8), 3).tobytes())
     out += _png_chunk(b"IDAT", zlib.compress(bytes(raw), 6))
     return out + _png_chunk(b"IEND", b"")
 
@@ -592,14 +588,14 @@ def gif_bytes(
     height: int = 4,
     n_frames: int = 1,
     interlace_alt: bool = False,
-    delay_cs: int = 4,
 ) -> bytes:
     """GIF89a writer: a 256-entry grayscale global color table (palette i =
     (i,i,i), so index == gray byte) and `n_frames` full-canvas frames, each
     `height` identical rows of the `gray` bytes (width = byte count). Every
     frame carries a graphic-control extension (disposal 1 = keep); with
     `interlace_alt` odd frames are written row-interlaced, so one payload
-    exercises both row orders. Animations get the Netscape loop extension."""
+    exercises both row orders. Frames last 4 cs; animations get the Netscape
+    loop extension."""
     w, h = len(gray), height
     out = bytearray(b"GIF89a")
     # logical screen: GCT present, color resolution 8, GCT size 2^(7+1)=256
@@ -612,7 +608,7 @@ def gif_bytes(
     for k in range(n_frames):
         lace = interlace_alt and (k % 2 == 1)
         out += b"\x21\xf9" + _gif_subblocks(
-            struct.pack("<BHB", 0x04, delay_cs, 0)  # disposal 1, no transparency
+            struct.pack("<BHB", 0x04, 4, 0)  # disposal 1, 4 cs delay, no transparency
         )
         out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0x40 if lace else 0)
         px = rows
@@ -717,12 +713,16 @@ def decode_gif(payload: bytes) -> dict:
 
 
 # ------------------------------------------------------------------ JPEG
-# Pure-numpy DCT JPEG (ITU T.81): a real encoder and a real decoder —
-# markers, standard Annex K Huffman tables, zigzag, quantization, 8x8
-# DCT/IDCT, byte stuffing, restart intervals. Baseline (SOF0) and
-# progressive (SOF2), grayscale or 3-component YCbCr at any integer-ratio
-# sampling; arithmetic coding and the other SOF types raise. All constants
-# below are from the public JPEG specification.
+# Pure-numpy DCT JPEG (ITU T.81): one writer and one decoder — markers,
+# standard Annex K Huffman tables, zigzag, quantization, 8x8 IDCT, byte
+# stuffing, restart intervals. Baseline (SOF0) and progressive (SOF2),
+# grayscale or 3-component YCbCr at any integer-ratio sampling; arithmetic
+# coding and the other SOF types raise. Both directions work on the same
+# model, a per-component store of zigzag coefficient blocks: the writer
+# serializes it as one interleaved baseline scan or as a progressive scan
+# script, the decoder fills it from one scan or many and then dequantizes
+# and IDCTs it once. All constants below are from the public JPEG
+# specification.
 
 _ZIGZAG = np.array([
      0,  1,  8, 16,  9,  2,  3, 10, 17, 24, 32, 25, 18, 11,  4,  5,
@@ -751,6 +751,24 @@ _AC_VALS = [
     0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF1, 0xF2, 0xF3, 0xF4,
     0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
 ]
+
+#: AC Huffman table for progressive scans: the Annex-K sequential table has
+#: no EOBn symbols (cat<<4, cat 1..14 — variable-length end-of-band runs are
+#: progressive-only), so emit a custom canonical table carrying every symbol
+#: a progressive AC scan can produce — all 176 at length 9 (2^9 = 512 code
+#: space, all-ones code unused per K.2). Real encoders ship size-optimized
+#: tables; the decoder reads whatever DHT declares, so the fixed table only
+#: costs stream size, never compatibility.
+_PROG_AC_VALS = (
+    [cat << 4 for cat in range(15)]  # EOBn: EOB0 .. EOB14
+    + [0xF0]  # ZRL
+    + [(r << 4) | s for r in range(16) for s in range(1, 11)]
+)
+_PROG_AC_BITS = [0] * 16
+_PROG_AC_BITS[8] = len(_PROG_AC_VALS)  # every symbol at code length 9
+
+#: every SOFn marker (C4 DHT, C8 JPG and CC DAC are not frames)
+_SOF_MARKERS = frozenset(range(0xC0, 0xD0)) - {0xC4, 0xC8, 0xCC}
 
 
 def _huff_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
@@ -806,227 +824,38 @@ def _category(v: int) -> int:
     return int(v).bit_length() if v > 0 else int(-v).bit_length()
 
 
-def _encode_const_block(w: "_BitWriter", v: int, prev_dc: int, q, dc_huf, ac_huf, C) -> int:
-    """Entropy-encode one constant 8x8 block (DCT -> quantize -> zigzag ->
-    Huffman); returns the new DC predictor. The pipeline is the general one —
-    constancy only means the AC pass emits a single EOB."""
-    block = np.full((8, 8), float(int(v)) - 128.0)
-    coef = C @ block @ C.T
-    zz = np.round(coef.reshape(64)[_ZIGZAG] / q).astype(np.int64)
-    diff = int(zz[0]) - prev_dc
-    prev_dc = int(zz[0])
-    size = _category(diff)
-    code, length = dc_huf[size]
-    w.put(code, length)
-    if size:
-        w.put(diff if diff > 0 else diff + (1 << size) - 1, size)
-    run = 0
-    for k in range(1, 64):
-        a = int(zz[k])
-        if a == 0:
-            run += 1
-            continue
-        while run > 15:
-            zc, zl = ac_huf[0xF0]  # ZRL
-            w.put(zc, zl)
-            run -= 16
-        s = _category(a)
-        cc, cl = ac_huf[(run << 4) | s]
-        w.put(cc, cl)
-        w.put(a if a > 0 else a + (1 << s) - 1, s)
-        run = 0
-    if run:
-        ec, el = ac_huf[0x00]  # EOB
-        w.put(ec, el)
-    return prev_dc
-
-
 def _jpeg_seg(marker: int, body: bytes) -> bytes:
     return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
 
 
-def _jpeg_headers(
-    q: np.ndarray,
-    width: int,
-    height: int,
-    ncomp: int,
-    restart_interval,
-    sampling: list[tuple[int, int]] | None = None,
-) -> bytes:
-    out = b"\xff\xd8"  # SOI
-    out += _jpeg_seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")  # APP0
-    out += _jpeg_seg(0xDB, b"\x00" + bytes(int(x) for x in q))  # DQT id 0, 8-bit
-    # SOF0: components ids 1..ncomp, per-component (h,v) sampling (default
-    # 1x1 = 4:4:4), all on qtable 0
-    sof = struct.pack(">BHHB", 8, height, width, ncomp)
-    for ci in range(ncomp):
-        h, v = sampling[ci] if sampling else (1, 1)
-        sof += bytes([ci + 1, (h << 4) | v, 0x00])
-    out += _jpeg_seg(0xC0, sof)
-    out += _jpeg_seg(0xC4, b"\x00" + bytes(_DC_BITS) + bytes(_DC_VALS))  # DHT DC 0
-    out += _jpeg_seg(0xC4, b"\x10" + bytes(_AC_BITS) + bytes(_AC_VALS))  # DHT AC 0
-    if restart_interval:
-        out += _jpeg_seg(0xDD, struct.pack(">H", int(restart_interval)))  # DRI
-    sos = bytes([ncomp])
-    for cid in range(1, ncomp + 1):
-        sos += bytes([cid, 0x00])  # every component -> tables 0/0
-    out += _jpeg_seg(0xDA, sos + b"\x00\x3f\x00")
-    return out
+def _scan_units(cis: list[int], sampling, mcu_grid, grids) -> list[list[tuple[int, int, int]]]:
+    """One scan's data units (ci, by, bx), grouped per MCU — the restart
+    unit. An interleaved scan walks the (my, mx) MCU grid, each MCU holding
+    every scan component's h x v blocks in raster order (A.2.3); a
+    one-component scan walks that component's own (nby, nbx) block grid,
+    one block per MCU (A.2.2)."""
+    if len(cis) == 1:
+        nby, nbx = grids[cis[0]]
+        return [[(cis[0], by, bx)] for by in range(nby) for bx in range(nbx)]
+    my, mx = mcu_grid
+    return [
+        [
+            (ci, mcu_y * sampling[ci][1] + vv, mcu_x * sampling[ci][0] + hh)
+            for ci in cis
+            for vv in range(sampling[ci][1])
+            for hh in range(sampling[ci][0])
+        ]
+        for mcu_y in range(my)
+        for mcu_x in range(mx)
+    ]
 
 
-#: chroma derivations for the exactly-invertible color stream: per input byte
-#: v, the MCU carries constant blocks Y=v, Cb=v^0xFF, Cr=(v+85)%256 — three
-#: DIVERGING DC predictor chains, so interleaved decode order and per-
-#: component predictor reset at restarts are both load-bearing.
-def _color_planes_of(v: int) -> tuple[int, int, int]:
-    return v, v ^ 0xFF, (v + 85) % 256
-
-
-def jpeg_bytes(
-    gray: bytes,
-    qtable: np.ndarray | None = None,
-    restart_interval: int | None = None,
-) -> bytes:
-    """Baseline JPEG encoder for a one-block-row grayscale image: each input
-    byte becomes one constant 8x8 block (width = 8*len, height = 8). The
-    entropy pipeline (DCT -> quantize -> zigzag -> Annex-K Huffman) is the
-    real general one; the constant-block layout plus an all-ones quant table
-    is what makes the codec EXACTLY invertible (a constant block is DC-only
-    and the DC quantizer divides the DCT gain), giving the decode path an
-    md5-round-trip oracle like the WAV/PPM containers.
-
-    restart_interval=n emits a DRI segment and an RSTn marker every n MCUs
-    (byte-aligned scan, D0..D7 cycling, DC predictor reset) — the stream
-    shape hardware encoders emit for error resilience."""
-    data = np.frombuffer(bytes(gray), dtype=np.uint8)
-    n_blocks = max(1, data.size)  # zero-length text still needs a legal frame
-    q = np.ones(64, dtype=np.int64) if qtable is None else np.asarray(qtable, dtype=np.int64).reshape(64)
-    dc_huf = _huff_codes(_DC_BITS, _DC_VALS)
-    ac_huf = _huff_codes(_AC_BITS, _AC_VALS)
-    C = _dct_matrix()
-
-    w = _BitWriter()
-    prev_dc = 0
-    blocks = data if data.size else np.zeros(1, dtype=np.uint8)
-    for i, v in enumerate(blocks):
-        if restart_interval and i and i % restart_interval == 0:
-            w.align()
-            w.raw(bytes([0xFF, 0xD0 + ((i // restart_interval - 1) % 8)]))
-            prev_dc = 0
-        prev_dc = _encode_const_block(w, int(v), prev_dc, q, dc_huf, ac_huf, C)
-    scan = w.flush()
-    return (
-        _jpeg_headers(q, 8 * n_blocks, 8, 1, restart_interval) + scan + b"\xff\xd9"
-    )
-
-
-def jpeg_color_bytes(
-    gray: bytes,
-    qtable: np.ndarray | None = None,
-    restart_interval: int | None = None,
-) -> bytes:
-    """Three-component (YCbCr 4:4:4) baseline JPEG: each input byte v becomes
-    one interleaved MCU of constant blocks Y=v, Cb=v^0xFF, Cr=(v+85)%256 —
-    three diverging DC predictor chains through one entropy-coded scan, so
-    decoding exercises real interleaved-MCU order and (with restart_interval)
-    per-component predictor resets at RSTn. Same exact-invertibility layout
-    as jpeg_bytes, so the Y plane round-trips the input bit-for-bit."""
-    data = np.frombuffer(bytes(gray), dtype=np.uint8)
-    n_mcus = max(1, data.size)
-    q = np.ones(64, dtype=np.int64) if qtable is None else np.asarray(qtable, dtype=np.int64).reshape(64)
-    dc_huf = _huff_codes(_DC_BITS, _DC_VALS)
-    ac_huf = _huff_codes(_AC_BITS, _AC_VALS)
-    C = _dct_matrix()
-
-    w = _BitWriter()
-    prev = [0, 0, 0]
-    blocks = data if data.size else np.zeros(1, dtype=np.uint8)
-    for i, v in enumerate(blocks):
-        if restart_interval and i and i % restart_interval == 0:
-            w.align()
-            w.raw(bytes([0xFF, 0xD0 + ((i // restart_interval - 1) % 8)]))
-            prev = [0, 0, 0]
-        for ci, val in enumerate(_color_planes_of(int(v))):
-            prev[ci] = _encode_const_block(w, val, prev[ci], q, dc_huf, ac_huf, C)
-    scan = w.flush()
-    return (
-        _jpeg_headers(q, 8 * n_mcus, 8, 3, restart_interval) + scan + b"\xff\xd9"
-    )
-
-
-#: per-byte Y quad for the 4:2:0 stream: the four luma blocks of one MCU in
-#: spec raster order (0,0),(0,1),(1,0),(1,1). DISTINCT values so a decoder
-#: that walks the intra-MCU block order wrong produces wrong pixels at known
-#: positions instead of an accidentally-identical plane.
-def _y_quad_of(v: int) -> tuple[int, int, int, int]:
-    return v, v ^ 0x55, v ^ 0xAA, v ^ 0xFF
-
-
-def jpeg420_bytes(
-    gray: bytes,
-    qtable: np.ndarray | None = None,
-    restart_interval: int | None = None,
-) -> bytes:
-    """Chroma-subsampled (YCbCr 4:2:0) baseline JPEG — the sampling layout
-    virtually every camera and web encoder emits: each input byte v becomes
-    one 16x16 MCU of SIX blocks — four distinct constant luma blocks
-    (v, v^0x55, v^0xAA, v^0xFF in raster order) followed by one Cb (v^0xFF)
-    and one Cr ((v+85)%256) block at quarter resolution. Decoding exercises
-    the general MCU geometry (per-component sampling factors, data-unit
-    order Y00 Y01 Y10 Y11 Cb Cr), three diverging DC predictor chains, and
-    (with restart_interval, counted in MCUs) predictor resets at RSTn. Same
-    constant-block + unit-quantizer exact-invertibility as jpeg_bytes: the
-    top-left pixel of each MCU round-trips the input bit-for-bit."""
-    data = np.frombuffer(bytes(gray), dtype=np.uint8)
-    n_mcus = max(1, data.size)
-    q = np.ones(64, dtype=np.int64) if qtable is None else np.asarray(qtable, dtype=np.int64).reshape(64)
-    dc_huf = _huff_codes(_DC_BITS, _DC_VALS)
-    ac_huf = _huff_codes(_AC_BITS, _AC_VALS)
-    C = _dct_matrix()
-
-    w = _BitWriter()
-    prev = [0, 0, 0]
-    mcus = data if data.size else np.zeros(1, dtype=np.uint8)
-    for i, v in enumerate(mcus):
-        if restart_interval and i and i % restart_interval == 0:
-            w.align()
-            w.raw(bytes([0xFF, 0xD0 + ((i // restart_interval - 1) % 8)]))
-            prev = [0, 0, 0]
-        _, cb, cr = _color_planes_of(int(v))
-        for y in _y_quad_of(int(v)):
-            prev[0] = _encode_const_block(w, y, prev[0], q, dc_huf, ac_huf, C)
-        prev[1] = _encode_const_block(w, cb, prev[1], q, dc_huf, ac_huf, C)
-        prev[2] = _encode_const_block(w, cr, prev[2], q, dc_huf, ac_huf, C)
-    scan = w.flush()
-    return (
-        _jpeg_headers(
-            q, 16 * n_mcus, 16, 3, restart_interval, sampling=[(2, 2), (1, 1), (1, 1)]
-        )
-        + scan
-        + b"\xff\xd9"
-    )
-
-
-# --- progressive (SOF2) encoding: spectral selection + successive
-# --- approximation, per T.81 Annex G. The AC refinement encoder mirrors the
-# --- decoder's correction-bit walk: bits for already-significant
-# --- coefficients buffer until the symbol (ZRL / newly-significant / EOBn)
-# --- that covers them is emitted.
-
-#: AC Huffman table for progressive scans: the Annex-K sequential table has
-#: no EOBn symbols (cat<<4, cat 1..14 — variable-length end-of-band runs are
-#: progressive-only), so emit a custom canonical table carrying every symbol
-#: a progressive AC scan can produce — all 176 at length 9 (2^9 = 512 code
-#: space, all-ones code unused per K.2). Real encoders ship size-optimized
-#: tables; the decoder reads whatever DHT declares, so the fixed table only
-#: costs stream size, never compatibility.
-_PROG_AC_VALS = (
-    [cat << 4 for cat in range(15)]  # EOBn: EOB0 .. EOB14
-    + [0xF0]  # ZRL
-    + [(r << 4) | s for r in range(16) for s in range(1, 11)]
-)
-_PROG_AC_BITS = [0] * 16
-_PROG_AC_BITS[8] = len(_PROG_AC_VALS)  # every symbol at code length 9
+# --- entropy encoding, per T.81 Annex G for the progressive scans (a
+# --- baseline block is the Ah=0 case over the 1..63 band, its EOB an EOB
+# --- run of one). The AC refinement encoder mirrors the decoder's
+# --- correction-bit walk: bits for already-significant coefficients
+# --- buffer until the symbol (ZRL / newly-significant / EOBn) that covers
+# --- them is emitted.
 
 
 def _flush_corr_bits(w: "_BitWriter", st: dict) -> None:
@@ -1154,106 +983,158 @@ def _enc_ac_refine_block(w, zz, Ss: int, Se: int, Al: int, ac_huf, st: dict) -> 
             _emit_eobrun(w, ac_huf, st)
 
 
-def _progressive_stream(
+def _jpeg_stream(
     comp_blocks: list[np.ndarray],
     width: int,
     height: int,
     sampling: list[tuple[int, int]],
-    q: np.ndarray,
-    scans: list[tuple],
+    scans: list[tuple] | None = None,
     restart_interval: int | None = None,
 ) -> bytes:
-    """Assemble a progressive (SOF2) stream from per-component quantized
-    zigzag coefficient arrays (nby, nbx, 64). `scans` is the scan script:
+    """The one JPEG writer: per-component quantized zigzag coefficient arrays
+    (nby, nbx, 64) under unit quantizers -> a complete stream. With no
+    `scans` it writes SOF0 and one interleaved baseline scan with the
+    Annex-K tables. With a scan script it writes SOF2 and the scans:
     ("dc", [ci, ...], Ah, Al) — interleaved when multiple components — or
     ("ac", ci, Ss, Se, Ah, Al). Block grids must be exact multiples of the
     MCU grid (the builders' one-MCU-row layouts are). Restart markers, when
     configured, are emitted every `restart_interval` MCUs/blocks in every
     scan, resetting DC predictors and ending any open EOB run."""
-    dc_huf = _huff_codes(_DC_BITS, _DC_VALS)
-    ac_huf = _huff_codes(_PROG_AC_BITS, _PROG_AC_VALS)
+    baseline = scans is None
+    ac_bits, ac_vals = (_AC_BITS, _AC_VALS) if baseline else (_PROG_AC_BITS, _PROG_AC_VALS)
+    dc_huf, ac_huf = _huff_codes(_DC_BITS, _DC_VALS), _huff_codes(ac_bits, ac_vals)
     ncomp = len(comp_blocks)
+    out = b"\xff\xd8"  # SOI
+    out += _jpeg_seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")  # APP0
+    out += _jpeg_seg(0xDB, b"\x00" + b"\x01" * 64)  # DQT id 0, 8-bit, unit quantizers
+    frame = struct.pack(">BHHB", 8, height, width, ncomp)
+    for ci, (h, v) in enumerate(sampling):
+        frame += bytes([ci + 1, (h << 4) | v, 0x00])  # ids 1..ncomp, all on DQT 0
+    out += _jpeg_seg(0xC0 if baseline else 0xC2, frame)
+    out += _jpeg_seg(0xC4, b"\x00" + bytes(_DC_BITS) + bytes(_DC_VALS))  # DHT DC 0
+    out += _jpeg_seg(0xC4, b"\x10" + bytes(ac_bits) + bytes(ac_vals))  # DHT AC 0
+    if restart_interval:
+        out += _jpeg_seg(0xDD, struct.pack(">H", int(restart_interval)))  # DRI
     hmax = max(h for h, _ in sampling)
     vmax = max(v for _, v in sampling)
-    mx = (width + 8 * hmax - 1) // (8 * hmax)
-    my = (height + 8 * vmax - 1) // (8 * vmax)
-    out = b"\xff\xd8"
-    out += _jpeg_seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += _jpeg_seg(0xDB, b"\x00" + bytes(int(x) for x in q))
-    sof = struct.pack(">BHHB", 8, height, width, ncomp)
-    for ci in range(ncomp):
-        h, v = sampling[ci]
-        sof += bytes([ci + 1, (h << 4) | v, 0x00])
-    out += _jpeg_seg(0xC2, sof)
-    out += _jpeg_seg(0xC4, b"\x00" + bytes(_DC_BITS) + bytes(_DC_VALS))
-    out += _jpeg_seg(0xC4, b"\x10" + bytes(_PROG_AC_BITS) + bytes(_PROG_AC_VALS))
-    if restart_interval:
-        out += _jpeg_seg(0xDD, struct.pack(">H", int(restart_interval)))
-
-    def rst(w, idx):
-        w.align()
-        w.raw(bytes([0xFF, 0xD0 + ((idx // restart_interval - 1) % 8)]))
-
-    for scan in scans:
+    mcu_grid = ((height + 8 * vmax - 1) // (8 * vmax), (width + 8 * hmax - 1) // (8 * hmax))
+    grids = [b.shape[:2] for b in comp_blocks]
+    # every scan as (components, Ss, Se, Ah, Al); baseline is one full-band scan
+    bands = [(list(range(ncomp)), 0, 63, 0, 0)] if baseline else [
+        (s[1], 0, 0, s[2], s[3]) if s[0] == "dc" else ([s[1]], *s[2:]) for s in scans
+    ]
+    for cis, ss, se, ah, al in bands:
         w = _BitWriter()
-        if scan[0] == "dc":
-            _, cis, ah, al = scan
-            sos = bytes([len(cis)])
-            for ci in cis:
-                sos += bytes([ci + 1, 0x00])
-            sos += bytes([0, 0, (ah << 4) | al])
-            if len(cis) > 1:
-                units = [
-                    [
-                        (ci, mcu_y * sampling[ci][1] + vv, mcu_x * sampling[ci][0] + hh)
-                        for ci in cis
-                        for vv in range(sampling[ci][1])
-                        for hh in range(sampling[ci][0])
-                    ]
-                    for mcu_y in range(my)
-                    for mcu_x in range(mx)
-                ]
-            else:
-                ci = cis[0]
-                nby, nbx = comp_blocks[ci].shape[:2]
-                units = [[(ci, by, bx)] for by in range(nby) for bx in range(nbx)]
-            prev = {ci: 0 for ci in cis}
-            for mcu, mcu_units in enumerate(units):
-                if restart_interval and mcu and mcu % restart_interval == 0:
-                    rst(w, mcu)
-                    prev = {ci: 0 for ci in cis}
-                for ci, by, bx in mcu_units:
-                    dc = comp_blocks[ci][by, bx, 0]
-                    if ah == 0:
-                        prev[ci] = _enc_dc_first(w, dc, prev[ci], al, dc_huf)
-                    else:
-                        w.put((int(dc) >> al) & 1, 1)
-        else:
-            _, ci, ss, se, ah, al = scan
-            sos = bytes([1, ci + 1, 0x00, ss, se, (ah << 4) | al])
-            st = {"eobrun": 0, "bits": []}
-            nby, nbx = comp_blocks[ci].shape[:2]
-            for bi, (by, bx) in enumerate(
-                (by, bx) for by in range(nby) for bx in range(nbx)
-            ):
-                if restart_interval and bi and bi % restart_interval == 0:
-                    _emit_eobrun(w, ac_huf, st)
-                    rst(w, bi)
+        st = {"eobrun": 0, "bits": []}
+        prev = [0] * ncomp
+        for mcu, units in enumerate(_scan_units(cis, sampling, mcu_grid, grids)):
+            if restart_interval and mcu and mcu % restart_interval == 0:
+                _emit_eobrun(w, ac_huf, st)
+                w.align()
+                w.raw(bytes([0xFF, 0xD0 + ((mcu // restart_interval - 1) % 8)]))
+                prev = [0] * ncomp
+            for ci, by, bx in units:
                 zz = comp_blocks[ci][by, bx]
-                if ah == 0:
-                    _enc_ac_first_block(w, zz, ss, se, al, ac_huf, st)
-                else:
-                    _enc_ac_refine_block(w, zz, ss, se, al, ac_huf, st)
-            _emit_eobrun(w, ac_huf, st)
-        out += _jpeg_seg(0xDA, sos) + w.flush()
+                if ss == 0 and ah == 0:
+                    prev[ci] = _enc_dc_first(w, zz[0], prev[ci], al, dc_huf)
+                elif ss == 0:
+                    w.put((int(zz[0]) >> al) & 1, 1)
+                if se:
+                    enc = _enc_ac_first_block if ah == 0 else _enc_ac_refine_block
+                    enc(w, zz, max(ss, 1), se, al, ac_huf, st)
+                    if baseline:
+                        _emit_eobrun(w, ac_huf, st)  # sequential: every block ends itself
+        _emit_eobrun(w, ac_huf, st)
+        sos = bytes([len(cis)]) + b"".join(bytes([ci + 1, 0x00]) for ci in cis)
+        out += _jpeg_seg(0xDA, sos + bytes([ss, se, (ah << 4) | al])) + w.flush()
     return out + b"\xff\xd9"
 
 
+def _byte_row(gray: bytes) -> np.ndarray:
+    """The input bytes as a (1, n) int64 row, one MCU per byte; empty input
+    is one zero byte, since a legal frame needs a block."""
+    data = np.frombuffer(bytes(gray), dtype=np.uint8)
+    return (data if data.size else np.zeros(1, np.uint8)).astype(np.int64)[None, :]
+
+
+def _dc_blocks(plane: np.ndarray) -> np.ndarray:
+    """A (nby, nbx) plane of byte values as constant 8x8 blocks in zigzag
+    order: a constant block is DC-only, and its DCT DC term is exactly
+    8*(v-128) (DCT gain 8), so unit quantizers keep it lossless."""
+    blocks = np.zeros(plane.shape + (64,), dtype=np.int64)
+    blocks[..., 0] = 8 * (plane - 128)
+    return blocks
+
+
+#: chroma derivations for the exactly-invertible color stream: per input byte
+#: v, the MCU carries constant blocks Y=v, Cb=v^0xFF, Cr=(v+85)%256 — three
+#: DIVERGING DC predictor chains, so interleaved decode order and per-
+#: component predictor reset at restarts are both load-bearing. Works on
+#: scalars and on numpy arrays alike.
+def _color_planes_of(v):
+    return v, v ^ 0xFF, (v + 85) % 256
+
+
+def jpeg_bytes(gray: bytes, restart_interval: int | None = None) -> bytes:
+    """Baseline JPEG encoder for a one-block-row grayscale image: each input
+    byte becomes one constant 8x8 block (width = 8*len, height = 8). The
+    entropy pipeline (zigzag -> Annex-K Huffman) is the general one; the
+    constant-block layout plus an all-ones quant table is what makes the
+    codec EXACTLY invertible (a constant block is DC-only and the DC
+    quantizer divides the DCT gain), giving the decode path an
+    md5-round-trip oracle like the WAV/PPM containers.
+
+    restart_interval=n emits a DRI segment and an RSTn marker every n MCUs
+    (byte-aligned scan, D0..D7 cycling, DC predictor reset) — the stream
+    shape hardware encoders emit for error resilience."""
+    row = _byte_row(gray)
+    return _jpeg_stream([_dc_blocks(row)], 8 * row.size, 8, [(1, 1)], None, restart_interval)
+
+
+def jpeg_color_bytes(gray: bytes, restart_interval: int | None = None) -> bytes:
+    """Three-component (YCbCr 4:4:4) baseline JPEG: each input byte v becomes
+    one interleaved MCU of constant blocks Y=v, Cb=v^0xFF, Cr=(v+85)%256 —
+    three diverging DC predictor chains through one entropy-coded scan, so
+    decoding exercises real interleaved-MCU order and (with restart_interval)
+    per-component predictor resets at RSTn. Same exact-invertibility layout
+    as jpeg_bytes, so the Y plane round-trips the input bit-for-bit."""
+    row = _byte_row(gray)
+    blocks = [_dc_blocks(p) for p in _color_planes_of(row)]
+    return _jpeg_stream(blocks, 8 * row.size, 8, [(1, 1)] * 3, None, restart_interval)
+
+
+#: per-byte Y quad for the 4:2:0 stream: the four luma blocks of one MCU in
+#: spec raster order (0,0),(0,1),(1,0),(1,1). DISTINCT values so a decoder
+#: that walks the intra-MCU block order wrong produces wrong pixels at known
+#: positions instead of an accidentally-identical plane.
+def _y_quad_of(v):
+    return v, v ^ 0x55, v ^ 0xAA, v ^ 0xFF
+
+
+def jpeg420_bytes(gray: bytes, restart_interval: int | None = None) -> bytes:
+    """Chroma-subsampled (YCbCr 4:2:0) baseline JPEG — the sampling layout
+    virtually every camera and web encoder emits: each input byte v becomes
+    one 16x16 MCU of SIX blocks — four distinct constant luma blocks
+    (v, v^0x55, v^0xAA, v^0xFF in raster order) followed by one Cb (v^0xFF)
+    and one Cr ((v+85)%256) block at quarter resolution. Decoding exercises
+    the general MCU geometry (per-component sampling factors, data-unit
+    order Y00 Y01 Y10 Y11 Cb Cr), three diverging DC predictor chains, and
+    (with restart_interval, counted in MCUs) predictor resets at RSTn. Same
+    constant-block + unit-quantizer exact-invertibility as jpeg_bytes: the
+    top-left pixel of each MCU round-trips the input bit-for-bit."""
+    row = _byte_row(gray)
+    # (n, 2, 2) quads -> the (2, 2n) luma block grid, MCU i at columns 2i, 2i+1
+    quads = np.stack(_y_quad_of(row[0]), axis=-1).reshape(-1, 2, 2)
+    luma = quads.transpose(1, 0, 2).reshape(2, -1)
+    _, cb, cr = _color_planes_of(row)
+    blocks = [_dc_blocks(luma), _dc_blocks(cb), _dc_blocks(cr)]
+    return _jpeg_stream(
+        blocks, 16 * row.size, 16, [(2, 2), (1, 1), (1, 1)], None, restart_interval
+    )
+
+
 def jpeg_progressive_bytes(
-    gray: bytes,
-    qtable: np.ndarray | None = None,
-    restart_interval: int | None = None,
-    ncomp: int = 1,
+    gray: bytes, restart_interval: int | None = None, ncomp: int = 1
 ) -> bytes:
     """Progressive (SOF2) JPEG with the same exact-invertibility contract as
     jpeg_bytes / jpeg_color_bytes: each input byte is one constant 8x8 block
@@ -1264,31 +1145,12 @@ def jpeg_progressive_bytes(
     so the AC scans are pure shared-EOBRUN streams, the progressive
     structure real decoders must walk. The decoded Y plane round-trips the
     input bit-for-bit."""
-    data = np.frombuffer(bytes(gray), dtype=np.uint8)
-    n = max(1, data.size)
-    q = np.ones(64, dtype=np.int64) if qtable is None else np.asarray(qtable, dtype=np.int64).reshape(64)
-    vals = data if data.size else np.zeros(1, dtype=np.uint8)
-    comp_blocks = []
-    for ci in range(ncomp):
-        arr = np.zeros((1, n, 64), dtype=np.int64)
-        for i, v in enumerate(vals):
-            plane_v = int(v) if ncomp == 1 else _color_planes_of(int(v))[ci]
-            # constant block: DC-only, DCT gain 8, unit DC quantizer
-            arr[0, i, 0] = 8 * (plane_v - 128)
-        comp_blocks.append(arr)
+    row = _byte_row(gray)
     scans: list[tuple] = [("dc", list(range(ncomp)), 0, 1), ("dc", list(range(ncomp)), 1, 0)]
     for ci in range(ncomp):
-        scans.append(("ac", ci, 1, 63, 0, 1))
-        scans.append(("ac", ci, 1, 63, 1, 0))
-    return _progressive_stream(
-        comp_blocks,
-        8 * n,
-        8,
-        [(1, 1)] * ncomp,
-        q,
-        scans,
-        restart_interval=restart_interval,
-    )
+        scans += [("ac", ci, 1, 63, 0, 1), ("ac", ci, 1, 63, 1, 0)]
+    blocks = [_dc_blocks(p) for p in _color_planes_of(row)[:ncomp]]
+    return _jpeg_stream(blocks, 8 * row.size, 8, [(1, 1)] * ncomp, scans, restart_interval)
 
 
 class _BitReader:
@@ -1364,12 +1226,20 @@ def _extend(v: int, size: int) -> int:
     return v if v >= (1 << (size - 1)) else v - (1 << size) + 1
 
 
-def _decode_block(r: _BitReader, dc_tab, ac_tab, prev_dc: int) -> tuple[np.ndarray, int]:
-    """Entropy-decode one block's zigzag coefficients; returns (zz, new_dc)."""
-    zz = np.zeros(64, dtype=np.int64)
-    size = _read_symbol(r, *dc_tab)
-    prev_dc += _extend(r.take(size), size) if size else 0
-    zz[0] = prev_dc
+def _restart(r: _BitReader, n: int, restart_interval: int) -> bool:
+    """Before unit n of a scan: at a restart boundary consume the RSTn
+    marker, check its D0..D7 sequence, and report the restart so the caller
+    resets its DC predictors / EOB run."""
+    if not (restart_interval and n and n % restart_interval == 0):
+        return False
+    if r.restart() != (n // restart_interval - 1) % 8:
+        raise ValueError("restart marker out of sequence")
+    return True
+
+
+def _decode_seq_ac(r: _BitReader, ac_tab, zz: np.ndarray) -> None:
+    """A baseline block's AC band 1..63 into `zz`: runs, ZRL and EOB (EOB
+    runs are progressive-only and refused here)."""
     k = 1
     while k < 64:
         sym = _read_symbol(r, *ac_tab)
@@ -1386,153 +1256,12 @@ def _decode_block(r: _BitReader, dc_tab, ac_tab, prev_dc: int) -> tuple[np.ndarr
             raise ValueError("AC run past end of block")
         zz[k] = _extend(r.take(s), s)
         k += 1
-    return zz, prev_dc
-
-
-def decode_jpeg(payload: bytes) -> dict:
-    """Baseline sequential JPEG decoder: marker walk (DQT/DHT/SOF0/DRI/SOS),
-    canonical Huffman scan decode with byte unstuffing, restart-interval
-    handling (RSTn sequence check, bit realign, per-component DC predictor
-    reset), dequantize, inverse zigzag, IDCT, level shift. Supports one
-    (grayscale) or three (YCbCr) components at any integer-ratio sampling —
-    4:4:4, 4:2:2, 4:2:0 (general per-component h x v MCU geometry, data
-    units in spec raster order, subsampled planes box-upsampled to frame
-    resolution); progressive (SOF2) streams go to _decode_progressive,
-    arithmetic coding and the other SOF types raise.
-    Grayscale returns pixels (h, w); color returns pixels (h, w, 3) in frame
-    component order with ncomp=3, plus the parsed sampling factors and the
-    MCU pixel width."""
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG payload (missing SOI)")
-    pos = 2
-    qtables: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], tuple] = {}
-    width = height = None
-    scan_start = None
-    comps: list[tuple[int, int]] = []  # frame order: (component id, quant id)
-    sel: dict[int, tuple[int, int]] = {}  # component id -> (dc table, ac table)
-    restart_interval = 0
-    while pos + 4 <= len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError(f"expected marker at {pos}")
-        marker = payload[pos + 1]
-        if marker == 0xD9:
-            break
-        size = struct.unpack(">H", payload[pos + 2 : pos + 4])[0]
-        body = payload[pos + 4 : pos + 2 + size]
-        if marker == 0xDB:
-            b = 0
-            while b < len(body):
-                pq, tq = body[b] >> 4, body[b] & 0xF
-                if pq != 0:
-                    raise ValueError("16-bit quant tables unsupported")
-                qtables[tq] = np.frombuffer(body[b + 1 : b + 65], dtype=np.uint8).astype(np.int64)
-                b += 65
-        elif marker == 0xC4:
-            b = 0
-            while b < len(body):
-                tc, th = body[b] >> 4, body[b] & 0xF
-                bits = list(body[b + 1 : b + 17])
-                nv = sum(bits)
-                vals = list(body[b + 17 : b + 17 + nv])
-                huff[(tc, th)] = _huff_decode_tables(bits, vals)
-                b += 17 + nv
-        elif marker == 0xC0:
-            _prec, height, width, ncomp = struct.unpack(">BHHB", body[:6])
-            if ncomp not in (1, 3):
-                raise ValueError("only 1- (gray) or 3-component (YCbCr) baseline supported")
-            comps = []
-            for ci in range(ncomp):
-                cid, samp, tq = body[6 + 3 * ci : 9 + 3 * ci]
-                h, v = samp >> 4, samp & 0xF
-                if not (1 <= h <= 4 and 1 <= v <= 4):
-                    raise ValueError(f"illegal sampling factors {h}x{v}")
-                comps.append((cid, tq, h, v))
-            if sum(h * v for _, _, h, v in comps) > 10:
-                raise ValueError("blocks per MCU > 10 (spec B.2.3)")
-            if ncomp == 1:
-                # single-component scans are non-interleaved: the MCU is one
-                # data unit regardless of the SOF sampling factors (A.2.2)
-                comps = [(comps[0][0], comps[0][1], 1, 1)]
-        elif marker == 0xC2:
-            # progressive DCT: multi-scan spectral-selection / successive-
-            # approximation stream — handled by the dedicated scan machinery
-            return _decode_progressive(payload)
-        elif marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB):
-            raise ValueError("only baseline (SOF0) and progressive (SOF2) DCT supported")
-        elif marker == 0xDD:
-            restart_interval = struct.unpack(">H", body[:2])[0]
-        elif marker == 0xDA:
-            ns = body[0]
-            if ns != len(comps):
-                raise ValueError("scan components != frame components")
-            for si in range(ns):
-                scid, tabs = body[1 + 2 * si], body[2 + 2 * si]
-                sel[scid] = (tabs >> 4, tabs & 0xF)
-            scan_start = pos + 2 + size
-            break
-        pos += 2 + size
-    if scan_start is None or width is None:
-        raise ValueError("missing SOS/SOF0")
-    C = _dct_matrix()
-    ncomp = len(comps)
-    hmax = max(h for _, _, h, _ in comps)
-    vmax = max(v for _, _, _, v in comps)
-    for _, _, h, v in comps:
-        if hmax % h or vmax % v:
-            # spec-legal but unused in practice; upsampling by replication
-            # needs integer ratios — refuse loudly rather than mis-decode
-            raise ValueError(f"non-integer sampling ratio {h}x{v} vs {hmax}x{vmax}")
-    # MCU grid: each MCU covers 8*hmax x 8*vmax pixels; component ci decodes
-    # h_i x v_i data units per MCU into a plane at its OWN resolution
-    mx = (width + 8 * hmax - 1) // (8 * hmax)
-    my = (height + 8 * vmax - 1) // (8 * vmax)
-    planes = [np.zeros((my * v * 8, mx * h * 8), dtype=np.uint8) for _, _, h, v in comps]
-    r = _BitReader(payload[scan_start:])
-    prev = [0] * ncomp
-    inv = np.argsort(_ZIGZAG)
-    for mcu in range(mx * my):
-        if restart_interval and mcu and mcu % restart_interval == 0:
-            m = r.restart()
-            if m != (mcu // restart_interval - 1) % 8:
-                raise ValueError("restart marker out of sequence")
-            prev = [0] * ncomp  # spec: predictors reset at every restart
-        mcu_y, mcu_x = divmod(mcu, mx)
-        for ci, (cid, tq, h, v) in enumerate(comps):
-            dc_id, ac_id = sel[cid]
-            for vv in range(v):
-                for hh in range(h):  # data-unit order within the MCU: raster
-                    zz, prev[ci] = _decode_block(
-                        r, huff[(0, dc_id)], huff[(1, ac_id)], prev[ci]
-                    )
-                    coef = (zz * qtables[tq])[inv].reshape(8, 8).astype(np.float64)
-                    pix = C.T @ coef @ C + 128.0
-                    y0, x0 = (mcu_y * v + vv) * 8, (mcu_x * h + hh) * 8
-                    planes[ci][y0 : y0 + 8, x0 : x0 + 8] = np.clip(
-                        np.round(pix), 0, 255
-                    ).astype(np.uint8)
-    # bring subsampled components to frame resolution by pixel replication
-    # (the box upsample every fast decoder defaults to), then crop the
-    # right/bottom MCU padding
-    full = [
-        np.repeat(np.repeat(p, vmax // v, axis=0), hmax // h, axis=1)[:height, :width]
-        for p, (_, _, h, v) in zip(planes, comps)
-    ]
-    pixels = full[0] if ncomp == 1 else np.stack(full, axis=-1)
-    return {
-        "width": int(width),
-        "height": int(height),
-        "pixels": pixels,
-        "ncomp": ncomp,
-        "sampling": [(h, v) for _, _, h, v in comps],
-        "mcu_w": 8 * hmax,
-    }
 
 
 def _scan_end(payload: bytes, start: int) -> int:
     """Index of the first marker that terminates an entropy-coded segment
-    (not a stuffed FF00, not RST0-7) — lets a multi-scan (progressive)
-    stream resume the marker walk after each scan's data."""
+    (not a stuffed FF00, not RST0-7) — lets the marker walk resume after
+    each scan's data."""
     i, n = start, len(payload)
     while i < n:
         i = payload.find(b"\xff", i)
@@ -1554,32 +1283,30 @@ def _prog_correct(coef: np.ndarray, k: int, r: "_BitReader", p1: int) -> None:
         coef[k] += p1 if coef[k] >= 0 else -p1
 
 
-def _prog_scan_dc(r, units, huff, sel, coefs, Ah, Al, restart_interval):
-    """DC scan (Ss=Se=0) over `units` = [(ci, by, bx), ...] in MCU order,
-    grouped per MCU for restart accounting. First pass (Ah=0): normal DPCM
-    decode, coefficient = predictor << Al. Refinement: one bit per data
-    unit, OR'd in at bit Al (two's-complement bit-planes, so negative DC
-    values reconstruct exactly)."""
-    ncomp = len(coefs)
-    prev = [0] * ncomp
+def _scan_dc(r, units, huff, sel, coefs, Ah, Al, restart_interval, baseline):
+    """DC scan over `units` = MCUs of (ci, by, bx). First pass (Ah=0):
+    DPCM decode, coefficient = predictor << Al; a baseline scan then reads
+    each block's 1..63 band too. Refinement (Ah>0): one bit per data unit,
+    OR'd in at bit Al (two's-complement bit-planes, so negative DC values
+    reconstruct exactly)."""
+    prev = [0] * len(coefs)
     for mcu, mcu_units in enumerate(units):
-        if restart_interval and mcu and mcu % restart_interval == 0:
-            m = r.restart()
-            if m != (mcu // restart_interval - 1) % 8:
-                raise ValueError("restart marker out of sequence")
-            prev = [0] * ncomp
+        if _restart(r, mcu, restart_interval):
+            prev = [0] * len(coefs)
         for ci, by, bx in mcu_units:
             if Ah == 0:
                 size = _read_symbol(r, *huff[(0, sel[ci][0])])
                 prev[ci] += _extend(r.take(size), size) if size else 0
                 coefs[ci][by, bx, 0] = prev[ci] << Al
+                if baseline:
+                    _decode_seq_ac(r, huff[(1, sel[ci][1])], coefs[ci][by, bx])
             elif r.take(1):
                 coefs[ci][by, bx, 0] |= 1 << Al
 
 
-def _prog_scan_ac(r, blocks, ac_tab, coef_arr, Ss, Se, Ah, Al, restart_interval):
-    """AC scan (single component, non-interleaved) over `blocks` = [(by, bx),
-    ...] in raster order. First pass (Ah=0): runs/EOBRUN/ZRL with values at
+def _scan_ac(r, units, ac_tab, coefs, Ss, Se, Ah, Al, restart_interval):
+    """AC scan (single component, non-interleaved) over `units`, one block
+    each, in raster order. First pass (Ah=0): runs/EOBRUN/ZRL with values at
     point transform Al. Refinement (Ah>0): the G.1.2.3 correction-bit walk —
     newly-significant coefficients arrive as ±1<<Al, every already-nonzero
     coefficient passed over (including the whole band of EOB-run blocks)
@@ -1587,13 +1314,10 @@ def _prog_scan_ac(r, blocks, ac_tab, coef_arr, Ss, Se, Ah, Al, restart_interval)
     only inter-block state."""
     p1 = 1 << Al
     eobrun = 0
-    for bi, (by, bx) in enumerate(blocks):
-        if restart_interval and bi and bi % restart_interval == 0:
-            m = r.restart()
-            if m != (bi // restart_interval - 1) % 8:
-                raise ValueError("restart marker out of sequence")
+    for bi, ((ci, by, bx),) in enumerate(units):
+        if _restart(r, bi, restart_interval):
             eobrun = 0
-        coef = coef_arr[by, bx]
+        coef = coefs[ci][by, bx]
         k = Ss
         if Ah == 0:
             if eobrun:
@@ -1649,41 +1373,52 @@ def _prog_scan_ac(r, blocks, ac_tab, coef_arr, Ss, Se, Ah, Al, restart_interval)
                 eobrun -= 1
 
 
-def _planes_from_coefs(coefs, comps, qtables, C, inv):
-    """Dequantize + inverse zigzag + IDCT a whole component of zigzag-order
-    coefficient blocks (by, bx, 64) -> uint8 plane (by*8, bx*8), vectorized
-    across blocks."""
+def _planes_from_coefs(coefs, comps, qtables):
+    """The one IDCT: dequantize + inverse zigzag + IDCT a whole component of
+    zigzag-order coefficient blocks (by, bx, 64) -> uint8 plane (by*8,
+    bx*8), vectorized across blocks."""
+    C = _dct_matrix()
+    inv = np.argsort(_ZIGZAG)
     out = []
     for (cid, tq, h, v), cf in zip(comps, coefs):
         deq = (cf * qtables[tq][None, None, :])[:, :, inv].astype(np.float64)
-        blocks = deq.reshape(*deq.shape[:2], 8, 8)
-        pix = np.einsum("ji,yxjk,kl->yxil", C, blocks, C) + 128.0
+        pix = C.T @ deq.reshape(*deq.shape[:2], 8, 8) @ C + 128.0
         plane = np.clip(np.round(pix), 0, 255).astype(np.uint8)
         out.append(plane.transpose(0, 2, 1, 3).reshape(plane.shape[0] * 8, plane.shape[1] * 8))
     return out
 
 
-def _decode_progressive(payload: bytes) -> dict:
-    """Progressive (SOF2) JPEG decoder: multi-scan marker walk where each
-    SOS carries a spectral band [Ss, Se] and successive-approximation bit
+def decode_jpeg(payload: bytes) -> dict:
+    """DCT JPEG decoder, baseline (SOF0) and progressive (SOF2), through one
+    marker walk (DQT/DHT/SOFn/DRI/SOS) that fills one per-component store
+    of zigzag coefficient blocks. A baseline frame is one interleaved scan
+    of whole blocks; a progressive frame is a scan script where each SOS
+    carries a spectral band [Ss, Se] and successive-approximation bit
     positions (Ah, Al) — DC scans (interleaved or not) first send the DPCM
     value at bit Al then one refinement bit per scan; AC scans (one
-    component each, non-interleaved) send runs/EOBRUN at bit Al then
-    correction-bit refinements. Coefficients accumulate across scans in
-    zigzag order per component and are dequantized + IDCT'd once at EOI.
-    Scan-header legality (B.2.3) is enforced: a DC band must be exactly
-    [0,0], AC bands must not cross 0 or interleave components."""
-    pos = 2
+    component each) send runs/EOBRUN at bit Al then correction-bit
+    refinements. Scans decode canonical Huffman with byte unstuffing and
+    restart intervals (RSTn sequence check, bit realign, DC predictor /
+    EOB-run reset). The store is then dequantized + IDCT'd once and level
+    shifted. One (grayscale) or three (YCbCr) components at any
+    integer-ratio sampling — 4:4:4, 4:2:2, 4:2:0 (data units in spec raster
+    order, subsampled planes box-upsampled to frame resolution).
+    Scan-header legality (B.2.3) is enforced for SOF2: a DC band must be
+    exactly [0,0], AC bands must not cross 0 or interleave components.
+    Arithmetic coding and the other SOF types raise.
+    Grayscale returns pixels (h, w); color returns pixels (h, w, 3) in frame
+    component order with ncomp=3, plus the parsed sampling factors, the MCU
+    pixel width and, for SOF2, progressive=True."""
+    if payload[:2] != b"\xff\xd8":
+        raise ValueError("not a JPEG payload (missing SOI)")
+    pos, restart_interval, progressive, scanned = 2, 0, False, False
     qtables: dict[int, np.ndarray] = {}
     huff: dict[tuple[int, int], tuple] = {}
-    width = height = None
-    comps: list[tuple[int, int, int, int]] = []
-    coefs: list[np.ndarray] = []
-    geom: dict[int, tuple] = {}  # ci -> (nb_x interleaved, nb_y, nb_x non-int, nb_y non-int)
-    sel: dict[int, tuple[int, int]] = {}
-    restart_interval = 0
-    hmax = vmax = mx = my = 1
-    while pos + 2 <= len(payload):
+    comps: list[tuple[int, int, int, int]] = []  # frame order: (id, quant id, h, v)
+    coefs: list[np.ndarray] = []  # per component, on the interleaved MCU grid
+    grids: list[tuple[int, int]] = []  # per component, its own block grid (A.2.2)
+    sel: dict[int, tuple[int, int]] = {}  # component -> (dc table, ac table)
+    while pos + 4 <= len(payload):
         if payload[pos] != 0xFF:
             raise ValueError(f"expected marker at {pos}")
         marker = payload[pos + 1]
@@ -1691,6 +1426,7 @@ def _decode_progressive(payload: bytes) -> dict:
             break
         size = struct.unpack(">H", payload[pos + 2 : pos + 4])[0]
         body = payload[pos + 4 : pos + 2 + size]
+        pos += 2 + size
         if marker == 0xDB:
             b = 0
             while b < len(body):
@@ -1708,11 +1444,15 @@ def _decode_progressive(payload: bytes) -> dict:
                 vals = list(body[b + 17 : b + 17 + nv])
                 huff[(tc, th)] = _huff_decode_tables(bits, vals)
                 b += 17 + nv
-        elif marker == 0xC2:
+        elif marker in _SOF_MARKERS:
+            if comps:
+                raise ValueError("mixed frame markers: one SOF0 or SOF2 per stream")
+            if marker not in (0xC0, 0xC2):
+                raise ValueError("only baseline (SOF0) and progressive (SOF2) DCT supported")
+            progressive = marker == 0xC2
             _prec, height, width, ncomp = struct.unpack(">BHHB", body[:6])
             if ncomp not in (1, 3):
-                raise ValueError("only 1- or 3-component progressive supported")
-            comps = []
+                raise ValueError("only 1- (gray) or 3-component (YCbCr) frames supported")
             for ci in range(ncomp):
                 cid, samp, tq = body[6 + 3 * ci : 9 + 3 * ci]
                 h, v = samp >> 4, samp & 0xF
@@ -1722,95 +1462,81 @@ def _decode_progressive(payload: bytes) -> dict:
             if sum(h * v for _, _, h, v in comps) > 10:
                 raise ValueError("blocks per MCU > 10 (spec B.2.3)")
             if ncomp == 1:
-                comps = [(comps[0][0], comps[0][1], 1, 1)]
-            hmax = max(h for _, _, h, _ in comps)
-            vmax = max(v for _, _, _, v in comps)
-            for _, _, h, v in comps:
+                # single-component scans are non-interleaved: the MCU is one
+                # data unit regardless of the SOF sampling factors (A.2.2)
+                comps = [comps[0][:2] + (1, 1)]
+            sampling = [(h, v) for _, _, h, v in comps]
+            hmax = max(h for h, _ in sampling)
+            vmax = max(v for _, v in sampling)
+            for h, v in sampling:
                 if hmax % h or vmax % v:
+                    # spec-legal but unused in practice; upsampling by replication
+                    # needs integer ratios — refuse loudly rather than mis-decode
                     raise ValueError(f"non-integer sampling ratio {h}x{v} vs {hmax}x{vmax}")
-            mx = (width + 8 * hmax - 1) // (8 * hmax)
-            my = (height + 8 * vmax - 1) // (8 * vmax)
-            for ci, (cid, tq, h, v) in enumerate(comps):
-                # coefficient store at interleaved-grid size; non-interleaved
-                # scans address only the component's own ceil-dims (A.2.2)
-                cw = (width * h + hmax - 1) // hmax
-                ch = (height * v + vmax - 1) // vmax
-                geom[ci] = (mx * h, my * v, (cw + 7) // 8, (ch + 7) // 8)
+            # MCU grid: each MCU covers 8*hmax x 8*vmax pixels
+            my, mx = (height + 8 * vmax - 1) // (8 * vmax), (width + 8 * hmax - 1) // (8 * hmax)
+            mcu_grid = (my, mx)
+            for h, v in sampling:
                 coefs.append(np.zeros((my * v, mx * h, 64), dtype=np.int64))
-        elif marker in (0xC0, 0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB):
-            raise ValueError("mixed frame markers in progressive stream")
+                cw, ch = (width * h + hmax - 1) // hmax, (height * v + vmax - 1) // vmax
+                grids.append(((ch + 7) // 8, (cw + 7) // 8))
         elif marker == 0xDD:
             restart_interval = struct.unpack(">H", body[:2])[0]
         elif marker == 0xDA:
             if not comps:
-                raise ValueError("SOS before SOF2")
+                raise ValueError("SOS before SOF0/SOF2")
             ns = body[0]
-            scan_cis = []
+            if not progressive and ns != len(comps):
+                raise ValueError("scan components != frame components")
+            cis = []
             for si in range(ns):
                 scid, tabs = body[1 + 2 * si], body[2 + 2 * si]
                 ci = next((i for i, c in enumerate(comps) if c[0] == scid), None)
                 if ci is None:
                     raise ValueError("scan component not in frame")
                 sel[ci] = (tabs >> 4, tabs & 0xF)
-                scan_cis.append(ci)
+                cis.append(ci)
             ss, se, ahal = body[1 + 2 * ns : 4 + 2 * ns]
             ah, al = ahal >> 4, ahal & 0xF
-            scan_start = pos + 2 + size
-            end = _scan_end(payload, scan_start)
-            r = _BitReader(payload[scan_start:end])
+            end = _scan_end(payload, pos)
+            r = _BitReader(payload[pos:end])
+            units = _scan_units(cis, sampling, mcu_grid, grids)
+            pos, scanned = end, True
+            if not progressive:  # Ss/Se/Ah/Al are fixed for SOF0; ignore them
+                _scan_dc(r, units, huff, sel, coefs, 0, 0, restart_interval, True)
+                break  # a baseline frame is its one scan
             if ss == 0:
                 if se != 0:
                     raise ValueError("DC scan band must be [0,0] (B.2.3)")
-                if len(scan_cis) > 1:
-                    units = [
-                        [
-                            (ci, mcu_y * comps[ci][3] + vv, mcu_x * comps[ci][2] + hh)
-                            for ci in scan_cis
-                            for vv in range(comps[ci][3])
-                            for hh in range(comps[ci][2])
-                        ]
-                        for mcu_y in range(my)
-                        for mcu_x in range(mx)
-                    ]
-                else:
-                    ci = scan_cis[0]
-                    _, _, nbx, nby = geom[ci]
-                    units = [[(ci, by, bx)] for by in range(nby) for bx in range(nbx)]
-                _prog_scan_dc(r, units, huff, sel, coefs, ah, al, restart_interval)
+                _scan_dc(r, units, huff, sel, coefs, ah, al, restart_interval, False)
             else:
-                if len(scan_cis) != 1:
+                if len(cis) != 1:
                     raise ValueError("AC scans must be non-interleaved (B.2.3)")
                 if se > 63 or ss > se:
                     raise ValueError("illegal spectral band")
-                ci = scan_cis[0]
-                _, _, nbx, nby = geom[ci]
-                blocks = [(by, bx) for by in range(nby) for bx in range(nbx)]
-                _prog_scan_ac(
-                    r, blocks, huff[(1, sel[ci][1])], coefs[ci], ss, se, ah, al, restart_interval
-                )
-            pos = end
-            continue
-        pos += 2 + size
-    if not comps or width is None:
-        raise ValueError("missing SOF2/SOS")
-    C = _dct_matrix()
-    inv = np.argsort(_ZIGZAG)
-    planes = _planes_from_coefs(coefs, comps, qtables, C, inv)
+                ac_tab = huff[(1, sel[cis[0]][1])]
+                _scan_ac(r, units, ac_tab, coefs, ss, se, ah, al, restart_interval)
+    if not comps or not (scanned or progressive):
+        raise ValueError("missing SOF0/SOF2 or SOS")
+    planes = _planes_from_coefs(coefs, comps, qtables)
+    # bring subsampled components to frame resolution by pixel replication
+    # (the box upsample every fast decoder defaults to), then crop the
+    # right/bottom MCU padding
     full = [
         np.repeat(np.repeat(p, vmax // v, axis=0), hmax // h, axis=1)[:height, :width]
-        for p, (_, _, h, v) in zip(planes, comps)
+        for p, (h, v) in zip(planes, sampling)
     ]
-    ncomp = len(comps)
-    pixels = full[0] if ncomp == 1 else np.stack(full, axis=-1)
-    return {
+    out = {
         "width": int(width),
         "height": int(height),
-        "pixels": pixels,
-        "ncomp": ncomp,
-        "sampling": [(h, v) for _, _, h, v in comps],
+        "pixels": full[0] if len(comps) == 1 else np.stack(full, axis=-1),
+        "ncomp": len(comps),
+        "sampling": sampling,
         "mcu_w": 8 * hmax,
-        "progressive": True,
     }
+    if progressive:
+        out["progressive"] = True
+    return out
 
 
 # -------------------------------------------------------------- ISO BMFF
@@ -1849,26 +1575,22 @@ def _mp4_stsc_runs(chunk_sample_counts: list[int]) -> list[tuple[int, int]]:
 
 def mp4_bytes(
     frames: list[bytes],
-    width: int | None = None,
-    height: int = 1,
-    timescale: int = 1000,
-    sample_delta: int = 40,
-    fourcc: bytes = b"gry8",
     samples_per_chunk: int = 2,
     co64: bool = False,
     largesize_mdat: bool = False,
     version1: bool = False,
 ) -> bytes:
     """Minimal valid ISO BMFF (MP4) writer: ftyp + mdat (frame payloads) +
-    moov carrying a full video sample table. Frames are grouped
-    `samples_per_chunk` per chunk so a decoder's stsc/stco chunk walk is
+    moov carrying a full video sample table: codec tag "gry8", one gray row
+    per frame (width = the first frame's size), 40 ms per sample at a 1 kHz
+    timescale. Frames are grouped `samples_per_chunk` per chunk so a decoder's stsc/stco chunk walk is
     genuinely exercised (a trailing short chunk produces a second stsc run).
     `co64` writes 64-bit chunk offsets, `largesize_mdat` a size==1/u64 mdat
     header, `version1` v1 mvhd/mdhd/tkhd (64-bit times) — the corner shapes
     a real corpus contains."""
     n = len(frames)
-    if width is None:
-        width = len(frames[0]) if frames else 0
+    width, height = (len(frames[0]) if frames else 0), 1
+    timescale, sample_delta = 1000, 40
     duration = n * sample_delta
 
     mdat_hdr = (
@@ -1920,7 +1642,7 @@ def mp4_bytes(
     hdlr = _mp4_full(b"hdlr", 0, 0, b"\x00" * 4 + b"vide" + b"\x00" * 12 + b"aq\x00")
 
     sample_entry = _mp4_box(
-        fourcc,
+        b"gry8",
         b"\x00" * 6 + struct.pack(">H", 1)  # reserved, data_reference_index
         + b"\x00" * 16                       # pre_defined / reserved
         + struct.pack(">HH", width, height)
@@ -2187,9 +1909,9 @@ def mp3_frame_len(version: str, layer: int, bitrate_idx: int, sr_idx: int, paddi
 
 
 def _mp3_header(
-    version: str, layer: int, bitrate_idx: int, sr_idx: int,
-    padding: int = 0, channel_mode: int = 3, crc: bool = False,
+    version: str, layer: int, bitrate_idx: int, sr_idx: int, padding: int = 0, crc: bool = False
 ) -> bytes:
+    """A mono (channel mode 3) MPEG audio frame header."""
     hdr = (
         (0x7FF << 21)
         | (_MP3_VER_BITS[version] << 19)
@@ -2198,36 +1920,33 @@ def _mp3_header(
         | (bitrate_idx << 12)
         | (sr_idx << 10)
         | (padding << 9)
-        | (channel_mode << 6)
+        | (3 << 6)
     )
     return struct.pack(">I", hdr)
 
 
 def mp3_frame_bytes(
     payload: bytes, version: str = "1", layer: int = 3, bitrate_idx: int = 9,
-    sr_idx: int = 0, padding: int = 0, channel_mode: int = 3, crc: bool = False,
+    sr_idx: int = 0, padding: int = 0, crc: bool = False,
 ) -> bytes:
-    """One spec-exact MPEG audio frame with a tabled bitrate: the payload must
-    fill the frame's data slot exactly (frame_len - 4 header - 2 if CRC)."""
+    """One spec-exact mono MPEG audio frame with a tabled bitrate: the payload
+    must fill the frame's data slot exactly (frame_len - 4 header - 2 if CRC)."""
     flen = mp3_frame_len(version, layer, bitrate_idx, sr_idx, padding)
     cap = flen - 4 - (2 if crc else 0)
     if len(payload) != cap:
         raise ValueError(f"payload must be exactly {cap} bytes for this header, got {len(payload)}")
-    head = _mp3_header(version, layer, bitrate_idx, sr_idx, padding, channel_mode, crc)
+    head = _mp3_header(version, layer, bitrate_idx, sr_idx, padding, crc)
     body = (b"\x00\x00" if crc else b"") + payload  # CRC value itself is codec-checked, not ours
     return head + body
 
 
-def mp3_free_bytes(
-    frames: list[bytes], version: str = "1", layer: int = 3, sr_idx: int = 2,
-    channel_mode: int = 3,
-) -> bytes:
-    """Free-format (bitrate index 0) MPEG audio stream: every frame carries
-    the same header and an arbitrary-but-constant data size; decoders size
-    the frames by scanning to the next sync (ISO 11172-3 allows exactly
-    this). Frame payloads must not contain 0xFF bytes (valid UTF-8 never
-    does), which the writer enforces."""
-    head = _mp3_header(version, layer, 0, sr_idx, 0, channel_mode)
+def mp3_free_bytes(frames: list[bytes]) -> bytes:
+    """Free-format (bitrate index 0) MPEG-1 Layer III mono stream at 32 kHz:
+    every frame carries the same header and an arbitrary-but-constant data
+    size; decoders size the frames by scanning to the next sync (ISO
+    11172-3 allows exactly this). Frame payloads must not contain 0xFF bytes
+    (valid UTF-8 never does), which the writer enforces."""
+    head = _mp3_header("1", 3, 0, 2)
     for f in frames:
         if b"\xff" in f:
             raise ValueError("free-format frame payloads must not contain 0xFF (false sync)")
@@ -2334,13 +2053,31 @@ def decode_mp3(payload: bytes) -> dict:
     }
 
 
+def _container(payload: bytes) -> str:
+    """The container a payload's magic bytes name: "wav" (RIFF), "png",
+    "mp4" (ftyp box at byte 4), "gif", "mp3" (ID3 tag or an MPEG frame
+    sync), "jpeg" (SOI), "ppm" (P6), "bmp", or "" for none. The checks run
+    in this order, so every caller resolves a payload the same way."""
+    if payload[:4] == b"RIFF":
+        return "wav"
+    if payload[: len(_PNG_SIG)] == _PNG_SIG:
+        return "png"
+    if payload[4:8] == b"ftyp":
+        return "mp4"
+    if payload[:6] in (b"GIF87a", b"GIF89a"):
+        return "gif"
+    if payload[:3] == b"ID3" or (len(payload) >= 2 and payload[0] == 0xFF and payload[1] & 0xE0 == 0xE0):
+        return "mp3"
+    return {b"\xff\xd8": "jpeg", b"P6": "ppm", b"BM": "bmp"}.get(payload[:2], "")
+
+
 def _audio_features_real(payload: bytes, dim: int) -> np.ndarray:
     """Real audio features from a WAV payload: [sample_rate, channels, bits,
     n_samples, duration_ms] + per-chunk RMS energy filling the remaining dims.
     MP3 payloads (ID3 prefix or frame sync) take the frame walk instead: bits
     slot carries the layer, chunk energies the per-frame byte means (the
     registry-seam stand-in for the Huffman codec)."""
-    if payload[:3] == b"ID3" or (len(payload) >= 2 and payload[0] == 0xFF and payload[1] & 0xE0 == 0xE0):
+    if _container(payload) == "mp3":
         mp3 = decode_mp3(payload)
         head = [
             float(mp3["sample_rate"]),
@@ -2377,23 +2114,18 @@ def _audio_features_real(payload: bytes, dim: int) -> np.ndarray:
 
 
 def _image_features_real(payload: bytes, dim: int) -> np.ndarray:
-    """Real image features from a PPM or BMP payload (sniffed by magic):
-    [width, height, mean R, mean G, mean B] + grayscale block means."""
-    if payload[:2] == b"P6":
-        img = decode_ppm(payload)
-    elif payload[:2] == b"BM":
-        img = decode_bmp(payload)
-    elif payload[: len(_PNG_SIG)] == _PNG_SIG:
-        img = dict(decode_png(payload))
-        if img["pixels"].ndim == 2:
-            img["pixels"] = np.repeat(img["pixels"][:, :, None], 3, axis=2)  # gray->RGB
-    elif payload[:2] == b"\xff\xd8":
-        img = dict(decode_jpeg(payload))
-        if img["pixels"].ndim == 2:
-            img["pixels"] = np.repeat(img["pixels"][:, :, None], 3, axis=2)  # gray->RGB
-    else:
+    """Real image features from a PPM, BMP, PNG or JPEG payload (sniffed by
+    magic): [width, height, mean R, mean G, mean B] + grayscale block means."""
+    decode = {"ppm": decode_ppm, "bmp": decode_bmp, "png": decode_png, "jpeg": decode_jpeg}.get(
+        _container(payload)
+    )
+    if decode is None:
         raise ValueError("unsupported image container (PPM/BMP/PNG/DCT-JPEG only without codec libs)")
-    flat = img["pixels"].reshape(-1, 3).astype(np.float64)
+    img = decode(payload)
+    px = img["pixels"]
+    if px.ndim == 2:
+        px = np.repeat(px[:, :, None], 3, axis=2)  # gray->RGB
+    flat = px.reshape(-1, 3).astype(np.float64)
     means = flat.mean(axis=0) if flat.size else np.zeros(3)
     head = [float(img["width"]), float(img["height"]), means[0], means[1], means[2]]
     k = max(dim - len(head), 0)
@@ -2413,7 +2145,7 @@ def _video_features_real(payload: bytes, dim: int) -> np.ndarray:
     frame count). For MP4 the per-frame bytes come from the real sample-table
     walk; interpreting them as gray values is the registry-seam stand-in for
     the codec."""
-    if len(payload) >= 8 and payload[4:8] == b"ftyp":
+    if _container(payload) == "mp4":
         mp4 = decode_mp4(payload)
         frames = [np.frombuffer(s, dtype=np.uint8).astype(np.float64) for s in mp4["samples"]]
         w, h, n = mp4["width"], mp4["height"], mp4["n_samples"]
@@ -2547,7 +2279,7 @@ def gif_frame_sample(df: DataFrame, every_n: int = 2) -> DataFrame:
 
     def frames(kind, payload):
         payload = bytes(payload or b"")
-        if payload[:6] not in (b"GIF87a", b"GIF89a"):
+        if _container(payload) != "gif":
             return []
         return [f.tobytes() for f in decode_gif(payload)["frames"]]
 
@@ -2562,7 +2294,7 @@ def mp4_frame_sample(df: DataFrame, every_n: int = 2) -> DataFrame:
 
     def samples(kind, payload):
         payload = bytes(payload or b"")
-        if len(payload) < 8 or payload[4:8] != b"ftyp":
+        if _container(payload) != "mp4":
             return []
         return decode_mp4(payload)["samples"]
 
@@ -2724,9 +2456,8 @@ def docs_to_media(docs: DataFrame, fixture: str, limit: int | None = None) -> Da
 
 def decode_real_summary(media: DataFrame) -> DataFrame:
     """REAL-decode summary — the oracle-gated proof that `use_real` decoding
-    round-trips: each payload is container-sniffed by magic (RIFF -> WAV incl.
-    G.711, PNG signature -> PNG, ftyp -> MP4, GIF87a/89a -> GIF, ID3 or an
-    MPEG sync word -> MP3, FFD8 -> JPEG, anything else -> P6 PPM) and decoded
+    round-trips: each payload is container-sniffed by magic (_container: WAV
+    incl. G.711, PNG, MP4, GIF, MP3, JPEG; anything else -> P6 PPM) and decoded
     by the pure-numpy/stdlib parsers, then the DECODED samples/pixels/frames
     are re-serialized and md5'd. The digest equals md5 of the source text
     bytes only if chunk walking, header parsing and sample/pixel extraction —
@@ -2738,7 +2469,8 @@ def decode_real_summary(media: DataFrame) -> DataFrame:
             rows: dict[str, list] = {k.name: [] for k in REAL_SUMMARY_SCHEMA.fields}
             for mid, kind, payload in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
                 payload = bytes(payload or b"")
-                if payload[:4] == b"RIFF":
+                container = _container(payload)
+                if container == "wav":
                     wav = decode_wav(payload)
                     if wav.get("codec") in ("ulaw", "alaw"):
                         # companded stream: the digest gates BOTH directions —
@@ -2752,7 +2484,7 @@ def decode_real_summary(media: DataFrame) -> DataFrame:
                     rows["duration_ms"].append(
                         wav["n_samples"] * 1000 // wav["sample_rate"]
                     )
-                elif payload[: len(_PNG_SIG)] == _PNG_SIG:
+                elif container == "png":
                     img = decode_png(payload)
                     # the builders write `height` identical rows of the
                     # source bytes, so the md5 covers EVERY row — each row
@@ -2764,7 +2496,7 @@ def decode_real_summary(media: DataFrame) -> DataFrame:
                     rows["n_units"].append(img["width"])
                     rows["rate"].append(int(img["width"]))
                     rows["duration_ms"].append(int(img["height"]))
-                elif len(payload) >= 8 and payload[4:8] == b"ftyp":
+                elif container == "mp4":
                     mp4 = decode_mp4(payload)
                     # the builder writes identical frame payloads chunked
                     # 2-per-chunk, so the md5 covers every sample sliced via
@@ -2773,7 +2505,7 @@ def decode_real_summary(media: DataFrame) -> DataFrame:
                     rows["n_units"].append(mp4["width"])
                     rows["rate"].append(int(mp4["n_samples"]))
                     rows["duration_ms"].append(int(mp4["duration_ms"]))
-                elif payload[:6] in (b"GIF87a", b"GIF89a"):
+                elif container == "gif":
                     gif = decode_gif(payload)
                     # the builder writes identical full-canvas frames under
                     # disposal 1, so the md5 covers EVERY frame's composited
@@ -2783,9 +2515,7 @@ def decode_real_summary(media: DataFrame) -> DataFrame:
                     rows["n_units"].append(gif["width"])
                     rows["rate"].append(int(gif["n_frames"]))
                     rows["duration_ms"].append(int(gif["height"]))
-                elif payload[:3] == b"ID3" or (
-                    len(payload) >= 2 and payload[0] == 0xFF and payload[1] & 0xE0 == 0xE0
-                ):
+                elif container == "mp3":
                     mp3 = decode_mp3(payload)
                     # the builder writes identical free-format frame payloads
                     # between ID3v2/ID3v1 tags, so the md5 covers every
@@ -2794,7 +2524,7 @@ def decode_real_summary(media: DataFrame) -> DataFrame:
                     rows["n_units"].append(len(mp3["frames"][0]))
                     rows["rate"].append(int(mp3["sample_rate"]))
                     rows["duration_ms"].append(int(mp3["duration_ms"]))
-                elif payload[:2] == b"\xff\xd8":
+                elif container == "jpeg":
                     img = decode_jpeg(payload)
                     # one byte per MCU (the builders' layout): top-left pixel
                     # of each MCU across the single MCU row — stride = the

@@ -689,6 +689,7 @@ def test_jpeg_color_dri_roundtrip_exact():
         decode_jpeg,
         jpeg_bytes,
         jpeg_color_bytes,
+        jpeg_progressive_bytes,
     )
 
     rng = np.random.RandomState(11)
@@ -708,24 +709,30 @@ def test_jpeg_color_dri_roundtrip_exact():
             assert all(
                 (plane[:, 8 * i : 8 * i + 8] == exp[i, ci]).all() for i in range(n)
             )
-    # a corrupted restart sequence refuses instead of silently de-syncing
-    payload = bytearray(jpeg_color_bytes(bytes(range(16)), restart_interval=4))
-    i = payload.find(b"\xff\xd0", 2)
-    assert i > 0
-    payload[i + 1] = 0xD3  # out-of-sequence RSTn
-    with pytest.raises(ValueError, match="restart"):
-        decode_jpeg(bytes(payload))
-    # spec-violating sampling still refuses loudly: >10 blocks per MCU
-    # (B.2.3) and non-integer h/v ratios (box upsample would mis-decode)
-    pc = bytearray(jpeg_color_bytes(b"abc"))
-    j = pc.find(b"\xff\xc0")
-    pc[j + 2 + 2 + 6 + 1] = 0x33  # Y at 3x3 -> 9+1+1 = 11 blocks/MCU
-    with pytest.raises(ValueError, match="blocks per MCU"):
-        decode_jpeg(bytes(pc))
-    pc[j + 2 + 2 + 6 + 1] = 0x31  # Y 3x1 vs Cb 2x1: 3 % 2 != 0
-    pc[j + 2 + 2 + 9 + 1] = 0x21
-    with pytest.raises(ValueError, match="non-integer"):
-        decode_jpeg(bytes(pc))
+    # the same refusals hold for a baseline (SOF0) and a progressive (SOF2)
+    # color stream
+    for sof, make in (
+        (0xC0, lambda data, ri=None: jpeg_color_bytes(data, restart_interval=ri)),
+        (0xC2, lambda data, ri=None: jpeg_progressive_bytes(data, restart_interval=ri, ncomp=3)),
+    ):
+        # a corrupted restart sequence refuses instead of silently de-syncing
+        payload = bytearray(make(bytes(range(16)), 4))
+        i = payload.find(b"\xff\xd0", 2)
+        assert i > 0
+        payload[i + 1] = 0xD3  # out-of-sequence RSTn
+        with pytest.raises(ValueError, match="restart"):
+            decode_jpeg(bytes(payload))
+        # spec-violating sampling still refuses loudly: >10 blocks per MCU
+        # (B.2.3) and non-integer h/v ratios (box upsample would mis-decode)
+        pc = bytearray(make(b"abc"))
+        j = pc.find(bytes([0xFF, sof]))
+        pc[j + 2 + 2 + 6 + 1] = 0x33  # Y at 3x3 -> 9+1+1 = 11 blocks/MCU
+        with pytest.raises(ValueError, match="blocks per MCU"):
+            decode_jpeg(bytes(pc))
+        pc[j + 2 + 2 + 6 + 1] = 0x31  # Y 3x1 vs Cb 2x1: 3 % 2 != 0
+        pc[j + 2 + 2 + 9 + 1] = 0x21
+        with pytest.raises(ValueError, match="non-integer"):
+            decode_jpeg(bytes(pc))
 
 
 def test_jpeg_color_decode_summary_matches_source(spark):
@@ -804,40 +811,17 @@ def test_jpeg420_subsampled_roundtrip_exact():
 
 def test_jpeg422_handbuilt_stream_decodes():
     """4:2:2 (Y 2x1): a hand-assembled stream through the library's own
-    header/entropy helpers decodes with the right MCU geometry — two luma
-    blocks side by side per MCU, chroma upsampled horizontally only."""
+    stream writer decodes with the right MCU geometry — two luma blocks side
+    by side per MCU, chroma upsampled horizontally only."""
     import numpy as np
 
-    from aqueduct_core_spark.functions.multimodal import (
-        _AC_BITS,
-        _AC_VALS,
-        _BitWriter,
-        _DC_BITS,
-        _DC_VALS,
-        _dct_matrix,
-        _encode_const_block,
-        _huff_codes,
-        _jpeg_headers,
-        decode_jpeg,
-    )
+    from aqueduct_core_spark.functions.multimodal import _dc_blocks, _jpeg_stream, decode_jpeg
 
-    q = np.ones(64, dtype=np.int64)
-    dc = _huff_codes(_DC_BITS, _DC_VALS)
-    ac = _huff_codes(_AC_BITS, _AC_VALS)
-    C = _dct_matrix()
     mcus = [(10, 200, 30, 240), (90, 60, 130, 20)]  # (y0, y1, cb, cr) per MCU
-    w = _BitWriter()
-    prev = [0, 0, 0]
-    for y0, y1, cb, cr in mcus:
-        prev[0] = _encode_const_block(w, y0, prev[0], q, dc, ac, C)
-        prev[0] = _encode_const_block(w, y1, prev[0], q, dc, ac, C)
-        prev[1] = _encode_const_block(w, cb, prev[1], q, dc, ac, C)
-        prev[2] = _encode_const_block(w, cr, prev[2], q, dc, ac, C)
-    jp = (
-        _jpeg_headers(q, 32, 8, 3, None, sampling=[(2, 1), (1, 1), (1, 1)])
-        + w.flush()
-        + b"\xff\xd9"
-    )
+    cols = np.array(mcus, dtype=np.int64).T  # (4, n_mcus): y0, y1, cb, cr rows
+    luma = np.stack(cols[:2], axis=-1).reshape(1, -1)  # blocks y0 y1 per MCU
+    blocks = [_dc_blocks(luma), _dc_blocks(cols[2:3]), _dc_blocks(cols[3:4])]
+    jp = _jpeg_stream(blocks, 32, 8, [(2, 1), (1, 1), (1, 1)])
     img = decode_jpeg(jp)
     assert img["sampling"] == [(2, 1), (1, 1), (1, 1)] and img["mcu_w"] == 16
     assert img["pixels"].shape == (8, 32, 3)
@@ -907,6 +891,47 @@ def test_jpeg_progressive_roundtrip_exact():
                     assert (px[0, ::8, ci] == exp[:, ci]).all(), (n, ri, ci)
 
 
+def test_jpeg_progressive_rejects_illegal_streams():
+    """Each mutation of a valid color SOF2 stream breaks one scan-header
+    (B.2.3) or frame rule and must raise instead of mis-decoding."""
+    import struct
+
+    from aqueduct_core_spark.functions.multimodal import decode_jpeg, jpeg_progressive_bytes
+
+    good = jpeg_progressive_bytes(b"abc", ncomp=3)
+    assert decode_jpeg(good)["progressive"] is True
+
+    def segment(marker, nth=0):
+        """(start, end) of the nth marker segment of `good` with this marker."""
+        i = -1
+        for _ in range(nth + 1):
+            i = good.index(bytes([0xFF, marker]), i + 1)
+        return i, i + 2 + struct.unpack(">H", good[i + 2 : i + 4])[0]
+
+    def refused(stream, match):
+        with pytest.raises(ValueError, match=match):
+            decode_jpeg(bytes(stream))
+
+    # scan 0 is the interleaved DC first scan: ns, 3 x (id, tables), Ss, Se, AhAl
+    s0, e0 = segment(0xDA)
+    bad = bytearray(good)
+    bad[e0 - 2] = 5  # DC band [0,5]
+    refused(bad, "B.2.3")
+    bad = bytearray(good)
+    bad[s0 + 5] = 9  # component id 9: no such frame component
+    refused(bad, "not in frame")
+    # scan 2 is component 1's AC first scan; make it name component 2 too
+    s2, e2 = segment(0xDA, 2)
+    sos = bytes([2, 1, 0x00, 2, 0x00]) + good[e2 - 3 : e2]
+    sos = b"\xff\xda" + struct.pack(">H", len(sos) + 2) + sos
+    refused(good[:s2] + sos + good[e2:], "non-interleaved")
+    # the frame header moved behind every scan: SOS comes before SOF2
+    fs, fe = segment(0xC2)
+    refused(good[:fs] + good[fe:-2] + good[fs:fe] + good[-2:], "SOS before|scan components")
+    # a SOF0 copy of the frame header right after the SOF2 one
+    refused(good[:fe] + b"\xff\xc0" + good[fs + 2 : fe] + good[fe:], "mixed frame markers")
+
+
 def test_jpeg_progressive_successive_approximation_exact():
     """The full SA machinery against random NON-constant blocks: split
     spectral bands, a three-level refinement chain (Al 2 -> 1 -> 0) for DC
@@ -919,14 +944,13 @@ def test_jpeg_progressive_successive_approximation_exact():
     from aqueduct_core_spark.functions.multimodal import (
         _ZIGZAG,
         _dct_matrix,
-        _progressive_stream,
+        _jpeg_stream,
         decode_jpeg,
     )
 
     rng = np.random.RandomState(29)
     C = _dct_matrix()
     inv = np.argsort(_ZIGZAG)
-    q = np.ones(64, dtype=np.int64)
     scans = [
         ("dc", [0], 0, 2), ("dc", [0], 2, 1), ("dc", [0], 1, 0),
         ("ac", 0, 1, 20, 0, 2), ("ac", 0, 21, 63, 0, 2),
@@ -942,7 +966,7 @@ def test_jpeg_progressive_successive_approximation_exact():
             blocks[0, i, idx] = rng.randint(-120, 121, size=nz)
             blocks[0, i, 0] = rng.randint(-1000, 1001)
         ri = [None, 1, 3, 7][trial % 4]
-        enc = _progressive_stream([blocks], 8 * nb, 8, [(1, 1)], q, scans, restart_interval=ri)
+        enc = _jpeg_stream([blocks], 8 * nb, 8, [(1, 1)], scans, restart_interval=ri)
         img = decode_jpeg(enc)
         for i in range(nb):
             coef = blocks[0, i][inv].reshape(8, 8).astype(float)
@@ -956,7 +980,7 @@ def test_jpeg_progressive_successive_approximation_exact():
         ("ac", 0, 1, 63, 0, 3), ("ac", 0, 1, 63, 3, 2),
         ("ac", 0, 1, 63, 2, 1), ("ac", 0, 1, 63, 1, 0),
     ]
-    enc = _progressive_stream([blocks], 48, 8, [(1, 1)], q, dense_scans, restart_interval=2)
+    enc = _jpeg_stream([blocks], 48, 8, [(1, 1)], dense_scans, restart_interval=2)
     img = decode_jpeg(enc)
     for i in range(6):
         coef = blocks[0, i][inv].reshape(8, 8).astype(float)
@@ -973,7 +997,7 @@ def test_jpeg_progressive_subsampled_roundtrip_exact():
 
     from aqueduct_core_spark.functions.multimodal import (
         _color_planes_of,
-        _progressive_stream,
+        _jpeg_stream,
         _y_quad_of,
         decode_jpeg,
     )
@@ -989,15 +1013,14 @@ def test_jpeg_progressive_subsampled_roundtrip_exact():
         Y[0, 2 * i, 0], Y[0, 2 * i + 1, 0] = 8 * (q4[0] - 128), 8 * (q4[1] - 128)
         Y[1, 2 * i, 0], Y[1, 2 * i + 1, 0] = 8 * (q4[2] - 128), 8 * (q4[3] - 128)
         Cb[0, i, 0], Cr[0, i, 0] = 8 * (cb - 128), 8 * (cr - 128)
-    q = np.ones(64, dtype=np.int64)
     scans = [
         ("dc", [0, 1, 2], 0, 1), ("dc", [0, 1, 2], 1, 0),
         ("ac", 0, 1, 63, 0, 1), ("ac", 1, 1, 63, 0, 1), ("ac", 2, 1, 63, 0, 1),
         ("ac", 0, 1, 63, 1, 0), ("ac", 1, 1, 63, 1, 0), ("ac", 2, 1, 63, 1, 0),
     ]
     for ri in (None, 2, 5):
-        enc = _progressive_stream(
-            [Y, Cb, Cr], 16 * n, 16, [(2, 2), (1, 1), (1, 1)], q, scans, restart_interval=ri
+        enc = _jpeg_stream(
+            [Y, Cb, Cr], 16 * n, 16, [(2, 2), (1, 1), (1, 1)], scans, restart_interval=ri
         )
         img = decode_jpeg(enc)
         assert img["progressive"] and img["sampling"] == [(2, 2), (1, 1), (1, 1)]

@@ -1,15 +1,18 @@
 """Every multimodal_* contract query against its DuckDB oracle twin at
 sf0.001, compared the way tools/check_oracles.py compares them (column
-names, then order-insensitive normalised rows). The full gate over every
-entry is `python tools/check_oracles.py <sf_dir>`."""
+names, then order-insensitive normalised rows), plus the payload bytes of
+every media fixture behind them. The full gate over every entry is
+`python tools/check_oracles.py <sf_dir>`."""
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 import pytest
 
 import __spark_entry__ as entry
+from aqueduct_core_spark.functions.multimodal import MEDIA_FIXTURES
 from tools.check_oracles import norm_rows
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -40,3 +43,40 @@ def test_multimodal_entry_matches_oracle(spark, duck, name):
     dcols = [c.lower() for c in rel.columns]
     assert sorted(scols) == sorted(dcols)
     assert norm_rows(scols, [tuple(r) for r in sdf.collect()]) == norm_rows(dcols, rel.fetchall())
+
+
+#: (doc_id, text) inputs covering both doc_id parities and all three
+#: residues mod 3 (the fixtures switch container / color type on them),
+#: empty text, a non-ASCII byte and a long varied text
+PAYLOAD_INPUTS = [
+    (0, "hello world"),
+    (1, "caffé"),
+    (2, ""),
+    (5, "x" * 300),
+    (7, "".join(chr(32 + i * 7 % 95) for i in range(1200))),
+]
+
+#: md5 over kind + payload + repr(sorted(meta)) of every input, in order.
+#: The oracles check decoded content only; these pin the encoded bytes.
+PAYLOAD_MD5 = {
+    "wav_ppm": "6a5ddfaac80a22354645ee2da78af4b5",
+    "jpeg": "07e608624afafdf5b31295f7c46c7486",
+    "jpeg_color": "be23193eb14995dc8e335f0831b15590",
+    "jpeg420": "d246a292864c7df51d6f48e3d2d6b578",
+    "jpeg_progressive": "39cee64021f3713f7eb028a47763c002",
+    "png": "72d29a635fcfe018203077c53522a4c8",
+    "png_adam7": "caaf6d37e10566f46fb062fc8a681143",
+    "gif": "381e444352edd81613d3e6a65f766b51",
+    "mp4": "efe8758259f8729d4feefbad237d07d1",
+    "mp3": "8929a8df63787719a817173868fec97a",
+    "g711": "a64cbda12e6fa634a34875a36fb13f1c",
+}
+
+
+@pytest.mark.parametrize("fixture", sorted(MEDIA_FIXTURES))
+def test_fixture_payload_bytes_pinned(fixture):
+    h = hashlib.md5()
+    for did, text in PAYLOAD_INPUTS:
+        kind, payload, meta = MEDIA_FIXTURES[fixture](did, text.encode("utf-8"))
+        h.update(kind.encode() + payload + repr(sorted(meta.items())).encode())
+    assert h.hexdigest() == PAYLOAD_MD5[fixture]
