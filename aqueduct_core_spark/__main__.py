@@ -9,6 +9,10 @@ spark-submit):
         --checkpoint /ckpt/transcripts --buckets 256 \\
         --max-files-per-trigger 64 [--continuous 30s] [--normalize]
 
+    # the tail loop: failover over a follow chain, Retry-After pacing
+    python -m aqueduct_core_spark ingest --follow /mirror/a,/cloud/feed \
+        --adaptive --table /lake/transcripts --checkpoint /ckpt/transcripts
+
     python -m aqueduct_core_spark compact --table /lake/transcripts \\
         --retain-tombstones-until "2024-01-01 00:00:00"
 
@@ -70,33 +74,20 @@ def cmd_ingest(args) -> int:
     )
     if args.bootstrap:
         eng.bootstrap(args.bootstrap, delay_ms=args.bootstrap_delay_ms)
-    if args.follow:
-        # failover tail over an ordered follow chain (registry semantics);
-        # --adaptive composes the Retry-After pacing cycle into the same loop
+    rounds = []
+    if args.follow or args.adaptive:
+        # the tail loop: failover over an ordered follow chain (registry
+        # semantics) and/or the adaptive Retry-After pacing cycle
+        from aqueduct_core_spark.pacing import AdaptivePacer
         from aqueduct_core_spark.registry import ServiceList
 
-        pacer = None
-        if args.adaptive:
-            from aqueduct_core_spark.pacing import AdaptivePacer
-
-            pacer = AdaptivePacer()
-        rounds = eng.run_with_failover(
-            ServiceList(args.follow.split(",")),
+        rounds = eng.tail(
+            ServiceList(args.follow.split(",")) if args.follow else args.log,
+            pacer=AdaptivePacer() if args.adaptive else None,
             max_rounds=args.max_rounds,
             max_files_per_trigger=args.max_files_per_trigger,
-            pacer=pacer,
         )
-        print(json.dumps({"rounds": rounds, "pipe_state": eng.pipe_state()}))
-        return 0
-    if args.adaptive:
-        rounds = eng.run_adaptive(
-            args.log,
-            max_files_per_trigger=args.max_files_per_trigger,
-            max_rounds=args.max_rounds,
-        )
-        print(json.dumps({"rounds": rounds, "pipe_state": eng.pipe_state()}))
-        return 0
-    if args.continuous:
+    elif args.continuous:
         q = eng.run(
             args.log,
             max_files_per_trigger=args.max_files_per_trigger,
@@ -106,7 +97,8 @@ def cmd_ingest(args) -> int:
         q.awaitTermination()
     else:
         eng.run(args.log, max_files_per_trigger=args.max_files_per_trigger)
-    print(json.dumps({"batches_applied": eng.metrics.batches_applied,
+    print(json.dumps({"rounds": rounds,
+                      "batches_applied": eng.metrics.batches_applied,
                       "events_quarantined": eng.metrics.events_quarantined,
                       "compactions_triggered": eng.compactions_triggered,
                       "pipe_state": eng.pipe_state()}))

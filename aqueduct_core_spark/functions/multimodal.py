@@ -1202,6 +1202,14 @@ class _BitReader:
         return m - 0xD0
 
 
+class _Tables(dict):
+    """DQT or DHT tables by id: a frame or scan that names one no segment
+    defined refuses at the lookup."""
+
+    def __missing__(self, key):
+        raise ValueError(f"frame or scan names undefined table {key}")
+
+
 def _huff_decode_tables(bits: list[int], vals: list[int]):
     """Per-length (first_code, first_index) canonical decode table."""
     table, code, i = [], 0, 0
@@ -1412,8 +1420,8 @@ def decode_jpeg(payload: bytes) -> dict:
     if payload[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG payload (missing SOI)")
     pos, restart_interval, progressive, scanned = 2, 0, False, False
-    qtables: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], tuple] = {}
+    qtables: dict[int, np.ndarray] = _Tables()
+    huff: dict[tuple[int, int], tuple] = _Tables()
     comps: list[tuple[int, int, int, int]] = []  # frame order: (id, quant id, h, v)
     coefs: list[np.ndarray] = []  # per component, on the interleaved MCU grid
     grids: list[tuple[int, int]] = []  # per component, its own block grid (A.2.2)
@@ -1450,6 +1458,8 @@ def decode_jpeg(payload: bytes) -> dict:
             if marker not in (0xC0, 0xC2):
                 raise ValueError("only baseline (SOF0) and progressive (SOF2) DCT supported")
             progressive = marker == 0xC2
+            if len(body) < 6 or len(body) < 6 + 3 * body[5]:
+                raise ValueError("truncated SOF segment")
             _prec, height, width, ncomp = struct.unpack(">BHHB", body[:6])
             if ncomp not in (1, 3):
                 raise ValueError("only 1- (gray) or 3-component (YCbCr) frames supported")

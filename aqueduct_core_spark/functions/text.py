@@ -104,13 +104,6 @@ def shingle_array(toks: Column, n: int) -> Column:
     )
 
 
-def rolling_fingerprints(col: Column, n: int = 5) -> Column:
-    """Rolling-hash shingle fingerprints: xxhash64 of each n-token shingle.
-    The scale path for fuzzy containment checks (Spark-only; no SQL twin).
-    NOTE: pass a materialized token column through shingle_array for hot paths."""
-    return F.transform(shingle_array(tokens(col), n), lambda sh: F.xxhash64(sh))
-
-
 def add_quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     """All per-document text features in one narrow projection (single scan)."""
     c = F.col(text_col)

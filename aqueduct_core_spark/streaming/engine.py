@@ -22,6 +22,8 @@ verified by tests/test_streaming.py::test_crash_between_commit_and_checkpoint.
 
 from __future__ import annotations
 
+import hashlib
+import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,6 +34,29 @@ from aqueduct_core_spark.lake.table import LakeTable
 from pyspark.sql.types import StructField, StructType
 
 from aqueduct_core_spark.schema import CHANGE_EVENT_SCHEMA, TRANSCRIPT_PHYSICAL_SCHEMA
+
+
+def _tag(s: str) -> str:
+    return hashlib.md5(s.encode()).hexdigest()[:10]
+
+
+def _writer_id(checkpoint_dir: str) -> str:
+    """The default writer id, scoped to the checkpoint dir: a NEW streaming
+    query restarts batch ids at 0, so the idempotence watermark must be
+    per-query, not global (else fresh queries are wrongly skipped by an older
+    query's txn register)."""
+    return f"cdc-{_tag(checkpoint_dir)}"
+
+
+@dataclass(frozen=True)
+class FeedSource:
+    """One feed's drain state: the Spark checkpoint bound to its path, the
+    writer id of its exactly-once txn register and its replay floor (events
+    at/below `min_lsn` are already applied)."""
+
+    checkpoint_dir: str
+    writer_id: str
+    min_lsn: int | None
 
 
 @dataclass
@@ -59,10 +84,7 @@ class IngestEngine:
         merge_mode: str = "mor",  # only "mor" (append deltas, resolve at
         # read, fold at compaction); kept for callers that still pass it
         salt: int = 0,  # >1 = explicit salted pre-collapse for duplicate storms
-        writer_id: str | None = None,  # default: scoped to the checkpoint dir —
-        # a NEW streaming query restarts batch ids at 0, so the idempotence
-        # watermark must be per-query, not global (else fresh queries are
-        # wrongly skipped by an older query's txn register)
+        writer_id: str | None = None,  # default: _writer_id(checkpoint_dir)
         routing_filter: list[int] | None = None,
         entity_filter: list[str] | None = None,
         min_lsn: int | None = None,  # replay floor: events at/below are already
@@ -97,12 +119,7 @@ class IngestEngine:
         self.n_buckets = n_buckets
         self.table_properties = dict(table_properties or {})
         self.salt = salt
-        if writer_id is None:
-            import hashlib
-
-            digest = hashlib.md5(checkpoint_dir.encode()).hexdigest()[:10]
-            writer_id = f"cdc-{digest}"
-        self.writer_id = writer_id
+        self.writer_id = writer_id if writer_id is not None else _writer_id(checkpoint_dir)
         self.routing_filter = routing_filter
         self.entity_filter = entity_filter
         self.min_lsn = min_lsn
@@ -113,8 +130,9 @@ class IngestEngine:
         self.compactions_triggered = 0
         self.quarantine_dir = quarantine_dir
         self.metrics = IngestMetrics()
-        #: per-mirror sub-engines of run_with_failover, by feed URL
-        self._mirror_engines: dict[str, IngestEngine] = {}
+        #: the mirror a tail() round is draining (None: the engine's own
+        #: checkpoint, writer id and floor — see _source)
+        self._mirror: FeedSource | None = None
         # one worker: foreachBatch is sequential, the pool exists only so the
         # lineage aggregate runs as a concurrent Spark job beside the merge
         from concurrent.futures import ThreadPoolExecutor
@@ -146,9 +164,6 @@ class IngestEngine:
         """Release the worker threads, letting an in-flight compaction land
         (its commit is atomic and rebase-on-conflict-safe either way, but
         waiting keeps compactions_triggered accurate). Idempotent."""
-        for sub in self._mirror_engines.values():
-            sub.close()
-            self._absorb(sub)
         self._lineage_pool.shutdown(wait=False, cancel_futures=True)
         if self._compaction_pool is not None:
             try:
@@ -237,27 +252,35 @@ class IngestEngine:
         reset_pipe = bt != "PROVIDER"
 
         # storage-agnostic resets (lake/fsio.py is the object-store seam)
+        fs = get_fs()
         if reset_provider:
-            get_fs().rmtree(self.table_root)
+            fs.rmtree(self.table_root)
         if reset_pipe:
-            get_fs().rmtree(self.checkpoint_dir)
+            # the mirror checkpoints tail() keeps under checkpoint_dir go too
+            ckpts = fs.listdir(self.checkpoint_dir) if fs.isdir(self.checkpoint_dir) else []
+            writers = [self.writer_id] + [
+                _writer_id(os.path.join(self.checkpoint_dir, d))
+                for d in ckpts
+                if d.startswith("mirror-")
+            ]
+            fs.rmtree(self.checkpoint_dir)
             if not reset_provider and LakeTable.exists(self.table_root):
                 # pipe-only reset: a fresh streaming query restarts batch ids
-                # at 0 under the SAME writer id (it is scoped to the
-                # checkpoint path) — drop the txn watermark or every replayed
-                # batch would be skipped as already-committed.
-                self._clear_txn_watermark()
+                # at 0 under the SAME writer ids (each is scoped to its
+                # checkpoint path) — drop their txn watermarks or every
+                # replayed batch would be skipped as already-committed.
+                self._clear_txn_watermark(writers)
         if bt.endswith("WITH_DELAY") and delay_ms > 0:
             sleep(delay_ms / 1000.0)
         if reset_provider:
             self.ensure_table()
 
-    def _clear_txn_watermark(self) -> None:
-        """Remove this writer's batch-id watermark (and mark the pipe
+    def _clear_txn_watermark(self, writer_ids: list[str]) -> None:
+        """Remove these writers' batch-id watermarks (and mark the pipe
         OUT_OF_DATE) in one atomic manifest commit."""
         LakeTable(self.spark, self.table_root).commit(
             lambda snap: {
-                "txn": {k: v for k, v in snap.txn.items() if k != self.writer_id},
+                "txn": {k: v for k, v in snap.txn.items() if k not in writer_ids},
                 "properties": {**snap.properties, "pipe_state": "OUT_OF_DATE"},
             }
         )
@@ -308,6 +331,7 @@ class IngestEngine:
         the sentinel keys — parents before children within the same commit.
         """
         table = LakeTable(self.spark, self.table_root)
+        src = self._source()
 
         df = batch_df
         bad_obs = bad = None
@@ -342,10 +366,10 @@ class IngestEngine:
         if self.routing_filter:
             # reference F3 routing filter (PostgresqlStorage.java:448-454)
             df = df.filter(F.col("routing_id").isin(self.routing_filter))
-        if self.min_lsn is not None:
+        if src.min_lsn is not None:
             # reference F2 offset floor: the client resumes from its own
             # offset on a fresh upstream (HttpPipeClient /pipe/{offset})
-            df = df.filter(F.col("change_lsn") > F.lit(int(self.min_lsn)))
+            df = df.filter(F.col("change_lsn") > F.lit(int(src.min_lsn)))
         if self.transform is not None:
             # Arrow-vectorized payload transform (pandas UDF, no per-row Python)
             df = self.transform(df)
@@ -387,7 +411,7 @@ class IngestEngine:
                 table,
                 df,
                 batch_id=batch_id,
-                writer_id=self.writer_id,
+                writer_id=src.writer_id,
                 salt=self.salt,
                 lineage_rows=lineage_rows,
                 pipe_state="OUT_OF_DATE",
@@ -521,7 +545,7 @@ class IngestEngine:
         stream = reader.format(fmt).load(log_path)
 
         writer = stream.writeStream.foreachBatch(self.apply_batch).option(
-            "checkpointLocation", self.checkpoint_dir
+            "checkpointLocation", self._source().checkpoint_dir
         )
         if available_now:
             writer = writer.trigger(availableNow=True)
@@ -537,63 +561,115 @@ class IngestEngine:
                 self.drain_compaction()
         return query
 
-    def run_adaptive(
+    def tail(
         self,
-        log_path: str,
+        source,
         pacer=None,
-        max_files_per_trigger: int | None = 1,
-        max_rounds: int = 20,
+        max_rounds: int = 10,
+        max_files_per_trigger: int | None = 2,
         stop_after_empty: int = 1,
         sleep_fn=None,
         fmt: str = "parquet",
     ) -> list[dict]:
-        """Adaptive tail loop: the reference consumer's poll + Retry-After
-        honor cycle (HttpPipeClient.java:36-63 reads, then sleeps the
-        server-computed Retry-After from PostgresqlStorage.java:229-251 /
-        PipeReadController.java:113-129).
+        """The consumer tail loop: the reference's HttpPipeClient poll cycle
+        (HttpPipeClient.java:36-63) with PipeLoadBalancer first-UP selection
+        (PipeLoadBalancer.select:27-39) over `source` — a feed path, or a
+        registry.ServiceList follow chain.
 
-        Each round drains the admitted files (availableNow trigger), measures
-        wall time + applied rows + event recency, and sleeps the pacer-derived
-        interval before polling again: empty rounds back off toward the cap
-        (+jitter), a catching-up engine rides the token-bucket fast path at
-        0 ms, steady tailing paces by the measured batch cost. Returns the
-        per-round pacing records (wall_ms, rows, interval_ms)."""
+        A plain path drains through the engine's own checkpoint, writer id
+        and floor, exactly as run() does; a read error raises. A mirror of a
+        ServiceList drains through its own checkpoint sub-directory (a Spark
+        file-stream checkpoint is bound to one source path) under its own
+        writer id, with the replay floor at the CURRENT applied watermark —
+        the client's "resume from my local offset on a new upstream". The
+        floor plus the LWW merge make a switch exactly-once. A mirror whose
+        read raises is marked DOWN and the next UP one takes over.
+
+        Each round first revives DOWN mirrors that are reachable AND ahead of
+        the applied watermark (PipeServiceInstance health checks; "ahead" and
+        not mere reachability, so a frozen mirror cannot livelock
+        stall->failover->revive), then drains the first UP source and records
+        {url, rows, event, wall_ms, min_lsn}. With a `pacer`
+        (pacing.AdaptivePacer) the round also records the Retry-After
+        `interval_ms` of its measured wall/rows/recency. A productive round
+        sleeps that interval and polls again. An empty round fails over when
+        another mirror is ahead (a parent that stopped producing); otherwise
+        it counts toward `stop_after_empty` empty rounds, sleeping the
+        interval between them, after which the loop returns."""
         import time as _t
 
-        from aqueduct_core_spark.pacing import AdaptivePacer
+        from aqueduct_core_spark.registry import ServiceList
 
-        pacer = pacer if pacer is not None else AdaptivePacer()
         sleep = sleep_fn if sleep_fn is not None else _t.sleep
+        services = source if isinstance(source, ServiceList) else None
         rounds: list[dict] = []
         empty_rounds = 0
         for _ in range(max_rounds):
+            url = source
+            if services is not None:
+                up = services.following()
+                for u in self._ahead([u for u in services.all_urls() if u not in up]):
+                    services.mark_up(u)
+                url = services.first_up()  # raises NoAccessibleService when none
+                self._mirror = self._mirror_source(url)
             seen0 = self.metrics.events_seen
             t0 = _t.perf_counter()
-            self.run(
-                log_path,
-                max_files_per_trigger=max_files_per_trigger,
-                available_now=True,
-                fmt=fmt,
-            )
+            rec = {"url": url, "event": "drained", "min_lsn": self._source().min_lsn}
+            try:
+                self.run(url, max_files_per_trigger=max_files_per_trigger, fmt=fmt)
+            except Exception:
+                if services is None:
+                    raise
+                services.mark_down(url)
+                rec["event"] = "error->down"
+            finally:
+                self._mirror = None
             wall_ms = (_t.perf_counter() - t0) * 1000.0
             rows = self.metrics.events_seen - seen0
-            age = None
-            if self.metrics.last_event_ts is not None:
-                age = max(0.0, _t.time() - self.metrics.last_event_ts.timestamp())
-            interval_ms = pacer.next_interval_ms(wall_ms, rows, newest_event_age_s=age)
-            rounds.append(
-                {"wall_ms": wall_ms, "rows": rows, "interval_ms": interval_ms}
-            )
-            if rows == 0:
+            rec.update(rows=rows, wall_ms=wall_ms)
+            rounds.append(rec)
+            if rec["event"] != "drained":
+                continue
+            if pacer is not None:
+                age = None
+                if self.metrics.last_event_ts is not None:
+                    age = max(0.0, _t.time() - self.metrics.last_event_ts.timestamp())
+                rec["interval_ms"] = pacer.next_interval_ms(wall_ms, rows, newest_event_age_s=age)
+            if rows > 0:
+                empty_rounds = 0
+            else:
+                ahead = None
+                if services is not None:
+                    ahead = next(self._ahead([u for u in services.all_urls() if u != url]), None)
+                if ahead is not None:
+                    # stalled parent: a fallback knows newer data — fail over
+                    services.mark_down(url)
+                    services.mark_up(ahead)
+                    rec["event"] = f"stalled->failover:{ahead}"
+                    continue
                 empty_rounds += 1
                 if empty_rounds >= stop_after_empty:
                     break
-            else:
-                empty_rounds = 0
-            sleep(interval_ms / 1000.0)
+            if pacer is not None:
+                sleep(rec["interval_ms"] / 1000.0)
         return rounds
 
-    # ------------------------------------------------------------ failover
+    def _source(self) -> FeedSource:
+        """The source being drained: a tail() mirror, else the engine's own
+        checkpoint, writer id and floor (run(), apply_batch called directly)."""
+        if self._mirror is not None:
+            return self._mirror
+        return FeedSource(self.checkpoint_dir, self.writer_id, self.min_lsn)
+
+    def _mirror_source(self, url: str) -> FeedSource:
+        """A follow-chain mirror: checkpoint <checkpoint_dir>/mirror-<md5(url)>
+        under writer id cdc-<md5(that path)> (stable, so a restarted engine
+        resumes the mirror where it stopped), and the replay floor read from
+        the table now — never cached, so a table reset drops it too."""
+        ckpt = os.path.join(self.checkpoint_dir, f"mirror-{_tag(url)}")
+        floor = self.high_watermark() if LakeTable.exists(self.table_root) else None
+        return FeedSource(ckpt, _writer_id(ckpt), floor)
+
     def high_watermark(self) -> int:
         """Highest applied change LSN across all routing partitions (from the
         committed lineage; -1 on a fresh table)."""
@@ -603,157 +679,20 @@ class IngestEngine:
             return -1
         return max(int(v["high_watermark_lsn"]) for v in lineage.values())
 
-    def _mirror_latest_lsn(self, url: str) -> int | None:
-        """Probe a mirror's newest visible LSN (None when unreadable/empty) —
-        the health-check analog of the reference's GET /pipe/_status."""
-        try:
-            row = self.spark.read.parquet(url).agg(F.max("change_lsn")).collect()[0]
-            return int(row[0]) if row[0] is not None else None
-        except Exception:
-            return None
-
-    def _engine_for_mirror(self, url: str) -> "IngestEngine":
-        """A per-mirror sub-engine: its own checkpoint sub-directory (a Spark
-        file-stream checkpoint is bound to one source path — mirrors cannot
-        share one) and a replay floor at the CURRENT applied watermark, the
-        reference client's "resume from my local offset on a new upstream"
-        (HttpPipeClient.java:36-63). The floor plus the LWW merge make the
-        switch exactly-once: nothing below the watermark re-applies, anything
-        at the boundary converges idempotently."""
-        import hashlib
-        import os
-
-        if url in self._mirror_engines:
-            # Revisited mirror (e.g. a revived primary): lift its replay floor
-            # to the CURRENT applied watermark — the floor cached at first
-            # creation is stale after other mirrors advanced the table.
-            # (Re-applies below the old floor were already idempotent via
-            # checkpoint + LWW; the refresh avoids re-reading them at all.)
-            eng = self._mirror_engines[url]
-            if LakeTable.exists(self.table_root):
-                hw = self.high_watermark()
-                eng.min_lsn = hw if eng.min_lsn is None else max(eng.min_lsn, hw)
-            return eng
-        tag = hashlib.md5(url.encode()).hexdigest()[:10]
-        eng = self._mirror_engines[url] = IngestEngine(
-            self.spark,
-            table_root=self.table_root,
-            checkpoint_dir=os.path.join(self.checkpoint_dir, f"mirror-{tag}"),
-            n_buckets=self.n_buckets,
-            salt=self.salt,
-            routing_filter=self.routing_filter,
-            entity_filter=self.entity_filter,
-            min_lsn=self.high_watermark() if LakeTable.exists(self.table_root) else None,
-            transform=self.transform,
-            compaction_policy=self.compaction_policy,
-            quarantine_dir=self.quarantine_dir,
-            table_properties=self.table_properties,
-        )
-        return eng
-
-    def _absorb(self, sub: "IngestEngine") -> None:
-        """Move a mirror sub-engine's counters into this engine's."""
-        self.metrics.batches_applied += sub.metrics.batches_applied
-        self.metrics.events_quarantined += sub.metrics.events_quarantined
-        self.compactions_triggered += sub.compactions_triggered
-        sub.metrics.batches_applied = sub.metrics.events_quarantined = 0
-        sub.compactions_triggered = 0
-
-    def run_with_failover(
-        self,
-        services,
-        max_rounds: int = 10,
-        max_files_per_trigger: int | None = 2,
-        fmt: str = "parquet",
-        pacer=None,
-        sleep_fn=None,
-    ) -> list[dict]:
-        """Tail the follow chain with consumer failover (reference
-        PipeLoadBalancer.select:27-39 — first UP service — over the registry's
-        requested_to_follow; ServiceList health gating).
-
-        Each round drains the first UP mirror via its per-mirror sub-engine.
-        A mirror is marked DOWN and the next one takes over when (a) reading
-        it raises, or (b) it yields no rows while a later mirror in the chain
-        is visibly AHEAD of our applied watermark — the "parent stopped
-        producing" case (a dead edge mirror whose own copy froze). When the
-        current mirror drains clean and no fallback knows newer data, the
-        engine is up to date and returns.
-
-        With a `pacer` (AdaptivePacer), each drained round additionally honors
-        the reference consumer's Retry-After cycle: the measured wall/rows
-        feed the pacer and the loop sleeps its interval before the next poll —
-        adaptive pacing and failover compose in one tail loop (the production
-        CLI shape: `ingest --follow a,b --adaptive`)."""
-        import time as _t
-
-        sleep = sleep_fn if sleep_fn is not None else _t.sleep
-        rounds: list[dict] = []
-        for _ in range(max_rounds):
-            # Re-probe DOWN mirrors and revive any that is reachable AND ahead
-            # of our applied watermark (the reference health-checks dead
-            # services back to UP, PipeServiceInstance.checkState) — so a
-            # recovered primary earlier in the follow chain is re-selected.
-            # "Ahead" is the revival bar, not mere reachability: a frozen
-            # mirror that stalled at/behind our watermark stays DOWN, which
-            # prevents a stall->failover->revive livelock.
-            up = set(services.following())
-            down = [u for u in services.all_urls() if u not in up]
-            if down:
-                hw = self.high_watermark()
-                for u in down:
-                    latest = self._mirror_latest_lsn(u)
-                    if latest is not None and latest > hw:
-                        services.mark_up(u)
-            url = services.first_up()  # raises NoAccessibleService when none
-            t0 = _t.perf_counter()
-            try:
-                sub = self._engine_for_mirror(url)
-                before = sub.metrics.events_seen
-                sub.run(
-                    url,
-                    max_files_per_trigger=max_files_per_trigger,
-                    available_now=True,
-                    fmt=fmt,
-                )
-                rows = sub.metrics.events_seen - before
-            except Exception:
-                services.mark_down(url)
-                rounds.append({"url": url, "rows": 0, "event": "error->down"})
-                continue
-            self.metrics.events_seen += rows
-            self._absorb(sub)
-            rounds.append({"url": url, "rows": rows, "event": "drained"})
-            # Pace only PRODUCTIVE rounds: an empty round here is a failover
-            # decision point (stall check below; the loop RETURNS when caught
-            # up), not a poll-for-new-data wait — the reference's empty-read
-            # backoff (cap 600 s + jitter) would stall the failover check.
-            if pacer is not None and rows > 0:
-                wall_ms = (_t.perf_counter() - t0) * 1000.0
-                age = None
-                if sub.metrics.last_event_ts is not None:
-                    age = max(0.0, _t.time() - sub.metrics.last_event_ts.timestamp())
-                interval_ms = pacer.next_interval_ms(wall_ms, rows, newest_event_age_s=age)
-                rounds[-1]["interval_ms"] = interval_ms
-                sleep(interval_ms / 1000.0)
-            if rows > 0:
-                continue  # keep draining the same mirror until it runs dry
+    def _ahead(self, urls: list[str]):
+        """Yield, in chain order, the mirrors among `urls` whose newest
+        visible LSN is beyond the applied watermark — the health-check analog
+        of the reference's GET /pipe/_status (an unreadable or empty mirror
+        is not ahead). Lazy: probing stops where the caller stops."""
+        if urls:
             hw = self.high_watermark()
-            ahead = None
-            for alt in services.all_urls():
-                if alt == url:
-                    continue
-                latest = self._mirror_latest_lsn(alt)
-                if latest is not None and latest > hw:
-                    ahead = alt
-                    break
-            if ahead is None:
-                return rounds  # fully caught up on the best available mirror
-            # stalled parent: a fallback knows newer data — fail over
-            services.mark_down(url)
-            services.mark_up(ahead)
-            rounds[-1]["event"] = f"stalled->failover:{ahead}"
-        return rounds
+        for u in urls:
+            try:
+                latest = self.spark.read.parquet(u).agg(F.max("change_lsn")).collect()[0][0]
+            except Exception:
+                continue
+            if latest is not None and latest > hw:
+                yield u
 
     def _mark_up_to_date(self) -> None:
         LakeTable(self.spark, self.table_root).commit(

@@ -35,22 +35,6 @@ def table_consistency_sum(table: LakeTable) -> int:
     return int(row["s"])
 
 
-def count_by_entity(table: LakeTable) -> DataFrame:
-    """Visibility metric: live row counts by record kind (reference A5:
-    PostgresqlStorage.java:507-509 count-by-type)."""
-    df = read_resolved(table)
-    kind = (
-        F.when(F.col("turn_idx") >= 0, F.lit("turn"))
-        .when(F.col("turn_idx") == -1, F.lit("conversation"))
-        .otherwise(F.lit("conversation_tombstone"))
-    )
-    return (
-        df.filter(~F.col("_deleted") | (F.col("turn_idx") == -2))
-        .groupBy(kind.alias("entity"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
 def export_changefeed(
     table: LakeTable, since_version: int, until_version: int | None = None
 ) -> DataFrame:

@@ -6,6 +6,7 @@ ServiceList health gating, PipeLoadBalancerIntegrationSpec shapes).
 
 from __future__ import annotations
 
+import hashlib
 import os
 import shutil
 
@@ -70,7 +71,7 @@ def test_stalled_parent_fails_over_to_cloud(spark, tmp_path):
         spark, str(tmp_path / "tbl"), str(tmp_path / "ckpt"), n_buckets=8, merge_mode="mor"
     )
     services = ServiceList([parent, cloud])
-    rounds = eng.run_with_failover(services, max_rounds=8)
+    rounds = eng.tail(services, max_rounds=8)
     events = [r["event"] for r in rounds]
     assert any(e.startswith("stalled->failover") for e in events)
     assert services.following() == [cloud]  # parent marked down
@@ -84,7 +85,7 @@ def test_dead_parent_path_fails_over(spark, tmp_path):
         spark, str(tmp_path / "tbl"), str(tmp_path / "ckpt"), n_buckets=8, merge_mode="mor"
     )
     services = ServiceList([parent, cloud])
-    rounds = eng.run_with_failover(services, max_rounds=8)
+    rounds = eng.tail(services, max_rounds=8)
     assert rounds[0]["event"] == "error->down"
     assert view(spark, eng.table_root) == oracle_view(spark, feed)
 
@@ -103,7 +104,7 @@ def test_parent_killed_mid_replay(spark, tmp_path):
     eng.run(parent, max_files_per_trigger=2)
     assert eng.metrics.events_seen > 0
     # phase 2: parent dies (no new segments ever); full chain failover
-    rounds = eng.run_with_failover(services, max_rounds=8)
+    rounds = eng.tail(services, max_rounds=8)
     assert any(e.startswith("stalled->failover") for e in [r["event"] for r in rounds])
     assert view(spark, eng.table_root) == oracle_view(spark, feed)
 
@@ -113,7 +114,7 @@ def test_no_accessible_service_raises(spark, tmp_path):
     services = ServiceList([str(tmp_path / "missing")])
     # sole mirror errors, gets marked down, and the next selection raises
     with pytest.raises(NoAccessibleService):
-        eng.run_with_failover(services, max_rounds=3)
+        eng.tail(services, max_rounds=3)
     assert services.following() == []
 
 
@@ -135,7 +136,7 @@ def test_registry_follow_chain_feeds_failover(spark, tmp_path):
         spark, str(tmp_path / "tbl"), str(tmp_path / "ckpt"), n_buckets=8, merge_mode="mor"
     )
     services = ServiceList(chain)
-    rounds = eng.run_with_failover(services, max_rounds=8)
+    rounds = eng.tail(services, max_rounds=8)
     assert any(e.startswith("stalled->failover") for e in [r["event"] for r in rounds])
     assert view(spark, eng.table_root) == oracle_view(spark, feed)
 
@@ -153,27 +154,27 @@ def test_recovered_primary_is_revived_and_reselected(spark, tmp_path):
         spark, str(tmp_path / "tbl"), str(tmp_path / "ckpt"), n_buckets=8, merge_mode="mor"
     )
     services = ServiceList([full, partial])
-    rounds1 = eng.run_with_failover(services, max_rounds=8)
+    rounds1 = eng.tail(services, max_rounds=8)
     assert rounds1[0]["event"] == "error->down"
     assert services.following() == [partial]  # primary down, fallback carried us
     hw_after_partial = eng.high_watermark()
     assert hw_after_partial > 0
 
     os.rename(hidden, full)  # primary recovers, holding data beyond our watermark
-    rounds2 = eng.run_with_failover(services, max_rounds=8)
+    rounds2 = eng.tail(services, max_rounds=8)
     assert rounds2[0]["url"] == full  # revived and re-selected first in the chain
     assert full in services.following()
-    # the cached sub-engine (created before the failed first read) had a stale
-    # replay floor; the revisit must lift it to the applied watermark
-    assert eng._mirror_engines[full].min_lsn >= hw_after_partial
+    # the revisit drains the primary from the applied watermark, not from the
+    # floor it had when its first read failed
+    assert rounds2[0]["min_lsn"] >= hw_after_partial
     assert view(spark, eng.table_root) == oracle_view(spark, feed)
 
 
 def test_mirror_sub_engines_keep_dead_letter_sink_and_compaction(spark, tmp_path):
-    """The per-mirror sub-engines inherit the parent's dead-letter sink and
-    compaction policy: a malformed event on the followed mirror lands in the
+    """A mirror drains through the engine's own dead-letter sink, compaction
+    policy and metrics: a malformed event on the followed mirror lands in the
     quarantine instead of the merge, over-threshold buckets get folded, and
-    both counters roll up into the parent engine."""
+    every batch is counted on the one engine."""
     clean = [ev(i, conv=f"c{i % 4}", turn=i % 3, t=i) for i in range(1, 41)]
     mirror = str(tmp_path / "mirror")
     events_df(spark, clean).repartition(3).write.parquet(mirror)
@@ -185,7 +186,7 @@ def test_mirror_sub_engines_keep_dead_letter_sink_and_compaction(spark, tmp_path
         quarantine_dir=dlq,
         compaction_policy=CompactionPolicy(max_delta_files_per_bucket=1, n_jobs=1),
     )
-    eng.run_with_failover(ServiceList([mirror]), max_rounds=4, max_files_per_trigger=1)
+    eng.tail(ServiceList([mirror]), max_rounds=4, max_files_per_trigger=1)
     eng.close()
 
     assert os.path.isdir(dlq)
@@ -193,4 +194,78 @@ def test_mirror_sub_engines_keep_dead_letter_sink_and_compaction(spark, tmp_path
     assert [(r["change_lsn"], r["_reason"]) for r in q.collect()] == [(41, "bad_op")]
     assert eng.metrics.events_quarantined == 1
     assert eng.compactions_triggered > 0
+    assert sum(eng.metrics.per_batch_rows) == eng.metrics.events_seen > 0
+    assert eng.metrics.last_batch_id >= 0
     assert view(spark, eng.table_root) == [tuple(r.values()) for r in replay(clean)]
+
+
+def _append_files(spark, feed, events, per_file):
+    """Append `events` to `feed` as one parquet file per `per_file` events."""
+    for i in range(0, len(events), per_file):
+        events_df(spark, events[i : i + per_file]).coalesce(1).write.mode(
+            "append"
+        ).parquet(feed)
+
+
+def _events(lo, hi):
+    return [ev(i, "I" if i < 10 else "U", conv=f"c{i % 3}", turn=i % 4, t=i)
+            for i in range(lo, hi)]
+
+
+def test_pipe_bootstrap_clears_mirror_watermarks(spark, tmp_path):
+    """PIPE drops the mirror checkpoints with the root one, so it must drop
+    their writers' txn watermarks too: a fresh tail restarts the mirror's
+    batch ids at 0, and a stale watermark would skip the new events."""
+    m = str(tmp_path / "m")
+    first, second = _events(1, 21), _events(21, 41)
+    _append_files(spark, m, first, 5)
+    mk = lambda: IngestEngine(spark, str(tmp_path / "tbl"), str(tmp_path / "ckpt"), n_buckets=4)
+    eng = mk()
+    eng.tail(ServiceList([m]), max_files_per_trigger=1)  # batches 0..3
+    eng.bootstrap("PIPE")
+    eng.close()
+    _append_files(spark, m, second, 5)
+    eng2 = mk()
+    eng2.tail(ServiceList([m]), max_files_per_trigger=4)  # batches 0, 1
+    eng2.close()
+    assert eng2.metrics.batches_skipped == 0
+    assert view(spark, eng2.table_root) == [tuple(r.values()) for r in replay(first + second)]
+
+
+def test_provider_bootstrap_then_tail_replays_mirror(spark, tmp_path):
+    """After PIPE_AND_PROVIDER the table is empty again: the mirror's replay
+    floor must come from that empty table, not from before the reset."""
+    m = str(tmp_path / "m")
+    events = _events(1, 21)
+    _append_files(spark, m, events, 5)
+    eng = IngestEngine(spark, str(tmp_path / "tbl"), str(tmp_path / "ckpt"), n_buckets=4)
+    eng.tail(ServiceList([m]), max_files_per_trigger=2)
+    eng.bootstrap("PIPE_AND_PROVIDER")
+    eng.tail(ServiceList([m]), max_files_per_trigger=2)
+    eng.close()
+    assert view(spark, eng.table_root) == [tuple(r.values()) for r in replay(events)]
+
+
+def test_restarted_tail_resumes_mirror_checkpoint(spark, tmp_path):
+    """A fresh engine on the same checkpoint_dir resumes a mirror where the
+    last one stopped: same mirror-<md5(url)> checkpoint, same writer id,
+    only the newly arrived segments' batches run."""
+    m = str(tmp_path / "m")
+    ckpt = str(tmp_path / "ckpt")
+    first, second = _events(1, 16), _events(16, 26)
+    _append_files(spark, m, first, 5)
+    a = IngestEngine(spark, str(tmp_path / "tbl"), ckpt, n_buckets=4)
+    a.tail(ServiceList([m]), max_files_per_trigger=1)  # batches 0..2
+    a.close()
+    _append_files(spark, m, second, 5)
+
+    b = IngestEngine(spark, str(tmp_path / "tbl"), ckpt, n_buckets=4)
+    b.tail(ServiceList([m]), max_files_per_trigger=1)
+    b.close()
+    assert len(b.metrics.per_batch_rows) == 2  # only the two new segments
+    assert b.metrics.last_batch_id == 4  # batch ids continue from the checkpoint
+    mirror_dir = f"mirror-{hashlib.md5(m.encode()).hexdigest()[:10]}"
+    assert [d for d in os.listdir(ckpt) if d.startswith("mirror-")] == [mirror_dir]
+    writer = "cdc-" + hashlib.md5(os.path.join(ckpt, mirror_dir).encode()).hexdigest()[:10]
+    assert writer in LakeTable(spark, b.table_root).current().txn
+    assert view(spark, b.table_root) == [tuple(r.values()) for r in replay(first + second)]

@@ -733,6 +733,25 @@ def test_jpeg_color_dri_roundtrip_exact():
         pc[j + 2 + 2 + 9 + 1] = 0x21
         with pytest.raises(ValueError, match="non-integer"):
             decode_jpeg(bytes(pc))
+    # a table the frame or scan names but no DQT/DHT defined, and a SOF body
+    # too short for its header, refuse with ValueError too
+    good = jpeg_bytes(b"ab")
+
+    def segment(marker, tc=None):
+        """(start, end) of the first `marker` segment (a DHT: of class tc)."""
+        i = -1
+        while True:
+            i = good.index(bytes([0xFF, marker]), i + 1)
+            if tc is None or good[i + 4] >> 4 == tc:
+                return i, i + 2 + int.from_bytes(good[i + 2 : i + 4], "big")
+
+    for cut, match in ((segment(0xDB), "undefined table 0"),
+                       (segment(0xC4, tc=0), r"undefined table \(0, 0\)")):
+        with pytest.raises(ValueError, match=match):
+            decode_jpeg(good[: cut[0]] + good[cut[1] :])
+    s, e = segment(0xC0)
+    with pytest.raises(ValueError, match="truncated SOF"):
+        decode_jpeg(good[:s] + b"\xff\xc0\x00\x07" + good[s + 4 : s + 9] + good[e:])
 
 
 def test_jpeg_color_decode_summary_matches_source(spark):

@@ -50,7 +50,7 @@ def test_adaptive_pacer_reference_semantics():
     assert p3.next_interval_ms(8, 10, newest_event_age_s=7 * 3600, now=0.7) == 0
 
 
-def test_run_adaptive_tail_loop(spark, tmp_path):
+def test_tail_paced_loop(spark, tmp_path):
     """The engine's adaptive tail loop honors pacer-derived intervals: each
     recorded interval equals the reference formula applied to that round's
     measured wall/rows, the final drained state equals the oracle replay, and
@@ -80,7 +80,7 @@ def test_run_adaptive_tail_loop(spark, tmp_path):
     slept = []
     # huge bootstrap threshold -> never fast-path, always formula-paced
     pacer = AdaptivePacer(bootstrap_threshold_s=1e12, rng=random.Random(3))
-    rounds = eng.run_adaptive(
+    rounds = eng.tail(
         log,
         pacer=pacer,
         max_files_per_trigger=2,
