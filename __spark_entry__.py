@@ -798,7 +798,8 @@ def q_multimodal_features(spark, sf_dir):
 
 # The fixture-media contract queries: documents -> one media fixture
 # (functions.multimodal.MEDIA_FIXTURES, where each container is described)
-# -> decode_real_summary, or a frame sampler whose every 2nd frame is md5'd.
+# -> decode_real_summary, or frame_sample over the fixture's container, every
+# 2nd frame md5'd.
 # Each oracle twin recomputes every column from the source table; the
 # frame-sample twins regenerate the (doc x frame_idx) lattice with a lateral
 # unnest. Reference analog: binary payloads flow opaque (PipeCodec, msg_data).
@@ -811,15 +812,15 @@ MULTIMODAL_FIXTURES = {
     "multimodal_decode_png": ("png", None),
     "multimodal_decode_png_adam7": ("png_adam7", None),
     "multimodal_decode_gif": ("gif", None),
-    "multimodal_gif_frame_sample": ("gif", "gif_frame_sample"),
+    "multimodal_gif_frame_sample": ("gif", "gif"),
     "multimodal_decode_g711": ("g711", None),
     "multimodal_decode_mp4": ("mp4", None),
-    "multimodal_mp4_frame_sample": ("mp4", "mp4_frame_sample"),
+    "multimodal_mp4_frame_sample": ("mp4", "mp4"),
     "multimodal_decode_mp3": ("mp3", None),
 }
 
 
-def _fixture_query(fixture: str, sampler: str | None):
+def _fixture_query(fixture: str, frames_of: str | None):
     def q(spark, sf_dir):
         _conf(spark)
         # imported lazily: the headline suite never loads the codecs
@@ -827,9 +828,9 @@ def _fixture_query(fixture: str, sampler: str | None):
 
         docs = _t("documents")(spark, sf_dir)
         media = multimodal.docs_to_media(docs, fixture, limit=MEDIA_LIMIT)
-        if sampler is None:
+        if frames_of is None:
             return multimodal.decode_real_summary(media)
-        return getattr(multimodal, sampler)(media, every_n=2).select(
+        return multimodal.frame_sample(media, frames_of, every_n=2).select(
             "media_id", "frame_idx", F.md5(F.col("frame_bytes")).alias("frame_md5")
         )
 
@@ -886,8 +887,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_ivf_batch_topk": q_ann_ivf_batch_topk,
         "multimodal_features": q_multimodal_features,
         **{
-            name: _fixture_query(fixture, sampler)
-            for name, (fixture, sampler) in MULTIMODAL_FIXTURES.items()
+            name: _fixture_query(fixture, frames_of)
+            for name, (fixture, frames_of) in MULTIMODAL_FIXTURES.items()
         },
     }
 

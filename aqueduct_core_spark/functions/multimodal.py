@@ -13,8 +13,10 @@ Decode comes in three tiers:
     container (box walk + sample tables + per-sample byte extraction —
     frame SELECTION without a codec) and the MP3 frame walk are parsed in
     pure numpy/stdlib — `use_real=True` is a genuinely exercised path,
-    oracle-gated end to end. One magic-byte sniff (`_container`) routes
-    every payload to its parser.
+    oracle-gated end to end. One table, `_CODECS[container]`, holds each
+    container's decoder, summary, features and frames; one magic-byte sniff
+    (`_container`) picks the row, and one decode boundary turns every parse
+    failure of malformed bytes into ValueError.
   * REAL, pluggable: compressed-video/audio BITSTREAMS inside containers
     (H.26x, AAC, mp3) dispatch through `register_decoder` — Pillow/ffmpeg
     plug in on a cluster; an unregistered kind raises NotImplementedError.
@@ -24,10 +26,12 @@ Decode comes in three tiers:
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import struct
 import zlib
-from typing import Iterator
+from operator import itemgetter
+from typing import Callable, Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -70,6 +74,90 @@ FRAME_SCHEMA = StructType(
         StructField("frame_bytes", BinaryType(), False),
     ]
 )
+
+
+# ------------------------------------------------------------- codec table
+# One row per container `_container` names. `decode` is the public decode_*
+# behind the one decode boundary; the other three read what it returns:
+#   summary(decoded) -> (content bytes, n_units, rate, duration_ms), the
+#     decode_real_summary columns;
+#   features(decoded, k) -> (5-value head, at most k series values), which
+#     decode_media packs into `dim` floats;
+#   frames(decoded) -> list of frame bytes, what frame_sample fans out.
+
+
+class _Codec(NamedTuple):
+    kind: str  # image | audio | video
+    decode: Callable[[bytes], dict]
+    features: Callable[[dict, int], tuple[list, list]]
+    summary: Callable[[dict], tuple[bytes, int, int, int]] | None
+    frames: Callable[[dict], list[bytes]] | None
+
+
+_CODECS: dict[str, _Codec] = {}
+
+#: Pillow's decompression-bomb rule (Image.MAX_IMAGE_PIXELS) at the scale of
+#: pure-numpy decoders: a GIF, PNG or JPEG canvas above this many pixels is
+#: refused before anything is allocated for it
+_MAX_PIXELS = 1 << 24
+
+
+def _codec(container: str, kind: str, features, summary=None, frames=None):
+    """Register the decorated decoder as `container`'s _CODECS row, behind the
+    one decode boundary: the struct, zlib, index, key and overflow errors that
+    malformed bytes raise mid-parse leave as ValueError("malformed
+    <container>: ..."), so every caller catches one exception type."""
+
+    def register(decode):
+        @functools.wraps(decode)
+        def guarded(payload: bytes) -> dict:
+            try:
+                return decode(payload)
+            except (struct.error, zlib.error, IndexError, KeyError, OverflowError) as e:
+                raise ValueError(f"malformed {container}: {type(e).__name__}: {e}") from e
+
+        _CODECS[container] = _Codec(kind, guarded, features, summary, frames)
+        return guarded
+
+    return register
+
+
+def _split_stats(x: np.ndarray, k: int, stat) -> list[float]:
+    """`stat` of each of k near-equal chunks of x (0.0 for an empty chunk)."""
+    return [float(stat(c)) if c.size else 0.0 for c in (np.array_split(x, k) if k and x.size else [])]
+
+
+def _byte_means(chunks) -> list[float]:
+    return [float(np.frombuffer(c, np.uint8).mean()) if len(c) else 0.0 for c in chunks]
+
+
+def _first_plane(px: np.ndarray) -> np.ndarray:
+    """Gray pixels, or the first channel (R, or Y for JPEG) of color ones."""
+    return px[..., 0] if px.ndim == 3 else px
+
+
+def _image_features(img: dict, k: int):
+    """[width, height, mean R, mean G, mean B] + grayscale block means."""
+    px = img["pixels"]
+    if px.ndim == 2:
+        px = np.repeat(px[:, :, None], 3, axis=2)  # gray->RGB
+    flat = px.reshape(-1, 3).astype(np.float64)
+    means = flat.mean(axis=0) if flat.size else np.zeros(3)
+    return [img["width"], img["height"], *means], _split_stats(flat.mean(axis=1), k, np.mean)
+
+
+def _video_features(frames):
+    """Features over a video row's `frames`: [width, height, n_frames,
+    first-frame mean, last-frame mean] + per-frame gray means. For MP4 the
+    frames are the sample bytes; reading them as gray values is the
+    registry-seam stand-in for the codec."""
+
+    def features(video: dict, k: int):
+        means = _byte_means(frames(video))
+        ends = [means[0], means[-1]] if means else [0.0, 0.0]
+        return [video["width"], video["height"], len(means), *ends], means[:k]
+
+    return features
 
 
 # ------------------------------------------------------------- real codecs
@@ -154,6 +242,30 @@ def wav_g711_bytes(codes: bytes, law: str = "ulaw") -> bytes:
     )
 
 
+def _wav_summary(wav: dict):
+    if wav["codec"] == "pcm":
+        content = wav["samples"].tobytes()
+    else:
+        # companded stream: the digest gates BOTH directions — expand to
+        # linear int16, then the compressor must find its way back to the
+        # exact source codes
+        content = g711_compress(wav["samples"], wav["codec"])
+    n, rate = wav["n_samples"], wav["sample_rate"]
+    return content, n, rate, n * 1000 // rate
+
+
+def _wav_features(wav: dict, k: int):
+    """[sample_rate, channels, bits, n_samples, duration_ms] + per-chunk RMS
+    energy."""
+    s = wav["samples"].astype(np.float64)
+    if s.ndim > 1:
+        s = s.mean(axis=1)
+    n, rate = wav["n_samples"], wav["sample_rate"]
+    rms = _split_stats(s, k, lambda c: np.sqrt(np.mean(c * c)))
+    return [rate, wav["channels"], wav["bits"], n, n * 1000.0 / rate], rms
+
+
+@_codec("wav", "audio", features=_wav_features, summary=_wav_summary)
 def decode_wav(payload: bytes) -> dict:
     """RIFF/WAVE PCM parser: walks the chunk list (no fixed 44-byte layout
     assumption; skips LIST/fact/etc., honors word alignment). Returns header
@@ -174,6 +286,8 @@ def decode_wav(payload: bytes) -> dict:
     if fmt is None or data is None:
         raise ValueError("missing fmt/data chunk")
     audio_format, channels, sample_rate, _byte_rate, _block_align, bits = fmt
+    if sample_rate == 0:
+        raise ValueError("WAV sample rate 0")
     if audio_format in (6, 7):  # G.711 A-law / mu-law (one code byte/sample)
         codec = "alaw" if audio_format == 6 else "ulaw"
         samples = g711_expand(data, codec)  # decoded linear int16
@@ -202,6 +316,14 @@ def ppm_bytes(gray: bytes) -> bytes:
     return f"P6\n{len(gray)} 1\n255\n".encode() + rgb
 
 
+@_codec(
+    "ppm",
+    "image",
+    features=_image_features,
+    summary=lambda img: (  # R channel
+        img["pixels"][:, :, 0].tobytes(), img["width"] * img["height"], img["maxval"], img["height"]
+    ),
+)
 def decode_ppm(payload: bytes) -> dict:
     """P6 PPM parser: whitespace/comment-tolerant header scan + raw RGB."""
     if payload[:2] != b"P6":
@@ -233,9 +355,11 @@ def bmp_bytes(gray: bytes) -> bytes:
     return struct.pack("<2sIHHI", b"BM", 14 + 40 + len(body), 0, 0, 54) + info + body
 
 
+@_codec("bmp", "image", features=_image_features)
 def decode_bmp(payload: bytes) -> dict:
     """24-bpp uncompressed BMP parser: honors pixel-array offset, per-row
-    4-byte padding, bottom-up vs top-down (negative height), BGR→RGB."""
+    4-byte padding, bottom-up vs top-down (negative height), BGR→RGB. The
+    declared rows must fit in the payload."""
     if payload[:2] != b"BM":
         raise ValueError("not a BMP payload")
     offset = struct.unpack("<I", payload[10:14])[0]
@@ -245,10 +369,10 @@ def decode_bmp(payload: bytes) -> dict:
     flip = h > 0
     h = abs(h)
     stride = (w * 3 + 3) // 4 * 4
-    px = np.zeros((h, w, 3), dtype=np.uint8)
-    for r in range(h):
-        row = np.frombuffer(payload[offset + r * stride : offset + r * stride + w * 3], np.uint8)
-        px[r] = row.reshape(w, 3)
+    if w < 0 or offset + h * stride > len(payload):
+        raise ValueError(f"BMP pixel array ({w}x{h}) overruns the payload")
+    rows = np.frombuffer(payload[offset : offset + h * stride], np.uint8).reshape(h, stride)
+    px = rows[:, : w * 3].reshape(h, w, 3)
     if flip:
         px = px[::-1]
     return {"width": w, "height": h, "pixels": px[:, :, ::-1]}  # BGR -> RGB
@@ -386,12 +510,26 @@ def png_encode(img: np.ndarray, color_type: int = 0, interlace: int = 0) -> byte
     return out + _png_chunk(b"IEND", b"")
 
 
+@_codec(
+    "png",
+    "image",
+    features=_image_features,
+    # the builders write `height` identical rows of the source bytes, so the
+    # md5 covers EVERY row — each row travels through a different scanline
+    # predictor (the encoder cycles all five), and under Adam7 through a
+    # different pass split as well
+    summary=lambda img: (
+        _first_plane(img["pixels"]).tobytes(), img["width"], img["width"], img["height"]
+    ),
+)
 def decode_png(payload: bytes) -> dict:
     """PNG parser: signature, chunk walk with CRC32 verification, IHDR
     validation, zlib inflate, per-pass unfiltering (all five predictors),
     PLTE application for indexed images, Adam7 de-interlacing. Supports bit
     depth 8, color types 0/2/3, both interlace methods; anything else —
-    including unknown CRITICAL chunks — raises instead of mis-decoding."""
+    including unknown CRITICAL chunks, a canvas over _MAX_PIXELS and pixel
+    data longer or shorter than IHDR declares — raises instead of
+    mis-decoding. Inflation stops one byte past the declared size."""
     if payload[: len(_PNG_SIG)] != _PNG_SIG:
         raise ValueError("not a PNG payload")
     pos, ihdr, plte, idat, ended = len(_PNG_SIG), None, None, bytearray(), False
@@ -424,16 +562,22 @@ def decode_png(payload: bytes) -> dict:
         )
     if ctype == 3 and plte is None:
         raise ValueError("indexed PNG without PLTE")
+    if w * h > _MAX_PIXELS:
+        raise ValueError(f"PNG canvas {w}x{h} exceeds {_MAX_PIXELS} pixels")
     bpp = 3 if ctype == 2 else 1
-    raw = np.frombuffer(zlib.decompress(bytes(idat)), np.uint8)
+    need = sum(ph * (1 + pw * bpp) for *_, pw, ph in _png_pass_views(w, h, interlace))
+    inflate = zlib.decompressobj()
+    raw = np.frombuffer(inflate.decompress(bytes(idat), need + 1), np.uint8)
+    if raw.size > need:
+        raise ValueError("PNG pixel data has trailing bytes")
+    if raw.size < need or not inflate.eof:
+        raise ValueError("PNG pixel data truncated")
     img = np.zeros((h, w * bpp), np.uint8)
     off = 0
     for x0, y0, dx, dy, pw, ph in _png_pass_views(w, h, interlace):
         stride = pw * bpp
         prev = np.zeros(stride, np.uint8)
         for r in range(ph):
-            if off + 1 + stride > raw.size:
-                raise ValueError("PNG pixel data truncated")
             ftype = int(raw[off])
             row = _png_unfilter_row(ftype, raw[off + 1 : off + 1 + stride], prev, bpp)
             off += 1 + stride
@@ -442,8 +586,6 @@ def decode_png(payload: bytes) -> dict:
             else:
                 img[y0 + r * dy].reshape(w, 3)[x0::dx] = row.reshape(pw, 3)
             prev = row
-    if off != raw.size:
-        raise ValueError("PNG pixel data has trailing bytes")
     px = img.reshape(h, w, 3) if bpp == 3 else img
     if ctype == 3:
         px = plte[px]  # indexed -> RGB through the palette
@@ -621,6 +763,21 @@ def gif_bytes(
     return bytes(out)
 
 
+def _gif_frames(gif: dict) -> list[bytes]:
+    return [f.tobytes() for f in gif["frames"]]
+
+
+@_codec(
+    "gif",
+    "video",
+    features=_video_features(_gif_frames),
+    # the builder writes identical full-canvas frames under disposal 1, so
+    # the md5 covers EVERY frame's composited canvas — interlaced and
+    # sequential frames alike travel through LZW decode + de-interlace +
+    # compositing
+    summary=lambda gif: (gif["frames"].tobytes(), gif["width"], gif["n_frames"], gif["height"]),
+    frames=_gif_frames,
+)
 def decode_gif(payload: bytes) -> dict:
     """GIF parser: header + logical screen descriptor, global/local color
     tables, extension-block walk (graphic control honored: transparency
@@ -629,10 +786,13 @@ def decode_gif(payload: bytes) -> dict:
     per-frame LZW decode at any min code size, 4-pass de-interlacing.
     Returns every frame's post-composite canvas as grayscale (palette R
     channel) — GIF is the one container here with real animation, so
-    `frames` has shape (n_frames, h, w)."""
+    `frames` has shape (n_frames, h, w), refused once it would exceed
+    _MAX_PIXELS."""
     if payload[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF payload")
     w, h, packed, bg, _aspect = struct.unpack("<HHBBB", payload[6:13])
+    if w * h > _MAX_PIXELS:
+        raise ValueError(f"GIF canvas {w}x{h} exceeds {_MAX_PIXELS} pixels")
     pos = 13
     gct = None
     if packed & 0x80:
@@ -698,6 +858,8 @@ def decode_gif(payload: bytes) -> dict:
             keep = idx == transparent
             gray = np.where(keep, canvas[top : top + fh, left : left + fw], gray)
         canvas[top : top + fh, left : left + fw] = gray
+        if (len(frames) + 1) * w * h > _MAX_PIXELS:
+            raise ValueError(f"GIF frames exceed {_MAX_PIXELS} pixels")
         frames.append(canvas.copy())
         if disposal == 2:  # restore background in the frame's rect
             canvas[top : top + fh, left : left + fw] = bg_val
@@ -1153,24 +1315,38 @@ def jpeg_progressive_bytes(
     return _jpeg_stream(blocks, 8 * row.size, 8, [(1, 1)] * ncomp, scans, restart_interval)
 
 
+#: pad bits a scan may consume past its data (libjpeg warns and pads too)
+_PAD_BITS = 32
+
+
 class _BitReader:
+    """Entropy-coded segment reader: byte unstuffing, and 0 bits fed at a
+    marker or the segment's end. Those pad bits are spec-legal for the last
+    few bits of a scan; a scan that reads more than _PAD_BITS of them
+    declared more data units than its bytes hold, and is refused."""
+
     def __init__(self, data: bytes):
         self.data = data
         self.pos = 0
         self.acc = 0
         self.n = 0
+        self.pad = 0  # pad bits fed since the last restart
 
     def _fill(self) -> None:
-        while self.n <= 24 and self.pos < len(self.data):
-            b = self.data[self.pos]
-            self.pos += 1
-            if b == 0xFF:
-                nxt = self.data[self.pos] if self.pos < len(self.data) else 0xD9
-                if nxt == 0x00:
-                    self.pos += 1  # stuffed byte
-                else:
-                    b = 0  # marker reached (EOI): spec-legal 0 padding
-                    self.pos -= 1
+        while self.n <= 24:
+            b = self.data[self.pos] if self.pos < len(self.data) else 0xFF
+            if b != 0xFF:
+                self.pos += 1
+            elif self.data[self.pos + 1 : self.pos + 2] == b"\x00":
+                self.pos += 2  # stuffed byte
+            else:
+                # a marker or the end: feed a 0 pad byte, pos stays put.
+                # _fill runs at most 32 bits ahead of the reads, so a scan
+                # has read past _PAD_BITS once 32 more than that were fed
+                b = 0
+                self.pad += 8
+                if self.pad > _PAD_BITS + 32:
+                    raise ValueError("scan reads past its entropy-coded data")
             self.acc = (self.acc << 8) | b
             self.n += 8
 
@@ -1178,9 +1354,6 @@ class _BitReader:
         if length == 0:
             return 0
         self._fill()
-        if self.n < length:
-            self.acc <<= length - self.n
-            self.n = length
         v = (self.acc >> (self.n - length)) & ((1 << length) - 1)
         self.n -= length
         return v
@@ -1191,8 +1364,7 @@ class _BitReader:
         zeros _fill feeds at a marker — _fill never advances past an FF, so
         pos sits exactly on the marker), read FF Dn, return n. Caller resets
         the DC predictors per the spec."""
-        self.acc = 0
-        self.n = 0
+        self.acc = self.n = self.pad = 0
         if self.pos + 1 >= len(self.data) or self.data[self.pos] != 0xFF:
             raise ValueError("expected restart marker in scan")
         m = self.data[self.pos + 1]
@@ -1396,6 +1568,18 @@ def _planes_from_coefs(coefs, comps, qtables):
     return out
 
 
+def _jpeg_summary(img: dict):
+    # one byte per MCU (the builders' layout): top-left pixel of each MCU
+    # across the first MCU row — stride = the parsed MCU width (8 for 4:4:4,
+    # 16 for 4:2:0); for a color stream the Y plane carries the source bytes
+    # (the chroma planes and sibling luma blocks are its fixed derivations —
+    # pinned by pytest, not by this digest)
+    step = img["mcu_w"]
+    content = _first_plane(img["pixels"])[:1, ::step].tobytes()
+    return content, img["width"] // step, img["width"], img["height"]
+
+
+@_codec("jpeg", "image", features=_image_features, summary=_jpeg_summary)
 def decode_jpeg(payload: bytes) -> dict:
     """DCT JPEG decoder, baseline (SOF0) and progressive (SOF2), through one
     marker walk (DQT/DHT/SOFn/DRI/SOS) that fills one per-component store
@@ -1413,7 +1597,8 @@ def decode_jpeg(payload: bytes) -> dict:
     order, subsampled planes box-upsampled to frame resolution).
     Scan-header legality (B.2.3) is enforced for SOF2: a DC band must be
     exactly [0,0], AC bands must not cross 0 or interleave components.
-    Arithmetic coding and the other SOF types raise.
+    Arithmetic coding, the other SOF types, a frame over _MAX_PIXELS and a
+    scan that runs out of entropy-coded data raise.
     Grayscale returns pixels (h, w); color returns pixels (h, w, 3) in frame
     component order with ncomp=3, plus the parsed sampling factors, the MCU
     pixel width and, for SOF2, progressive=True."""
@@ -1461,6 +1646,8 @@ def decode_jpeg(payload: bytes) -> dict:
             if len(body) < 6 or len(body) < 6 + 3 * body[5]:
                 raise ValueError("truncated SOF segment")
             _prec, height, width, ncomp = struct.unpack(">BHHB", body[:6])
+            if height * width > _MAX_PIXELS:
+                raise ValueError(f"JPEG frame {width}x{height} exceeds {_MAX_PIXELS} pixels")
             if ncomp not in (1, 3):
                 raise ValueError("only 1- (gray) or 3-component (YCbCr) frames supported")
             for ci in range(ncomp):
@@ -1731,6 +1918,18 @@ def _mp4_child(buf: bytes, start: int, end: int, tag: bytes):
     return None
 
 
+@_codec(
+    "mp4",
+    "video",
+    features=_video_features(itemgetter("samples")),
+    # the builder writes identical frame payloads chunked 2-per-chunk, so the
+    # md5 covers every sample sliced via the real stsc/stco chunk walk from
+    # absolute offsets
+    summary=lambda mp4: (
+        b"".join(mp4["samples"]), mp4["width"], mp4["n_samples"], mp4["duration_ms"]
+    ),
+    frames=itemgetter("samples"),
+)
 def decode_mp4(payload: bytes) -> dict:
     """Parse an ISO BMFF (MP4) container in pure stdlib: box walk, first
     video track's sample tables, and absolute per-sample byte extraction via
@@ -1811,6 +2010,8 @@ def decode_mp4(payload: bytes) -> dict:
     if stsz is None:
         raise ValueError("stbl has no stsz")
     const_size, n_samples = struct.unpack_from(">II", payload, stsz[0] + 4)
+    if const_size * n_samples > len(payload):
+        raise ValueError(f"stsz declares {n_samples} samples of {const_size} bytes")
     sizes = (
         [const_size] * n_samples
         if const_size
@@ -1979,6 +2180,24 @@ def id3v2_bytes(fields: dict[str, str]) -> bytes:
 _ID3V1_STUB = b"TAG" + b"\x00" * 125
 
 
+def _mp3_features(mp3: dict, k: int):
+    """[sample_rate, channels, layer, n_samples, duration_ms] + per-frame
+    byte means (the registry-seam stand-in for the Huffman codec)."""
+    head = [mp3[f] for f in ("sample_rate", "channels", "layer", "n_samples", "duration_ms")]
+    return head, _byte_means(mp3["frames"][:k])
+
+
+@_codec(
+    "mp3",
+    "audio",
+    features=_mp3_features,
+    # the builder writes identical free-format frame payloads between
+    # ID3v2/ID3v1 tags, so the md5 covers every frame's bytes sized by the
+    # real sync scan
+    summary=lambda mp3: (
+        b"".join(mp3["frames"]), len(mp3["frames"][0]), mp3["sample_rate"], mp3["duration_ms"]
+    ),
+)
 def decode_mp3(payload: bytes) -> dict:
     """MPEG audio (MP3 family) frame walk in pure stdlib: skip ID3v2 (syncsafe
     size + optional footer) and a trailing ID3v1 block, then iterate frames —
@@ -2066,8 +2285,8 @@ def decode_mp3(payload: bytes) -> dict:
 def _container(payload: bytes) -> str:
     """The container a payload's magic bytes name: "wav" (RIFF), "png",
     "mp4" (ftyp box at byte 4), "gif", "mp3" (ID3 tag or an MPEG frame
-    sync), "jpeg" (SOI), "ppm" (P6), "bmp", or "" for none. The checks run
-    in this order, so every caller resolves a payload the same way."""
+    sync), "jpeg" (SOI), "ppm" (P6), "bmp", or "" for none, checked in
+    this order."""
     if payload[:4] == b"RIFF":
         return "wav"
     if payload[: len(_PNG_SIG)] == _PNG_SIG:
@@ -2081,108 +2300,11 @@ def _container(payload: bytes) -> str:
     return {b"\xff\xd8": "jpeg", b"P6": "ppm", b"BM": "bmp"}.get(payload[:2], "")
 
 
-def _audio_features_real(payload: bytes, dim: int) -> np.ndarray:
-    """Real audio features from a WAV payload: [sample_rate, channels, bits,
-    n_samples, duration_ms] + per-chunk RMS energy filling the remaining dims.
-    MP3 payloads (ID3 prefix or frame sync) take the frame walk instead: bits
-    slot carries the layer, chunk energies the per-frame byte means (the
-    registry-seam stand-in for the Huffman codec)."""
-    if _container(payload) == "mp3":
-        mp3 = decode_mp3(payload)
-        head = [
-            float(mp3["sample_rate"]),
-            float(mp3["channels"]),
-            float(mp3["layer"]),
-            float(mp3["n_samples"]),
-            float(mp3["duration_ms"]),
-        ]
-        k = max(dim - len(head), 0)
-        means = [
-            float(np.frombuffer(f, dtype=np.uint8).mean()) if f else 0.0
-            for f in mp3["frames"][:k]
-        ]
-        tail = means + [0.0] * (k - len(means))
-        return np.asarray((head + tail)[:dim], dtype=np.float32)
-    wav = decode_wav(payload)
-    s = wav["samples"].astype(np.float64)
-    if s.ndim > 1:
-        s = s.mean(axis=1)
-    head = [
-        float(wav["sample_rate"]),
-        float(wav["channels"]),
-        float(wav["bits"]),
-        float(wav["n_samples"]),
-        wav["n_samples"] * 1000.0 / wav["sample_rate"],
-    ]
-    k = max(dim - len(head), 0)
-    tail = [
-        float(np.sqrt(np.mean(c * c))) if c.size else 0.0
-        for c in (np.array_split(s, k) if k and s.size else [])
-    ]
-    tail += [0.0] * (k - len(tail))
-    return np.asarray((head + tail)[:dim], dtype=np.float32)
-
-
-def _image_features_real(payload: bytes, dim: int) -> np.ndarray:
-    """Real image features from a PPM, BMP, PNG or JPEG payload (sniffed by
-    magic): [width, height, mean R, mean G, mean B] + grayscale block means."""
-    decode = {"ppm": decode_ppm, "bmp": decode_bmp, "png": decode_png, "jpeg": decode_jpeg}.get(
-        _container(payload)
-    )
-    if decode is None:
-        raise ValueError("unsupported image container (PPM/BMP/PNG/DCT-JPEG only without codec libs)")
-    img = decode(payload)
-    px = img["pixels"]
-    if px.ndim == 2:
-        px = np.repeat(px[:, :, None], 3, axis=2)  # gray->RGB
-    flat = px.reshape(-1, 3).astype(np.float64)
-    means = flat.mean(axis=0) if flat.size else np.zeros(3)
-    head = [float(img["width"]), float(img["height"]), means[0], means[1], means[2]]
-    k = max(dim - len(head), 0)
-    gray = flat.mean(axis=1) if flat.size else np.zeros(0)
-    tail = [
-        float(c.mean()) if c.size else 0.0
-        for c in (np.array_split(gray, k) if k and gray.size else [])
-    ]
-    tail += [0.0] * (k - len(tail))
-    return np.asarray((head + tail)[:dim], dtype=np.float32)
-
-
-def _video_features_real(payload: bytes, dim: int) -> np.ndarray:
-    """Real video features from an animated-GIF or MP4 payload (sniffed by
-    magic): [width, height, n_frames, first-frame mean, last-frame mean] +
-    per-frame gray means filling the remaining dims (zero-padded past the
-    frame count). For MP4 the per-frame bytes come from the real sample-table
-    walk; interpreting them as gray values is the registry-seam stand-in for
-    the codec."""
-    if _container(payload) == "mp4":
-        mp4 = decode_mp4(payload)
-        frames = [np.frombuffer(s, dtype=np.uint8).astype(np.float64) for s in mp4["samples"]]
-        w, h, n = mp4["width"], mp4["height"], mp4["n_samples"]
-        means = [float(f.mean()) if f.size else 0.0 for f in frames]
-    else:
-        gif = decode_gif(payload)
-        fr = gif["frames"].astype(np.float64)
-        w, h, n = gif["width"], gif["height"], gif["n_frames"]
-        means = [float(fr[i].mean()) for i in range(len(fr))] if fr.size else []
-    head = [
-        float(w),
-        float(h),
-        float(n),
-        means[0] if means else 0.0,
-        means[-1] if means else 0.0,
-    ]
-    k = max(dim - len(head), 0)
-    tail = means[:k] + [0.0] * max(k - len(means), 0)
-    return np.asarray((head + tail)[:dim], dtype=np.float32)
-
-
-#: kinds decodable with zero external libraries — the built-in real path.
-_BUILTIN_REAL_DECODERS = {
-    "audio": _audio_features_real,
-    "image": _image_features_real,
-    "video": _video_features_real,
-}
+def _lookup(payload: bytes) -> tuple[str, _Codec | None]:
+    """The payload's container and its _CODECS row (None for a container
+    with no row): the one dispatch every entry point goes through."""
+    name = _container(payload)
+    return name, _CODECS.get(name)
 
 
 def _fake_features(payload: bytes, dim: int) -> np.ndarray:
@@ -2193,7 +2315,8 @@ def _fake_features(payload: bytes, dim: int) -> np.ndarray:
 
 
 #: per-kind real decoders, registered when codec libraries exist on the
-#: cluster (register_decoder("image", pil_decode), ...). Each maps
+#: cluster (register_decoder("image", pil_decode), ...), taking over from
+#: the _CODECS rows of their kind. Each maps
 #: (payload: bytes, dim: int) -> np.ndarray of length dim. The ONLY stubbed
 #: surface is the codec call itself — dispatch, batching, schema and
 #: partitioning are real and tested (mock decoders injected in tests).
@@ -2207,16 +2330,25 @@ def register_decoder(kind: str, fn) -> None:
 def decode_media(
     payload: bytes, kind: str, use_real: bool = False, dim: int = 64, decoder=None
 ) -> np.ndarray:
-    if use_real:
-        fn = decoder or _REAL_DECODERS.get(kind) or _BUILTIN_REAL_DECODERS.get(kind)
-        if fn is None:
-            # Kinds needing real codec libraries (mp3/mp4: ffmpeg) are not
-            # decodable in this container. register_decoder() plugs them in
-            # on a cluster; audio/image/video fall back to the built-in
-            # pure-numpy WAV/PPM/BMP/PNG/JPEG/GIF parsers above.
-            raise NotImplementedError(f"no registered decoder for {kind!r}")
+    """`dim` features of one payload: the fake digest-seeded stand-in, or with
+    use_real=True the injected `decoder`, the one registered for `kind`, or
+    the payload's _CODECS row — its 5-value head then its series,
+    zero-padded to `dim`. A kind that no row has and no decoder is
+    registered for raises NotImplementedError (register_decoder plugs e.g.
+    ffmpeg in on a cluster); a payload whose container is not a built-in
+    `kind` raises ValueError."""
+    if not use_real:
+        return _fake_features(payload, dim)
+    fn = decoder or _REAL_DECODERS.get(kind)
+    if fn is not None:
         return np.asarray(fn(payload, dim), dtype=np.float32)
-    return _fake_features(payload, dim)
+    if all(c.kind != kind for c in _CODECS.values()):
+        raise NotImplementedError(f"no registered decoder for {kind!r}")
+    name, codec = _lookup(payload)
+    if codec is None or codec.kind != kind:
+        raise ValueError(f"{name or 'unknown'} payload is not a built-in {kind} container")
+    head, series = codec.features(codec.decode(payload), max(dim - 5, 0))
+    return np.asarray((head + series + [0.0] * dim)[:dim], dtype=np.float32)
 
 
 def extract_features(
@@ -2247,68 +2379,28 @@ def extract_features(
     return df.mapInPandas(run, FEATURE_SCHEMA)
 
 
-def _fan_out(df: DataFrame, frames_of, every_n: int) -> DataFrame:
-    """The frame-sampling shape: 1 media row -> k frame rows, keeping every
-    n-th frame of the sequence `frames_of(kind, payload)` returns (empty for
-    payloads that are not its container)."""
+def frame_sample(df: DataFrame, container: str, every_n: int = 2) -> DataFrame:
+    """Frame sampling, 1 media row -> k frame rows: each `container` payload's
+    frames from its _CODECS row (GIF: every decoded, composited gray canvas;
+    MP4: every sample's exact bytes from the stsc/stco walk — the
+    container's own index, no codec needed), keeping every n-th. Payloads of
+    other containers yield none. An ffmpeg keyframe iterator drops in as a
+    row."""
+    codec = _CODECS.get(container)
+    if codec is None or codec.frames is None:
+        raise ValueError(f"no frames for container {container!r}")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out_id, out_idx, out_bytes = [], [], []
-            for mid, kind, payload in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
-                frames = frames_of(kind, payload)
-                for idx in range(0, len(frames), every_n):
-                    out_id.append(mid)
-                    out_idx.append(idx)
-                    out_bytes.append(frames[idx])
-            yield pd.DataFrame(
-                {"media_id": out_id, "frame_idx": out_idx, "frame_bytes": out_bytes}
-            )
+            rows = []
+            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
+                payload = bytes(payload or b"")
+                if _lookup(payload)[0] == container:
+                    frames = codec.frames(codec.decode(payload))
+                    rows += [(mid, i, frames[i]) for i in range(0, len(frames), every_n)]
+            yield pd.DataFrame(rows, columns=FRAME_SCHEMA.fieldNames())
 
     return df.mapInPandas(run, FRAME_SCHEMA)
-
-
-def frame_sample(df: DataFrame, frame_size: int = 1024, every_n: int = 2) -> DataFrame:
-    """Video frame sampling (stub): treat the payload as fixed-size frames and
-    keep every n-th — the real implementation swaps the chunker for an ffmpeg
-    keyframe iterator; the fan-out shape (1 row -> k rows) is what matters."""
-
-    def chunks(kind, payload):
-        if kind != "video" or payload is None:
-            return []
-        return [payload[i : i + frame_size] for i in range(0, len(payload), frame_size)]
-
-    return _fan_out(df, chunks, every_n)
-
-
-def gif_frame_sample(df: DataFrame, every_n: int = 2) -> DataFrame:
-    """REAL video frame sampling: decode each animated-GIF payload's actual
-    frame sequence (LZW + compositing, decode_gif) and keep every n-th
-    frame's full-canvas gray plane — an ffmpeg keyframe iterator drops in by
-    replacing one function."""
-
-    def frames(kind, payload):
-        payload = bytes(payload or b"")
-        if _container(payload) != "gif":
-            return []
-        return [f.tobytes() for f in decode_gif(payload)["frames"]]
-
-    return _fan_out(df, frames, every_n)
-
-
-def mp4_frame_sample(df: DataFrame, every_n: int = 2) -> DataFrame:
-    """REAL video frame sampling from MP4 containers: walk each payload's
-    sample tables (stts/stsc/stsz/stco) and keep every n-th sample's exact
-    bytes — the container's own index drives the selection, no codec needed.
-    Decoding the kept bytes is the registered codec's job."""
-
-    def samples(kind, payload):
-        payload = bytes(payload or b"")
-        if _container(payload) != "mp4":
-            return []
-        return decode_mp4(payload)["samples"]
-
-    return _fan_out(df, samples, every_n)
 
 
 def media_from_documents(docs: DataFrame, limit: int | None = None) -> DataFrame:
@@ -2466,98 +2558,26 @@ def docs_to_media(docs: DataFrame, fixture: str, limit: int | None = None) -> Da
 
 def decode_real_summary(media: DataFrame) -> DataFrame:
     """REAL-decode summary — the oracle-gated proof that `use_real` decoding
-    round-trips: each payload is container-sniffed by magic (_container: WAV
-    incl. G.711, PNG, MP4, GIF, MP3, JPEG; anything else -> P6 PPM) and decoded
-    by the pure-numpy/stdlib parsers, then the DECODED samples/pixels/frames
-    are re-serialized and md5'd. The digest equals md5 of the source text
-    bytes only if chunk walking, header parsing and sample/pixel extraction —
-    for JPEG the whole Huffman/zigzag/dequantize/IDCT pipeline — are all
-    correct."""
+    round-trips: each payload goes through its container's _CODECS row
+    (WAV incl. G.711, PPM, PNG, JPEG, GIF, MP4, MP3), whose summary
+    re-serializes the DECODED samples/pixels/frames for the md5. The digest
+    equals md5 of the source text bytes only if chunk walking, header
+    parsing and sample/pixel extraction — for JPEG the whole
+    Huffman/zigzag/dequantize/IDCT pipeline — are all correct. A container
+    with no summary (BMP, or none at all) raises ValueError naming it."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows: dict[str, list] = {k.name: [] for k in REAL_SUMMARY_SCHEMA.fields}
+            rows = []
             for mid, kind, payload in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
                 payload = bytes(payload or b"")
-                container = _container(payload)
-                if container == "wav":
-                    wav = decode_wav(payload)
-                    if wav.get("codec") in ("ulaw", "alaw"):
-                        # companded stream: the digest gates BOTH directions —
-                        # expand to linear int16, then the compressor must
-                        # find its way back to the exact source codes
-                        content = g711_compress(wav["samples"], wav["codec"])
-                    else:
-                        content = wav["samples"].tobytes()
-                    rows["n_units"].append(wav["n_samples"])
-                    rows["rate"].append(int(wav["sample_rate"]))
-                    rows["duration_ms"].append(
-                        wav["n_samples"] * 1000 // wav["sample_rate"]
-                    )
-                elif container == "png":
-                    img = decode_png(payload)
-                    # the builders write `height` identical rows of the
-                    # source bytes, so the md5 covers EVERY row — each row
-                    # travels through a different scanline predictor (the
-                    # encoder cycles all five), and under Adam7 through a
-                    # different pass split as well
-                    px = img["pixels"]
-                    content = (px[..., 0] if px.ndim == 3 else px).tobytes()
-                    rows["n_units"].append(img["width"])
-                    rows["rate"].append(int(img["width"]))
-                    rows["duration_ms"].append(int(img["height"]))
-                elif container == "mp4":
-                    mp4 = decode_mp4(payload)
-                    # the builder writes identical frame payloads chunked
-                    # 2-per-chunk, so the md5 covers every sample sliced via
-                    # the real stsc/stco chunk walk from absolute offsets
-                    content = b"".join(mp4["samples"])
-                    rows["n_units"].append(mp4["width"])
-                    rows["rate"].append(int(mp4["n_samples"]))
-                    rows["duration_ms"].append(int(mp4["duration_ms"]))
-                elif container == "gif":
-                    gif = decode_gif(payload)
-                    # the builder writes identical full-canvas frames under
-                    # disposal 1, so the md5 covers EVERY frame's composited
-                    # canvas — interlaced and sequential frames alike travel
-                    # through LZW decode + de-interlace + compositing
-                    content = gif["frames"].tobytes()
-                    rows["n_units"].append(gif["width"])
-                    rows["rate"].append(int(gif["n_frames"]))
-                    rows["duration_ms"].append(int(gif["height"]))
-                elif container == "mp3":
-                    mp3 = decode_mp3(payload)
-                    # the builder writes identical free-format frame payloads
-                    # between ID3v2/ID3v1 tags, so the md5 covers every
-                    # frame's bytes sized by the real sync scan
-                    content = b"".join(mp3["frames"])
-                    rows["n_units"].append(len(mp3["frames"][0]))
-                    rows["rate"].append(int(mp3["sample_rate"]))
-                    rows["duration_ms"].append(int(mp3["duration_ms"]))
-                elif container == "jpeg":
-                    img = decode_jpeg(payload)
-                    # one byte per MCU (the builders' layout): top-left pixel
-                    # of each MCU across the single MCU row — stride = the
-                    # parsed MCU width (8 for 4:4:4, 16 for 4:2:0); for a
-                    # color stream the Y plane carries the source bytes (the
-                    # chroma planes and sibling luma blocks are its fixed
-                    # derivations — pinned by pytest, not by this digest)
-                    px = img["pixels"]
-                    step = int(img.get("mcu_w", 8))
-                    content = (px[..., 0] if px.ndim == 3 else px)[0, ::step].tobytes()
-                    rows["n_units"].append(img["width"] // step)
-                    rows["rate"].append(int(img["width"]))
-                    rows["duration_ms"].append(int(img["height"]))
-                else:
-                    img = decode_ppm(payload)
-                    content = img["pixels"][:, :, 0].tobytes()  # R channel
-                    rows["n_units"].append(img["width"] * img["height"])
-                    rows["rate"].append(int(img["maxval"]))
-                    rows["duration_ms"].append(int(img["height"]))
-                rows["media_id"].append(mid)
-                rows["kind"].append(kind)
-                rows["content_md5"].append(hashlib.md5(content).hexdigest())
-            yield pd.DataFrame(rows)
+                name, codec = _lookup(payload)
+                if codec is None or codec.summary is None:
+                    raise ValueError(f"no decode summary for {name or 'unknown'} payloads")
+                content, n_units, rate, duration_ms = codec.summary(codec.decode(payload))
+                md5 = hashlib.md5(content).hexdigest()
+                rows.append((mid, kind, int(n_units), int(rate), int(duration_ms), md5))
+            yield pd.DataFrame(rows, columns=REAL_SUMMARY_SCHEMA.fieldNames())
 
     return media.mapInPandas(run, REAL_SUMMARY_SCHEMA)
 

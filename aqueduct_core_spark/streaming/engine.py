@@ -34,6 +34,7 @@ from aqueduct_core_spark.lake.table import LakeTable
 from pyspark.sql.types import StructField, StructType
 
 from aqueduct_core_spark.schema import CHANGE_EVENT_SCHEMA, TRANSCRIPT_PHYSICAL_SCHEMA
+from aqueduct_core_spark.sources import read_feed
 
 
 def _tag(s: str) -> str:
@@ -608,7 +609,7 @@ class IngestEngine:
             url = source
             if services is not None:
                 up = services.following()
-                for u in self._ahead([u for u in services.all_urls() if u not in up]):
+                for u in self._ahead([u for u in services.all_urls() if u not in up], fmt):
                     services.mark_up(u)
                 url = services.first_up()  # raises NoAccessibleService when none
                 self._mirror = self._mirror_source(url)
@@ -640,7 +641,8 @@ class IngestEngine:
             else:
                 ahead = None
                 if services is not None:
-                    ahead = next(self._ahead([u for u in services.all_urls() if u != url]), None)
+                    others = [u for u in services.all_urls() if u != url]
+                    ahead = next(self._ahead(others, fmt), None)
                 if ahead is not None:
                     # stalled parent: a fallback knows newer data — fail over
                     services.mark_down(url)
@@ -679,16 +681,17 @@ class IngestEngine:
             return -1
         return max(int(v["high_watermark_lsn"]) for v in lineage.values())
 
-    def _ahead(self, urls: list[str]):
+    def _ahead(self, urls: list[str], fmt: str):
         """Yield, in chain order, the mirrors among `urls` whose newest
-        visible LSN is beyond the applied watermark — the health-check analog
-        of the reference's GET /pipe/_status (an unreadable or empty mirror
-        is not ahead). Lazy: probing stops where the caller stops."""
+        visible LSN, read as `fmt` like the tail drains them, is beyond the
+        applied watermark — the health-check analog of the reference's GET
+        /pipe/_status (an unreadable or empty mirror is not ahead). Lazy:
+        probing stops where the caller stops."""
         if urls:
             hw = self.high_watermark()
         for u in urls:
             try:
-                latest = self.spark.read.parquet(u).agg(F.max("change_lsn")).collect()[0][0]
+                latest = read_feed(self.spark, u, fmt=fmt).agg(F.max("change_lsn")).collect()[0][0]
             except Exception:
                 continue
             if latest is not None and latest > hw:

@@ -23,17 +23,23 @@ from aqueduct_core_spark.transcripts import read_transcripts
 from tests.util import ev, events_df
 
 
-def build_mirrors(spark, tmp_path, n_events=2400):
+def build_mirrors(spark, tmp_path, n_events=2400, fmt="parquet"):
     """cloud = full feed; parent = a PARTIAL mirror (stopped mid-replication,
-    i.e. froze after the first half of the log)."""
+    i.e. froze after the first half of the log). Both hold write_segments'
+    six LSN-range segments, as `fmt` files."""
     feed = generate_change_feed(
         spark, n_events=n_events, n_convs=60, turns_per_conv=8, seed=13, dup_frac=0.02
     )
     cloud = str(tmp_path / "cloud")
-    write_segments(feed, cloud, n_segments=6)
+    if fmt == "parquet":
+        write_segments(feed, cloud, n_segments=6)
+    else:
+        feed.repartitionByRange(6, "change_lsn").sortWithinPartitions(
+            "change_lsn"
+        ).write.format(fmt).save(cloud)
     parent = str(tmp_path / "parent")
     os.makedirs(parent)
-    segs = sorted(f for f in os.listdir(cloud) if f.endswith(".parquet"))
+    segs = sorted(f for f in os.listdir(cloud) if f.endswith(f".{fmt}"))
     for f in segs[: len(segs) // 2]:
         shutil.copy(os.path.join(cloud, f), os.path.join(parent, f))
     return feed, parent, cloud
@@ -65,13 +71,14 @@ def test_service_list_first_up_and_update():
         s.first_up()
 
 
-def test_stalled_parent_fails_over_to_cloud(spark, tmp_path):
-    feed, parent, cloud = build_mirrors(spark, tmp_path)
+@pytest.mark.parametrize("fmt", ["parquet", "json"])
+def test_stalled_parent_fails_over_to_cloud(spark, tmp_path, fmt):
+    feed, parent, cloud = build_mirrors(spark, tmp_path, fmt=fmt)
     eng = IngestEngine(
         spark, str(tmp_path / "tbl"), str(tmp_path / "ckpt"), n_buckets=8, merge_mode="mor"
     )
     services = ServiceList([parent, cloud])
-    rounds = eng.tail(services, max_rounds=8)
+    rounds = eng.tail(services, max_rounds=8, fmt=fmt)
     events = [r["event"] for r in rounds]
     assert any(e.startswith("stalled->failover") for e in events)
     assert services.following() == [cloud]  # parent marked down

@@ -165,11 +165,9 @@ def test_multimodal_plumbing(spark):
     first = {r["media_id"]: r["features"] for r in rows}
     assert again == first
 
-    frames = frame_sample(media, frame_size=256, every_n=2)
-    fr = frames.collect()
-    assert fr and all(r["frame_idx"] % 2 == 0 for r in fr)
-    vids = {r["media_id"] for r in fr}
-    assert vids == {r["media_id"] for r in media.filter("kind = 'video'").collect()}
+    # frames come from a container's own frame sequence: these seeded
+    # random payloads hold no GIF, so the GIF sampler yields none
+    assert frame_sample(media, "gif", every_n=2).count() == 0
 
     # video now has a built-in real parser too (animated GIF) — like image,
     # it rejects unknown containers; the registry seam remains for MP4/ffmpeg
@@ -461,6 +459,8 @@ def test_decode_real_summary_matches_source(spark):
     import hashlib
 
     from aqueduct_core_spark.functions.multimodal import (
+        MEDIA_SCHEMA,
+        bmp_bytes,
         decode_real_summary,
         docs_to_media,
     )
@@ -479,6 +479,13 @@ def test_decode_real_summary_matches_source(spark):
             assert r["rate"] == 16000 and r["duration_ms"] == len(b) * 1000 // 16000
         else:
             assert r["rate"] == 255 and r["duration_ms"] == 1
+
+    # a container with no summary (BMP) and a payload with no container
+    # refuse with a ValueError that names them
+    for payload, name in ((bmp_bytes(b"ab"), "bmp"), (b"plain text", "unknown")):
+        bad = spark.createDataFrame([(9, "image", bytearray(payload), {})], MEDIA_SCHEMA)
+        with pytest.raises(Exception, match=f"ValueError: no decode summary for {name} payloads"):
+            decode_real_summary(bad).collect()
 
 
 @pytest.mark.parametrize("sf", ["0.001", "0.01"])
@@ -1313,7 +1320,7 @@ def test_gif_rejects_malformed():
 def test_gif_decode_summary_and_frame_sample(spark):
     """The multimodal_decode_gif oracle contract locally: every frame's
     composited canvas md5-round-trips the text (md5(text*(h*n_frames))),
-    GIF payloads feed the real video-feature extractor, and gif_frame_sample
+    GIF payloads feed the real video-feature extractor, and frame_sample
     fans one animation out to its every-n-th decoded frames."""
     import hashlib
 
@@ -1323,7 +1330,7 @@ def test_gif_decode_summary_and_frame_sample(spark):
         decode_real_summary,
         docs_to_media,
         extract_features,
-        gif_frame_sample,
+        frame_sample,
     )
 
     rows = [(0, "hello gif"), (1, "caffé"), (2, "y" * 300)]
@@ -1341,7 +1348,7 @@ def test_gif_decode_summary_and_frame_sample(spark):
     assert feats[2]["features"][:3] == [300.0, 4.0, 3.0]  # w, h, n_frames
     assert abs(feats[2]["features"][3] - ord("y")) < 1e-6
 
-    frames = gif_frame_sample(media, every_n=2).withColumn(
+    frames = frame_sample(media, "gif", every_n=2).withColumn(
         "frame_md5", F.md5(F.col("frame_bytes"))
     )
     got = {(r["media_id"], r["frame_idx"]): r["frame_md5"] for r in frames.collect()}

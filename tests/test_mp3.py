@@ -14,8 +14,8 @@ import hashlib
 import pytest
 
 from aqueduct_core_spark.functions.multimodal import (
-    _audio_features_real,
     _ID3V1_STUB,
+    decode_media,
     decode_mp3,
     id3v2_bytes,
     mp3_frame_bytes,
@@ -125,7 +125,7 @@ def test_mp3_rejects_malformed():
 
 def test_mp3_audio_features_builtin():
     t = bytes([60] * 20)
-    f = _audio_features_real(mp3_free_bytes([t] * 3), 8)
+    f = decode_media(mp3_free_bytes([t] * 3), "audio", use_real=True, dim=8)
     assert f[0] == 32000.0 and f[1] == 1.0 and f[2] == 3.0  # rate, mono, layer
     assert f[3] == 3 * 1152 and f[4] == 108.0  # samples, duration_ms
     assert abs(f[5] - 60.0) < 1e-6  # first frame's byte mean

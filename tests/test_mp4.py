@@ -14,7 +14,7 @@ import pytest
 
 from aqueduct_core_spark.functions.multimodal import (
     _mp4_stsc_runs,
-    _video_features_real,
+    decode_media,
     decode_mp4,
     mp4_bytes,
 )
@@ -87,7 +87,7 @@ def test_mp4_rejects_malformed():
 
 
 def test_mp4_video_features_builtin():
-    f = _video_features_real(mp4_bytes([bytes(range(10))] * 3), 8)
+    f = decode_media(mp4_bytes([bytes(range(10))] * 3), "video", use_real=True, dim=8)
     assert f[0] == 10.0 and f[1] == 1.0 and f[2] == 3.0
     assert abs(f[3] - 4.5) < 1e-6 and abs(f[4] - 4.5) < 1e-6
 
@@ -96,14 +96,14 @@ def test_mp4_decode_summary_and_frame_sample(spark):
     """The multimodal_decode_mp4 oracle contract locally: every sample's
     bytes md5-round-trip the text (md5(text*3)) through the stsc/stco chunk
     walk, MP4 payloads feed the builtin real video-feature path, and
-    mp4_frame_sample fans one container out to its every-n-th samples."""
+    frame_sample fans one container out to its every-n-th samples."""
     from pyspark.sql import functions as F
 
     from aqueduct_core_spark.functions.multimodal import (
         decode_real_summary,
         docs_to_media,
         extract_features,
-        mp4_frame_sample,
+        frame_sample,
     )
 
     rows = [(0, "hello mp4"), (1, "caffé"), (2, "y" * 300)]
@@ -124,7 +124,7 @@ def test_mp4_decode_summary_and_frame_sample(spark):
     assert feats[2]["features"][:3] == [300.0, 1.0, 3.0]  # w, h, n_samples
     assert abs(feats[2]["features"][3] - ord("y")) < 1e-6
 
-    frames = mp4_frame_sample(media, every_n=2).withColumn(
+    frames = frame_sample(media, "mp4", every_n=2).withColumn(
         "frame_md5", F.md5(F.col("frame_bytes"))
     )
     got = {(r["media_id"], r["frame_idx"]): r["frame_md5"] for r in frames.collect()}

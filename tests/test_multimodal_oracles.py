@@ -1,18 +1,29 @@
 """Every multimodal_* contract query against its DuckDB oracle twin at
 sf0.001, compared the way tools/check_oracles.py compares them (column
 names, then order-insensitive normalised rows), plus the payload bytes of
-every media fixture behind them. The full gate over every entry is
+every media fixture behind them and the decoders' failure contract on
+mutated payloads. The full gate over every entry is
 `python tools/check_oracles.py <sf_dir>`."""
 
 from __future__ import annotations
 
 import hashlib
 import os
+import random
+import signal
+import struct
 
 import pytest
 
 import __spark_entry__ as entry
-from aqueduct_core_spark.functions.multimodal import MEDIA_FIXTURES
+from aqueduct_core_spark.functions.multimodal import (
+    MEDIA_FIXTURES,
+    _lookup,
+    bmp_bytes,
+    decode_media,
+    gif_bytes,
+    jpeg_bytes,
+)
 from tools.check_oracles import norm_rows
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -80,3 +91,73 @@ def test_fixture_payload_bytes_pinned(fixture):
         kind, payload, meta = MEDIA_FIXTURES[fixture](did, text.encode("utf-8"))
         h.update(kind.encode() + payload + repr(sorted(meta.items())).encode())
     assert h.hexdigest() == PAYLOAD_MD5[fixture]
+
+
+def _bombs():
+    """A few hundred bytes that declare gigabytes: a GIF and a BMP canvas,
+    and a JPEG frame, of 60000x60000 (50000x50000 for the BMP), plus a
+    2400x8 baseline JPEG whose SOF0 height is flipped to 1032 (its one MCU
+    row of scan data then has to cover 129)."""
+    gif = bytearray(gif_bytes(b"ab", height=2))
+    struct.pack_into("<HH", gif, 6, 60000, 60000)
+    bmp = bytearray(bmp_bytes(b"abc"))
+    struct.pack_into("<ii", bmp, 18, 50000, 50000)
+    jpeg = bytearray(jpeg_bytes(b"ab"))
+    struct.pack_into(">HH", jpeg, jpeg.index(b"\xff\xc0") + 5, 60000, 60000)
+    tall = bytearray(jpeg_bytes(b"x" * 300))
+    tall[tall.index(b"\xff\xc0") + 5] ^= 0x04
+    return [("video", bytes(gif)), ("image", bytes(bmp)), ("image", bytes(jpeg)), ("image", bytes(tall))]
+
+
+def _mutations(fixture: str, per_input: int = 80):
+    """(kind, payload) for seeded truncations and single-bit flips of the
+    fixture's payloads over three short inputs."""
+    rng = random.Random(fixture)
+    for did, text in PAYLOAD_INPUTS[:3]:
+        kind, payload, _meta = MEDIA_FIXTURES[fixture](did, text.encode("utf-8"))
+        for _ in range(per_input):
+            if rng.random() < 0.3:
+                yield kind, payload[: rng.randrange(len(payload))]
+            else:
+                bit = rng.randrange(8 * len(payload))
+                flipped = bytearray(payload)
+                flipped[bit // 8] ^= 1 << (bit % 8)
+                yield kind, bytes(flipped)
+
+
+def _every_path(payload: bytes, kind: str) -> None:
+    """What the entry points do with one payload: features through
+    decode_media, then the summary and frames of its _CODECS row."""
+    decode_media(payload, kind, use_real=True, dim=16)
+    _name, codec = _lookup(payload)
+    decoded = codec.decode(payload)
+    if codec.summary is not None:
+        codec.summary(decoded)
+    if codec.frames is not None:
+        codec.frames(decoded)
+
+
+@pytest.mark.parametrize("fixture", sorted(MEDIA_FIXTURES))
+def test_mutated_payloads_decode_or_refuse(fixture):
+    """The decode boundary's contract: every truncated or bit-flipped payload
+    and every size bomb decodes or raises ValueError, within 2 s each."""
+
+    def timeout(signum, frame):
+        raise TimeoutError("over 2 s")
+
+    previous = signal.signal(signal.SIGALRM, timeout)
+    escaped = []
+    try:
+        for i, (kind, payload) in enumerate([*_mutations(fixture), *_bombs()]):
+            signal.alarm(2)
+            try:
+                _every_path(payload, kind)
+            except ValueError:
+                pass
+            except Exception as e:  # noqa: BLE001 - the contract under test
+                escaped.append((i, len(payload), f"{type(e).__name__}: {e}"))
+            finally:
+                signal.alarm(0)
+    finally:
+        signal.signal(signal.SIGALRM, previous)
+    assert escaped == []
